@@ -54,7 +54,6 @@ PER_LAYER = {
     "api.errors": ("count", "lower"),
     "jvm.gc_s": ("s", "lower"),
     "jvm.heap_peak_mb": ("MB", "lower"),
-    "jvm.setup_cold_s": ("s", "lower"),
 }
 SELF_LAYERS = ["harness", "operators", "catalyst", "codegen", "spark",
                "agents", "api", "cache"]
@@ -65,6 +64,7 @@ END_TO_END = {
     "setup_s": ("s", "lower"),
     "ops_per_s": ("1/s", "higher"),
     "op_mean_ms": ("ms", "lower"),
+    "query_mean_ms": ("ms", "lower"),
     "heap_live_mb": ("MB", "lower"),
 }
 
@@ -233,20 +233,29 @@ def end_to_end(workload, res):
     """The end-to-end metrics, and report lines with the latency percentiles
     and pass (suite) or cycle (serve) walls behind them."""
     if workload == "suite":
-        lat = [_op_ms(s) for s in res["samples"] if "error" not in s]
+        ok = [s for s in res["samples"] if "error" not in s]
+        lat = [_op_ms(s) for s in ok]
+        qlat = [_op_ms(s) for s in ok if s["op"] in benchlib.SUITE_QUERIES]
         done, walls, unit = len(lat), res["pass_s"], "pass"
     else:
-        lat = [(o["t1"] - o["t0"]) / 1e3 for o in res["ops"] if o["kind"] == "execute"]
+        ok = [o for o in res["ops"] if o["kind"] != "write"
+              and benchlib.classify(o["status"], o["body"], o["kind"] == "query") is None]
+        lat = [(o["t1"] - o["t0"]) / 1e3 for o in ok if o["kind"] == "execute"]
+        # sending /query to the arrival of its SSE result event
+        qlat = [(o["t_result"] - o["t0"]) / 1e3 for o in ok if o["kind"] == "query"]
         att, fail, _ = _serve_failures(res["ops"])
         done, walls, unit = att - fail, _cycles(res["ops"]), "client cycle"
-    m = {"setup_s": median(res["setup_s"]), "ops_per_s": done / res["timed_s"],
-         "op_mean_ms": sum(lat) / len(lat), "heap_live_mb": res["heap_live_mb"]}
-    p90 = benchlib.percentile(lat, 90)
-    report = [
-        f"op latency: n={len(lat)} p50={benchlib.percentile(lat, 50):.1f} ms p90=" +
-        (f"{p90:.1f} ms" if p90 is not None else
-         f"not reported (fewer than {benchlib.TAIL_MIN} samples beyond it)"),
-        f"{unit} wall: n={len(walls)} median={median(walls) or 0:.3f} s"]
+    m = {"setup_s": res["setup_s"], "ops_per_s": done / res["timed_s"],
+         "op_mean_ms": sum(lat) / len(lat), "query_mean_ms": sum(qlat) / len(qlat),
+         "heap_live_mb": res["heap_live_mb"]}
+    report = []
+    for name, xs in (("op", lat), ("query", qlat)):
+        p90 = benchlib.percentile(xs, 90)
+        report.append(
+            f"{name} latency: n={len(xs)} p50={benchlib.percentile(xs, 50):.1f} ms p90=" +
+            (f"{p90:.1f} ms" if p90 is not None else
+             f"not reported (fewer than {benchlib.TAIL_MIN} samples beyond it)"))
+    report.append(f"{unit} wall: n={len(walls)} median={median(walls) or 0:.3f} s")
     return {k: _m(k, v, END_TO_END) for k, v in m.items()}, report
 
 
@@ -397,7 +406,6 @@ def per_layer(workload, res, cpus):
     v["spark.core_util"] = res["counters"]["task_run_ms"] / 1e3 / (res["timed_s"] * cpus)
     v["jvm.gc_s"] = res["counters"]["jvm_gc_ms"] / 1e3
     v["jvm.heap_peak_mb"] = res["heap_peak_mb"]
-    v["jvm.setup_cold_s"] = res["setup_s"][0]
     total_us = sum(totals.values())
     for layer in SELF_LAYERS:
         v[f"{layer}.self_share"] = totals.get(layer, 0) / total_us if total_us else 0.0

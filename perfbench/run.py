@@ -5,8 +5,10 @@
         --seconds S --trace 0|1
 
 Run from the root of a checkout. The first run builds the program and the
-harness (sbt, offline) into `target/` directories and generates the corpus
-into `.bench_build/`; later runs reuse both while the sources are unchanged.
+harness (sbt, offline) into `target/` directories; later runs reuse the build
+while the sources are unchanged. The inputs are the repo's seed-42 sf0.1 and
+sf0.01 fixtures, copied byte for byte into perfbench/fixtures/ and checked
+against perfbench/fixtures/SHA256SUMS on every run.
 Each run drives the program for --seconds, checks its outputs outside the
 timed region, prints box facts and checks as text, and prints one JSON
 object as its last line: the end-to-end metrics untraced (--trace 0), the
@@ -28,11 +30,8 @@ import metrics
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 BUILD = ROOT / ".bench_build"
+FIXTURES = HERE / "fixtures"
 RUN_LIMIT_S = 170
-SCALE_SF = 0.004  # scale-row corpus: 200 documents, x300 = 60,000 per row
-# serve tables: sf0.01 (lineitem 60,000 rows), so a 4-client run completes
-# enough requests for steady medians
-SERVE_SF = 0.01
 XMX = "4g"
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -121,32 +120,34 @@ def build(deadline):
     return lines[-1].strip()
 
 
-def ensure_data(name, sf):
-    """The fixed corpus (gen_data.py, seed 42), generated once per checkout."""
-    import gen_data
-    d = BUILD / "data" / name
-    stamp = hashlib.sha256((HERE / "gen_data.py").read_bytes() + str(sf).encode()).hexdigest()
-    if (d / "stamp").exists() and (d / "stamp").read_text() == stamp:
-        return d
-    tmp = BUILD / "data" / f".{name}.tmp"
-    if tmp.exists():
-        subprocess.run(["rm", "-rf", str(tmp)], check=True)
-    gen_data.generate(str(tmp), sf=sf, seed=42)
-    (tmp / "stamp").write_text(stamp)
-    if d.exists():
-        subprocess.run(["rm", "-rf", str(d)], check=True)
-    tmp.rename(d)
-    return d
-
-
-def pre_touch(d):
-    """Read every fixture byte once so the first timed read is not cold."""
+def fixture(d):
+    """Reads every byte of fixture directory d once, so the first timed read
+    is not cold, and checks each file against the manifest. Returns (d,
+    bytes read)."""
+    try:
+        lines = (FIXTURES / "SHA256SUMS").read_text().splitlines()
+    except OSError as e:
+        fail(f"no fixture manifest: {e}")
+    sums = {}
+    for line in lines:
+        digest, rel = line.split(maxsplit=1)
+        if rel.startswith(d.name + "/"):
+            sums[rel] = digest
+    if not sums:
+        fail(f"no files for fixture {d.name} in the manifest")
     total = 0
-    for f in sorted(d.glob("*.parquet")):
-        with open(f, "rb") as fh:
-            while chunk := fh.read(1 << 20):
-                total += len(chunk)
-    return total
+    for rel, digest in sorted(sums.items()):
+        h = hashlib.sha256()
+        try:
+            with open(FIXTURES / rel, "rb") as fh:
+                while chunk := fh.read(1 << 20):
+                    h.update(chunk)
+                    total += len(chunk)
+        except OSError as e:
+            fail(f"fixture file missing: {e}")
+        if h.hexdigest() != digest:
+            fail(f"fixture file {rel} does not match its checksum")
+    return d, total
 
 
 # ------------------------------------------------------------------ run
@@ -206,10 +207,11 @@ def main():
 
     t_start = time.time()
     classpath = build(t_start + 880)
-    if a.workload == "suite":
-        data, scale_data = ensure_data("sf0.1", 0.1), ensure_data("scale", SCALE_SF)
-    else:
-        data = scale_data = ensure_data("sf0.01", SERVE_SF)
+    # suite: queries over sf0.1, the x300 scale rows over sf0.01's 500
+    # documents (150,000 per row); serve: every table at sf0.01
+    data = FIXTURES / ("sf0.1" if a.workload == "suite" else "sf0.01")
+    scale_data = FIXTURES / "sf0.01"
+    fixtures = dict(fixture(d) for d in {data, scale_data})
     deadline = time.time() + RUN_LIMIT_S
 
     cpus = effective_cpus()
@@ -224,17 +226,16 @@ def main():
         inputs["query_path"] = str(data / "orders.parquet")
         inputs["write_path"] = str(data / "orders.parquet")
     (work / "inputs.json").write_text(json.dumps(inputs))
-    touched = sum(pre_touch(d) for d in {data, scale_data})
 
     t_jvm = time.time()
     res = run_jvm(classpath, a.workload, data, scale_data, work, work / "inputs.json",
                   a.seconds, a.trace, cpus, deadline)
     log(f"perfbench: prepare {t_jvm - t_start:.1f} s, harness {time.time() - t_jvm:.1f} s "
-        f"(set-up {sum(res['setup_s']):.1f} s, timed {res['timed_s']:.1f} s)")
+        f"(set-up {res['setup_s']:.1f} s, timed {res['timed_s']:.1f} s)")
     res["box"].update({"nproc": len(os.sched_getaffinity(0)),
                        "cgroup_cpu_max": cgroup_cpu_max(), "spark_cores": cpus,
-                       "fixtures": sorted(str(d.relative_to(ROOT)) for d in {data, scale_data}),
-                       "fixture_bytes": touched})
+                       "fixtures": sorted(str(d.relative_to(ROOT)) for d in fixtures),
+                       "fixture_bytes": sum(fixtures.values())})
     print("box: " + json.dumps(res["box"], sort_keys=True))
 
     checks = metrics.check(a.workload, res, data)

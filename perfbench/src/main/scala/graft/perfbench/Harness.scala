@@ -26,9 +26,6 @@ object Harness {
   final case class Args(mode: String, data: String, scaleData: String, work: Path,
       inputs: JsonNode, seconds: Double, trace: Boolean, cpus: Int)
 
-  /** Set-ups per run; setup_s is their median. */
-  val SetupReps = 3
-
   def parse(argv: Array[String]): Args = {
     val m = argv.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     Args(m("mode"), m("data"), m("scale-data"), Paths.get(m("work")).toAbsolutePath,
@@ -54,11 +51,10 @@ object Harness {
     s
   }
 
-  def stop(s: SparkSession): Unit = {
-    s.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-  }
+  /** Seconds from JVM start to now: the cold set-up before the first timed
+    * request. */
+  def setupSeconds(): Double =
+    (Clock.us() - java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime * 1000L) / 1e6
 
   /** Mutable JSON object builder over Jackson's tree model. */
   final class Obj {
@@ -137,22 +133,13 @@ object Harness {
   def suite(a: Args, named: Map[String, (SparkSession, String) => DataFrame], out: Obj): Unit = {
     val passes = a.inputs.get("passes").asScala.map(_.asScala.map(_.asText).toSeq).toSeq
     val warmup = a.inputs.get("warmup").asScala.map(_.asText).toSeq
-    val jvmStart = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime * 1000L
+    val spark = session(a)
     val off = new SpanLog(false)
-    // set-up, repeated: the first repetition starts at process start
-    var spark: SparkSession = null
-    val setups = (1 to SetupReps).map { rep =>
-      val t0 = if (rep == 1) jvmStart else Clock.us()
-      if (spark != null) stop(spark)
-      spark = session(a)
-      warmup.foreach { q =>
-        try runOp(spark, off, 0L, q, () => named(q)(spark, a.data))
-        catch { case _: Exception => () } // a failing query shows in the timed samples
-      }
-      (Clock.us() - t0) / 1e6
+    warmup.foreach { q =>
+      try runOp(spark, off, 0L, q, () => named(q)(spark, a.data))
+      catch { case _: Exception => () } // a failing query shows in the timed samples
     }
-    out.put("setup_s", setups)
-    out.put("box", box(spark))
+    out.put("setup_s", setupSeconds()).put("box", box(spark))
 
     val spans = new SpanLog(a.trace)
     val probe = new LayerProbe(spark, spans)
@@ -204,7 +191,7 @@ object Harness {
     }
     spark.sparkContext.setLocalProperty(LayerProbe.OpKey, null)
     suiteCheck(a, named, spark, out)
-    stop(spark)
+    spark.stop()
   }
 
   /** Suite check, outside the timed region. Each query's full output lands

@@ -113,7 +113,7 @@ object Serve {
     s
   }
 
-  def stopServer(s: Server): Unit = { s.api.stop(); Harness.stop(s.spark) }
+  def stopServer(s: Server): Unit = { s.api.stop(); s.spark.stop() }
 
   /** One client's closed loop over its seeded script until the deadline.
     * Ops: a /query, an /execute of the statement at position `pos` of the
@@ -193,22 +193,14 @@ object Serve {
   def run(a: Harness.Args, out: Obj): Unit = {
     val questions = a.inputs.get("questions").asScala
       .map(q => q.get("tag").asText -> q.get("sql").asText).toMap
-    val jvmStart = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime * 1000L
-    var s: Server = null
-    var stmts: Seq[(String, String)] = Nil
-    val setups = (1 to Harness.SetupReps).map { rep =>
-      val t0 = if (rep == 1) jvmStart else Clock.us()
-      if (s != null) stopServer(s)
-      s = start(a, questions)
-      // the seeded execution order: statement i (name order) sorts by key i
-      val keys = a.inputs.get("order_keys")
-      stmts = statements(s.spark, s.session.names, a.inputs.get("statement_pattern").asText,
-        a.inputs.get("exclude").asScala.map(_.asText).toSet).zipWithIndex
-        .sortBy { case (_, i) => keys.get(i).asDouble }.map(_._1)
-      drive(s, a, stmts, "warmup", Long.MaxValue, s"warm$rep")
-      (Clock.us() - t0) / 1e6
-    }
-    out.put("setup_s", setups).put("box", Harness.box(s.spark))
+    val s = start(a, questions)
+    // the seeded execution order: statement i (name order) sorts by key i
+    val keys = a.inputs.get("order_keys")
+    val stmts = statements(s.spark, s.session.names, a.inputs.get("statement_pattern").asText,
+      a.inputs.get("exclude").asScala.map(_.asText).toSet).zipWithIndex
+      .sortBy { case (_, i) => keys.get(i).asDouble }.map(_._1)
+    drive(s, a, stmts, "warmup", Long.MaxValue, "warm")
+    out.put("setup_s", Harness.setupSeconds()).put("box", Harness.box(s.spark))
       .put("statements", stmts.map(_._1))
 
     val probe = new LayerProbe(s.spark, new SpanLog(false))
