@@ -242,39 +242,6 @@ case class CosineSimBounded(vecA: Expression, vecB: Expression,
 }
 
 object CosineSimBounded {
-
-  /** Primitive-array form of the bounded verify — the per-pair kernel of
-    * [[BucketPairs]] (bucket-local pair enumeration decodes each member's
-    * vector/suffix ONCE, then runs this over primitive arrays).
-    *
-    * MUST mirror [[CosineSimBounded.eval]]/codegen operation-for-operation
-    * — same left-to-right dot, same checkpoint positions ((i & 63) == 0,
-    * i > 0, (i >> 6) < lim), same `dot + sqrt(sa·sb) < (prune − 1e-9)·‖a‖‖b‖`
-    * abandon test, same `dot / (sqrt(na)·sqrt(nb))` final form and 0.0 on a
-    * zero norm — so the emitted sims are bit-identical to the expression
-    * plan's (double arithmetic on the same values in the same order is
-    * container-independent; CosineSimBoundedSpec pins the equality on a
-    * generative sweep). Returns -2.0 for an abandoned pair, exactly like
-    * the expression.
-    */
-  def boundedSim(a: Array[Double], b: Array[Double],
-      sa: Array[Double], sb: Array[Double], pruneBelow: Double): Double = {
-    val n = math.min(a.length, b.length)
-    val naF = sa(0); val nbF = sb(0)
-    if (naF == 0.0 || nbF == 0.0) return 0.0
-    val t = (pruneBelow - 1e-9) * (math.sqrt(naF) * math.sqrt(nbF))
-    val lim = math.min(sa.length, sb.length)
-    var dot = 0.0; var i = 0
-    while (i < n) {
-      if (i > 0 && (i & 63) == 0 && (i >> 6) < lim &&
-          dot + math.sqrt(sa(i >> 6) * sb(i >> 6)) < t)
-        return -2.0
-      dot += a(i) * b(i)
-      i += 1
-    }
-    dot / (math.sqrt(naF) * math.sqrt(nbF))
-  }
-
   /** Register `vec_sufsq(v)` and
     * `cosine_sim_bounded(a, b, sufa, sufb, pruneBelowLit)`. */
   def register(spark: SparkSession): Unit = {

@@ -99,10 +99,11 @@ object RpSketch {
       name, exprs => RpSketch(exprs.head, signs), "scala_udf")
 }
 
-/** Bucket-local SKETCH-GATED pair enumeration: like [[BucketPairs]] but
-  * over (id, sketch-word0, sketch-word1) members — 24 B each, dimension-
-  * independent — emitting only the (a_id, b_id) pairs whose sketch hamming
-  * distance is ≤ `maxHamming`. The per-candidate cost is two XOR+popcount
+/** Bucket-local SKETCH-GATED pair enumeration: enumerates each bucket's
+  * C(m,2) pairs inside the generator, over (id, sketch-word0,
+  * sketch-word1) members — 24 B each, dimension-independent — emitting
+  * only the (a_id, b_id) pairs whose sketch hamming distance is ≤
+  * `maxHamming`. The per-candidate cost is two XOR+popcount
   * (≈ns), so tens of bands stay affordable where vector-carrying buckets
   * would shuffle ≈3 KB × bands per vector. Pairs are normalized
   * (a_id < b_id) and deduped by the caller's distinct before the gather +
@@ -118,20 +119,17 @@ case class SketchHammingGate(child: Expression, maxHamming: Int)
 
   override def prettyName: String = "sketch_gate_pairs"
 
-  private lazy val maxBucket: Int =
-    Integer.getInteger("graft.bucketPairs.maxBucket", 1 << 16)
-
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val arr0 = child.eval(input)
     if (arr0 == null) return Nil
     val arr = arr0.asInstanceOf[ArrayData]
     val m = arr.numElements()
     if (m < 2) return Nil
-    if (m > maxBucket)
+    if (m > SketchHammingGate.MaxBucket)
       throw new IllegalStateException(s"sketch_gate_pairs: bucket occupancy " +
-        s"$m exceeds the skew cap $maxBucket — the blocking is not holding " +
-        "candidates linear (raise planes per band / re-derive the " +
-        "operating point, or override -Dgraft.bucketPairs.maxBucket)")
+        s"$m exceeds the skew cap ${SketchHammingGate.MaxBucket} — the " +
+        "blocking is not holding candidates linear (raise planes per band / " +
+        "re-derive the operating point)")
     val ids = new Array[Long](m)
     val s0 = new Array[Long](m)
     val s1 = new Array[Long](m)
@@ -171,6 +169,12 @@ case class SketchHammingGate(child: Expression, maxHamming: Int)
 }
 
 object SketchHammingGate {
+  /** Skew cap: a bucket past 2^16 members fails LOUDLY with the remedy
+    * instead of grinding through C(m,2) pairs in one task. The
+    * candidates-linear gate (VectorGateSpec) bounds Σ C(occ,2) at 500·n,
+    * under which max occupancy sits orders of magnitude below the cap. */
+  val MaxBucket: Int = 1 << 16
+
   /** Register `sketch_gate_pairs(members, maxHammingLit)`. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

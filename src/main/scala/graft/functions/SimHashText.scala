@@ -37,7 +37,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    when the weight table is built from the same corpus, which every
   *    current caller does);
   *  - unweighted form (`weights` null): every token votes with w = 1;
-  *    split yields ≥ 1 token on any non-null text, so never null.
+  *    split yields ≥ 1 token on any non-null text, so null only on null
+  *    text.
   *
   * The weight map is vocab-sized (the document-frequency table) and was
   * ALREADY broadcast-joined by the composed form — hosting it as an
@@ -53,7 +54,7 @@ case class SimHashText(child: Expression, digits: Int, bits: Int,
 
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
-  override def nullable: Boolean = weights != null
+  override def nullable: Boolean = weights != null || child.nullable
   override def prettyName: String = "simhash_text"
 
   override def nullSafeEval(input: Any): Any =
@@ -64,10 +65,14 @@ case class SimHashText(child: Expression, digits: Int, bits: Int,
       "java.util.HashMap<org.apache.spark.unsafe.types.UTF8String, java.lang.Long>")
     nullSafeCodeGen(ctx, ev, v => {
       val tmp = ctx.freshName("fp")
+      // the unweighted form is non-nullable, so Spark declares no isNull
+      // variable for it: a null branch there fails Janino compilation
+      val onNull =
+        if (weights != null) s"if ($tmp == null) { ${ev.isNull} = true; } else "
+        else ""
       s"""
          |Object $tmp = graft.functions.SimHashText.evalSim($v, $digits, $bits, $wRef);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Long) $tmp).longValue(); }
+         |$onNull{ ${ev.value} = ((java.lang.Long) $tmp).longValue(); }
        """.stripMargin
     })
   }

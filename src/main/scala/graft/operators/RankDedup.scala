@@ -158,16 +158,13 @@ object RankDedup {
         posexplode(expr(s"rp_band_keys_dd_$planes(v)")).as(Seq("b", "key")))
     val bandedStore0 = banded(store, "s")
     val bandedStore =
-      if (forceShuffle) bandedStore0.hint(VectorOps.BandedJoinHint)
-      else bandedStore0
+      if (forceShuffle) bandedStore0.hint("merge") else bandedStore0
     // msim is filtered UNROUNDED at the 0.94 gate, so the early-exit
     // prune floor is the threshold itself (CosineSimBounded's internal
     // 1e-9 relative margin keeps boundary pairs on the full-dot path;
     // survivor msims are bit-identical to the cosine_sim form)
     val msim =
-      if (VectorOps.EarlyExit)
-        expr(s"cosine_sim_bounded(cv, sv, csfx, ssfx, ${StrongThreshold}D)")
-      else expr("cosine_sim(cv, sv)")
+      expr(s"cosine_sim_bounded(cv, sv, csfx, ssfx, ${StrongThreshold}D)")
     banded(cand, "c").join(bandedStore, Seq("b", "key"))
       .withColumn("msim", msim)
       .filter(col("msim") >= StrongThreshold)

@@ -726,81 +726,24 @@ object VectorOps {
     // round-half-up boundary); 1e-6 leaves that boundary strictly inside
     // the must-complete band. Survivor sims are bit-identical to the
     // cosine_sim plan (CosineSimBounded's contract), so the DuckDB oracle
-    // and the x1000 digests are unchanged. -Dgraft.earlyExit=false pins
-    // the full-dot verify for A/B pricing (in the bucket-local arm a
-    // below-range prune floor makes the bounded kernel a plain full dot).
-    if (BucketLocal) {
-      // BUCKET-LOCAL pair enumeration (round 16): groupBy (band, key) +
-      // [[graft.functions.BucketPairs]] enumerating each bucket's C(m,2)
-      // pairs inline. Built to kill the r15-theorized ~3.5 TB candidate-
-      // row payload — and the ×1000 A/B FALSIFIED that theory: the join
-      // arm reuses one exchange of the banded table, so both plans are
-      // exchange-bound and the join's codegen'd verify beats this arm's
-      // interpreted generator at high candidate counts (×1000×64: join
-      // 56.1 s vs 69.2 s here; ×384 a wash — BASELINE §5 r16). The join
-      // arm therefore stays DEFAULT; this arm remains the digest-verified
-      // alternative (-Dgraft.bucketLocal=true; identical output, ×1000
-      // digests exact under both) and the structural template for the
-      // sketch-gated high-sim plan, where 24-byte bucket rows — not
-      // vectors — make bucket-locality actually pay
-      // ([[nearDupPairsHighSimOver]]).
-      graft.functions.BucketPairs.register(s)
-      val prune = if (EarlyExit) threshold - 1e-6 else -10.0
-      e.select(col("vec_id"), col("v"), expr("vec_sufsq(v)").as("sfx"),
-          posexplode(expr(s"$fname(v)")).as(Seq("b", "key")))
-        .groupBy(col("b"), col("key"))
-        .agg(collect_list(struct(col("vec_id"), col("v"), col("sfx")))
-          .as("ms"))
-        .select(expr(s"bucket_pairs(ms, ${prune}D)")
-          .as(Seq("a_id", "b_id", "sim")))
-        .select(col("a_id"), col("b_id"),
-          call_function("round6", col("sim")).as("sim"))
-        .filter(col("sim") >= threshold)
-        .distinct()
-    } else {
-      // legacy banded self-join arm: suffix checkpoints computed ONCE per
-      // vector pre-explode; the banded table is materialized once so the
-      // self-join's two sides share the key computation
-      val bk0 = e.select(col("vec_id"), col("v"),
-        expr("vec_sufsq(v)").as("sfx"),
-        posexplode(expr(s"$fname(v)")).as(Seq("b", "key")))
-        .localCheckpoint(eager = false)
-      val bk = if (forceShuffle) bk0.hint(BandedJoinHint) else bk0
-      val sim =
-        if (EarlyExit)
-          expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, " +
-            s"${threshold - 1e-6}D)")
-        else expr("cosine_sim(a.v, x.v)")
-      bk.as("a").join(bk.as("x"),
-          col("a.b") === col("x.b") && col("a.key") === col("x.key") &&
-            col("a.vec_id") < col("x.vec_id"))
-        .select(col("a.vec_id").as("a_id"), col("x.vec_id").as("b_id"),
-          call_function("round6", sim).as("sim"))
-        .filter(col("sim") >= threshold)
-        .distinct()
-    }
+    // and the x1000 digests are unchanged. Suffix checkpoints are computed
+    // ONCE per vector pre-explode; the banded table is materialized once
+    // so the self-join's two sides share the key computation
+    val bk0 = e.select(col("vec_id"), col("v"),
+      expr("vec_sufsq(v)").as("sfx"),
+      posexplode(expr(s"$fname(v)")).as(Seq("b", "key")))
+      .localCheckpoint(eager = false)
+    val bk = if (forceShuffle) bk0.hint("merge") else bk0
+    val sim = expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, " +
+      s"${threshold - 1e-6}D)")
+    bk.as("a").join(bk.as("x"),
+        col("a.b") === col("x.b") && col("a.key") === col("x.key") &&
+          col("a.vec_id") < col("x.vec_id"))
+      .select(col("a.vec_id").as("a_id"), col("x.vec_id").as("b_id"),
+        call_function("round6", sim).as("sim"))
+      .filter(col("sim") >= threshold)
+      .distinct()
   }
-
-  /** Bucket-local candidate enumeration, OFF unless
-    * `-Dgraft.bucketLocal=true` — the A/B switch that tested (and
-    * falsified) the r15 candidate-row-payload theory; both arms produce
-    * identical output by construction and both carry ×1000 digests
-    * (see [[graft.functions.BucketPairs]] and the branch comment above). */
-  private[graft] def BucketLocal: Boolean =
-    "true".equalsIgnoreCase(System.getProperty("graft.bucketLocal", "false"))
-
-  /** Join hint for the forced-shuffle banded self-join arm: "merge"
-    * (default — SkewProbe-measured at 10×, re-affirmed by the r16 ×1000
-    * A/B vs shuffle_hash) or "shuffle_hash" via
-    * `-Dgraft.bandedJoinHint=shuffle_hash` for strategy A/Bs. */
-  private[graft] def BandedJoinHint: String =
-    System.getProperty("graft.bandedJoinHint", "merge")
-
-  /** Early-exit candidate verify, ON unless `-Dgraft.earlyExit=false`
-    * (the A/B pricing switch — see [[graft.functions.CosineSimBounded]];
-    * both arms produce identical output by construction). */
-  private[graft] def EarlyExit: Boolean =
-    !"false".equalsIgnoreCase(System.getProperty("graft.earlyExit", "true"))
 
   /** Candidate-pair count of the banded blocking (Σ C(occupancy, 2) over
     * (band, key) buckets) — the quantity the AUTO derivation must hold
@@ -1072,7 +1015,7 @@ object VectorOps {
     * Why this shape: holding recall at the dedup band (cos ≥ 0.8) as the
     * corpus grows requires bands ~ n^ρ ([[OperatingPoint.rpHighSimBands]];
     * 57 bands at ×1000), and at tens of bands the vector-carrying
-    * bucket-local plan ([[rpBandedNearDupOver]]) would shuffle ≈3 KB ×
+    * banded self-join ([[rpBandedNearDupOver]]) would shuffle ≈3 KB ×
     * bands per vector (≈365 GB at ×1000×384). Here the banded rows are
     * (id, s0, s1, band, key) — dimension-independent 24 B payloads — the
     * per-candidate cost is two XOR+popcounts, and full vectors move
@@ -1113,11 +1056,10 @@ object VectorOps {
       expr("vec_sufsq(v)").as("sfa"))
     val vb = v.select(col("vec_id").as("b_id"), col("v").as("vb"),
       expr("vec_sufsq(v)").as("sfb"))
-    val prune = if (EarlyExit) threshold - 1e-6 else -10.0
     cand.join(va, Seq("a_id")).join(vb, Seq("b_id"))
       .select(col("a_id"), col("b_id"),
-        call_function("round6",
-          expr(s"cosine_sim_bounded(va, vb, sfa, sfb, ${prune}D)")).as("sim"))
+        call_function("round6", expr(s"cosine_sim_bounded(va, vb, sfa, sfb, " +
+          s"${threshold - 1e-6}D)")).as("sim"))
       .filter(col("sim") >= threshold)
   }
 
@@ -1255,11 +1197,8 @@ object VectorOps {
       .select(col("vec_id"), col("v"), expr("vec_sufsq(v)").as("sfx"),
         col("cid"))
       .localCheckpoint(eager = false) // both join sides share the assign
-    val sim =
-      if (EarlyExit)
-        expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, " +
-          s"${threshold - 1e-6}D)")
-      else expr("cosine_sim(a.v, x.v)")
+    val sim = expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, " +
+      s"${threshold - 1e-6}D)")
     member.as("a").join(member.as("x"),
         col("a.cid") === col("x.cid") && col("a.vec_id") < col("x.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("x.vec_id").as("b_id"),
@@ -1566,11 +1505,8 @@ object VectorOps {
       .select(col("vec_id"), col("v"), expr("vec_sufsq(v)").as("sfx"),
         col("cid"))
       .localCheckpoint(eager = false)
-    val sim =
-      if (EarlyExit)
-        expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, " +
-          s"${threshold - 1e-6}D)")
-      else expr("cosine_sim(a.v, x.v)")
+    val sim = expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, " +
+      s"${threshold - 1e-6}D)")
     member.as("a").join(member.as("x"),
         col("a.cid") === col("x.cid") && col("a.vec_id") < col("x.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("x.vec_id").as("b_id"),
@@ -1587,18 +1523,14 @@ object VectorOps {
     * [[OperatingPoint.semHierCells]] the flat n·K training/assignment
     * bill dominates everything else in the pipeline, so the operator
     * switches to the two-level structure ([[hierCellMembers]]) — the
-    * form you would actually run at 100 TB; `-Dgraft.semHier` forces
-    * either arm for A/Bs. */
+    * form you would actually run at 100 TB. */
   def semDedupPairsAuto(e: DataFrame, threshold: Double = 0.8,
       countEstimate: Option[Long] = None,
       targetOccupancy: Int = 128): DataFrame = {
     val n = countEstimate.getOrElse(e.count())
     val k = OperatingPoint.semDedupCells(n, targetOccupancy)
-    val hier = System.getProperty("graft.semHier") match {
-      case null => k > OperatingPoint.semHierCells
-      case s    => "true".equalsIgnoreCase(s)
-    }
-    if (hier) semDedupPairsHierAuto(e, threshold, Some(n), targetOccupancy)
+    if (k > OperatingPoint.semHierCells)
+      semDedupPairsHierAuto(e, threshold, Some(n), targetOccupancy)
     else semDedupPairsFlatAuto(e, threshold, Some(n), targetOccupancy)
   }
 

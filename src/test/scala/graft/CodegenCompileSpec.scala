@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Regression gate for the round-17 codegen-fallback find: a companion
@@ -28,7 +29,10 @@ class CodegenCompileSpec extends SparkSpec {
     }
   }
 
-  test("every registered scalar expression codegen-compiles (no silent fallback)") {
+  /** (doc_id, text, v) rows; `text` and `v` are nullable columns. Built
+    * from an RDD, not a local Seq: ConvertToLocalRelation would evaluate a
+    * projection over a LocalRelation interpreted, with no codegen at all. */
+  private def fixture: DataFrame = {
     graft.functions.ShingleHashes.register(spark)
     graft.functions.Md5Prefix.register(spark)
     graft.functions.Round6.register(spark)
@@ -36,13 +40,18 @@ class CodegenCompileSpec extends SparkSpec {
     graft.functions.CosineSimBounded.register(spark)
     graft.functions.MinHashSignatures.register(spark,
       Seq(3L, 5L), Seq(7L, 11L), 4294967311L)
-    val df = Seq(
+    spark.sparkContext.parallelize(Seq(
       (1L, "the quick brown fox jumps over the lazy dog",
         Seq(0.1, 0.2, 0.3, 0.4)),
       (2L, "a b  c", Seq(0.5, 0.0, -0.2, 0.9)),
       (3L, "", Seq(0.0, 0.0, 0.0, 0.0))
-    ).toDF("doc_id", "text", "v")
-      .withColumn("words", split(col("text"), " "))
+    ), 1).toDF("doc_id", "text", "v")
+  }
+
+  /** Drives every custom expression over `df` in one codegen-only stage
+    * and spot-checks one value each so the expressions genuinely ran. */
+  private def driveAll(df0: DataFrame): Unit = {
+    val df = df0.withColumn("words", split(col("text"), " "))
     val out = withCodegenOnly {
       df.select(col("doc_id"),
           expr("shingle_hashes(words)").as("sh"),
@@ -83,12 +92,23 @@ class CodegenCompileSpec extends SparkSpec {
         .collect()
     }
     assert(out.length == 3)
-    // spot-check one value each so the expressions genuinely ran
     val r1 = out.find(_.getLong(0) == 1L).get
     assert(r1.getAs[scala.collection.Seq[Long]]("sh").nonEmpty)
     assert(r1.getAs[Long]("mp") ==
       graft.functions.Md5Prefix.evalPrefix(
         org.apache.spark.unsafe.types.UTF8String.fromString(
           "the quick brown fox jumps over the lazy dog"), 12))
+  }
+
+  test("every registered scalar expression codegen-compiles (no silent fallback)") {
+    driveAll(fixture)
+  }
+
+  // dd4 filters `text IS NOT NULL` before simhash_text: the FilterExec
+  // output the expressions bind to is then non-nullable, and a
+  // non-nullable expression gets no isNull variable to assign
+  test("every registered scalar expression codegen-compiles over non-nullable children") {
+    val df = fixture.filter(col("text").isNotNull && col("v").isNotNull)
+    driveAll(df)
   }
 }

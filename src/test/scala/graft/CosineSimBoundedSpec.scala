@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{CosineSimBounded, CosineSimilarity}
 import graft.operators.VectorOps
@@ -91,27 +92,29 @@ class CosineSimBoundedSpec extends SparkSpec {
   }
 
   test("end-to-end: banded near-dup output identical with early exit on/off") {
-    // the A/B switch must be invisible in output (what makes the r15
-    // wiring digest- and oracle-safe): same pair set, same sims, on the
-    // 384-dim planted fixture at both band configs
+    // the early exit must be invisible in output (what makes the r15
+    // wiring digest- and oracle-safe): same pair set, same sims as the
+    // full-dot form of the same banded self-join, on the 384-dim planted
+    // fixture
     val base = (0 until 60).map(i => (i.toLong, vec(i, 384))) ++
       (0 until 6).map(i => (100L + i,
         vec(i, 384).map(x => x * 1.0000001)))
     val e = frame(base: _*).select(col("id").as("vec_id"), col("v"))
-    def pairs(): Set[(Long, Long, Double)] =
-      VectorOps.rpBandedNearDupOver(e, bands = 4, "rp_gate_ab_7", planes = 7,
-          dim = 384)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val withExit = pairs()
-    val old = System.getProperty("graft.earlyExit")
-    try {
-      System.setProperty("graft.earlyExit", "false")
-      val withoutExit = pairs()
-      assert(withExit == withoutExit)
-      assert(withExit.nonEmpty)
-    } finally {
-      if (old == null) System.clearProperty("graft.earlyExit")
-      else System.setProperty("graft.earlyExit", old)
-    }
+    def pairs(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // also registers the rp_gate_ab_7 band-key function the reference uses
+    val withExit = pairs(VectorOps.rpBandedNearDupOver(e, bands = 4,
+      "rp_gate_ab_7", planes = 7, dim = 384))
+    val bk = e.select(col("vec_id"), col("v"),
+      posexplode(expr("rp_gate_ab_7(v)")).as(Seq("b", "key")))
+    val fullDot = pairs(bk.as("a").join(bk.as("x"),
+        col("a.b") === col("x.b") && col("a.key") === col("x.key") &&
+          col("a.vec_id") < col("x.vec_id"))
+      .select(col("a.vec_id"), col("x.vec_id"),
+        expr("round6(cosine_sim(a.v, x.v))").as("sim"))
+      .filter(col("sim") >= 0.30)
+      .distinct())
+    assert(withExit == fullDot)
+    assert(withExit.nonEmpty)
   }
 }

@@ -177,8 +177,7 @@ class OperatingPointSpec extends SparkSpec {
     assert(auto.nonEmpty)
   }
 
-  test("auto near-dup pins sort-merge above the broadcast-size threshold; " +
-      "the bucket-local A/B arm plans generator-only (no join)") {
+  test("auto near-dup pins sort-merge above the broadcast-size threshold") {
     // below threshold (the anchor fixture): planner's choice, no hint
     assert(!OperatingPoint.preferShuffleJoin(500, 4, 64))
     // above: the banded side outgrows a broadcast build (SkewProbe measured
@@ -187,28 +186,13 @@ class OperatingPointSpec extends SparkSpec {
     val e = Tables.load(spark, sf, "embeddings")
       .selectExpr("vec_id", "cast(embedding as array<double>) as v")
     // the countEstimate, not the actual fixture size, drives the strategy —
-    // so the at-scale plan shape is assertable on the small fixture. The
-    // join arm is DEFAULT: the r16 ×1000 A/B falsified the r15 candidate-
-    // row-payload theory (join 56.1s vs bucket-local 69.2s at ×1000×64 —
-    // the self-join reuses one exchange, so both arms are exchange-bound
-    // and codegen wins the verify).
+    // so the at-scale plan shape is assertable on the small fixture
     val big = VectorOps.nearDupPairsAuto(e, countEstimate = Some(100000L))
     val plan = big.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), plan)
     assert(!plan.contains("BroadcastHashJoin"), plan)
     val small = VectorOps.nearDupPairsAuto(e, countEstimate = Some(500L))
     assert(!small.queryExecution.executedPlan.toString.contains("SortMergeJoin"))
-    // the A/B arm (-Dgraft.bucketLocal=true): candidates enumerated inside
-    // the generator — no join of any kind; output identical
-    // (VectorOpsBucketLocalSpec), ×1000 digests exact under both arms
-    System.setProperty("graft.bucketLocal", "true")
-    try {
-      val bl = VectorOps.nearDupPairsAuto(e, countEstimate = Some(100000L))
-        .queryExecution.executedPlan.toString
-      assert(bl.contains("Generate"), bl)
-      assert(bl.contains("bucket_pairs"), bl)
-      assert(!bl.contains("Join"), bl)
-    } finally System.clearProperty("graft.bucketLocal")
   }
 
   test("auto rank-upsert pins sort-merge on the sim-join at scale estimates") {
