@@ -119,9 +119,8 @@ object Agents {
       research: Map[String, String => String] = Map.empty,
       feedback: Option[UserContext.FeedbackChannel] = None,
       planning: Boolean = false): ChainResult = {
-    val df = es.current(table).getOrElse(
+    val profile = es.profile(table).getOrElse(
       throw new IllegalArgumentException(s"unknown table $table"))
-    val profile = Profile.summaryString(df)
 
     val expert = parseExpert(llm.complete("expert_selector",
       s"QUESTION: $question"))

@@ -2,6 +2,7 @@ package graft.lifecycle
 
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Profile
 import graft.plans.{Lifecycle, SqlValidator}
 
 /** The engine's conversational query lifecycle (SURVEY §3, Spark shape):
@@ -22,6 +23,23 @@ import graft.plans.{Lifecycle, SqlValidator}
   *   map + Spark's own block-manager caching (`df.cache()` on bind when
   *   `cache=true`).
   *
+  * Bindings are versions, and each version carries its I1 profile
+  * ([[graft.operators.Profile.summaryString]], the string every question
+  * starts from, bambooai.py:550-565 `_process_question`). The memo contract:
+  * - one profile per binding version, computed at most once, on the first
+  *   `profile(name)` call; concurrent first callers wait on that one
+  *   computation;
+  * - the profile is a snapshot of the bound plan, the reference's value
+  *   semantics for a pandas `df`: a rebind pushes a fresh version, so new
+  *   data gets a new profile, and `rollback` restores the older version
+  *   together with its profile;
+  * - `unbind` drops the view and the whole version stack, profiles
+  *   included.
+  *
+  * The bindings are shared across the serving pool's threads: every read
+  * and write of them holds this session's monitor, which is never held
+  * while a profile computes.
+  *
   * The repair callback abstracts the Error Corrector agent: production wires
   * an LLM client; tests wire scripted fixtures (SURVEY §7.5 non-determinism
   * quarantine).
@@ -33,31 +51,51 @@ final class EngineSession(val spark: SparkSession) {
 
   val MaxErrorCorrections = 5 // bambooai.py:110
 
-  private val versions = mutable.Map.empty[String, List[DataFrame]]
+  /** One binding version: the bound plan and its profile. A lazy val is
+    * thread-safe, so the profile runs once however many callers ask. */
+  private final class Version(val df: DataFrame) {
+    lazy val profile: String = Profile.summaryString(df)
+  }
+
+  // guarded by `this`; the head of each stack is the current version
+  private val versions = mutable.Map.empty[String, List[Version]]
 
   /** Bind (or rebind) a named table; previous plan stays on the version
     * stack for rollback. */
   def bind(name: String, df: DataFrame, cache: Boolean = false): Unit = {
-    val d = if (cache) df.cache() else df
-    d.createOrReplaceTempView(name)
-    versions.updateWith(name) {
-      case Some(vs) => Some(d :: vs)
-      case None => Some(d :: Nil)
+    val v = new Version(if (cache) df.cache() else df)
+    synchronized {
+      v.df.createOrReplaceTempView(name)
+      versions.updateWith(name)(vs => Some(v :: vs.getOrElse(Nil)))
     }
   }
 
-  def current(name: String): Option[DataFrame] = versions.get(name).map(_.head)
+  def current(name: String): Option[DataFrame] =
+    synchronized(versions.get(name).map(_.head.df))
 
-  def names: Set[String] = versions.keySet.toSet
+  def names: Set[String] = synchronized(versions.keySet.toSet)
+
+  /** The I1 profile of the current version of `name`, computed on first
+    * use and reused until the name is rebound; None if unbound. */
+  def profile(name: String): Option[String] =
+    synchronized(versions.get(name).map(_.head)).map(_.profile)
 
   /** Restore the previous version of a binding (the error-restore snapshot).
     * Returns false if there is no prior version. */
-  def rollback(name: String): Boolean = versions.get(name) match {
-    case Some(_ :: prev :: rest) =>
-      prev.createOrReplaceTempView(name)
-      versions.update(name, prev :: rest)
-      true
-    case _ => false
+  def rollback(name: String): Boolean = synchronized {
+    versions.get(name) match {
+      case Some(_ :: prev :: rest) =>
+        prev.df.createOrReplaceTempView(name)
+        versions.update(name, prev :: rest)
+        true
+      case _ => false
+    }
+  }
+
+  /** Drop a binding: its temp view and its whole version stack. */
+  def unbind(name: String): Unit = synchronized {
+    versions.remove(name)
+    spark.catalog.dropTempView(name)
   }
 
   /** Validate (read-only + relation/function allow-list) then run.

@@ -78,11 +78,12 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
 
   require(maxConcurrent >= 1, s"maxConcurrent=$maxConcurrent must be >= 1")
 
-  // the eviction hook drops the temp view /upload_dataset bound for the
-  // id — without it every LRU eviction leaks a catalog view (and its
-  // analyzed plan) for the server's lifetime
+  // the eviction hook unbinds the id /upload_dataset bound — without it
+  // every LRU eviction leaks a catalog view, the id's version stack and
+  // its profiles for the server's lifetime, and the validator keeps
+  // allowing the name
   private val cache = new TableCache(cacheSize,
-    onEvict = id => session.spark.catalog.dropTempView(id))
+    onEvict = id => session.unbind(id))
   private var server: Option[HttpServer] = None
   // the last successful /query chain, held for /submit_rank — the
   // reference completes learning asynchronously in a second request
@@ -128,8 +129,11 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
       handler(withDf(_) { (_, df) => (200, recordsJson(Profile.sample(df))) }))
     createContext("/df_utils/df_to_string", handler(dfToString))
     createContext("/df_utils/df_summary",
-      handler(withDf(_) { (_, df) =>
-        (200, s"""{"data":${jstr(Profile.summaryString(df))}}""")
+      handler(withDf(_) { (id, _) =>
+        session.profile(id) match {
+          case Some(p) => (200, s"""{"data":${jstr(p)}}""")
+          case None => (404, err("DataFrame not found in cache"))
+        }
       }))
     createContext("/df_utils/df_columns",
       handler(withDf(_) { (_, df) =>
@@ -181,8 +185,9 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     // blocked /health, previews, and uploads for its whole duration — the
     // reference's Flask app serves concurrently, and so must this. The
     // shared state is safe under concurrency: TableCache is synchronized,
-    // the cross-request `df` exec-scope binding is serialized by execLock
-    // (see execute()), callLogs/SessionStore guard themselves.
+    // EngineSession guards its bindings, the cross-request `df`
+    // exec-scope binding is serialized by execLock (see execute()),
+    // callLogs/SessionStore guard themselves.
     // BOUNDED (round 14): fixed at maxConcurrent workers + headroom so the
     // admission gate's instant 503s and /health always find a thread — the
     // r13 cached pool grew one thread per queued request with no cap. The
@@ -379,9 +384,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
               case Some(old) =>
                 cache.put(dfId, old)
                 session.bind(dfId, old)
-              case None =>
-                if (cache.remove(dfId))
-                  session.spark.catalog.dropTempView(dfId)
+              case None => cache.remove(dfId)
             }
             java.nio.file.Files.deleteIfExists(spooled)
           }
@@ -503,8 +506,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
         // stream the resulting data model — distill failures are events,
         // the chain itself still runs
         for (ttl <- ontologyTtl) {
-          val profile = cache.get(dfId)
-            .map(df => Profile.summaryString(df)).getOrElse("")
+          val profile = session.profile(dfId).getOrElse("")
           Ontology.distillTtl(tap, ttl, profile, q) match {
             case Right(model) => emit("ontology",
               s"""{"nodes":${model.nodes.length},""" +
@@ -554,9 +556,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
       case (Some((table, r)), Some(mem)) =>
         val stored = rank >= graft.operators.RankDedup.MinRank
         if (stored) {
-          val profile = session.current(table)
-            .map(df => graft.operators.Profile.summaryString(df))
-            .getOrElse("")
+          val profile = session.profile(table).getOrElse("")
           mem.add(EpisodicMemory.Record(
             id = java.util.UUID.nameUUIDFromBytes(
               r.analyst.intent.getBytes("UTF-8")).toString,
@@ -939,15 +939,14 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
 
   /** /remove_primary_dataset `{"df_id": ...}` — the reference rebuilds its
     * session instance with df=None keeping aux datasets (app.py:620-663);
-    * the engine form evicts the cached table and drops its bound view
-    * (the aux registry is untouched). 400 with the reference's message
+    * the engine form evicts the cached table, whose eviction hook unbinds
+    * the id (the aux registry is untouched). 400 with the reference's message
     * when nothing is loaded under that id. */
   private def removePrimaryDataset(body: String): (Int, String) = {
     val dfId = HttpLlm.extractField(body, "df_id").getOrElse("")
-    if (dfId.nonEmpty && cache.remove(dfId)) {
-      session.spark.catalog.dropTempView(dfId)
+    if (dfId.nonEmpty && cache.remove(dfId))
       (200, """{"message":"Primary dataset removed successfully."}""")
-    } else (400, """{"message":"No primary dataset is currently loaded."}""")
+    else (400, """{"message":"No primary dataset is currently loaded."}""")
   }
 
   /** /get_primary_dataset_preview `{"df_id": ...}` — head(100) of the

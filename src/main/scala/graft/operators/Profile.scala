@@ -61,7 +61,11 @@ object Profile {
     * 100 TB mode: identical text format, sketch-based distinct counts
     * (HLL++ is exact below its sparse-mode threshold, so small tables render
     * byte-identically; huge cardinalities show the ±2% estimate — acceptable
-    * for a planner prompt that only branches on `unique <= 10`). */
+    * for a planner prompt that only branches on `unique <= 10`).
+    *
+    * Every call runs the profile's Spark jobs again. Per-request callers
+    * that profile a bound table read [[graft.lifecycle.EngineSession.profile]]
+    * instead, which computes this string once per binding version. */
   def summaryString(df: DataFrame, approx: Boolean = false): String = {
     val fields = df.schema.fields
     val row = summaryAgg(df, approx).collect()(0)

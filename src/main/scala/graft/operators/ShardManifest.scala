@@ -145,17 +145,12 @@ object ShardManifest {
         // law the scaladoc promises; every id routes to an affected shard
         // by construction, so the anti-join sees any duplicate)
         val newDocs = add.join(stored, Seq("doc_id"), "left_anti").count()
-        val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try withPos(merged).repartition(col("shard"))
+        // dynamic overwrite as a WRITER option, scoped to this write: the
+        // session conf stays untouched for every other write sharing it
+        withPos(merged).repartition(col("shard"))
           .write.mode(SaveMode.Overwrite).partitionBy("shard")
+          .option("partitionOverwriteMode", "dynamic")
           .parquet(s"$path/manifest")
-        finally prev match {
-          case Some(v) =>
-            s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None =>
-            s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
         // _meta n is INFORMATIONAL (reshard/write re-derive geometry from
         // a LIVE count, never from n): the delta form keeps append off a
         // whole-manifest scan, accepting that a crash between the

@@ -689,10 +689,12 @@ object Sources {
   * blocks, eviction unpersists them.
   */
 /** @param onEvict fired for every id leaving the cache (LRU overflow,
-  *   re-put, explicit remove) AFTER its plan unpersists — the hook a
-  *   server uses to release per-id resources it bound at insert time
-  *   (e.g. a catalog temp view); without it LRU evictions leak those
-  *   bindings for the server's lifetime. */
+  *   explicit remove) AFTER its plan unpersists — the hook a server uses
+  *   to release per-id resources it bound at insert time (e.g. a catalog
+  *   temp view); without it LRU evictions leak those bindings for the
+  *   server's lifetime. A re-put of a cached id replaces the plan in
+  *   place: the id does not leave, so the hook does not fire, and the
+  *   caller's per-id resources never pass through an unbound state. */
 final class TableCache(maxSize: Int = 1,
     onEvict: String => Unit = _ => ()) {
   private val entries = mutable.LinkedHashMap.empty[String, DataFrame]
@@ -702,7 +704,7 @@ final class TableCache(maxSize: Int = 1,
   }
 
   def put(id: String, df: DataFrame): Unit = synchronized {
-    entries.remove(id).foreach { old => old.unpersist(); onEvict(id) }
+    entries.remove(id).foreach(_.unpersist())
     entries.put(id, df.cache())
     while (entries.size > maxSize) {
       val (oldest, old) = entries.head

@@ -408,7 +408,8 @@ class ExecutorApiSpec extends SparkSpec {
   }
 
   test("LRU eviction drops the bound temp view; .json document upload parses") {
-    val api = new ExecutorApi(new EngineSession(spark), cacheSize = 2)
+    val session = new EngineSession(spark)
+    val api = new ExecutorApi(session, cacheSize = 2)
     val port = api.start()
     try {
       // a pretty-printed .json DOCUMENT routes to the multiLine reader —
@@ -430,8 +431,62 @@ class ExecutorApiSpec extends SparkSpec {
         Some(s"""{"df_id":"customer","path":"$sf/customer.parquet"}"""))
       assert(!spark.catalog.tableExists("conf"),
         "evicted df_id left its temp view bound")
+      // ... and its session binding: the validator's allow-list no longer
+      // names it, and its version stack is released
+      assert(!session.names.contains("conf"), session.names)
+      assert(session.current("conf").isEmpty)
       assert(spark.catalog.tableExists("orders") &&
         spark.catalog.tableExists("customer"))
+    } finally api.stop()
+  }
+
+  test("the profile follows the binding: df_summary and /query see the " +
+      "/execute result, not the upload") {
+    val analystPrompt = new java.util.concurrent.atomic.AtomicReference("")
+    val scripted = new graft.lifecycle.Agents.ScriptedLlm(Map(
+      "expert_selector" -> Seq(
+        "requires_dataset: true\nexpert: Data Analyst\nconfidence: 9"),
+      "analyst_selector" -> Seq("analyst: Data Analyst DF\nintent: count rows"),
+      "planner" -> Seq("plan:\n- count\nsql: |\nSELECT count(*) AS n FROM stale"),
+      "summarizer" -> Seq("counted")))
+    val capture = new graft.lifecycle.Agents.LlmClient {
+      def complete(stage: String, prompt: String): String = {
+        if (stage == "analyst_selector") analystPrompt.set(prompt)
+        scripted.complete(stage, prompt)
+      }
+    }
+    val api = new ExecutorApi(new EngineSession(spark), llm = Some(capture))
+    val port = api.start()
+    val n = "o_orderkey: numeric\\(n=(\\d+)\\)".r
+    def rowsIn(text: String): Long = n.findFirstMatchIn(text)
+      .getOrElse(fail(s"no o_orderkey profile line in: $text")).group(1).toLong
+    def summaryRows(): Long = {
+      val (c, b) = call(port, "/df_utils/df_summary", Some("""{"df_id":"stale"}"""))
+      assert(c == 200, b)
+      rowsIn(b)
+    }
+    def queryRows(): Long = {
+      val (c, b) = call(port, "/query",
+        Some("""{"question":"How many rows?","df_id":"stale"}"""))
+      assert(c == 200 && b.contains("event: result"), b)
+      rowsIn(analystPrompt.get)
+    }
+    try {
+      val all = spark.read.parquet(s"$sf/orders.parquet")
+      val kept = all.filter("o_orderstatus = 'F'").count()
+      assert(kept > 0 && kept < all.count())
+      call(port, "/upload_dataset",
+        Some(s"""{"df_id":"stale","path":"$sf/orders.parquet"}"""))
+      assert(summaryRows() == all.count())
+      assert(queryRows() == all.count())
+
+      // the result replaces the binding: a memo keyed by the name would
+      // keep answering with the upload's counts
+      val (ec, eb) = call(port, "/execute", Some(
+        """{"df_id":"stale","sql":"SELECT * FROM df WHERE o_orderstatus = 'F'"}"""))
+      assert(ec == 200 && !eb.contains("\"error\""), eb)
+      assert(summaryRows() == kept)
+      assert(queryRows() == kept)
     } finally api.stop()
   }
 

@@ -691,7 +691,18 @@ class PipelineOpsSpec extends SparkSpec {
     // on its own keys)
     val before = files(path)
     val one = spark.range(900001, 900002).select(col("id").as("doc_id"))
-    val touched = ShardManifest.append(one, path)
+    // the dynamic overwrite is scoped to the write: the shared session conf
+    // is never flipped, not even while the write's jobs run (a write on
+    // another thread would read it then), and the rows stay the contract's
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
+    val log = new JobLog(spark)
+    val touched = try log(ShardManifest.append(one, path)) finally log.close()
+    assert(log.count > 0)
+    assert(log.jobs.forall(p => p.getProperty(modeKey) != "dynamic"),
+      "the append's jobs ran under a session-wide dynamic overwrite mode")
+    assert(spark.conf.getOption(modeKey) == modeBefore)
+    assert(rows(path) == queryForm(full.union(one), m0.shards))
     assert(touched.size == 1)
     val after = files(path)
     before.filter(!_._1.contains(s"shard=${touched.head}")).foreach {

@@ -51,6 +51,19 @@ class SourcesSpec extends SparkSpec {
     assert(cache.ids.toSet == Set("a", "c") && cache.get("b").isEmpty)
   }
 
+  test("S11 LRU cache: onEvict fires when an id leaves, not on a re-put") {
+    val evicted = scala.collection.mutable.ArrayBuffer.empty[String]
+    val cache = new TableCache(maxSize = 2, onEvict = evicted += _)
+    cache.put("a", Seq(1).toDF("x"))
+    cache.put("b", Seq(2).toDF("x"))
+    cache.put("a", Seq(3).toDF("x")) // replaced in place: a stays cached
+    assert(evicted.isEmpty)
+    cache.put("c", Seq(4).toDF("x")) // evicts b, the oldest
+    assert(cache.remove("a"))
+    assert(evicted.toSeq == Seq("b", "a"))
+    assert(!cache.remove("a") && evicted.toSeq == Seq("b", "a"))
+  }
+
   test("S12 html preview renders header and rows") {
     val html = Sources.toHtml(Seq((1, "a")).toDF("k", "v"))
     assert(html.contains("<th>k</th>") && html.contains("<td>a</td>"))
