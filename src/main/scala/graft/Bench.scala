@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   *  - a CLUSTER-SHAPE config under "cluster_queries"/"cluster_spread"/
   *    "cluster_errors": static autoBroadcastJoinThreshold=-1,
   *    AQE runtime autoBroadcastJoinThreshold=10m (what a real cluster
-  *    keeps — see session()), and
+  *    keeps — see [[Spark.clusterShape]]), and
   *    shuffle.partitions=200. SkewProbe showed toy-scale plans can invert
   *    under real-cluster settings (BASELINE.md §5); this row makes plan
   *    inversion a tracked number instead of a one-off probe. A query whose
@@ -30,33 +30,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val TimedRuns = 3
 
-  private def session(cpus: String, shufflePartitions: String,
-      broadcastThreshold: Option[String]): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TopKRows (TypedImperativeAggregate) plans as ObjectHashAggregate,
-      // whose sort-based fallback fires at 128 distinct keys by default —
-      // the heap buffers are <= k tiny rows each, so the hash path is safe
-      // far beyond the per-task group counts these plans produce
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        String.valueOf(1 << 21))
-      .config("spark.ui.enabled", "false")
-    val s = broadcastThreshold
-      .fold(b)(t => b
-        .config("spark.sql.autoBroadcastJoinThreshold", t)
-        // the STATIC threshold above is off because cluster planners lack
-        // file-size statistics for intermediate frames — but a real cluster
-        // still broadcasts at RUNTIME when AQE measures an exchange small
-        // (this is AQE's default behavior with its own threshold; r13's
-        // isolated QueryProbe A/B pinned c1's 2x cluster ratio to this one
-        // knob: 4.23 s -> 2.80 s with the runtime threshold restored). The
-        // cluster arm models that: static off, AQE runtime threshold on.
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10m"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+  /** The printed `cluster_config` object, read from the cluster arm's conf
+    * map; its text is part of the JSON line's contract and stays fixed. */
+  private val clusterConfig: String = {
+    val c = Spark.clusterShape
+    s"""{"autoBroadcastJoinThreshold":${c("spark.sql.autoBroadcastJoinThreshold")},""" +
+      s""""adaptive_autoBroadcastJoinThreshold":"${c("spark.sql.adaptive.autoBroadcastJoinThreshold")}",""" +
+      s""""shuffle_partitions":${c("spark.sql.shuffle.partitions")}}"""
   }
 
   /** The timing ACTION: the `noop` sink, not `count()`. count() plans
@@ -198,20 +178,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Spark.cores(4)
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
     touchFixture(sfDir)
 
-    val defSpark = session(cpus, shufflePartitions = cpus,
-      broadcastThreshold = None)
+    val defSpark = Spark.local(cpus, cpus)
     val defResults = timeAll(defSpark, sfDir, named)
     val scaleResults = timeAll(defSpark, sfDir, scaleNamed)
     defSpark.stop()
     val (qs, spreads, failed, total) = jsonRow(defResults)
     val (sqs, _, sfailed, _) = jsonRow(scaleResults)
 
-    val cluSpark = session(cpus, shufflePartitions = "200",
-      broadcastThreshold = Some("-1"))
+    val cluSpark = Spark.local(cpus, cpus, Spark.clusterShape)
     val cluResults = timeAll(cluSpark, sfDir, named)
     cluSpark.stop()
     val (cqs, cspreads, cfailed, ctotal) = jsonRow(cluResults)
@@ -219,7 +197,7 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreads,"runs":$TimedRuns,"errors":$failed,""" +
       s""""scale10_queries":$sqs,"scale10_errors":$sfailed,""" +
-      s""""cluster_config":{"autoBroadcastJoinThreshold":-1,"adaptive_autoBroadcastJoinThreshold":"10m","shuffle_partitions":200},""" +
+      s""""cluster_config":$clusterConfig,""" +
       s""""cluster_total":$ctotal,"cluster_queries":$cqs,"cluster_spread":$cspreads,"cluster_errors":$cfailed,"sf":"$sfDir"}"""
     // Two bare JSON lines (no prefix — build.sbt's StdoutOutput passes the
     // forked stdout through raw, so a line-wise json.loads over the run's
@@ -244,7 +222,7 @@ object Bench {
       .mkString("{", ",", "}")
     val compact =
       s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qs4,"runs":$TimedRuns,"errors":$failed,""" +
-      s""""cluster_config":{"autoBroadcastJoinThreshold":-1,"adaptive_autoBroadcastJoinThreshold":"10m","shuffle_partitions":200},""" +
+      s""""cluster_config":$clusterConfig,""" +
       s""""cluster_total":${r4(ctotal)},"cluster_errors":$cfailed,"sf":"$sfDir"}"""
     println(compact)
     // a failed query's -1.0 sentinel stays -1 in the ms arrays

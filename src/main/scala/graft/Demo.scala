@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.lifecycle.{Agents, EngineSession, Ontology, ReAct, Retriever, SessionStore}
 import graft.operators.Profile
@@ -14,13 +13,7 @@ import graft.operators.Profile
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Spark.local(4, 4)
 
     val es = new EngineSession(spark)
     Tables.all.foreach(n => es.bind(n, Tables.load(spark, sfDir, n)))

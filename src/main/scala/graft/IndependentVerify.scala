@@ -1973,16 +1973,10 @@ object IndependentVerify {
         // opt-in-by-name contract)
         all.filter(n => fs.exists(n.contains)) ++ autoNames.filter(fs.contains)
       } else all
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the verifier COLLECTS the corpus by design (plain-JVM recompute);
-      // the 2M×384 fixture is ~6 GB of vectors, over the 1g default cap
-      .config("spark.driver.maxResultSize", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the verifier COLLECTS the corpus by design (plain-JVM recompute);
+    // the 2M×384 fixture is ~6 GB of vectors, over the 1g default cap
+    val spark = Spark.local(Spark.cores(8), 32,
+      Map("spark.driver.maxResultSize" -> "0"))
 
     lazy val docs = loadDocs(spark, sfDir)
     lazy val st = stride(docs)

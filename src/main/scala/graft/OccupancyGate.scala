@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Self-checking occupancy/candidate gate for the full-scale sweep scripts
@@ -78,12 +78,7 @@ object OccupancyGate {
     val sfDir = args(0)
     val bands = if (args.length > 1) args(1).toInt else 4
     val capPerN = if (args.length > 2) args(2).toLong else 500L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Spark.local(Spark.cores(16), Spark.shufflePartitions(32))
     val e = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .localCheckpoint()

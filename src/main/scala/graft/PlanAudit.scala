@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `.explain("formatted")` for the named queries (or a
   * representative default set) so pushdown/broadcast/shuffle shape can be
   * reviewed. Usage: runMain graft.PlanAudit [sfDir] [query ...] */
@@ -28,25 +26,12 @@ object PlanAudit {
         // model join must be a BroadcastHashJoin against the token stream;
         // c4's lang-weight join likewise broadcasts with a map-side explode
         "dd10_span_scrub", "t13_perplexity", "c4_mixture_apply")
-    // SPARK_GRAFT_CLUSTER_SHAPE=1: audit under Bench's cluster config
-    // (auto-broadcast off, 200 shuffle partitions) to see which joins
-    // flip when the optimizer may not broadcast on stats
+    // SPARK_GRAFT_CLUSTER_SHAPE=1: audit under Bench's cluster arm
+    // ([[Spark.clusterShape]]) to see which joins flip when the optimizer
+    // may not broadcast on stats
     val cluster = sys.env.get("SPARK_GRAFT_CLUSTER_SHAPE").contains("1")
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", if (cluster) "200" else "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // TopKRows (TypedImperativeAggregate) plans as ObjectHashAggregate,
-      // whose sort-based fallback fires at 128 distinct keys by default —
-      // the heap buffers are <= k tiny rows each, so the hash path is safe
-      // far beyond the per-task group counts these plans produce
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        String.valueOf(1 << 21))
-      .config("spark.ui.enabled", "false")
-    val spark = (if (cluster)
-      b.config("spark.sql.autoBroadcastJoinThreshold", "-1") else b)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Spark.local(4, 4,
+      if (cluster) Spark.clusterShape else Map.empty)
     names.foreach { n =>
       println(s"\n================ $n ================")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

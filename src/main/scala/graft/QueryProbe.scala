@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused single-query timing harness: `runMain graft.QueryProbe <name>
   * [sfDir] [runs]` times one SparkEntry query repeatedly under the Bench
   * defaults (median of N is the number to trust — single runs drift ±20%
@@ -19,38 +17,13 @@ object QueryProbe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_CLUSTER_SHAPE=1 reproduces Bench's cluster config
-    // (200 shuffle partitions, auto-broadcast off) so a per-query ratio
-    // can be re-measured in an isolated JVM. Two further knobs isolate
-    // WHICH cluster-shape ingredient a drift comes from (round 13, the
-    // dd5/c1 ratio pin): SPARK_GRAFT_AQE=0 turns adaptive execution off
-    // (it is on by default — so the default rows already include AQE
-    // shuffle coalescing); SPARK_GRAFT_ADAPTIVE_BROADCAST=<bytes> sets
-    // spark.sql.adaptive.autoBroadcastJoinThreshold, letting AQE convert
-    // sort-merge joins back to broadcast at runtime even when the STATIC
-    // threshold is -1 — the A/B that shows whether the fixed overhead is
-    // the shuffle partition count or the lost broadcast.
+    // SPARK_GRAFT_CLUSTER_SHAPE=1 reproduces Bench's cluster arm
+    // ([[Spark.clusterShape]]) so a per-query ratio can be re-measured in
+    // an isolated JVM
     val cluster = sys.env.get("SPARK_GRAFT_CLUSTER_SHAPE").contains("1")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", if (cluster) "200" else cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TopKRows (TypedImperativeAggregate) plans as ObjectHashAggregate,
-      // whose sort-based fallback fires at 128 distinct keys by default —
-      // the heap buffers are <= k tiny rows each, so the hash path is safe
-      // far beyond the per-task group counts these plans produce
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        String.valueOf(1 << 21))
-      .config("spark.ui.enabled", "false")
-    val b1 = if (cluster)
-      b0.config("spark.sql.autoBroadcastJoinThreshold", "-1") else b0
-    val b2 = sys.env.get("SPARK_GRAFT_AQE").fold(b1)(v =>
-      b1.config("spark.sql.adaptive.enabled", (v != "0").toString))
-    val spark = sys.env.get("SPARK_GRAFT_ADAPTIVE_BROADCAST").fold(b2)(v =>
-      b2.config("spark.sql.adaptive.autoBroadcastJoinThreshold", v))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Spark.cores(4)
+    val spark = Spark.local(cpus, cpus,
+      if (cluster) Spark.clusterShape else Map.empty)
     val fn = SparkEntry.queries.getOrElse(name, extras(name))
     val n = fn(spark, sfDir).count() // row count for the report only
     // warm with the SAME action as the timed runs: a count() warmup plans

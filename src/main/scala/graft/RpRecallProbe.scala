@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Planted-truth recall of the embedding near-dup blockers, split by sim
   * band — the round-16 verdict's missing number ("a measured high-sim
   * recall for AUTO RP-LSH blocking at ×1000"), the embedding-family
-  * counterpart of DedupRecallProbe's dd6w row.
+  * counterpart of the dd6w recall row in BASELINE.md §5 round 15.
   *
   * Runs on the TWIN fixtures (`ScaleProbe.synthDv(..., twins = true)` —
   * every 17th base vector gets a planted high-sim twin at id + 500,000,
@@ -41,18 +41,7 @@ object RpRecallProbe {
     require(args.length >= 2, "usage: RpRecallProbe <sfDir> " +
       "<v3|hs|sem|semflat|semhier|sem[flat|hier]:<occ>|dump> [dumpDir]")
     val sfDir = args(0); val mode = args(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // TopKRows heap buffers are ≤ k tiny rows; keep ObjectHashAggregate
-      // on the hash path past 128 groups/task (the sem arm ranks n
-      // vector→cell groups through it)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        String.valueOf(1 << 21))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Spark.local(Spark.cores(16), Spark.shufflePartitions(32))
     graft.functions.CosineSimilarity.register(spark)
     val e = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

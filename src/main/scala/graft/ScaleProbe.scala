@@ -253,19 +253,7 @@ object ScaleProbe {
         "copies would make the probe measure the synthetic corpus " +
         "(pass 'relational' as the 5th arg for the relational-only widening)")
     val out = if (args.length > 1) args(1) else s"target/sfx$copies"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TopKRows (TypedImperativeAggregate) plans as ObjectHashAggregate,
-      // whose sort-based fallback fires at 128 distinct keys by default —
-      // the heap buffers are <= k tiny rows each, so the hash path is safe
-      // far beyond the per-task group counts these plans produce
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        String.valueOf(1 << 21))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Spark.local(32, 32)
 
     if (relationalOnly) {
       synthRelational(spark, base, out, copies)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.lifecycle.{EngineSession, EpisodicMemory, ExecutorApi, LlmConfig}
 
 /** Launchable serving entry: starts the [[graft.lifecycle.ExecutorApi]]
@@ -23,14 +22,8 @@ import graft.lifecycle.{EngineSession, EpisodicMemory, ExecutorApi, LlmConfig}
   */
 object Serve {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = Spark.cores(4)
+    val spark = Spark.local(cores, cores, logLevel = "WARN")
 
     val session = new EngineSession(spark)
     val sfDir = sys.env.getOrElse("GRAFT_SERVE_TABLES", "/root/testdata/sf0.001")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sixth-decade dump harness (round 13): runs the AUTO operating-point
@@ -36,21 +35,9 @@ object SixthDecade {
         val fs = args(2).split(",").toSeq
         all.filter(n => fs.exists(n.contains))
       } else all
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TopKRows (TypedImperativeAggregate) plans as ObjectHashAggregate,
-      // whose sort-based fallback fires at 128 distinct keys by default —
-      // the heap buffers are <= k tiny rows each, so the hash path is safe
-      // far beyond the per-task group counts these plans produce
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        String.valueOf(1 << 21))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Spark.cores(4)
+    val spark = Spark.local(cpus, Spark.shufflePartitions(cpus),
+      logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     val parts = sys.env.get("SPARK_GRAFT_VERIFY_PARTS").map(_.toInt)
     def vecs = {

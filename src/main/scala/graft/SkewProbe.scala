@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Skew measurement for the banded LSH self-join (the v6 shape): at 10x
   * data with scaled sign bits, residual super-linearity was attributed to
@@ -29,13 +28,7 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val tenx = args.headOption.getOrElse("target/sfx10")
     val base = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Spark.local(32, 32)
 
     if (!new java.io.File(s"$tenx/embeddings.parquet").exists())
       ScaleProbe.synth(spark, base, tenx)

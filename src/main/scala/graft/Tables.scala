@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * (web_app/app.py:210-224) and keeping parity with the DuckDB oracle, which
   * reads parquet timestamps as naive microsecond values. `events.ts` is
   * nanosecond-precision parquet, which Spark's vectorized reader rejects —
-  * we read it as raw nanos (legacy nanosAsLong) and floor-convert to
-  * microseconds, the same truncation DuckDB applies.
+  * we read it as raw nanos (legacy nanosAsLong, part of
+  * [[Spark.readPolicy]]) and floor-convert to microseconds, the same
+  * truncation DuckDB applies.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -28,9 +29,10 @@ object Tables {
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    // a no-op on sessions built by [[Spark.local]], which carry the policy
+    // from the start; sessions built elsewhere get the same single map
+    Spark.readPolicy.foreach { case (k, v) => spark.conf.set(k, v) }
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(path(sfDir, name))
       // driver fixtures carry ns timestamps read as raw longs; re-written
       // copies (e.g. ScaleProbe's synthesized dirs) are already NTZ

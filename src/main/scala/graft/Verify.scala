@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,7 +17,6 @@ object Verify {
     }
     def selected(name: String): Boolean =
       filter.isEmpty || filter.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Optional shuffle-partition override for big-fixture sweeps: the
     // pinned-config LSH pair families have only ~bands·2^planes distinct
     // join keys, so at sf10 the default cores-sized partitioning
@@ -26,20 +24,9 @@ object Verify {
     // cardinality, not partition count, bounds parallelism); 200
     // spreads the keys. The driver's 2-arg/default invocation is
     // unchanged.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TopKRows (TypedImperativeAggregate) plans as ObjectHashAggregate,
-      // whose sort-based fallback fires at 128 distinct keys by default —
-      // the heap buffers are <= k tiny rows each, so the hash path is safe
-      // far beyond the per-task group counts these plans produce
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        String.valueOf(1 << 21))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Spark.cores(4)
+    val spark = Spark.local(cpus, Spark.shufflePartitions(cpus),
+      logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // the driver contract writes one file per query (small fixtures);
     // big-fixture sweeps set SPARK_GRAFT_VERIFY_PARTS to skip the

@@ -32,8 +32,8 @@ import org.apache.spark.sql.types._
   * ObjectHashAggregateExec, which itself falls back to a sort-based pass
   * when a task's hash map exceeds
   * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (default
-  * 128 DISTINCT KEYS — tiny). The harness sessions (Bench/Verify/
-  * SixthDecade/QueryProbe) raise it to 1<<21 so the hash path holds at the
+  * 128 DISTINCT KEYS — tiny). Every engine session ([[graft.Spark.local]])
+  * raises it to 1<<21 so the hash path holds at the
   * per-task group counts these plans produce (each buffer is ≤ k tiny
   * rows, so 2M buffers per task is still bounded memory); a real cluster
   * sets the same knob.
@@ -185,8 +185,9 @@ object TopKRows {
     * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
     * (default 128 distinct keys — tiny). The fallback is CORRECT
     * (TopKRowsSpec pins output equality at threshold=1) but reintroduces
-    * the map-side sort this aggregate exists to avoid; harness sessions
-    * and real clusters should raise it (the harness uses 1<<21 — each
+    * the map-side sort this aggregate exists to avoid; sessions built
+    * elsewhere and real clusters should raise it ([[graft.Spark.local]]
+    * uses 1<<21 — each
     * buffer is ≤ k tiny rows, so millions of group buffers per task stay
     * bounded-memory). */
   private def warnLowFallbackThreshold(spark: SparkSession): Unit = {

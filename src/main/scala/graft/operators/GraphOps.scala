@@ -118,12 +118,9 @@ object GraphOps {
   }
 
   /** Bulk path: the alternating-star loop. `canonicalEdges` must already be
-    * canonical (a < b, no self loops, distinct) and checkpointed.
-    * `onRound(round, edgeCount)` observes each round — GraphProbe records
-    * convergence behavior through it. */
+    * canonical (a < b, no self loops, distinct) and checkpointed. */
   private[graft] def componentsDistributed(nodes: DataFrame,
-      canonicalEdges: DataFrame, maxIter: Int = 25,
-      onRound: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
+      canonicalEdges: DataFrame, maxIter: Int = 25): DataFrame = {
     var e = canonicalEdges
     var sig: (Long, String) = signature(e)
     var converged = false
@@ -133,7 +130,6 @@ object GraphOps {
       val nextSig = signature(next)
       converged = nextSig == sig
       e = next; sig = nextSig; iter += 1
-      onRound(iter, nextSig._1)
     }
     if (!converged)
       throw new IllegalStateException(

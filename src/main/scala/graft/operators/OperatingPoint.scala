@@ -59,7 +59,7 @@ object OperatingPoint {
     * formula predicted ~1e9), so extra "planes" looked like the only
     * lever and verify cost grew with dim. With the mixed family the
     * bucket math actually holds (measured: 8.4e8 at ×1000×64,
-    * 7.0e7 at ×1000×384 — RpOccupancyProbe), the per-candidate dot is
+    * 7.0e7 at ×1000×384 — BASELINE.md §5 round 15), the per-candidate dot is
     * round6/early-exit cheap, and the surcharge would only buy recall
     * loss. The parameter stays so call sites keep declaring the dim
     * they derived for (and for corpora where a future re-derivation

@@ -649,7 +649,7 @@ object VectorOps {
     * 17-plane key ~9: at ×1000 the "2^planes buckets" math collapsed to
     * ~13k occupied buckets with 94k-vector hot buckets — 1.66e11
     * candidate pairs where uniform occupancy predicted ~1e9
-    * (RpOccupancyProbe measures this directly). The pinned ≤4-plane
+    * (BASELINE.md §5 round 15 records the occupancy). The pinned ≤4-plane
     * oracle configs never span 7 planes, which is why toy scales hid it. */
   private[graft] def mix64(z0: Long): Long = {
     var z = z0 + -7046029254386353131L // 0x9e3779b97f4a7c15
@@ -747,10 +747,10 @@ object VectorOps {
 
   /** Candidate-pair count of the banded blocking (Σ C(occupancy, 2) over
     * (band, key) buckets) — the quantity the AUTO derivation must hold
-    * ∝ n, measured directly (RpOccupancyProbe's core, shared with the
-    * VectorGateSpec candidates-linear gate: the round-15 sign-family bug
-    * made this 196-1646× the uniform-occupancy prediction, and nothing
-    * failed until a ×1000 run ground for hours). */
+    * ∝ n, measured directly (the VectorGateSpec candidates-linear gate:
+    * the round-15 sign-family bug made this 196-1646× the
+    * uniform-occupancy prediction, and nothing failed until a ×1000 run
+    * ground for hours). */
   private[graft] def rpBandedCandidateCount(e: DataFrame, bands: Int,
       planes: Int, dim: Int): Long = {
     val s = e.sparkSession
@@ -983,10 +983,10 @@ object VectorOps {
       dim: Int = Dim): DataFrame = {
     val n = countEstimate.getOrElse(e.count())
     val planes = OperatingPoint.rpPlanesPerBand(n, dim)
-    // NOT centered: RpOccupancyProbe measured key-centering a no-op on
-    // this corpus (the ×1000 hot buckets were the sign family's period-7
-    // negation structure, fixed in rpSign/mix64, not a mean shift); the
-    // offsets mechanism stays available for mean-shifted corpora
+    // NOT centered: key-centering measured a no-op on this corpus (the
+    // ×1000 hot buckets were the sign family's period-7 negation
+    // structure, fixed in rpSign/mix64, not a mean shift); the offsets
+    // mechanism stays available for mean-shifted corpora
     rpBandedNearDupOver(e, bands, s"rp_band_keys_auto_${bands}_$planes",
       planes, threshold, dim,
       forceShuffle = OperatingPoint.preferShuffleJoin(n, bands, dim))

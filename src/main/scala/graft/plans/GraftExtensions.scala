@@ -12,7 +12,8 @@ import graft.functions.CosineSimilarity
   *
   * (or `.withExtensions(new GraftExtensions)`), instead of per-session
   * imperative registration. The injectedFunctions path survives session
-  * cloning, which the temp-function registry does not.
+  * cloning, which the temp-function registry does not. Every engine
+  * session installs it ([[graft.Spark.local]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

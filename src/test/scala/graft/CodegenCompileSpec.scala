@@ -10,24 +10,12 @@ import org.apache.spark.sql.functions._
   * of whole-stage codegen — the bench log showed 78+15 CompileExceptions
   * per run for ShingleHashes.eval / Md5Prefix.eval while every plan
   * LOOKED fused. This suite disables the silent fallback
-  * (`spark.sql.codegen.fallback=false`, factoryMode=CODEGEN_ONLY) and
+  * ([[SparkSpec.withCodegenOnly]]) and
   * drives each custom expression through a real whole-stage-codegen
   * stage, so a forwarder regression fails loudly instead of slowly. */
 class CodegenCompileSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def withCodegenOnly[A](body: => A): A = {
-    val conf = spark.conf
-    val prevFallback = conf.get("spark.sql.codegen.fallback", "true")
-    val prevMode = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    conf.set("spark.sql.codegen.fallback", "false")
-    conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try body finally {
-      conf.set("spark.sql.codegen.fallback", prevFallback)
-      conf.set("spark.sql.codegen.factoryMode", prevMode)
-    }
-  }
 
   /** (doc_id, text, v) rows; `text` and `v` are nullable columns. Built
     * from an RDD, not a local Seq: ConvertToLocalRelation would evaluate a

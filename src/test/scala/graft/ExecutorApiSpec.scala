@@ -407,6 +407,21 @@ class ExecutorApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("/execute resolves cosine_sim on a fresh session (no operator ran first)") {
+    // a new session carries no temp functions: cosine_sim must come from
+    // the session's extensions, since the validator admits it by default
+    val api = new ExecutorApi(new EngineSession(spark.newSession()))
+    val port = api.start()
+    try {
+      val (uc, up) = call(port, "/upload_dataset",
+        Some(s"""{"df_id":"orders","path":"$sf/orders.parquet"}"""))
+      assert(uc == 200, up)
+      val (ec, res) = call(port, "/execute", Some("""{"df_id":"orders",""" +
+        """"sql":"SELECT cosine_sim(array(1d, 0d), array(1d, 0d)) AS s FROM df LIMIT 1"}"""))
+      assert(ec == 200 && res.contains("\"data\":[{\"s\":1.0}]"), res)
+    } finally api.stop()
+  }
+
   test("LRU eviction drops the bound temp view; .json document upload parses") {
     val session = new EngineSession(spark)
     val api = new ExecutorApi(session, cacheSize = 2)

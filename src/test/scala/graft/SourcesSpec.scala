@@ -33,6 +33,37 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.parquetSchema(spark, p).fieldNames.contains("o_orderkey"))
   }
 
+  /** One-row parquet file whose `ts` is a TIMESTAMP(NANOS) column — the
+    * shape the read policy exists for. Spark cannot write ns timestamps,
+    * so parquet-mr writes it directly. */
+  private def nanosParquet(path: String): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path))
+      .withType(schema)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("ts", 1700000000123456789L))
+    finally w.close()
+    path
+  }
+
+  test("parquet read policy is fixed at session build: an events load " +
+      "leaves a plain read's schema unchanged") {
+    val s = spark.newSession()
+    val paths = Seq(Tables.path(sf, "events"),
+      nanosParquet("target/ns_ts.parquet"))
+    val before = paths.map(p => Sources.parquet(s, p).schema)
+    Tables.load(s, sf, "events")
+    assert(paths.map(p => Sources.parquet(s, p).schema) == before)
+  }
+
   test("S10 zlib+base64 table serialization roundtrip") {
     val df = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     val payload = Sources.serializeTable(df)
