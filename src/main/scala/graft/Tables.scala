@@ -15,11 +15,12 @@ import org.apache.spark.sql.functions._
   * Timestamp policy (SURVEY §1.2, §7.5): everything is UTC and
   * timezone-naive (TIMESTAMP_NTZ), matching the reference's tz-strip at load
   * (web_app/app.py:210-224) and keeping parity with the DuckDB oracle, which
-  * reads parquet timestamps as naive microsecond values. `events.ts` is
-  * nanosecond-precision parquet, which Spark's vectorized reader rejects —
-  * we read it as raw nanos (legacy nanosAsLong, part of
-  * [[Spark.readPolicy]]) and floor-convert to microseconds, the same
-  * truncation DuckDB applies.
+  * reads parquet timestamps as naive microsecond values. The seed-42
+  * fixtures' `events.ts` is microsecond parquet and reads as TIMESTAMP_NTZ
+  * directly. An `events` file with nanosecond timestamps (pandas' default
+  * parquet writer), which Spark's vectorized reader rejects, reads as raw
+  * nanos (legacy nanosAsLong, part of [[Spark.readPolicy]]) and is
+  * floor-converted to microseconds, the same truncation DuckDB applies.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -34,8 +35,8 @@ object Tables {
     Spark.readPolicy.foreach { case (k, v) => spark.conf.set(k, v) }
     if (name == "events") {
       val raw = spark.read.parquet(path(sfDir, name))
-      // driver fixtures carry ns timestamps read as raw longs; re-written
-      // copies (e.g. ScaleProbe's synthesized dirs) are already NTZ
+      // ns timestamps read as raw longs; µs ones (the seed-42 fixtures,
+      // ScaleProbe's synthesized dirs) are already NTZ
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => raw.withColumn("ts",
           expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))

@@ -3,12 +3,21 @@
 // Catalyst Expression and the public Column API. Needed because
 // graft.functions.TopCells carries a driver-collected centroid matrix,
 // which cannot round-trip through the string-based function registry the
-// other custom expressions use.
+// other custom expressions use. GraftDatasetShim reaches the private[sql]
+// classic Dataset.ofRows the same way.
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 object GraftColumnShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+}
+
+/** A DataFrame over a plan the caller has already parsed, so a statement is
+  * analyzed from that plan instead of being parsed a second time. */
+object GraftDatasetShim {
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -191,15 +191,16 @@ object TopKRows {
     * buffer is ≤ k tiny rows, so millions of group buffers per task stay
     * bounded-memory). */
   private def warnLowFallbackThreshold(spark: SparkSession): Unit = {
-    val t = spark.conf
-      .get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val set = spark.conf.getAll.get(key)
+    val t = set.getOrElse("128")
     // diagnostics only: an unparseable value (whitespace, "2m"-style
     // suffix) must skip the warning, never fail registration
     val tParsed = scala.util.Try(t.trim.toLong).getOrElse(Long.MaxValue)
     if (tParsed <= 128 && warnedSessions.add(spark))
-      System.err.println("[graft] WARN topk_rows: " +
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold=" + t +
-        " (default) — plans stay correct but fall back to a sort-based " +
+      System.err.println("[graft] WARN topk_rows: " + key + "=" + t +
+        (if (set.isEmpty) " (default)" else "") +
+        " — plans stay correct but fall back to a sort-based " +
         "aggregate beyond " + t + " groups/task; raise it (e.g. 1<<21) to " +
         "keep the hash path")
   }

@@ -2,6 +2,8 @@ package graft.lifecycle
 
 import java.net.HttpURLConnection
 
+import com.fasterxml.jackson.databind.JsonNode
+
 /** Anthropic Messages API adapter behind [[Agents.LlmClient]] — the second
   * provider wire the engine speaks natively (the reference ships one module
   * per provider, bambooai/models/__init__.py:30 + anthropic_models.py; here
@@ -31,9 +33,9 @@ final class AnthropicLlmClient(baseUrl: String, apiKey: String, model: String,
   private def open(stage: String, prompt: String,
       stream: Boolean): HttpURLConnection = {
     val body =
-      s"""{"model":${HttpLlm.jsonStr(model)},"max_tokens":$maxTokens,${if (stream) "\"stream\":true," else ""}
-         |"system":${HttpLlm.jsonStr(HttpLlm.stagePrompt(stage))},
-         |"messages":[{"role":"user","content":${HttpLlm.jsonStr(prompt)}}]}""".stripMargin
+      s"""{"model":${Json.str(model)},"max_tokens":$maxTokens,${if (stream) "\"stream\":true," else ""}
+         |"system":${Json.str(HttpLlm.stagePrompt(stage))},
+         |"messages":[{"role":"user","content":${Json.str(prompt)}}]}""".stripMargin
     HttpLlm.postJson(s"$baseUrl/v1/messages",
       Seq("x-api-key" -> apiKey, "anthropic-version" -> "2023-06-01"),
       body, timeoutMs)
@@ -46,7 +48,7 @@ final class AnthropicLlmClient(baseUrl: String, apiKey: String, model: String,
       // ALL text blocks, concatenated — a first-block-only read silently
       // truncates multi-block responses (the same reason the Gemini
       // adapter concatenates parts)
-      val blocks = HttpLlm.extractFields(text, "text")
+      val blocks = AnthropicLlmClient.textBlocks(Json.fields(text))
       if (blocks.isEmpty)
         throw new RuntimeException(
           s"no text content block in response: ${graft.plans.Lifecycle.condense(text)}")
@@ -63,18 +65,26 @@ final class AnthropicLlmClient(baseUrl: String, apiKey: String, model: String,
     // the Messages contract documents mid-stream `{"type":"error",...}`
     // events after the 200 is committed (e.g. overloaded_error) — those
     // must throw, not surface a truncated completion as success
+    def typed(p: JsonNode, t: String) = Json.text(p, "type").contains(t)
     try HttpLlm.ssePump(conn, t0,
-      isStop = p => HttpLlm.extractField(p, "type").contains("message_stop"),
+      isStop = (_, p) => typed(p, "message_stop"),
       failOn = p =>
-        if (HttpLlm.extractField(p, "type").contains("error"))
-          Some(HttpLlm.extractField(p, "message")
-            .getOrElse(graft.plans.Lifecycle.condense(p)))
+        if (typed(p, "error"))
+          Some(Json.text(p.path("error"), "message")
+            .getOrElse(graft.plans.Lifecycle.condense(Json.write(p))))
         else None,
       extractDelta = p =>
-        if (HttpLlm.extractField(p, "type").contains("content_block_delta"))
-          HttpLlm.extractField(p, "text")
+        if (typed(p, "content_block_delta")) Json.text(p.path("delta"), "text")
         else None,
       onDelta = onDelta)
     finally conn.disconnect()
   }
+}
+
+object AnthropicLlmClient {
+
+  /** Every `content[i].text` of a Messages reply, in block order; blocks
+    * without text (tool use, thinking) are skipped. */
+  private[graft] def textBlocks(reply: JsonNode): Seq[String] =
+    Json.elements(reply.path("content")).flatMap(Json.text(_, "text"))
 }

@@ -1,21 +1,22 @@
 package graft.lifecycle
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftDatasetShim, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, UnresolvedWith}
 import graft.operators.Profile
 import graft.plans.{Lifecycle, SqlValidator}
 
 /** The engine's conversational query lifecycle (SURVEY §3, Spark shape):
   * NL → (LLM) plan → SQL → validate (Catalyst parse + allow-list) → execute →
   * bounded error-repair loop → result; with the reference's mutable-`df`
-  * semantics recast as versioned immutable view bindings.
+  * semantics recast as immutable view bindings.
   *
   * Mappings to the reference:
   * - `bind`/`current`: `df` injected into exec scope and read back after
   *   execution (code_executor.py:128-140, bambooai.py:783);
-  * - `rollback`: `original_df = df.copy()` restore-on-error
-  *   (code_executor.py:103, code_executor_api.py:192-193) — free here
-  *   because plans are immutable values;
+  * - `original_df = df.copy()` restore-on-error (code_executor.py:103,
+  *   code_executor_api.py:192-193) needs no snapshot here: a failed
+  *   statement never rebinds, and plans are immutable values;
   * - `executeWithRepair`: the execute ⇄ error-correct loop, ≤5 retries
   *   (bambooai.py:110,760-816), error text capped at 1000 chars
   *   (code_executor.py:319-321);
@@ -23,18 +24,16 @@ import graft.plans.{Lifecycle, SqlValidator}
   *   map + Spark's own block-manager caching (`df.cache()` on bind when
   *   `cache=true`).
   *
-  * Bindings are versions, and each version carries its I1 profile
+  * Each name holds one version, and the version carries its I1 profile
   * ([[graft.operators.Profile.summaryString]], the string every question
   * starts from, bambooai.py:550-565 `_process_question`). The memo contract:
   * - one profile per binding version, computed at most once, on the first
   *   `profile(name)` call; concurrent first callers wait on that one
   *   computation;
   * - the profile is a snapshot of the bound plan, the reference's value
-  *   semantics for a pandas `df`: a rebind pushes a fresh version, so new
-  *   data gets a new profile, and `rollback` restores the older version
-  *   together with its profile;
-  * - `unbind` drops the view and the whole version stack, profiles
-  *   included.
+  *   semantics for a pandas `df`: a rebind replaces the version, so new
+  *   data gets a new profile and the old version is released;
+  * - `unbind` drops the view and the version, profile included.
   *
   * The bindings are shared across the serving pool's threads: every read
   * and write of them holds this session's monitor, which is never held
@@ -57,53 +56,48 @@ final class EngineSession(val spark: SparkSession) {
     lazy val profile: String = Profile.summaryString(df)
   }
 
-  // guarded by `this`; the head of each stack is the current version
-  private val versions = mutable.Map.empty[String, List[Version]]
+  // guarded by `this`
+  private val versions = mutable.Map.empty[String, Version]
 
-  /** Bind (or rebind) a named table; previous plan stays on the version
-    * stack for rollback. */
+  /** Bind (or rebind) a named table; a rebind releases the previous
+    * version. */
   def bind(name: String, df: DataFrame, cache: Boolean = false): Unit = {
     val v = new Version(if (cache) df.cache() else df)
     synchronized {
       v.df.createOrReplaceTempView(name)
-      versions.updateWith(name)(vs => Some(v :: vs.getOrElse(Nil)))
+      versions.update(name, v)
     }
   }
 
   def current(name: String): Option[DataFrame] =
-    synchronized(versions.get(name).map(_.head.df))
+    synchronized(versions.get(name).map(_.df))
 
   def names: Set[String] = synchronized(versions.keySet.toSet)
 
   /** The I1 profile of the current version of `name`, computed on first
     * use and reused until the name is rebound; None if unbound. */
   def profile(name: String): Option[String] =
-    synchronized(versions.get(name).map(_.head)).map(_.profile)
+    synchronized(versions.get(name)).map(_.profile)
 
-  /** Restore the previous version of a binding (the error-restore snapshot).
-    * Returns false if there is no prior version. */
-  def rollback(name: String): Boolean = synchronized {
-    versions.get(name) match {
-      case Some(_ :: prev :: rest) =>
-        prev.df.createOrReplaceTempView(name)
-        versions.update(name, prev :: rest)
-        true
-      case _ => false
-    }
-  }
-
-  /** Drop a binding: its temp view and its whole version stack. */
+  /** Drop a binding: its temp view and its version. */
   def unbind(name: String): Unit = synchronized {
     versions.remove(name)
     spark.catalog.dropTempView(name)
   }
 
-  /** Validate (read-only + relation/function allow-list) then run.
-    * spark.sql analyzes eagerly, so analysis failures surface here and are
+  /** Validate (read-only + relation/function allow-list) then run the
+    * validator's parsed plan, so the statement is parsed once. With `df`,
+    * the statement also sees that table as the relation `df`, scoped to
+    * this one statement: an outer CTE over the table's analyzed plan, which
+    * a `WITH df AS …` inside the statement still shadows. Building the
+    * DataFrame analyzes it, so analysis failures surface here and are
     * condensed into the Left channel for the repair loop. */
-  def runValidatedSql(sql: String): Either[String, DataFrame] =
-    SqlValidator.validate(spark, sql, names).flatMap { _ =>
-      try Right(spark.sql(sql))
+  def runValidatedSql(sql: String,
+      df: Option[DataFrame] = None): Either[String, DataFrame] =
+    SqlValidator.validate(spark, sql, names ++ df.map(_ => "df")).flatMap { v =>
+      val plan = df.fold(v.plan)(d => UnresolvedWith(v.plan,
+        Seq(("df", SubqueryAlias("df", d.queryExecution.analyzed), None))))
+      try Right(GraftDatasetShim.ofRows(spark, plan))
       catch { case e: Exception => Left(Lifecycle.condense(e.getMessage)) }
     }
 

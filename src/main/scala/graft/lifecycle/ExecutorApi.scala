@@ -3,7 +3,8 @@ package graft.lifecycle
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.fasterxml.jackson.databind.JsonNode
+import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.Profile
@@ -17,7 +18,7 @@ import graft.sources.{Sources, TableCache}
   * same endpoint contract serves the engine's declarative surface:
   *
   *   POST /execute                    run VALIDATED SQL against the cached
-  *                                    table bound as view `df`
+  *                                    table, seen as relation `df`
   *                                    (code_executor_api.py:69-206 — exec of
   *                                    generated python, recast through
   *                                    SqlValidator per SURVEY §2.12: the
@@ -65,7 +66,8 @@ import graft.sources.{Sources, TableCache}
   * Scale: every response is bounded by construction — previews are
   * `limit(n)` plans (no full count except df_to_string's documented row-25
   * rule), and /execute returns a bounded preview while the full result stays
-  * a named view for further SQL. JDK HttpServer only — no added deps.
+  * a named view for further SQL. JDK HttpServer; bodies parse through
+  * [[Json]], and a body that is not a JSON object has no fields.
   */
 final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     llm: Option[Agents.LlmClient] = None,
@@ -116,7 +118,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     }
     // every context except /health goes through the admission gate
     def createContext(path: String,
-        h: com.sun.net.httpserver.HttpHandler): Unit = {
+        h: HttpHandler): Unit = {
       val c = srv.createContext(path, h)
       if (path != "/health") c.getFilters.add(gate)
     }
@@ -131,7 +133,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     createContext("/df_utils/df_summary",
       handler(withDf(_) { (id, _) =>
         session.profile(id) match {
-          case Some(p) => (200, s"""{"data":${jstr(p)}}""")
+          case Some(p) => (200, s"""{"data":${Json.str(p)}}""")
           case None => (404, err("DataFrame not found in cache"))
         }
       }))
@@ -140,9 +142,9 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
         // SQL-facing dtype names (bigint/double/string…), the vocabulary
         // the API's SQL surface speaks — not Scala's DataType class names
         val dtypes = df.schema.fields.map { f =>
-          s"""${jstr(f.name)}:${jstr(f.dataType.simpleString)}""" }
+          s"""${Json.str(f.name)}:${Json.str(f.dataType.simpleString)}""" }
           .mkString("{", ",", "}")
-        val cols = df.columns.map(jstr).mkString("[", ",", "]")
+        val cols = df.columns.map(Json.str).mkString("[", ",", "]")
         (200, s"""{"columns":$cols,"dtypes":$dtypes}""")
       }))
     createContext("/query", query _)
@@ -157,8 +159,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     createContext("/get_planning_state", handler(_ => (200,
       s"""{"planning":$planning}""")))
     createContext("/get_threads", handler(_ => getThreads))
-    createContext("/load_thread/", handlerWithPath(loadThread))
-    createContext("/delete_chain/", handlerWithPath(deleteChain))
+    createContext("/load_thread/", pathHandler(loadThread))
+    createContext("/delete_chain/", pathHandler(deleteChain))
     createContext("/submit_feedback", handler(submitFeedback))
     createContext("/get_vector_db_status", handler(_ => (200,
       s"""{"enabled":${memory.nonEmpty},"records":${
@@ -175,7 +177,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
         df.columns.mkString(", "))))
     createContext("/file_utils/compute_aux_dataset_sample",
       handler(auxSampleHtml))
-    createContext("/get_chain_preview/", handlerWithPath(chainPreview))
+    createContext("/get_chain_preview/", pathHandler(chainPreview))
     createContext("/remove_primary_dataset",
       handler(removePrimaryDataset))
     createContext("/get_primary_dataset_preview", handler(primaryPreview))
@@ -185,8 +187,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     // blocked /health, previews, and uploads for its whole duration — the
     // reference's Flask app serves concurrently, and so must this. The
     // shared state is safe under concurrency: TableCache is synchronized,
-    // EngineSession guards its bindings, the cross-request `df`
-    // exec-scope binding is serialized by execLock (see execute()),
+    // EngineSession guards its bindings, /execute's Spark work is
+    // serialized by execLock (see execute()),
     // callLogs/SessionStore guard themselves.
     // BOUNDED (round 14): fixed at maxConcurrent workers + headroom so the
     // admission gate's instant 503s and /health always find a thread — the
@@ -217,37 +219,32 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
 
   // ---- endpoints ----
 
-  /** /execute: `{"sql": ..., "df_id"?: ...}`. When df_id hits the cache its
-    * table is bound as view `df` (the reference's exec-scope injection,
-    * code_executor_api.py:100-104); the SQL runs through the §2.12
-    * validator; on success the RESULT replaces the cached entry (the
-    * reference writes the mutated df back, :115-117) and a bounded preview
-    * returns. */
-  /** Serializes the `df` exec-scope binding against the SQL that reads it:
-    * with the request pool, two concurrent /execute calls would otherwise
-    * interleave bind("df", T_a) / bind("df", T_b) / run(A) and request A
-    * would silently answer from B's table — the one cross-request shared
-    * mutable in the hot path (the reference gets this isolation for free
-    * from per-exec scopes, code_executor_api.py:100-104). The lock scopes
-    * bind-plan-rebind only; the pool keeps every other endpoint live. */
+  /** Serializes /execute's Spark work: validation, analysis, the cache
+    * write-back and the preview collect. Each statement has its own `df`
+    * scope, so the lock shapes load rather than isolating requests: on
+    * the closed-loop serve mix, removing it halved the /execute mean but
+    * slowed /query by about a quarter and grew the live heap by a tenth
+    * (ROADMAP item 1). The pool keeps every other endpoint live. */
   private val execLock = new Object
 
-  private def execute(body: String): (Int, String) = {
-    val sql = HttpLlm.extractField(body, "sql").getOrElse("")
+  /** /execute: `{"sql": ..., "df_id"?: ...}`. When df_id hits the cache
+    * the statement sees its table as the relation `df`, scoped to this
+    * request (the reference's per-exec scope injection,
+    * code_executor_api.py:100-104); without df_id it runs with no `df`, so
+    * a statement naming `df` fails validation unless a table is bound
+    * under that name. The SQL runs through the §2.12 validator; on success
+    * the RESULT replaces the cached entry (the reference writes the mutated
+    * df back, :115-117) and a bounded preview returns. */
+  private def execute(req: JsonNode): (Int, String) = {
+    val sql = Json.text(req, "sql").getOrElse("")
     if (sql.isEmpty) return (400, err("No sql provided"))
-    val dfId = HttpLlm.extractField(body, "df_id")
+    val dfId = Json.text(req, "df_id")
+    // a miss fails up front (the reference execs with df=None and fails in
+    // user code)
+    val df = dfId.map(cache.get)
+    if (df.exists(_.isEmpty)) return (404, err("DataFrame not found in cache"))
     execLock.synchronized {
-    dfId.foreach { id =>
-      cache.get(id) match {
-        case Some(df) => session.bind("df", df)
-        // a miss must NOT fall through to whatever `df` a previous request
-        // bound — that would silently query another caller's table (the
-        // reference execs with df=None and fails in user code; the SQL
-        // surface can fail up front instead)
-        case None => return (404, err("DataFrame not found in cache"))
-      }
-    }
-    session.runValidatedSql(sql) match {
+    session.runValidatedSql(sql, df.flatten) match {
       case Left(msg) => (200, err(msg))
       case Right(result) =>
         dfId.foreach { id => cache.put(id, result); session.bind(id, result) }
@@ -255,14 +252,14 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
         // rendered matplotlib PNGs, code_executor_api.py:119-131; the
         // engine's §1.1 deviation emits a Vega-Lite spec instead): flat
         // keys plot_type/plot_x/plot_ys(csv)/plot_title ride in the body
-        val plotSpec = HttpLlm.extractField(body, "plot_type").map { t =>
+        val plotSpec = Json.text(req, "plot_type").map { t =>
           PlotSpec.toVegaLite(PlotSpec.Plot2d(
             plotType = t,
-            x = HttpLlm.extractField(body, "plot_x").getOrElse(""),
-            ys = HttpLlm.extractField(body, "plot_ys")
+            x = Json.text(req, "plot_x").getOrElse(""),
+            ys = Json.text(req, "plot_ys")
               .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
               .getOrElse(Nil),
-            title = HttpLlm.extractField(body, "plot_title").getOrElse("")),
+            title = Json.text(req, "plot_title").getOrElse("")),
             result)
         }
         val base = recordsJson(result, limit = 100)
@@ -274,12 +271,20 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
 
   /** /upload_dataset: `{"df_id": ..., "path": ..., "format"?: "csv"}` —
     * reads the path through the engine's source operators and caches it. */
-  private def uploadDataset(body: String): (Int, String) = {
-    val dfId = HttpLlm.extractField(body, "df_id").getOrElse("")
-    val path = HttpLlm.extractField(body, "path").getOrElse("")
+  private def uploadDataset(req: JsonNode): (Int, String) = {
+    val dfId = Json.text(req, "df_id").getOrElse("")
+    val path = Json.text(req, "path").getOrElse("")
     if (dfId.isEmpty || path.isEmpty)
       return (400, err("df_id and path required"))
-    val fmt = HttpLlm.extractField(body, "format")
+    val df = register(dfId, path, Json.text(req, "format"))
+    val cols = df.columns.map(Json.str).mkString("[", ",", "]")
+    (200, s"""{"df_id":${Json.str(dfId)},"columns":$cols}""")
+  }
+
+  /** Read `path` through the source operator its format names, then cache
+    * and bind it under `dfId`. */
+  private def register(dfId: String, path: String,
+      fmt: Option[String]): DataFrame = {
     val df =
       if (fmt.contains("csv") || path.endsWith(".csv"))
         Sources.csv(session.spark, path)
@@ -299,8 +304,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
       else Sources.parquet(session.spark, path)
     cache.put(dfId, df)
     session.bind(dfId, df)
-    val cols = df.columns.map(jstr).mkString("[", ",", "]")
-    (200, s"""{"df_id":${jstr(dfId)},"columns":$cols}""")
+    df
   }
 
   private val MaxUploadBytes = 64L * 1024 * 1024 // the S8 remote-source cap
@@ -318,7 +322,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     * bad type → 400, load failures → 500 with the message. */
   private def uploadMultipart(ex: HttpExchange): Unit = {
     def done(code: Int, json: String): Unit = respond(ex, code, json)
-    def msg(m: String): String = s"""{"message":${jstr(m)}}"""
+    def msg(m: String): String = s"""{"message":${Json.str(m)}}"""
     try {
       val ct = Option(ex.getRequestHeaders.getFirst("Content-Type"))
         .getOrElse("")
@@ -389,15 +393,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
             java.nio.file.Files.deleteIfExists(spooled)
           }
           try {
-            val (code, json) = uploadDataset(
-              s"""{"df_id":${jstr(dfId)},"path":${jstr(spooled.toString)}}""")
-            if (code != 200) {
-              rollback()
-              val detail = HttpLlm.extractField(json, "error").getOrElse(json)
-              return done(500, msg(detail))
-            }
-            val df = cache.get(dfId).get
-            done(200, s"""{"message":"File successfully uploaded and processed","df_id":${jstr(
+            val df = register(dfId, spooled.toString, None)
+            done(200, s"""{"message":"File successfully uploaded and processed","df_id":${Json.str(
               dfId)},"dataframe":${recordsJson(df)}}""")
           } catch { case e: Exception =>
             rollback()
@@ -428,12 +425,12 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   /** /df_utils/df_to_string: the I2 row-25 contract; `order_by` is a
     * comma-separated column list (Spark tables are unordered — the caller
     * names the order that defines "row 25", defaulting to schema order). */
-  private def dfToString(body: String): (Int, String) = withDf(body) { (_, df) =>
-    val n = numField(body, "num_rows").getOrElse(5L).toInt
-    val orderCols = HttpLlm.extractField(body, "order_by")
+  private def dfToString(req: JsonNode): (Int, String) = withDf(req) { (_, df) =>
+    val n = Json.long(req, "num_rows").getOrElse(5L).toInt
+    val orderCols = Json.text(req, "order_by")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(df.columns.toSeq)
-    (200, s"""{"data":${jstr(Profile.dataframeToString(df, orderCols, n))}}""")
+    (200, s"""{"data":${Json.str(Profile.dataframeToString(df, orderCols, n))}}""")
   }
 
   /** /query: `{"question": ..., "df_id": ...}` → `text/event-stream`. The
@@ -447,8 +444,9 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     val body =
       try new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       catch { case _: Exception => "" }
-    val question = HttpLlm.extractField(body, "question").getOrElse("")
-    val dfId = HttpLlm.extractField(body, "df_id").getOrElse("")
+    val req = Json.fields(body)
+    val question = Json.text(req, "question").getOrElse("")
+    val dfId = Json.text(req, "df_id").getOrElse("")
     (llm, question, if (dfId.isEmpty) None else cache.get(dfId)) match {
       case (None, _, _) => respond(ex, 200, err("no LLM client configured"))
       case (_, "", _) => respond(ex, 400, err("No question provided"))
@@ -472,14 +470,14 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
               graft.operators.RegexTokenizer.countTokens(prompt).toLong,
               graft.operators.RegexTokenizer.countTokens(text).toLong,
               (System.nanoTime() - t0) / 1e9))
-            emit("stage", s"""{"stage":${jstr(stage)},"text":${jstr(text)}}""")
+            emit("stage", s"""{"stage":${Json.str(stage)},"text":${Json.str(text)}}""")
             text
           }
         }
         // conversation recording: with a thread_id (app.py:927-944 ties
         // every /query to one) the question and outcome land in the
         // session store and persist — restarts restore the thread
-        val threadId = HttpLlm.extractField(body, "thread_id")
+        val threadId = Json.text(req, "thread_id")
         def record(role: String, content: String): Unit =
           for { st <- store; tid <- threadId } {
             st.append(tid, role, content); st.save(tid)
@@ -510,7 +508,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
           Ontology.distillTtl(tap, ttl, profile, q) match {
             case Right(model) => emit("ontology",
               s"""{"nodes":${model.nodes.length},""" +
-                s""""mermaid":${jstr(Ontology.toMermaid(model))}}""")
+                s""""mermaid":${Json.str(Ontology.toMermaid(model))}}""")
             case Left(e) => emit("ontology", err(e))
           }
         }
@@ -523,7 +521,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
               record("assistant", r.summary.getOrElse(""))
               emit("result",
                 recordsJson(d).dropRight(1) +
-                  s""","summary":${r.summary.map(jstr).getOrElse("null")}""" +
+                  s""","summary":${r.summary.map(Json.str).getOrElse("null")}""" +
                   s""","attempts":${r.repair.attempts}}""")
             case None =>
               val msg = r.repair.errors.lastOption.getOrElse("no result")
@@ -547,8 +545,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     * app.py:973-1010): a rank at or above the [[graft.operators.RankDedup
     * .MinRank]] threshold stores the LAST successful /query chain into
     * episodic memory through the rank-dedup gate (bambooai.py:638-684). */
-  private def submitRank(body: String): (Int, String) = {
-    val rank = numField(body, "rank").getOrElse(
+  private def submitRank(req: JsonNode): (Int, String) = {
+    val rank = Json.long(req, "rank").getOrElse(
       return (400, err("No rank provided")))
     (lastChain, memory) match {
       case (None, _) => (404, err("no completed query chain to rank"))
@@ -636,23 +634,23 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   /** /storage/favourites: persist a favourited solution as JSON under
     * `<dataDir>/favourites/<thread_id>/<chain_id>.json`
     * (app.py:1012-1060 — same per-chain overwrite-on-refave layout). */
-  private def storeFavourite(body: String): (Int, String) = {
-    val threadId = HttpLlm.extractField(body, "thread_id").getOrElse("")
-    val chainId = HttpLlm.extractField(body, "chain_id").getOrElse("")
+  private def storeFavourite(req: JsonNode): (Int, String) = {
+    val threadId = Json.text(req, "thread_id").getOrElse("")
+    val chainId = Json.text(req, "chain_id").getOrElse("")
     if (threadId.isEmpty || chainId.isEmpty ||
         threadId.contains("/") || chainId.contains("/"))
       return (400, err("thread_id and chain_id required"))
-    val rank = numField(body, "rank").getOrElse(0L)
-    val task = HttpLlm.extractField(body, "task").getOrElse("")
-    val content = HttpLlm.extractField(body, "content").getOrElse("")
+    val rank = Json.long(req, "rank").getOrElse(0L)
+    val task = Json.text(req, "task").getOrElse("")
+    val content = Json.text(req, "content").getOrElse("")
     val dir = dataDir.resolve("favourites").resolve(threadId)
     java.nio.file.Files.createDirectories(dir)
     val file = dir.resolve(s"$chainId.json")
     java.nio.file.Files.writeString(file,
-      s"""{"thread_id":${jstr(threadId)},"chain_id":${jstr(chainId)},""" +
-        s""""rank":$rank,"task":${jstr(task)},"content":${jstr(content)}}""")
+      s"""{"thread_id":${Json.str(threadId)},"chain_id":${Json.str(chainId)},""" +
+        s""""rank":$rank,"task":${Json.str(task)},"content":${Json.str(content)}}""")
     (200, s"""{"message":"Solution saved to favourites","filename":${
-      jstr(file.toString)}}""")
+      Json.str(file.toString)}}""")
   }
 
   /** /download_generated_dataset?df_id=...&max_rows=N — the engine form of
@@ -711,8 +709,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   private var ontologyTtl: Option[String] = None
   private var planning = false
 
-  private def updateOntology(body: String): (Int, String) =
-    HttpLlm.extractField(body, "ttl") match {
+  private def updateOntology(req: JsonNode): (Int, String) =
+    Json.text(req, "ttl") match {
       case Some(ttl) if ttl.nonEmpty =>
         Ontology.parseTtl(ttl) match {
           case Left(e) => (400, err(e))
@@ -722,22 +720,20 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
               s""""classes":${o.classes.length},"properties":${o.properties.length}}""")
         }
       // the reference's explicit-clear contract: ontology_path = ""
-      case _ if HttpLlm.extractField(body, "ontology_path").contains("") =>
+      case _ if Json.text(req, "ontology_path").contains("") =>
         ontologyTtl = None
         (200, """{"message":"Ontology cleared.","current_state":false}""")
       case _ => (400,
         err("must include ttl content or clear via ontology_path"))
     }
 
-  private def updatePlanning(body: String): (Int, String) = {
-    val v = "\"planning\"\\s*:\\s*(true|false)".r.findFirstMatchIn(body)
-    v match {
+  private def updatePlanning(req: JsonNode): (Int, String) =
+    Json.child(req, "planning").filter(_.isBoolean) match {
       case None => (400, err("No planning boolean provided"))
-      case Some(m) =>
-        planning = m.group(1) == "true"
+      case Some(v) =>
+        planning = v.booleanValue
         (200, s"""{"planning":$planning}""")
     }
-  }
 
   // ---- conversation threads (web_app/app.py:1062-1469) ----
   // The reference's thread surface over [[SessionStore]]: list stored +
@@ -760,13 +756,13 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     val rows = allThreadIds(st).map { id =>
       st.restore(id)
       val ms = st.messages(id)
-      s"""{"thread_id":${jstr(id)},"n_messages":${ms.length},""" +
-        s""""preview":${jstr(ms.headOption.map(_.content.take(80)).getOrElse(""))}}"""
+      s"""{"thread_id":${Json.str(id)},"n_messages":${ms.length},""" +
+        s""""preview":${Json.str(ms.headOption.map(_.content.take(80)).getOrElse(""))}}"""
     }
     (200, s"""{"threads":${rows.mkString("[", ",", "]")}}""")
   }
 
-  private def loadThread(path: String, body: String): (Int, String) =
+  private def loadThread(path: String): (Int, String) =
     withStore { st =>
       val id = path.stripPrefix("/load_thread/")
       if (id.isEmpty || id.contains("/")) (400, err("thread id required"))
@@ -774,15 +770,15 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
         st.restore(id)
         val ms = st.messages(id)
         if (ms.isEmpty) (404, err("thread not found"))
-        else (200, s"""{"thread_id":${jstr(id)},"messages":${
-          ms.map(m => s"""{"role":${jstr(m.role)},"content":${jstr(m.content)}}""")
+        else (200, s"""{"thread_id":${Json.str(id)},"messages":${
+          ms.map(m => s"""{"role":${Json.str(m.role)},"content":${Json.str(m.content)}}""")
             .mkString("[", ",", "]")}}""")
       }
     }
 
   /** /delete_chain/<thread_id>: drop the thread from memory and disk
     * (app.py:1271-1311; the engine's threads are chain-granular). */
-  private def deleteChain(path: String, body: String): (Int, String) =
+  private def deleteChain(path: String): (Int, String) =
     withStore { st =>
       val id = path.stripPrefix("/delete_chain/")
       if (id.isEmpty || id.contains("/")) (400, err("thread id required"))
@@ -792,16 +788,16 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
 
   /** /submit_feedback: persist user feedback as JSON under
     * `<dataDir>/feedback/` (app.py:1318-1359 — flat append-only records). */
-  private def submitFeedback(body: String): (Int, String) = {
-    val text = HttpLlm.extractField(body, "feedback").getOrElse("")
+  private def submitFeedback(req: JsonNode): (Int, String) = {
+    val text = Json.text(req, "feedback").getOrElse("")
     if (text.isEmpty) return (400, err("No feedback provided"))
-    val rating = numField(body, "rating").getOrElse(0L)
+    val rating = Json.long(req, "rating").getOrElse(0L)
     val dir = dataDir.resolve("feedback")
     java.nio.file.Files.createDirectories(dir)
     val file = dir.resolve(s"feedback-${feedbackSeq.incrementAndGet()}.json")
     java.nio.file.Files.writeString(file,
-      s"""{"feedback":${jstr(text)},"rating":$rating}""")
-    (200, s"""{"message":"Feedback submitted.","filename":${jstr(file.toString)}}""")
+      s"""{"feedback":${Json.str(text)},"rating":$rating}""")
+    (200, s"""{"message":"Feedback submitted.","filename":${Json.str(file.toString)}}""")
   }
 
   // seeded past the HIGHEST existing record index (not the file count —
@@ -816,19 +812,19 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
       .getOrElse(0L))
 
   private def newConversation: (Int, String) = withStore { _ =>
-    (200, s"""{"thread_id":${jstr("thread-" +
+    (200, s"""{"thread_id":${Json.str("thread-" +
       java.util.UUID.randomUUID().toString.take(8))}}""")
   }
 
-  private def searchThreads(body: String): (Int, String) = withStore { st =>
-    val q = HttpLlm.extractField(body, "query").getOrElse("")
+  private def searchThreads(req: JsonNode): (Int, String) = withStore { st =>
+    val q = Json.text(req, "query").getOrElse("")
     if (q.isEmpty) (400, err("No query provided"))
     else {
       val hits = allThreadIds(st).filter { id =>
         st.restore(id)
         st.messages(id).exists(_.content.toLowerCase.contains(q.toLowerCase))
       }
-      (200, s"""{"threads":${hits.map(jstr).mkString("[", ",", "]")}}""")
+      (200, s"""{"threads":${hits.map(Json.str).mkString("[", ",", "]")}}""")
     }
   }
 
@@ -841,8 +837,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
 
   private val auxPaths = scala.collection.mutable.LinkedHashSet.empty[String]
 
-  private def auxUpload(body: String): (Int, String) =
-    HttpLlm.extractField(body, "path") match {
+  private def auxUpload(req: JsonNode): (Int, String) =
+    Json.text(req, "path") match {
       case None | Some("") => (400, err("No path provided"))
       case Some(p) =>
         // validate the path is readable NOW (schema fetch only) so a bad
@@ -858,11 +854,11 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
           Sources.warc(session.spark, p).limit(1).count()
         else Sources.parquetSchema(session.spark, p)
         auxPaths += p
-        (200, s"""{"message":"Auxiliary dataset registered.","filepath":${jstr(p)}}""")
+        (200, s"""{"message":"Auxiliary dataset registered.","filepath":${Json.str(p)}}""")
     }
 
-  private def auxRemove(body: String): (Int, String) =
-    HttpLlm.extractField(body, "file_path") match {
+  private def auxRemove(req: JsonNode): (Int, String) =
+    Json.text(req, "file_path") match {
       case None | Some("") => (400, err("file_path is required"))
       case Some(p) if auxPaths.remove(p) =>
         (200, """{"message":"Auxiliary dataset removed."}""")
@@ -872,13 +868,13 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   /** Shared per-path framing of the aux inspectors: `i.\nPath: p\n<label>
     * <rendered>` joined by blank lines, per-path errors inline (the
     * reference's exact degradation — one bad path never fails the batch). */
-  private def auxPerPath(body: String, label: String,
+  private def auxPerPath(req: JsonNode, label: String,
       render: DataFrame => String): (Int, String) =
-    strArrayField(body, "file_paths") match {
+    Json.strings(req, "file_paths") match {
       case None => (400, err("file_paths must be a list"))
       case Some(Nil) => (200, """{"data":"No auxiliary datasets provided."}""")
       case Some(paths) =>
-        val n = numField(body, "num_rows").getOrElse(5L).toInt
+        val n = Json.long(req, "num_rows").getOrElse(5L).toInt
         val parts = paths.zipWithIndex.map { case (p, i) =>
           val head = s"${i + 1}.\nPath: $p\n"
           try head + label + render(auxRead(p, n))
@@ -886,16 +882,16 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
             head + "Error: " + Lifecycle.condense(
               Option(e.getMessage).getOrElse(e.getClass.getSimpleName)) }
         }
-        (200, s"""{"data":${jstr(parts.mkString("\n\n"))}}""")
+        (200, s"""{"data":${Json.str(parts.mkString("\n\n"))}}""")
     }
 
   /** compute_aux_dataset_sample: one HTML table per path
     * (code_executor_api.py:519-562), errors as single-cell tables. */
-  private def auxSampleHtml(body: String): (Int, String) =
-    strArrayField(body, "file_paths") match {
+  private def auxSampleHtml(req: JsonNode): (Int, String) =
+    Json.strings(req, "file_paths") match {
       case None => (400, err("file_paths must be a list"))
       case Some(paths) =>
-        val n = numField(body, "num_rows").getOrElse(100L).toInt
+        val n = Json.long(req, "num_rows").getOrElse(100L).toInt
         val htmls = (if (paths.isEmpty)
           Seq("<table><tr><th>Error</th></tr><tr><td>No auxiliary dataset paths provided.</td></tr></table>")
         else paths.map { p =>
@@ -904,7 +900,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
             "<table><tr><th>Error</th></tr><tr><td>" + Lifecycle.condense(
               Option(e.getMessage).getOrElse(e.getClass.getSimpleName)) +
               "</td></tr></table>" }
-        }).map(jstr).mkString("[", ",", "]")
+        }).map(Json.str).mkString("[", ",", "]")
         (200, s"""{"html_results":$htmls}""")
     }
 
@@ -927,8 +923,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     * json.dumps nested inside jsonify), preserved verbatim so a reference
     * front-end parses our responses unchanged. */
   private def dfHtmlJson(html: String): String = {
-    val inner = s"""{"type":"dataframe","data":${jstr(html)}}"""
-    s"""{"dataframe_html":${jstr(inner)}}"""
+    val inner = s"""{"type":"dataframe","data":${Json.str(html)}}"""
+    s"""{"dataframe_html":${Json.str(inner)}}"""
   }
 
   private def cellTable(k: String, v: String): String =
@@ -942,8 +938,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     * the engine form evicts the cached table, whose eviction hook unbinds
     * the id (the aux registry is untouched). 400 with the reference's message
     * when nothing is loaded under that id. */
-  private def removePrimaryDataset(body: String): (Int, String) = {
-    val dfId = HttpLlm.extractField(body, "df_id").getOrElse("")
+  private def removePrimaryDataset(req: JsonNode): (Int, String) = {
+    val dfId = Json.text(req, "df_id").getOrElse("")
     if (dfId.nonEmpty && cache.remove(dfId))
       (200, """{"message":"Primary dataset removed successfully."}""")
     else (400, """{"message":"No primary dataset is currently loaded."}""")
@@ -954,8 +950,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     * exactly in its degradation: no/unknown df_id and render failures are
     * 200 responses carrying an Info/Error single-cell table, never 4xx
     * (the sidebar renders whatever table it gets). */
-  private def primaryPreview(body: String): (Int, String) = {
-    val dfId = HttpLlm.extractField(body, "df_id").getOrElse("")
+  private def primaryPreview(req: JsonNode): (Int, String) = {
+    val dfId = Json.text(req, "df_id").getOrElse("")
     cache.get(dfId) match {
       case None => (200, dfHtmlJson(cellTable("Info",
         "No primary dataset is currently loaded or available.")))
@@ -974,8 +970,8 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     * the reference's authorization rule (app.py:823-926): only a path
     * REGISTERED for this session previews; an unknown path degrades to a
     * 200 error-table (not a 4xx), missing file_path is the one 400. */
-  private def datasetPreview(body: String): (Int, String) =
-    HttpLlm.extractField(body, "file_path") match {
+  private def datasetPreview(req: JsonNode): (Int, String) =
+    Json.text(req, "file_path") match {
       case None | Some("") => (400,
         """{"message":"File path is required for auxiliary dataset preview."}""")
       case Some(p) if !auxPaths.contains(p) =>
@@ -997,7 +993,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     * own Vega-Lite `plot_spec` capture (§1.1 deviation — returned as
     * `plotSpec`, with `hasPlotly` still the presence flag the sidebar
     * keys on). Missing chain file → 404 with the reference's message. */
-  private def chainPreview(path: String, body: String): (Int, String) = {
+  private def chainPreview(path: String): (Int, String) = {
     val parts = path.stripPrefix("/get_chain_preview/").split("/")
     if (parts.length != 2 || parts.exists(p => p.isEmpty || p.contains("..")))
       return (400, err("thread_id and chain_id required"))
@@ -1006,15 +1002,15 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
       .resolve(s"$chainId.json")
     if (!java.nio.file.Files.exists(file))
       return (404, err("Chain file not found"))
-    val text = java.nio.file.Files.readString(file)
+    val favourite = Json.fields(java.nio.file.Files.readString(file))
     // the reference scans contentOutput/streamOutput/tabContent; the
     // engine's storeFavourite writes `content` — accept all four
     val fields = Seq("content", "contentOutput", "streamOutput", "tabContent")
-      .flatMap(f => HttpLlm.extractField(text, f)).filter(_.nonEmpty)
-    val ids = s""""threadId":${jstr(threadId)},"chainId":${jstr(chainId)}"""
+      .flatMap(Json.text(favourite, _)).filter(_.nonEmpty)
+    val ids = s""""threadId":${Json.str(threadId)},"chainId":${Json.str(chainId)}"""
     fields.iterator.map(extractPlotly).collectFirst { case Some(p) => p } match {
       case Some(plotly) =>
-        (200, s"""{$ids,"hasPlotly":true,"plotlyData":${jstr(plotly)}}""")
+        (200, s"""{$ids,"hasPlotly":true,"plotlyData":${Json.str(plotly)}}""")
       case None =>
         fields.iterator.map(extractPlotSpec)
           .collectFirst { case Some(sp) => sp } match {
@@ -1032,83 +1028,42 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
       .map(_.group(1).replace("&quot;", "\""))
   }
 
-  /** Balanced-brace extraction of an embedded `"plot_spec": {...}` value —
-    * the /execute plot capture a favourited chain carries. String-aware so
-    * braces inside the spec's own strings don't unbalance the scan. The
-    * extracted substring is spliced RAW into the preview response, and
-    * balanced braces do not imply valid JSON (a truncated or mangled
-    * favourite could hold `{"a": }`), so the candidate must round-trip
-    * through a strict JSON parse before it is returned — a malformed spec
-    * degrades to hasPlotly:false instead of a syntactically invalid
-    * response body. */
-  private def extractPlotSpec(content: String): Option[String] =
-    extractPlotSpecRaw(content).filter { cand =>
-      try {
-        val m = new com.fasterxml.jackson.databind.ObjectMapper()
-        m.readTree(cand); true
-      } catch { case _: Exception => false }
-    }
-
-  private def extractPlotSpecRaw(content: String): Option[String] = {
-    val at = content.indexOf("\"plot_spec\":")
-    if (at < 0) return None
-    val start = content.indexOf('{', at)
-    if (start < 0) return None
-    var depth = 0; var i = start; var inStr = false; var esc = false
-    while (i < content.length) {
-      val c = content.charAt(i)
-      if (esc) esc = false
-      else if (inStr) {
-        if (c == '\\') esc = true else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) return Some(content.substring(start, i + 1))
-        case _ => ()
-      }
-      i += 1
-    }
-    None
+  /** The object an embedded `"plot_spec": {...}` holds — the /execute
+    * plot capture a favourited chain carries — read as one JSON value and
+    * re-serialized, so the preview never splices malformed JSON: a spec
+    * that does not parse (a truncated or mangled favourite could hold
+    * `{"a": }`) degrades to hasPlotly:false. */
+  private def extractPlotSpec(content: String): Option[String] = {
+    val key = "\"plot_spec\":"
+    val at = content.indexOf(key)
+    if (at < 0) None
+    else Json.valueAt(content, at + key.length).filter(_.isObject).map(Json.write)
   }
 
   // ---- plumbing ----
 
-  /** [[handler]] variant that also passes the request path (for
-    * path-parameter endpoints like /load_thread/<id>). */
-  private def handlerWithPath(f: (String, String) => (Int, String)):
-      com.sun.net.httpserver.HttpHandler = (ex: HttpExchange) => {
-    val (code, json) =
-      try {
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
-        f(ex.getRequestURI.getPath, body)
-      } catch {
-        case e: Exception => (200, err(Lifecycle.condense(
-          Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))
-      }
-    respond(ex, code, json)
-  }
+  /** A JSON endpoint: the request body parsed once (see [[Json.fields]]);
+    * an exception answers 200 with an `error` key. */
+  private def handler(f: JsonNode => (Int, String)): HttpHandler =
+    (ex: HttpExchange) => {
+      val (code, json) =
+        try f(Json.fields(new String(ex.getRequestBody.readAllBytes(),
+          StandardCharsets.UTF_8)))
+        catch {
+          case e: Exception => (200, err(Lifecycle.condense(
+            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))
+        }
+      respond(ex, code, json)
+    }
 
-  private def handler(f: String => (Int, String)):
-      com.sun.net.httpserver.HttpHandler = (ex: HttpExchange) => {
-    val (code, json) =
-      try {
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
-        f(body)
-      } catch {
-        case e: Exception => (200, err(Lifecycle.condense(
-          Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))
-      }
-    respond(ex, code, json)
-  }
+  /** [[handler]] for path-parameter endpoints like /load_thread/<id>. */
+  private def pathHandler(f: String => (Int, String)): HttpHandler =
+    (ex: HttpExchange) => handler(_ => f(ex.getRequestURI.getPath)).handle(ex)
 
   /** The reference's shared df_id guard: 400 when absent, 404 on miss. */
-  private def withDf(body: String)(
+  private def withDf(req: JsonNode)(
       f: (String, DataFrame) => (Int, String)): (Int, String) =
-    HttpLlm.extractField(body, "df_id") match {
+    Json.text(req, "df_id") match {
       case None | Some("") => (400, err("No df_id provided"))
       case Some(id) => cache.get(id) match {
         case None => (404, err("DataFrame not found in cache"))
@@ -1131,76 +1086,13 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     val cols = df.columns.toSeq
     val rows = df.limit(limit).collect().map { r =>
       cols.indices.map(i =>
-        jstr(cols(i)) + ":" + PlotSpec.jsonValue(r.get(i)))
+        Json.str(cols(i)) + ":" + PlotSpec.jsonValue(r.get(i)))
         .mkString("{", ",", "}")
     }.mkString("[", ",", "]")
-    s"""{"data":$rows,"columns":${cols.map(jstr).mkString("[", ",", "]")}}"""
+    s"""{"data":$rows,"columns":${cols.map(Json.str).mkString("[", ",", "]")}}"""
   }
 
-  private def err(msg: String): String = s"""{"error":${jstr(msg)}}"""
-
-  private def jstr(s: String): String = HttpLlm.jsonStr(s)
-
-  /** First `"name": ["a", "b", ...]` array of strings in the payload;
-    * None when the key is absent or its value is not an array. Same
-    * escape discipline as [[HttpLlm.extractFields]]. */
-  private def strArrayField(json: String, name: String): Option[Seq[String]] = {
-    val key = "\"" + name + "\""
-    var at = json.indexOf(key)
-    while (at >= 0) {
-      var i = at + key.length
-      while (i < json.length && json(i).isWhitespace) i += 1
-      if (i < json.length && json(i) == ':') {
-        i += 1
-        while (i < json.length && json(i).isWhitespace) i += 1
-        if (i >= json.length || json(i) != '[') return None
-        i += 1
-        val out = Seq.newBuilder[String]
-        while (i < json.length && json(i) != ']') {
-          if (json(i) == '"') {
-            i += 1
-            val b = new StringBuilder
-            while (i < json.length && json(i) != '"') {
-              if (json(i) == '\\' && i + 1 < json.length) {
-                b.append(json(i + 1) match {
-                  case 'n' => '\n'; case 'r' => '\r'; case 't' => '\t'
-                  case c => c
-                })
-                i += 2
-              } else { b.append(json(i)); i += 1 }
-            }
-            i += 1
-            out += b.toString
-          } else i += 1
-        }
-        return Some(out.result())
-      }
-      at = json.indexOf(key, at + 1)
-    }
-    None
-  }
-
-  /** First integer-valued `"name": N` in the payload (the body scanner in
-    * [[HttpLlm]] reads string values only). */
-  private def numField(json: String, name: String): Option[Long] = {
-    val key = "\"" + name + "\""
-    var at = json.indexOf(key)
-    while (at >= 0) {
-      var i = at + key.length
-      while (i < json.length && json(i).isWhitespace) i += 1
-      if (i < json.length && json(i) == ':') {
-        i += 1
-        while (i < json.length && json(i).isWhitespace) i += 1
-        val start = i
-        if (i < json.length && json(i) == '-') i += 1
-        while (i < json.length && json(i).isDigit) i += 1
-        if (i > start && json.substring(start, i) != "-")
-          return Some(json.substring(start, i).toLong)
-      }
-      at = json.indexOf(key, at + 1)
-    }
-    None
-  }
+  private def err(msg: String): String = s"""{"error":${Json.str(msg)}}"""
 }
 
 /** Minimal byte-safe multipart/form-data parser for the /upload route —

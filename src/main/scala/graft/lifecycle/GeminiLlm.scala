@@ -2,6 +2,8 @@ package graft.lifecycle
 
 import java.net.HttpURLConnection
 
+import com.fasterxml.jackson.databind.JsonNode
+
 /** Gemini generateContent adapter behind [[Agents.LlmClient]] — the third
   * provider wire the engine speaks natively (the reference ships
   * bambooai/models/gemini_models.py over the google.genai SDK, converting
@@ -14,7 +16,7 @@ import java.net.HttpURLConnection
   *    `x-goog-api-key` header; body carries `system_instruction` (parts),
   *    `contents: [{role:"user", parts:[{text}]}]`, and `generationConfig
   *    .maxOutputTokens`;
-  *  - responses carry `candidates[0].content.parts[0].text`;
+  *  - responses carry `candidates[0].content.parts[*].text`;
   *  - streaming swaps the verb for `:streamGenerateContent?alt=sse`: each
   *    SSE data event is a response chunk whose parts carry a text delta,
   *    and the FINAL chunk signals completion inline via `finishReason`
@@ -32,8 +34,8 @@ final class GeminiLlmClient(baseUrl: String, apiKey: String, model: String,
   private def openFor(stage: String, prompt: String,
       stream: Boolean): HttpURLConnection = {
     val body =
-      s"""{"system_instruction":{"parts":[{"text":${HttpLlm.jsonStr(HttpLlm.stagePrompt(stage))}}]},
-         |"contents":[{"role":"user","parts":[{"text":${HttpLlm.jsonStr(prompt)}}]}],
+      s"""{"system_instruction":{"parts":[{"text":${Json.str(HttpLlm.stagePrompt(stage))}}]},
+         |"contents":[{"role":"user","parts":[{"text":${Json.str(prompt)}}]}],
          |"generationConfig":{"maxOutputTokens":$maxTokens}}""".stripMargin
     val verb =
       if (stream) s"$model:streamGenerateContent?alt=sse"
@@ -42,13 +44,16 @@ final class GeminiLlmClient(baseUrl: String, apiKey: String, model: String,
       Seq("x-goog-api-key" -> apiKey), body, timeoutMs)
   }
 
-  /** All text parts of a payload, concatenated — long completions span
-    * SEVERAL `parts` entries (and streaming chunks may carry more than
-    * one), so taking only the first would silently truncate. The request
-    * leaves candidateCount at its default of 1, so every text part
-    * belongs to the one candidate. */
-  private def allText(payload: String): Option[String] = {
-    val parts = HttpLlm.extractFields(payload, "text")
+  private def candidate(payload: JsonNode): JsonNode =
+    payload.path("candidates").path(0)
+
+  /** All `candidates[0].content.parts[*].text`, concatenated — long
+    * completions span SEVERAL `parts` entries (and streaming chunks may
+    * carry more than one), so taking only the first would silently
+    * truncate. The request leaves candidateCount at its default of 1. */
+  private def allText(payload: JsonNode): Option[String] = {
+    val parts = Json.elements(candidate(payload).path("content").path("parts"))
+      .flatMap(Json.text(_, "text"))
     if (parts.isEmpty) None else Some(parts.mkString)
   }
 
@@ -56,7 +61,7 @@ final class GeminiLlmClient(baseUrl: String, apiKey: String, model: String,
     val conn = openFor(stage, prompt, stream = false)
     try {
       val text = HttpLlm.readBody(conn)
-      allText(text).getOrElse(
+      allText(Json.fields(text)).getOrElse(
         throw new RuntimeException(
           s"no text part in response: ${graft.plans.Lifecycle.condense(text)}"))
     } finally conn.disconnect()
@@ -75,18 +80,15 @@ final class GeminiLlmClient(baseUrl: String, apiKey: String, model: String,
     // partial text as success would be silent truncation, so those fail
     // like a mid-stream error (failOn runs before the delta extract, so
     // a blocked chunk's trailing text is never appended)
+    def reason(p: JsonNode) = Json.text(candidate(p), "finishReason")
     try HttpLlm.ssePump(conn, t0,
-      isStop = p =>
-        HttpLlm.extractField(p, "finishReason").contains("STOP"),
-      failOn = p => {
-        val reason = HttpLlm.extractField(p, "finishReason")
-        if (allText(p).isEmpty && HttpLlm.hasKey(p, "error"))
-          Some(HttpLlm.extractField(p, "message")
-            .getOrElse(graft.plans.Lifecycle.condense(p)))
-        else if (reason.exists(_ != "STOP"))
-          Some(s"stream blocked: finishReason=${reason.get}")
-        else None
-      },
+      isStop = (_, p) => reason(p).contains("STOP"),
+      failOn = p =>
+        if (allText(p).isEmpty && Json.child(p, "error").nonEmpty)
+          Some(Json.text(p.path("error"), "message")
+            .getOrElse(graft.plans.Lifecycle.condense(Json.write(p))))
+        else reason(p).filter(_ != "STOP")
+          .map(r => s"stream blocked: finishReason=$r"),
       extractDelta = allText,
       onDelta = onDelta)
     finally conn.disconnect()

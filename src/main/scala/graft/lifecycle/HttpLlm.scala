@@ -3,6 +3,8 @@ package graft.lifecycle
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.databind.JsonNode
+
 /** Live LLM provider adapter: an OpenAI-compatible chat-completions client
   * behind [[Agents.LlmClient]] — the reference's provider dispatch surface
   * (bambooai/models/__init__.py:121-164; request/response shape
@@ -26,9 +28,9 @@ final class HttpLlmClient(private[graft] val baseUrl: String,
   private def open(stage: String, prompt: String,
       stream: Boolean): HttpURLConnection = {
     val body =
-      s"""{"model":${HttpLlm.jsonStr(model)},${if (stream) "\"stream\":true," else ""}"messages":[
-         |{"role":"system","content":${HttpLlm.jsonStr(HttpLlm.stagePrompt(stage))}},
-         |{"role":"user","content":${HttpLlm.jsonStr(prompt)}}]}""".stripMargin
+      s"""{"model":${Json.str(model)},${if (stream) "\"stream\":true," else ""}"messages":[
+         |{"role":"system","content":${Json.str(HttpLlm.stagePrompt(stage))}},
+         |{"role":"user","content":${Json.str(prompt)}}]}""".stripMargin
     HttpLlm.postJson(s"$baseUrl/chat/completions",
       Seq("Authorization" -> s"Bearer $apiKey"), body, timeoutMs)
   }
@@ -37,7 +39,7 @@ final class HttpLlmClient(private[graft] val baseUrl: String,
     val conn = open(stage, prompt, stream = false)
     try {
       val text = HttpLlm.readBody(conn)
-      HttpLlm.extractContent(text).getOrElse(
+      HttpLlm.choiceContent(Json.fields(text), "message").getOrElse(
         throw new RuntimeException(
           s"no message content in response: ${graft.plans.Lifecycle.condense(text)}"))
     } finally conn.disconnect()
@@ -55,20 +57,19 @@ final class HttpLlmClient(private[graft] val baseUrl: String,
       onDelta: String => Unit = _ => ()): HttpLlm.StreamResult = {
     val t0 = System.nanoTime()
     val conn = open(stage, prompt, stream = true)
-    // error events on this wire carry an "error" KEY and no delta content
-    // (gateways differ on surrounding fields/whitespace, so no prefix
-    // anchoring); a delta whose content TEXT mentions "error" has
-    // extractable content and is never treated as a failure. The key's
-    // VALUE must be non-null: some OpenAI-compatible gateways emit
-    // "error":null on every healthy chunk
+    // error events on this wire carry a top-level "error" and no delta
+    // content (gateways add other fields around it); a delta whose content
+    // TEXT mentions "error" is never a failure. The value must be
+    // non-null: some OpenAI-compatible gateways emit "error":null on every
+    // healthy chunk
+    def delta(p: JsonNode) = HttpLlm.choiceContent(p, "delta")
     try HttpLlm.ssePump(conn, t0,
-      isStop = _ == "[DONE]",
+      isStop = (raw, _) => raw == "[DONE]",
       failOn = p =>
-        if (HttpLlm.extractContent(p).isEmpty &&
-            HttpLlm.hasNonNullKey(p, "error"))
-          Some(graft.plans.Lifecycle.condense(p))
+        if (delta(p).isEmpty && Json.child(p, "error").nonEmpty)
+          Some(graft.plans.Lifecycle.condense(Json.write(p)))
         else None,
-      extractDelta = HttpLlm.extractContent,
+      extractDelta = delta,
       onDelta = onDelta)
     finally conn.disconnect()
   }
@@ -114,13 +115,17 @@ object HttpLlm {
   /** Drain an SSE stream into a [[StreamResult]] — the pump shared by the
     * provider wires, parameterized only by the three things that differ:
     * the stop sentinel, the mid-stream error shape, and delta extraction.
+    * Each `data:` payload is parsed once ([[Json.fields]]: a payload that
+    * is not a JSON object, such as `[DONE]`, has no fields); `isStop` also
+    * sees the raw text.
     * Mid-stream error events arrive AFTER the HTTP 200 is committed (both
     * public wire contracts document them), so `failOn` must throw rather
     * than let the server's close return a silently truncated completion
     * as success. */
   private[lifecycle] def ssePump(conn: HttpURLConnection, t0: Long,
-      isStop: String => Boolean, failOn: String => Option[String],
-      extractDelta: String => Option[String],
+      isStop: (String, JsonNode) => Boolean,
+      failOn: JsonNode => Option[String],
+      extractDelta: JsonNode => Option[String],
       onDelta: String => Unit): StreamResult = {
     failIfError(conn)
     val reader = new java.io.BufferedReader(
@@ -133,7 +138,8 @@ object HttpLlm {
       if (line.startsWith("data:")) {
         val payload = line.stripPrefix("data:").trim
         if (payload.nonEmpty) {
-          failOn(payload) match {
+          val node = Json.fields(payload)
+          failOn(node) match {
             case Some(msg) => throw new RuntimeException(
               s"LLM stream error after ${text.length} chars: $msg")
             case None =>
@@ -141,10 +147,10 @@ object HttpLlm {
               // INSIDE the final content-bearing chunk (finishReason),
               // so a stop-first order would drop the last delta; the
               // sentinel payloads of the other wires carry no delta
-              extractDelta(payload).foreach { d =>
+              extractDelta(node).foreach { d =>
                 text.append(d); chunks += 1; onDelta(d)
               }
-              if (isStop(payload)) stopped = true
+              if (isStop(payload, node)) stopped = true
           }
         }
       }
@@ -162,21 +168,6 @@ object HttpLlm {
       if (elapsedSec > 0) chunks / elapsedSec else 0.0)
   }
 
-  /** JSON string literal with full escaping. */
-  def jsonStr(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < 0x20 => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append('"').toString
-  }
-
   /** Shared HTTP-error guard for the provider adapters. */
   private[lifecycle] def failIfError(conn: HttpURLConnection): Unit = {
     val code = conn.getResponseCode
@@ -191,99 +182,11 @@ object HttpLlm {
     }
   }
 
-  /** Extract choices[0].message.content from a chat-completions response. */
-  def extractContent(json: String): Option[String] = extractField(json, "content")
-
-  /** Whether the payload carries `"name"` as a JSON KEY (a quote-wrapped
-    * occurrence followed by ':', not preceded by a backslash — an escaped
-    * quote means the match sits INSIDE a string value, e.g. the word
-    * appearing in streamed content text). Used to recognize error events
-    * whose value is an object, which [[extractField]] (string values
-    * only) cannot see. */
-  private[lifecycle] def hasKey(json: String, name: String): Boolean = {
-    val key = "\"" + name + "\""
-    var at = json.indexOf(key)
-    while (at >= 0) {
-      if (at == 0 || json(at - 1) != '\\') {
-        var i = at + key.length
-        while (i < json.length && json(i).isWhitespace) i += 1
-        if (i < json.length && json(i) == ':') return true
-      }
-      at = json.indexOf(key, at + 1)
-    }
-    false
-  }
-
-  /** [[hasKey]] restricted to keys whose value is not the literal `null`:
-    * some OpenAI-compatible gateways stamp `"error":null` on every healthy
-    * chunk, which must not read as a stream failure. */
-  private[lifecycle] def hasNonNullKey(json: String, name: String): Boolean = {
-    val key = "\"" + name + "\""
-    var at = json.indexOf(key)
-    while (at >= 0) {
-      if (at == 0 || json(at - 1) != '\\') {
-        var i = at + key.length
-        while (i < json.length && json(i).isWhitespace) i += 1
-        if (i < json.length && json(i) == ':') {
-          i += 1
-          while (i < json.length && json(i).isWhitespace) i += 1
-          if (!json.startsWith("null", i)) return true
-        }
-      }
-      at = json.indexOf(key, at + 1)
-    }
-    false
-  }
-
-  /** First `"name": "<string>"` pair decoded from a JSON payload; quoted
-    * occurrences of `name` that are VALUES rather than keys (no ':'
-    * follows), or keys whose value is not a string (e.g. Anthropic's
-    * `"content": [...]` block array), are skipped and the scan continues.
-    * A purpose-built scanner instead of a JSON dependency (build rules
-    * allow none); the response shapes are fixed by the public API
-    * contracts of the two wires this module speaks. */
-  def extractField(json: String, name: String): Option[String] =
-    extractFields(json, name).headOption
-
-  /** ALL `"name": "<string>"` values in payload order — wires whose
-    * completion spans several parts (Gemini splits long outputs across
-    * `parts` entries) concatenate these; [[extractField]] is the
-    * single-value head. Same key-vs-value discipline as documented above. */
-  def extractFields(json: String, name: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val key = "\"" + name + "\""
-    var at = json.indexOf(key)
-    while (at >= 0) {
-      var i = at + key.length
-      while (i < json.length && json(i).isWhitespace) i += 1
-      if (i < json.length && json(i) == ':') {
-        i += 1
-        while (i < json.length && json(i).isWhitespace) i += 1
-        if (i < json.length && json(i) == '"') {
-          i += 1
-          val b = new StringBuilder
-          while (i < json.length && json(i) != '"') {
-            json(i) match {
-              case '\\' if i + 1 < json.length =>
-                json(i + 1) match {
-                  case 'n' => b.append('\n'); i += 2
-                  case 'r' => b.append('\r'); i += 2
-                  case 't' => b.append('\t'); i += 2
-                  case 'u' if i + 5 < json.length =>
-                    b.append(Integer.parseInt(json.substring(i + 2, i + 6), 16).toChar)
-                    i += 6
-                  case c => b.append(c); i += 2
-                }
-              case c => b.append(c); i += 1
-            }
-          }
-          if (i < json.length) out += b.toString
-        }
-      }
-      at = json.indexOf(key, at + 1)
-    }
-    out.result()
-  }
+  /** `choices[0].<key>.content` of a chat-completions payload: `key` is
+    * `message` in a reply and `delta` in a stream chunk. */
+  private[graft] def choiceContent(payload: JsonNode,
+      key: String): Option[String] =
+    Json.text(payload.path("choices").path(0).path(key), "content")
 
   /** The per-stage system prompt shared by every provider wire — one
     * definition so the stage contract cannot drift between adapters. */

@@ -33,83 +33,22 @@ object LlmConfig {
     def boundStages: Set[String] = bound.keySet
   }
 
-  /** Parse the `agent_configs` JSON shape into stage → Binding. A scanner
-    * for the fixed public config contract (same policy as
-    * [[HttpLlm.extractContent]]: the build admits no JSON dependency).
-    * Key order inside an entry does NOT matter and `details` may contain
-    * nested objects — entries are found by balanced-brace scanning, not by
-    * a fixed key sequence (JSON key order carries no meaning). Unknown
+  /** Parse the `agent_configs` JSON shape into stage → Binding. Unknown
     * fields are ignored, as the reference ignores fields it doesn't read;
     * an entry naming an agent but no model is skipped (the reference falls
     * back to that provider's default model, models/__init__.py:34-60);
-    * structurally broken JSON (unbalanced braces) is rejected loudly. */
-  def parse(json: String): Map[String, Binding] = {
-    // balanced {...} slice starting at the '{' at `open` (string-aware)
-    def slice(open: Int): String = {
-      var depth = 0; var i = open; var inStr = false
-      while (i < json.length) {
-        json(i) match {
-          case '\\' if inStr => i += 1
-          case '"' => inStr = !inStr
-          case '{' if !inStr => depth += 1
-          case '}' if !inStr =>
-            depth -= 1
-            if (depth == 0) return json.substring(open, i + 1)
-          case _ =>
-        }
-        i += 1
-      }
-      throw new IllegalArgumentException(
-        "agent_configs: unbalanced braces from offset " + open)
-    }
-    def strField(obj: String, name: String): Option[String] =
-      ("\"" + name + """"\s*:\s*"([^"]*)"""").r
-        .findFirstMatchIn(obj).map(_.group(1))
-    // string-aware anchor for an offset: scan up to `pos` tracking the
-    // stack of open-'{' offsets and in-string state. A bare lastIndexOf
-    // would mis-anchor on a '{' inside a string value that precedes the
-    // key (e.g. {"comment":"use {x}","agent":...}); and a match found
-    // while inside a string is value text, not a key. Configs are tiny,
-    // so the per-match rescan is irrelevant.
-    def anchor(pos: Int): (Boolean, Option[Int]) = {
-      var i = 0; var inStr = false; var stack = List.empty[Int]
-      while (i < pos) {
-        json(i) match {
-          case '\\' if inStr => i += 1
-          case '"' => inStr = !inStr
-          case '{' if !inStr => stack ::= i
-          case '}' if !inStr => if (stack.nonEmpty) stack = stack.tail
-          case _ =>
-        }
-        i += 1
-      }
-      (inStr, stack.headOption)
-    }
-    // every "agent" key marks one entry; its enclosing object is the
-    // innermost open '{' at the key's offset
-    val agentKey = """"agent"\s*:""".r
-    agentKey.findAllMatchIn(json).flatMap { m =>
-      val (inStr, top) = anchor(m.start)
-      if (inStr) None // "agent" text inside a string value, not a key
-      else {
-        val open = top.getOrElse(throw new IllegalArgumentException(
-          "agent_configs: \"agent\" key outside any object at offset " + m.start))
-        val entry = slice(open)
-        // same in-string guard for the details key: a value like
-        // "note": "\"details\": {" must not anchor the nested slice
-        val details = ("""(?s)"details"\s*:\s*\{""").r.findAllMatchIn(entry)
-          .find(d => !anchor(open + d.start)._1)
-          .map(d => slice(open + d.end - 1)).getOrElse("")
-        for {
-          agent <- strField(entry, "agent")
-          model <- strField(details, "model")
-        } yield agent -> Binding(model,
-          baseUrl = strField(details, "base_url"),
-          apiKey = strField(details, "api_key"),
-          provider = strField(details, "provider"))
-      }
+    * malformed JSON is rejected loudly. */
+  def parse(json: String): Map[String, Binding] =
+    Json.elements(Json.parse(json).path("agent_configs")).flatMap { entry =>
+      val details = entry.path("details")
+      for {
+        agent <- Json.text(entry, "agent")
+        model <- Json.text(details, "model")
+      } yield agent -> Binding(model,
+        baseUrl = Json.text(details, "base_url"),
+        apiKey = Json.text(details, "api_key"),
+        provider = Json.text(details, "provider"))
     }.toMap
-  }
 
   /** Assemble a dispatching client from a parsed config. `mkClient` is the
     * seam tests script; production passes a HttpLlmClient factory. */

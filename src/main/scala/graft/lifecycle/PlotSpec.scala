@@ -13,13 +13,6 @@ object PlotSpec {
   final case class Spec(kind: String, x: String, ys: Seq[String],
       title: String)
 
-  private[lifecycle] def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   /** The reference's plot_2d helper parameter surface
     * (default_prompts.yaml:1290-1313): a plotly-express call reduced to
     * its declarative inputs — plot type, x/y columns, title, axis-label
@@ -50,7 +43,7 @@ object PlotSpec {
     case f: java.lang.Float if f.isNaN || f.isInfinite => "null"
     case n: java.lang.Number => n.toString
     case b: java.lang.Boolean => b.toString
-    case other => "\"" + esc(other.toString) + "\""
+    case other => Json.str(other.toString)
   }
 
   /** Vega-Lite v5 emission of the [[Plot2d]] contract over an aggregated
@@ -68,12 +61,12 @@ object PlotSpec {
     val schema = df.select(cols.head, cols.tail: _*).schema
     val rows = df.select(cols.head, cols.tail: _*).limit(maxRows).collect()
       .map { r =>
-        cols.indices.map(i => "\"" + esc(cols(i)) + "\": " + jsonValue(r.get(i)))
+        cols.indices.map(i => Json.str(cols(i)) + ": " + jsonValue(r.get(i)))
           .mkString("{", ", ", "}")
       }.mkString("[", ", ", "]")
     def axisTitle(c: String) = spec.labels.getOrElse(c, c)
     def enc(channel: String, field: String, dtype: String, extra: String = "") =
-      s""""$channel": {"field": "${esc(field)}", "type": "$dtype"$extra, "title": "${esc(axisTitle(field))}"}"""
+      s""""$channel": {"field": ${Json.str(field)}, "type": "$dtype"$extra, "title": ${Json.str(axisTitle(field))}}"""
     // plotly's histogram bins x itself; Vega-Lite says so explicitly
     val xEnc = enc("x", spec.x, vlType(schema(spec.x).dataType),
       if (spec.plotType == "histogram") ", \"bin\": true" else "")
@@ -85,7 +78,7 @@ object PlotSpec {
     val tooltip =
       if (spec.hoverData.isEmpty || spec.plotType == "histogram") ""
       else ", \"tooltip\": [" + spec.hoverData.map(c =>
-        s"""{"field": "${esc(c)}", "type": "${vlType(schema(c).dataType)}"}""")
+        s"""{"field": ${Json.str(c)}, "type": "${vlType(schema(c).dataType)}"}""")
         .mkString(", ") + "]"
     // histogram y must AGGREGATE per bin (plotly's histfunc defaults to
     // sum when y is given, and Plot2d always carries a y) — without it
@@ -96,17 +89,17 @@ object PlotSpec {
     val (transform, yEnc, colorEnc) =
       if (spec.ys.length == 1) {
         val c = spec.color.map(col =>
-          s""", "color": {"value": "${esc(col)}"}""").getOrElse("")
+          s""", "color": {"value": ${Json.str(col)}}""").getOrElse("")
         ("", enc("y", spec.ys.head, vlType(schema(spec.ys.head).dataType),
           yAgg), c)
       } else {
-        val fold = spec.ys.map(y => "\"" + esc(y) + "\"").mkString(", ")
+        val fold = spec.ys.map(Json.str).mkString(", ")
         (s""""transform": [{"fold": [$fold], "as": ["series", "value"]}], """,
           s""""y": {"field": "value", "type": "quantitative"$yAgg}""",
           """, "color": {"field": "series", "type": "nominal"}""")
       }
     s"""{"$$schema": "https://vega.github.io/schema/vega-lite/v5.json", """ +
-      s""""title": "${esc(spec.title)}", """ +
+      s""""title": ${Json.str(spec.title)}, """ +
       s""""data": {"values": $rows}, """ +
       transform +
       s""""mark": {"type": "$mark"}, """ +
@@ -126,13 +119,13 @@ object PlotSpec {
           if (v == null) "null"
           else v match {
             case n: java.lang.Number => n.toString
-            case other => "\"" + esc(other.toString) + "\""
+            case other => Json.str(other.toString)
           }
         }.mkString("[", ",", "]")
       }.mkString("[", ",", "]")
-    s"""{"kind": "${esc(spec.kind)}", "title": "${esc(spec.title)}",
-       | "x": "${esc(spec.x)}", "ys": [${spec.ys.map(y => "\"" + esc(y) + "\"").mkString(",")}],
-       | "columns": [${cols.map(c => "\"" + esc(c) + "\"").mkString(",")}],
+    s"""{"kind": ${Json.str(spec.kind)}, "title": ${Json.str(spec.title)},
+       | "x": ${Json.str(spec.x)}, "ys": [${spec.ys.map(Json.str).mkString(",")}],
+       | "columns": [${cols.map(Json.str).mkString(",")}],
        | "data": $data}""".stripMargin
   }
 }

@@ -1,6 +1,6 @@
 package graft.lifecycle
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -35,60 +35,27 @@ final class SessionStore(root: Path) {
   def messages(threadId: String): Seq[Message] =
     threads.get(threadId).map(_.toSeq).getOrElse(Seq.empty)
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   /** Persist one thread as JSON (storage_manager.py:137-192). */
   def save(threadId: String): Path = {
     Files.createDirectories(root)
     val body = messages(threadId).map(m =>
-      s"""{"role": "${esc(m.role)}", "content": "${esc(m.content)}"}""")
+      s"""{"role": ${Json.str(m.role)}, "content": ${Json.str(m.content)}}""")
       .mkString("[", ",\n ", "]")
     val p = root.resolve(s"$threadId.json")
     Files.writeString(p, body)
     p
   }
 
-  /** Restore a thread (storage_manager.py:194-243). Minimal JSON reader for
-    * the exact shape [[save]] writes. */
+  /** Restore a thread (storage_manager.py:194-243); returns its message
+    * count, 0 when nothing is stored. */
   def restore(threadId: String): Int = {
     val p = root.resolve(s"$threadId.json")
     if (!Files.exists(p)) return 0
-    val text = Files.readString(p)
-    val msg = """\{"role": "((?:[^"\\]|\\.)*)", "content": "((?:[^"\\]|\\.)*)"\}""".r
-    // Single left-to-right pass mirroring how esc() produced the text:
-    // sequential String.replace corrupts content like backslash+'n' (saved
-    // as \\n — the first replace would eat the escaped backslash's second
-    // char and emit backslash+newline). A tokenizer can't mis-pair.
-    def unesc(s: String): String = {
-      val sb = new StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '\\' && i + 1 < s.length) {
-          s.charAt(i + 1) match {
-            case 'n' => sb += '\n'; i += 2
-            case 'r' => sb += '\r'; i += 2
-            case 't' => sb += '\t'; i += 2
-            case 'u' if i + 5 < s.length =>
-              sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-              i += 6
-            case other => sb += other; i += 2 // covers \" and \\
-          }
-        } else { sb += c; i += 1 }
-      }
-      sb.toString
-    }
     val buf = mutable.ArrayBuffer.empty[Message]
-    msg.findAllMatchIn(text).foreach(m =>
-      buf += Message(unesc(m.group(1)), unesc(m.group(2))))
+    Json.elements(Json.parse(Files.readString(p))).foreach { m =>
+      for (role <- Json.text(m, "role"); content <- Json.text(m, "content"))
+        buf += Message(role, content)
+    }
     threads(threadId) = buf
     buf.length
   }

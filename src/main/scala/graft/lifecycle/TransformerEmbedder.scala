@@ -2,6 +2,8 @@ package graft.lifecycle
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import scala.jdk.CollectionConverters._
+
 /** Transformer sentence encoder — the reference's embedder CLASS
   * (qa_retrieval.py:14-35 loads sentence-transformers
   * `all-MiniLM-L6-v2`), executed in pure Scala from the model's
@@ -69,21 +71,23 @@ object TransformerEmbedder {
       s"safetensors header length $headerLen out of bounds")
     private val header = new String(bytes, 8, headerLen.toInt, "UTF-8")
     private val dataAt = 8 + headerLen.toInt
-    val tensors: Map[String, TensorMeta] =
-      MiniJson.parse(header) match {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]].collect {
-          case (name, meta: Map[_, _]) if name != "__metadata__" =>
-            val mm = meta.asInstanceOf[Map[String, Any]]
-            val off = mm("data_offsets").asInstanceOf[Seq[Any]]
-              .map(_.asInstanceOf[Long])
-            name -> TensorMeta(mm("dtype").asInstanceOf[String],
-              mm("shape").asInstanceOf[Seq[Any]]
-                .map(_.asInstanceOf[Long].toInt),
-              off(0), off(1))
-        }
-        case other => throw new IllegalArgumentException(
-          s"safetensors header is not an object: $other")
-      }
+    val tensors: Map[String, TensorMeta] = {
+      val root = Json.parse(header)
+      require(root.isObject, s"safetensors header is not an object: $root")
+      root.properties.asScala.collect {
+        case e if e.getKey != "__metadata__" && e.getValue.isObject =>
+          val m = e.getValue
+          def longs(k: String) = Json.elements(m.path(k)).map { n =>
+            require(n.isIntegralNumber, s"tensor ${e.getKey}: $k holds $n")
+            n.longValue
+          }
+          val off = longs("data_offsets")
+          require(m.path("dtype").isTextual && m.path("shape").isArray &&
+            off.length == 2, s"tensor ${e.getKey}: malformed entry $m")
+          e.getKey -> TensorMeta(m.path("dtype").textValue,
+            longs("shape").map(_.toInt), off(0), off(1))
+      }.toMap
+    }
 
     def apply(name: String): Array[Float] = {
       val m = tensors.getOrElse(name, throw new IllegalArgumentException(
@@ -101,103 +105,6 @@ object TransformerEmbedder {
     }
 
     def has(name: String): Boolean = tensors.contains(name)
-  }
-
-  /** Minimal recursive-descent JSON reader for the safetensors header
-    * and config.json — objects, arrays, strings, integers/doubles,
-    * true/false/null. Returns Map[String, Any] / Seq[Any] / String /
-    * Long / Double / Boolean / null. */
-  private[lifecycle] object MiniJson {
-    def parse(s: String): Any = {
-      val p = new P(s)
-      val v = p.value()
-      p.ws()
-      require(p.at >= s.length, s"trailing JSON content at ${p.at}")
-      v
-    }
-    private final class P(s: String) {
-      var at = 0
-      def ws(): Unit = while (at < s.length && s.charAt(at).isWhitespace) at += 1
-      def value(): Any = {
-        ws()
-        s.charAt(at) match {
-          case '{' => obj()
-          case '[' => arr()
-          case '"' => str()
-          case 't' => expect("true"); true
-          case 'f' => expect("false"); false
-          case 'n' => expect("null"); null
-          case _ => num()
-        }
-      }
-      private def expect(lit: String): Unit = {
-        require(s.startsWith(lit, at), s"bad JSON literal at $at")
-        at += lit.length
-      }
-      private def obj(): Map[String, Any] = {
-        at += 1; ws()
-        val b = Map.newBuilder[String, Any]
-        if (s.charAt(at) == '}') { at += 1; return b.result() }
-        while (true) {
-          ws()
-          val k = str()
-          ws(); require(s.charAt(at) == ':', s"expected ':' at $at"); at += 1
-          b += k -> value()
-          ws()
-          s.charAt(at) match {
-            case ',' => at += 1
-            case '}' => at += 1; return b.result()
-            case c => throw new IllegalArgumentException(s"bad JSON object char '$c' at $at")
-          }
-        }
-        b.result()
-      }
-      private def arr(): Seq[Any] = {
-        at += 1; ws()
-        val b = Seq.newBuilder[Any]
-        if (s.charAt(at) == ']') { at += 1; return b.result() }
-        while (true) {
-          b += value()
-          ws()
-          s.charAt(at) match {
-            case ',' => at += 1
-            case ']' => at += 1; return b.result()
-            case c => throw new IllegalArgumentException(s"bad JSON array char '$c' at $at")
-          }
-        }
-        b.result()
-      }
-      private def str(): String = {
-        require(s.charAt(at) == '"', s"expected string at $at"); at += 1
-        val sb = new StringBuilder
-        while (s.charAt(at) != '"') {
-          val c = s.charAt(at)
-          if (c == '\\') {
-            at += 1
-            s.charAt(at) match {
-              case 'n' => sb.append('\n'); at += 1
-              case 't' => sb.append('\t'); at += 1
-              case 'r' => sb.append('\r'); at += 1
-              case 'b' => sb.append('\b'); at += 1
-              case 'f' => sb.append('\f'); at += 1
-              case 'u' =>
-                sb.append(Integer.parseInt(s.substring(at + 1, at + 5), 16).toChar)
-                at += 5
-              case e => sb.append(e); at += 1
-            }
-          } else { sb.append(c); at += 1 }
-        }
-        at += 1
-        sb.toString
-      }
-      private def num(): Any = {
-        val start = at
-        while (at < s.length && "+-.eE0123456789".indexOf(s.charAt(at)) >= 0) at += 1
-        val t = s.substring(start, at)
-        require(t.nonEmpty, s"bad JSON number at $start")
-        if (t.exists(c => c == '.' || c == 'e' || c == 'E')) t.toDouble else t.toLong
-      }
-    }
   }
 
   // ---- model ------------------------------------------------------------
@@ -449,12 +356,9 @@ object TransformerEmbedder {
       require(nLayers > 0, s"no encoder layers found in $dir")
       val config = new String(java.nio.file.Files.readAllBytes(
         need("config.json")), "UTF-8")
-      val heads = MiniJson.parse(config).asInstanceOf[Map[String, Any]]
-        .get("num_attention_heads") match {
-          case Some(n: Long) => n.toInt
-          case _ => throw new IllegalArgumentException(
-            s"config.json in $dir lacks num_attention_heads")
-        }
+      val heads = Json.long(Json.parse(config), "num_attention_heads")
+        .getOrElse(throw new IllegalArgumentException(
+          s"config.json in $dir lacks num_attention_heads")).toInt
       require(hidden % heads == 0,
         s"hidden $hidden not divisible by $heads heads")
       val vocabLines = scala.io.Source.fromFile(need("vocab.txt").toFile,

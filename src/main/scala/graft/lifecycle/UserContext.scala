@@ -105,59 +105,18 @@ object UserContext {
     }
   }
 
-  private val qcField = """"query_clarification"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-  private val fbField = """"feedback"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-
-  /** Single left-to-right pass over the full JSON escape set: sequential
-    * replace() corrupts input where an escaped backslash precedes an
-    * escapable char (e.g. `C:\\new`), and a partial escape table would
-    * mangle \r/\b/\f/\uXXXX by dropping the backslash. Escapes outside
-    * the JSON set keep their two characters intact. */
-  private def unescape(s: String): String = {
-    val out = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        s(i + 1) match {
-          case 'n' => out += '\n'; i += 2
-          case 't' => out += '\t'; i += 2
-          case 'r' => out += '\r'; i += 2
-          case 'b' => out += '\b'; i += 2
-          case 'f' => out += '\f'; i += 2
-          case '"' | '\\' | '/' => out += s(i + 1); i += 2
-          case 'u' if i + 5 < s.length &&
-              s.substring(i + 2, i + 6).forall(c =>
-                // ASCII hex only: Character.digit also accepts fullwidth/
-                // Arabic-Indic digits, which are not legal JSON escapes
-                ('0' <= c && c <= '9') || ('a' <= c && c <= 'f') ||
-                  ('A' <= c && c <= 'F')) =>
-            out += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case c => out += '\\'; out += c; i += 2 // unknown: keep the pair
-        }
-      } else { out += s(i); i += 1 }
-    }
-    out.toString
-  }
-
   /** (query_clarification, feedback) pairs from the feedback file's JSON
-    * list, via the same balanced-brace scan as [[WebSearch]]. Malformed
-    * entries are skipped — the reference logs and keeps polling. */
+    * list. Entries lacking either string are skipped, and a file that does
+    * not parse (the web UI may be mid-write) reads as no entries — the
+    * reference logs and keeps polling. */
   private[lifecycle] def readEntries(json: String): Seq[(String, String)] =
-    try {
-      Iterator.unfold(json.indexOf('{')) { at =>
-        if (at < 0) None
-        else {
-          val obj = WebSearch.balancedSlice(json, at)
-          Some((obj, json.indexOf('{', at + obj.length)))
-        }
-      }.flatMap { obj =>
+    scala.util.Try(Json.parse(json)).toOption.toSeq.flatMap(Json.elements)
+      .flatMap { e =>
         for {
-          q <- qcField.findFirstMatchIn(obj).map(m => unescape(m.group(1)))
-          f <- fbField.findFirstMatchIn(obj).map(m => unescape(m.group(1)))
+          q <- Json.text(e, "query_clarification")
+          f <- Json.text(e, "feedback")
         } yield (q, f)
-      }.toSeq
-    } catch { case _: IllegalArgumentException => Seq.empty }
+      }
 
   /** One resolved round: channel answer, or the reference's timeout text. */
   def resolve(channel: FeedbackChannel, req: Request): String =

@@ -2,6 +2,8 @@ package graft.lifecycle
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Public web-search source — the reference's Research Specialist pipeline
@@ -10,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * (:159-190), ≤30-document corpus cap (:194-232), embed + cosine top-6
   * rerank (:239-259), and the search-summarizer stage over "* chunk" lines
   * (:264-283). The provider and page fetcher are HTTP seams with JDK-only
-  * clients (same no-new-deps, stub-tested policy as [[HttpLlmClient]]), so
+  * clients (stub-tested like [[HttpLlmClient]]), so
   * tests drive the full pipeline against a local wire-shape server.
   *
   * Spark-first split: the per-query fetch set is ≤30 small documents BY
@@ -32,9 +34,9 @@ object WebSearch {
   final case class Link(title: String, url: String)
 
   /** Parsed provider response (the serper.dev wire shape the reference
-    * posts to, google_search.py:149-156). The two direct-answer boxes keep
-    * their raw JSON verbatim — the reference returns `json.dumps(box)` as
-    * the observation (:215, :219). */
+    * posts to, google_search.py:149-156). The two direct-answer boxes are
+    * kept as JSON text — the reference returns `json.dumps(box)` as the
+    * observation (:215, :219). */
   final case class Response(organic: Seq[Link] = Nil,
       answerBox: Option[String] = None, knowledgeGraph: Option[String] = None)
 
@@ -50,71 +52,29 @@ object WebSearch {
     * `return direct_answer, None`, :297). */
   final case class SearchAnswer(answer: String, links: Option[Seq[Link]])
 
-  // ---- JSON scanning (fixed public wire shape; no JSON dependency) ----
-
-  /** Balanced `{...}`/`[...]` slice starting at `open`, string-aware. */
-  private[lifecycle] def balancedSlice(json: String, open: Int): String = {
-    val (inc, dec) = json(open) match {
-      case '{' => ('{', '}')
-      case '[' => ('[', ']')
-      case c => throw new IllegalArgumentException(s"not a bracket: $c")
-    }
-    var depth = 0; var i = open; var inStr = false
-    while (i < json.length) {
-      json(i) match {
-        case '\\' if inStr => i += 1
-        case '"' => inStr = !inStr
-        case c if c == inc && !inStr => depth += 1
-        case c if c == dec && !inStr =>
-          depth -= 1
-          if (depth == 0) return json.substring(open, i + 1)
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(
-      "unbalanced JSON from offset " + open)
-  }
-
-  private def objField(json: String, name: String, open: Char): Option[String] = {
-    ("\"" + name + """"\s*:""").r.findFirstMatchIn(json).flatMap { m =>
-      var i = m.end
-      while (i < json.length && json(i).isWhitespace) i += 1
-      if (i < json.length && json(i) == open) Some(balancedSlice(json, i))
-      else None
-    }
-  }
-
-  private def strField(obj: String, name: String): Option[String] =
-    ("\"" + name + """"\s*:\s*"([^"]*)"""").r
-      .findFirstMatchIn(obj).map(_.group(1))
-
-  /** Parse a serper-shaped response: organic [{title, link}…] plus the raw
-    * answerBox / knowledgeGraph objects when present. */
+  /** Parse a serper-shaped response: organic [{title, link}…] plus the
+    * answerBox / knowledgeGraph objects when present, re-serialized. */
   def parseResponse(json: String): Response = {
-    val organic = objField(json, "organic", '[').toSeq.flatMap { arr =>
-      Iterator.unfold(arr.indexOf('{')) { at =>
-        if (at < 0) None
-        else {
-          val obj = balancedSlice(arr, at)
-          Some((obj, arr.indexOf('{', at + obj.length)))
-        }
-      }.flatMap { obj =>
-        for (l <- strField(obj, "link")) yield
-          Link(strField(obj, "title").getOrElse("No title available"), l)
-      }.toSeq
+    val root = Json.parse(json)
+    val organic = Json.elements(root.path("organic")).flatMap { o =>
+      Json.text(o, "link").map(l =>
+        Link(Json.text(o, "title").getOrElse("No title available"), l))
     }
-    Response(organic,
-      answerBox = objField(json, "answerBox", '{'),
-      knowledgeGraph = objField(json, "knowledgeGraph", '{'))
+    def box(name: String) =
+      Json.child(root, name).filter(_.isObject).map(Json.write)
+    Response(organic, answerBox = box("answerBox"),
+      knowledgeGraph = box("knowledgeGraph"))
   }
 
-  /** First string value containing an https:// URL inside a raw box object.
-    * The reference walks answerBox values with a substring test — `if
+  /** First string value containing an https:// URL in a box object. The
+    * reference walks answerBox values with a substring test — `if
     * "https://" in value` — and uses the WHOLE value as the URL (:203-206),
     * so a prose value embedding a link counts; mirror that exactly. */
-  private[graft] def firstUrl(boxJson: String): Option[String] =
-    """"([^"]*https://[^"]*)"""".r.findFirstMatchIn(boxJson).map(_.group(1))
+  private[graft] def firstUrl(boxJson: String): Option[String] = {
+    val box = Json.parse(boxJson)
+    box.fieldNames.asScala.flatMap(Json.text(box, _))
+      .find(_.contains("https://"))
+  }
 
   /** 512-word chunking of one page into "documents", dropping chunks of
     * ≤100 chars — google_search.py:184-190 verbatim semantics (split on
@@ -133,7 +93,7 @@ object WebSearch {
   final class HttpSearchProvider(baseUrl: String, apiKey: String,
       timeoutMs: Int = 15000) extends SearchProvider {
     def search(query: String): Response = {
-      val body = s"""{"q":${HttpLlm.jsonStr(query)},"gl":"us","hl":"en","num":$SearchResults,"autocorrect":true}"""
+      val body = s"""{"q":${Json.str(query)},"gl":"us","hl":"en","num":$SearchResults,"autocorrect":true}"""
       val conn = URI.create(s"$baseUrl/search").toURL
         .openConnection().asInstanceOf[HttpURLConnection]
       conn.setConnectTimeout(timeoutMs)
@@ -248,7 +208,8 @@ final class WebSearchTool(spark: SparkSession,
         val url = firstUrl(box)
         url.foreach { u =>
           documents ++= fetcher.fetch(u).toSeq.flatMap(chunkPage(_))
-          links :+= Link(strField2(box, "title"), u)
+          links :+= Link(Json.text(Json.parse(box), "title")
+            .getOrElse("No title available"), u)
         }
         if (url.isEmpty || documents.size < 200) direct = Some("\n" + box + "\n")
       case None => resp.knowledgeGraph match {
@@ -284,8 +245,4 @@ final class WebSearchTool(spark: SparkSession,
         }
     }
   }
-
-  private def strField2(obj: String, name: String): String =
-    ("\"" + name + """"\s*:\s*"([^"]*)"""").r
-      .findFirstMatchIn(obj).map(_.group(1)).getOrElse("No title available")
 }

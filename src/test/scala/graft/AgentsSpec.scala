@@ -235,6 +235,18 @@ class AgentsSpec extends SparkSpec {
       "model-b" -> "summarizer", "default" -> "expert_selector"))
   }
 
+  test("LlmConfig.parse decodes escaped strings (\\/ and \\\" in values)") {
+    // JSON encoders may escape '/' (PHP, some Java writers) and keys can
+    // hold any character; the binding must carry the decoded values
+    val cfg = LlmConfig.parse(
+      """{"agent_configs": [{"agent": "planner", "details": {"model": "m",
+        |  "base_url": "https:\/\/api.example.com\/v1",
+        |  "api_key": "k\"ey\\1"}}]}""".stripMargin)
+    assert(cfg == Map("planner" -> LlmConfig.Binding("m",
+      baseUrl = Some("https://api.example.com/v1"),
+      apiKey = Some("k\"ey\\1"))))
+  }
+
   test("request_user_context: analyst selector asks, consumes the answer, re-routes") {
     // first analyst response is the tool call; after the channel answers,
     // the second response routes normally (anthropic_models.py:171-228 loop)

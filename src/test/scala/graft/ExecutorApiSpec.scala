@@ -575,7 +575,7 @@ class ExecutorApiSpec extends SparkSpec {
           |  rdfs:range ex:Event .
           |""".stripMargin
       val (oc, ob) = call(port, "/update_ontology",
-        Some(s"""{"ttl":${graft.lifecycle.HttpLlm.jsonStr(ttl)}}"""))
+        Some(s"""{"ttl":${graft.lifecycle.Json.str(ttl)}}"""))
       assert(oc == 200 && ob.contains("\"classes\":2"), ob)
       assert(call(port, "/get_ontology_state", None)._2
         .contains("\"current_state\":true"))
@@ -885,6 +885,41 @@ class ExecutorApiSpec extends SparkSpec {
       // permits released: the server accepts work again after the storm
       val (ac, ab) = call(port, "/execute", Some("""{"sql":"SELECT 1 AS one"}"""))
       assert(ac == 200 && !ab.contains("\"error\""), s"$ac $ab")
+    } finally api.stop()
+  }
+
+  test("/execute scopes df to its own request: no df_id, no df") {
+    val api = new ExecutorApi(new EngineSession(spark))
+    val port = api.start()
+    try {
+      assert(call(port, "/upload_dataset",
+        Some(s"""{"df_id":"a","path":"$sf/nation.parquet"}"""))._1 == 200)
+      val (c1, b1) = call(port, "/execute",
+        Some("""{"df_id":"a","sql":"SELECT * FROM df"}"""))
+      assert(c1 == 200 && b1.contains("\"n_name\"") && !b1.contains("\"error\""), b1)
+      // no df_id: `df` names no table, whatever an earlier request saw
+      val (c2, b2) = call(port, "/execute", Some("""{"sql":"SELECT * FROM df"}"""))
+      assert(c2 == 200 && b2.contains("unknown relations df") &&
+        !b2.contains("n_name"), b2)
+      // a CTE named df inside the statement still shadows the request's df
+      val (c3, b3) = call(port, "/execute", Some("""{"df_id":"a",""" +
+        """"sql":"WITH df AS (SELECT 1 AS one) SELECT * FROM df"}"""))
+      assert(c3 == 200 && b3.contains("\"data\":[{\"one\":1}]"), b3)
+    } finally api.stop()
+  }
+
+  test("request bodies decode JSON escapes: an escaped é reads as é") {
+    // Python's json.dumps sends non-ASCII as backslash-u escapes by default;
+    // the per-path framing echoes the decoded path (no such file exists:
+    // the JVM's file-name encoding may not carry é)
+    val api = new ExecutorApi(new EngineSession(spark))
+    val port = api.start()
+    try {
+      val path = "target/executor_unicode/données.csv"
+      val escaped = path.replace("é", "\\" + "u00e9")
+      val (c, b) = call(port, "/file_utils/aux_datasets_to_string",
+        Some(s"""{"file_paths":["$escaped"]}"""))
+      assert(c == 200 && b.contains(s"1.\\nPath: $path\\nError:"), b)
     } finally api.stop()
   }
 }

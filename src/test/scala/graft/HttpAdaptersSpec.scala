@@ -2,7 +2,7 @@ package graft
 
 import java.net.InetSocketAddress
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.lifecycle.{Agents, HttpLlm, HttpLlmClient}
+import graft.lifecycle.{Agents, HttpLlm, HttpLlmClient, Json}
 import graft.sources.{Sources, TableCache}
 
 /** S8 remote source + live LLM adapter against a local wire-shape stub —
@@ -97,8 +97,10 @@ class HttpAdaptersSpec extends SparkSpec {
       val e = intercept[RuntimeException] { client.complete("planner", "p") }
       assert(e.getMessage.contains("429"))
     }
-    assert(HttpLlm.extractContent("""{"nope":1}""").isEmpty)
-    assert(HttpLlm.extractContent(
+    def content(reply: String) =
+      HttpLlm.choiceContent(Json.fields(reply), "message")
+    assert(content("""{"nope":1}""").isEmpty)
+    assert(content(
       """{"choices":[{"message":{"content":"aA\nb"}}]}""").contains("aA\nb"))
   }
 
@@ -212,9 +214,9 @@ class HttpAdaptersSpec extends SparkSpec {
       // the adapter satisfies the same seam the agent chain consumes
       assert((client: Agents.LlmClient).complete("planner", "x").nonEmpty)
     }
-    // "content" is a block ARRAY on this wire — the field scanner must
-    // skip it (and the "type":"text" VALUE) and land on the text block
-    assert(HttpLlm.extractField(response, "text")
+    // "content" is a block ARRAY on this wire — the reader must walk it
+    // (past the "type":"text" VALUE) and land on the text block
+    assert(AnthropicLlmClient.textBlocks(Json.parse(response))
       .contains("plan:\n- bucket \"big\" orders"))
   }
 

@@ -168,13 +168,34 @@ class LifecycleSpec extends SparkSpec {
     assert(v.isRight)
   }
 
-  test("mutable-df semantics: rebind + rollback (original_df restore)") {
+  test("mutable-df semantics: rebind replaces, failed runs keep it") {
     val es = session()
+    val original = es.current("df").get
+    // a statement that fails every repair never rebinds: the reference's
+    // original_df restore needs no snapshot
+    val failed = es.executeWithRepair("SELECT nope FROM df", (_, _) => None)
+    assert(failed.df.isEmpty && es.current("df").exists(_ eq original))
+    assert(spark.sql("SELECT count(*) FROM df").collect()(0).getLong(0) == 3)
     es.bind("df", Seq((9, "z")).toDF("id", "tag"))
     assert(spark.sql("SELECT count(*) FROM df").collect()(0).getLong(0) == 1)
-    assert(es.rollback("df"))
-    assert(spark.sql("SELECT count(*) FROM df").collect()(0).getLong(0) == 3)
-    assert(!es.rollback("df")) // no more versions
+  }
+
+  test("a rebind releases the previous version to the collector") {
+    val es = session()
+    // the first DataFrame is reachable only through the session
+    def bindFresh(): java.lang.ref.WeakReference[org.apache.spark.sql.DataFrame] = {
+      val first = Seq((7, "y")).toDF("id", "tag")
+      es.bind("gc_v", first)
+      new java.lang.ref.WeakReference(first)
+    }
+    val first = bindFresh()
+    es.bind("gc_v", Seq((8, "x")).toDF("id", "tag"))
+    var tries = 0
+    while (first.get != null && tries < 20) {
+      System.gc(); Thread.sleep(50); tries += 1
+    }
+    assert(first.get == null, s"the replaced version is still held after $tries collections")
+    assert(es.current("gc_v").get.collect().map(_.getInt(0)).toSeq == Seq(8))
   }
 
   test("repair loop: bad query repaired by callback within bound") {

@@ -64,6 +64,16 @@ class SourcesSpec extends SparkSpec {
     assert(paths.map(p => Sources.parquet(s, p).schema) == before)
   }
 
+  test("Tables.load floors a ns events.ts to a µs timestamp_ntz") {
+    // pandas' default parquet writer emits ns timestamps; the seed-42
+    // fixtures carry µs, so this arm needs a file of its own
+    nanosParquet("target/ns_events/events.parquet")
+    val ev = Tables.load(spark, "target/ns_events", "events")
+    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+    assert(ev.collect().map(_.getAs[java.time.LocalDateTime]("ts")).toSeq ==
+      Seq(java.time.LocalDateTime.parse("2023-11-14T22:13:20.123456")))
+  }
+
   test("S10 zlib+base64 table serialization roundtrip") {
     val df = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     val payload = Sources.serializeTable(df)

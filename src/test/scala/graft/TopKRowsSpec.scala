@@ -79,6 +79,22 @@ class TopKRowsSpec extends AnyFunSuite with SparkSpec {
       spark.conf.set(key, "1")
       assert(asSet(heapForm(df, 3)) == expected)
     } finally spark.conf.set(key, prev)
+    // the registration warning names a deliberate value as set, and says
+    // "(default)" only when the conf is unset (fresh sessions: the warning
+    // fires once per session)
+    def warning(value: Option[String]): String = {
+      val s = spark.newSession()
+      value.fold(s.conf.unset(key))(s.conf.set(key, _))
+      val buf = new java.io.ByteArrayOutputStream()
+      val err = System.err
+      System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+      try TopKRows.register(s) finally System.setErr(err)
+      buf.toString("UTF-8").linesIterator.find(_.contains("topk_rows")).getOrElse("")
+    }
+    val deliberate = warning(Some("1"))
+    assert(deliberate.contains(s"$key=1 ") && !deliberate.contains("(default)"),
+      deliberate)
+    assert(warning(None).contains(s"$key=128 (default)"))
   }
 
   test("null payload structs are skipped; null fields rank last") {

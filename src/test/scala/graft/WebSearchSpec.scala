@@ -54,6 +54,14 @@ class WebSearchSpec extends SparkSpec {
     assert(rb.answerBox.exists(b => b.contains("\"answer\"") && b.contains("nested")))
   }
 
+  test("parseResponse decodes JSON escapes in organic links") {
+    // Go's encoding/json writes & as backslash-u0026
+    val amp = "\\" + "u0026"
+    val r = WebSearch.parseResponse(
+      s"""{"organic":[{"title":"Q $amp A","link":"https://a.example/p?x=1${amp}y=2"}]}""")
+    assert(r.organic == Seq(WebSearch.Link("Q & A", "https://a.example/p?x=1&y=2")))
+  }
+
   test("firstUrl containment; fetcher follows redirects with a hop bound") {
     // the reference takes any answerBox string value CONTAINING https://
     // and uses the whole value as the URL (google_search.py:203-206)

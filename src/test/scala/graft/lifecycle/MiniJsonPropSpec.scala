@@ -4,26 +4,29 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import scala.util.{Random, Try}
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.lifecycle.TransformerEmbedder.{MiniJson, SafeTensors}
+import graft.lifecycle.TransformerEmbedder.SafeTensors
 
-/** Generative coverage for the safetensors container and its hand-rolled
-  * JSON header reader — the last example-tested-only parsers in the
-  * model-loading path. The generator builds the document AST first (the
-  * ground truth), serializes it with an INDEPENDENT writer that sprinkles
-  * the freedoms the format allows (whitespace between tokens, short vs
-  * `\\uXXXX` escapes, hex case, `\\/`, header space-padding, tensor
-  * order), and requires the parser to recover the AST exactly — the same
-  * build-the-truth-first discipline that found real holes in the WARC,
-  * TTL, SQL-gate, multipart, and MJPEG parsers.
+/** Generative coverage for the safetensors container and the JSON reader
+  * its header and `config.json` parse through ([[Json.parse]], the
+  * engine's one Jackson mapper, strict about trailing content). The
+  * generator builds the document AST first (the ground truth), serializes
+  * it with an INDEPENDENT writer that sprinkles the freedoms the format
+  * allows (whitespace between tokens, short vs `\\uXXXX` escapes, hex case,
+  * `\\/`, header space-padding, tensor order), and requires the parser to
+  * recover the AST exactly — the same build-the-truth-first discipline
+  * that found real holes in the WARC, TTL, SQL-gate, multipart, and MJPEG
+  * parsers.
   *
   * Properties:
   *  1. JSON round-trip: parse(write(ast)) == ast with TYPE fidelity
-  *     (a Long stays a Long — Scala's cooperative numeric equality
-  *     would hide an integer arriving as a Double, so the compare
-  *     checks boxes, and doubles compare by bit pattern).
+  *     (a Long reads as an integral node and a Double as a floating-point
+  *     one — a numeric compare alone would hide an integer arriving as a
+  *     Double, so the compare checks node kinds, and doubles compare by
+  *     bit pattern).
   *  2. prefix loudness: every strict prefix of an object-rooted
   *     document fails the parse — nothing truncated ever parses
   *     quietly (the root's closing brace is its last byte).
@@ -75,8 +78,8 @@ class MiniJsonPropSpec extends AnyFunSuite {
     sb.append('"').toString
   }
 
-  /** Serializes exactly the value shapes MiniJson is specified to return:
-    * Map[String, Any] / Seq[Any] / String / Long / Double / Boolean / null. */
+  /** Serializes the AST's value shapes: Map[String, Any] / Seq[Any] /
+    * String / Long / Double / Boolean / null. */
   private def write(v: Any, rnd: Random): String = v match {
     case null       => "null"
     case b: Boolean => b.toString
@@ -94,25 +97,27 @@ class MiniJsonPropSpec extends AnyFunSuite {
     case other => sys.error(s"unexpected AST node: $other")
   }
 
-  /** Type-faithful deep equality: (5L, 5.0) must NOT compare equal (the
-    * parser's Long-vs-Double split is part of its contract), and doubles
-    * compare by bits so -0.0 stays distinguishable from 0.0. */
-  private def deepEq(a: Any, b: Any): Boolean = (a, b) match {
-    case (null, null) => true
-    case (x: Map[_, _], y: Map[_, _]) =>
+  /** Type-faithful deep equality of an AST and the parsed tree: 5L must
+    * NOT match a node holding 5.0 (the integral-vs-floating split is part
+    * of the reader's contract), and doubles compare by bits so -0.0 stays
+    * distinguishable from 0.0. */
+  private def deepEq(a: Any, n: JsonNode): Boolean = a match {
+    case null => n.isNull
+    case x: Map[_, _] =>
       val xm = x.asInstanceOf[Map[String, Any]]
-      val ym = y.asInstanceOf[Map[String, Any]]
-      xm.size == ym.size && xm.forall { case (k, v) =>
-        ym.contains(k) && deepEq(v, ym(k)) }
-    case (x: Seq[_], y: Seq[_]) =>
-      x.size == y.size && x.iterator.zip(y.iterator).forall {
-        case (u, w) => deepEq(u, w) }
-    case (x: java.lang.Long, y: java.lang.Long)       => x == y
-    case (x: java.lang.Double, y: java.lang.Double)   =>
-      java.lang.Double.doubleToLongBits(x) ==
-        java.lang.Double.doubleToLongBits(y)
-    case (x: java.lang.Boolean, y: java.lang.Boolean) => x == y
-    case (x: String, y: String)                       => x == y
+      n.isObject && xm.size == n.size && xm.forall { case (k, v) =>
+        n.has(k) && deepEq(v, n.get(k)) }
+    case x: Seq[_] =>
+      n.isArray && x.size == n.size &&
+        x.indices.forall(i => deepEq(x(i), n.get(i)))
+    case x: java.lang.Long =>
+      n.isIntegralNumber && n.canConvertToLong && n.longValue == x
+    case x: java.lang.Double =>
+      n.isFloatingPointNumber &&
+        java.lang.Double.doubleToLongBits(n.doubleValue) ==
+          java.lang.Double.doubleToLongBits(x)
+    case x: java.lang.Boolean => n.isBoolean && n.booleanValue == x
+    case x: String => n.isTextual && n.textValue == x
     case _ => false
   }
 
@@ -161,11 +166,11 @@ class MiniJsonPropSpec extends AnyFunSuite {
 
   private val genSeed: Gen[Long] = Gen.chooseNum(Long.MinValue, Long.MaxValue)
 
-  // ---- properties: MiniJson ------------------------------------------------
+  // ---- properties: Json.parse ----------------------------------------------
 
   test("round-trip: parse(write(ast)) recovers the AST with type fidelity") {
     holds(Prop.forAll(genValue(3), genSeed) { (ast, seed) =>
-      val parsed = MiniJson.parse(write(ast, new Random(seed)))
+      val parsed = Json.parse(write(ast, new Random(seed)))
       deepEq(ast, parsed)
     })
   }
@@ -174,7 +179,7 @@ class MiniJsonPropSpec extends AnyFunSuite {
     holds(Prop.forAll(genObj(2), genSeed) { (ast, seed) =>
       val doc = write(ast, new Random(seed))
       (0 until doc.length).forall(cut =>
-        Try(MiniJson.parse(doc.substring(0, cut))).isFailure)
+        Try(Json.parse(doc.substring(0, cut))).isFailure)
     }, n = 80)
   }
 

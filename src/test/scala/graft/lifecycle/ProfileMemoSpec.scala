@@ -26,8 +26,7 @@ class ProfileMemoSpec extends SparkSpec {
     } finally log.close()
   }
 
-  test("rebind profiles the new rows; rollback restores the prior profile " +
-      "with no jobs; unbind releases the binding") {
+  test("rebind profiles the new rows; unbind releases it") {
     val es = new EngineSession(spark)
     val log = new JobLog(spark)
     try {
@@ -42,14 +41,15 @@ class ProfileMemoSpec extends SparkSpec {
       val nAfter = n.findFirstMatchIn(after).get.group(1).toLong
       assert(nAfter < nBefore, s"n=$nAfter after the rebind, n=$nBefore before")
 
-      assert(es.rollback("memo_v"))
-      assert(log.counted(es.profile("memo_v").get) == ((before, 0)))
+      // a failed statement leaves the binding, so its profile stays memoized
+      val failed = es.executeWithRepair("SELECT nope FROM memo_v", (_, _) => None)
+      assert(failed.df.isEmpty)
+      assert(log.counted(es.profile("memo_v").get) == ((after, 0)))
 
       es.unbind("memo_v")
       assert(es.profile("memo_v").isEmpty && es.current("memo_v").isEmpty)
       assert(!es.names.contains("memo_v"))
       assert(!spark.catalog.tableExists("memo_v"))
-      assert(!es.rollback("memo_v"))
     } finally log.close()
   }
 
