@@ -22,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   *    "cluster_errors": static autoBroadcastJoinThreshold=-1,
   *    AQE runtime autoBroadcastJoinThreshold=10m (what a real cluster
   *    keeps — see [[Spark.clusterShape]]), and
-  *    shuffle.partitions=200. SkewProbe showed toy-scale plans can invert
+  *    shuffle.partitions=200. A skew probe showed toy-scale plans can invert
   *    under real-cluster settings (BASELINE.md §5); this row makes plan
   *    inversion a tracked number instead of a one-off probe. A query whose
   *    cluster-shape median exceeds 2x its default median is a
@@ -127,7 +127,7 @@ object Bench {
     * ShingleHashes+MinHash index front, SurprisalSum scoring) over a
     * ×300 in-plan expansion of the documents table (≈1.5M docs at
     * sf0.1) — computed from the parquet inputs inside the timed region
-    * every run (block-offset ids, ScaleProbe's id scheme), never
+    * every run (block-offset ids, ScaleFixtures' id scheme), never
     * persisted. Timed in the DEFAULT arm only and EXCLUDED from
     * "value"/"q_ms"/"n_queries" — the headline metric keeps its
     * historical meaning; the rows ride only the named maps (additive,

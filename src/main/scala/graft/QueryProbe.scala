@@ -31,7 +31,7 @@ object QueryProbe {
     // of the real projection pipeline and skew the median
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     // timed action = noop sink (count() lets ColumnPruning delete the
-    // projections of map-only queries — same fix as Bench/ScaleProbe)
+    // projections of map-only queries — same fix as Bench)
     val times = (1 to runs).map { i =>
       spark.catalog.clearCache()
       val t0 = System.nanoTime()

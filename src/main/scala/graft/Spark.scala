@@ -24,7 +24,7 @@ object Spark {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true")
 
-  /** Bench's cluster arm, shared by QueryProbe and PlanAudit: 200 shuffle
+  /** Bench's cluster arm, shared with QueryProbe: 200 shuffle
     * partitions and the STATIC broadcast threshold off, because cluster
     * planners lack file-size statistics for intermediate frames — but a real
     * cluster still broadcasts at RUNTIME when AQE measures an exchange

@@ -36,7 +36,7 @@ object Tables {
     if (name == "events") {
       val raw = spark.read.parquet(path(sfDir, name))
       // ns timestamps read as raw longs; µs ones (the seed-42 fixtures,
-      // ScaleProbe's synthesized dirs) are already NTZ
+      // the ScaleFixtures widenings of them) are already NTZ
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => raw.withColumn("ts",
           expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))

@@ -20,24 +20,11 @@ import org.apache.spark.sql.types._
   * the keys — match the oracle bit-for-bit.
   */
 case class RpBandKeys(child: Expression, signs: Array[Array[Double]],
-    planesPerBand: Int, offsets: Array[Double] = null)
+    planesPerBand: Int)
   extends UnaryExpression
   with ImplicitCastInputTypes {
 
   require(signs.nonEmpty && signs.length % planesPerBand == 0)
-  require(offsets == null || offsets.length == signs.length,
-    "rp_band_keys: one offset per plane")
-  // CENTERED keys (round 15): bit_j = [dot(v, plane_j) > offset_j] with
-  // offset_j = dot(mu, plane_j) — algebraically the sign of
-  // dot(v - mu, plane_j). Centering restores per-vector bit entropy on
-  // corpora with a nonzero mean: measured on the x1000x384 fixture, the
-  // UNcentered 17-plane point collapsed to 128,687 occupied buckets with
-  // a 72,258-vector hot bucket (1.15e11 candidate pairs — whole sign-flip
-  // copies shared constant key bits because the mean term dominated every
-  // plane dot); see OperatingPoint/BASELINE round-15 notes. null = all
-  // zeros = the pinned uncentered form, bit-identical to r14.
-  private val offs: Array[Double] =
-    if (offsets == null) new Array[Double](signs.length) else offsets
   private def numBands: Int = signs.length / planesPerBand
 
   // analysis-time: demand array<double> (array<float> gets an implicit cast)
@@ -61,7 +48,7 @@ case class RpBandKeys(child: Expression, signs: Array[Array[Double]],
       var dot = 0.0
       var k = 0
       while (k < n) { dot += signs(j)(k) * v.getDouble(k); k += 1 }
-      if (dot > offs(j)) keys(j / planesPerBand) |= 1 << (j % planesPerBand)
+      if (dot > 0) keys(j / planesPerBand) |= 1 << (j % planesPerBand)
       j += 1
     }
     new GenericArrayData(keys)
@@ -69,7 +56,6 @@ case class RpBandKeys(child: Expression, signs: Array[Array[Double]],
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val sRef = ctx.addReferenceObj("rpSigns", signs, "double[][]")
-    val oRef = ctx.addReferenceObj("rpOffs", offs, "double[]")
     val gad = classOf[GenericArrayData].getName
     nullSafeCodeGen(ctx, ev, c => {
       val n = ctx.freshName("n"); val keys = ctx.freshName("keys")
@@ -87,7 +73,7 @@ case class RpBandKeys(child: Expression, signs: Array[Array[Double]],
          |  for (int $k = 0; $k < $n; $k++) {
          |    $dot += $sRef[$j][$k] * $c.getDouble($k);
          |  }
-         |  if ($dot > $oRef[$j]) $keys[$j / $planesPerBand] |= 1 << ($j % $planesPerBand);
+         |  if ($dot > 0) $keys[$j / $planesPerBand] |= 1 << ($j % $planesPerBand);
          |}
          |${ev.value} = new $gad($keys);
        """.stripMargin
@@ -104,9 +90,8 @@ object RpBandKeys {
     * construction, so a later register would not affect already-built plans,
     * but two configs alive in one session would race on a shared name. */
   def register(spark: SparkSession, signs: Array[Array[Double]],
-      planesPerBand: Int, name: String = "rp_band_keys",
-      offsets: Array[Double] = null): Unit =
+      planesPerBand: Int, name: String = "rp_band_keys"): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => RpBandKeys(exprs.head, signs, planesPerBand, offsets),
+      name, exprs => RpBandKeys(exprs.head, signs, planesPerBand),
       "scala_udf")
 }

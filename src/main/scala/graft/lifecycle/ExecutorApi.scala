@@ -185,11 +185,12 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     // a real pool (round 13): the former setExecutor(null) dispatched every
     // request on the server's single accept thread, so one long /execute
     // blocked /health, previews, and uploads for its whole duration — the
-    // reference's Flask app serves concurrently, and so must this. The
-    // shared state is safe under concurrency: TableCache is synchronized,
-    // EngineSession guards its bindings, /execute's Spark work is
-    // serialized by execLock (see execute()),
-    // callLogs/SessionStore guard themselves.
+    // reference's Flask app serves concurrently, and so must this. Shared
+    // state that request threads touch must guard itself: TableCache is
+    // synchronized, EngineSession guards its bindings, /execute's Spark
+    // work is serialized by execLock (see execute()), callLogs and
+    // SessionStore lock, the chain counter is atomic, and the preference
+    // fields are volatile.
     // BOUNDED (round 14): fixed at maxConcurrent workers + headroom so the
     // admission gate's instant 503s and /health always find a thread — the
     // r13 cached pool grew one thread per queued request with no cap. The
@@ -460,8 +461,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
             .getBytes(StandardCharsets.UTF_8))
           out.flush()
         }
-        chainSeq += 1
-        val chainId = s"chain-$chainSeq"
+        val chainId = s"chain-${chainSeq.incrementAndGet()}"
         val tap = new Agents.LlmClient {
           def complete(stage: String, prompt: String): String = {
             val t0 = System.nanoTime()
@@ -584,9 +584,13 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   // agent -> (n_calls, prompt_tokens, completion_tokens, elapsed_s)
   private val rolledTotals =
     scala.collection.mutable.Map.empty[String, (Long, Long, Long, Double)]
-  private var chainSeq = 0
+  // /query runs on pool threads: the counter is atomic so two concurrent
+  // chains never share an id (Telemetry.perChain would merge them)
+  private val chainSeq = new java.util.concurrent.atomic.AtomicLong()
 
   private[graft] def callLogSize: Int = callLogs.synchronized(callLogs.length)
+  private[graft] def callLogChainIds: Seq[String] =
+    callLogs.synchronized(callLogs.map(_.chainId).toSeq)
 
   private[graft] def recordCall(cl: Telemetry.CallLog): Unit =
     callLogs.synchronized {
@@ -706,8 +710,9 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   // dataframe_inspector stage into an `ontology` SSE event. The planning
   // toggle selects the plan-first Planner template (app.py:430-470).
 
-  private var ontologyTtl: Option[String] = None
-  private var planning = false
+  // written by one request thread, read by another's /query
+  @volatile private var ontologyTtl: Option[String] = None
+  @volatile private var planning = false
 
   private def updateOntology(req: JsonNode): (Int, String) =
     Json.text(req, "ttl") match {

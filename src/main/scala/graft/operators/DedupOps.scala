@@ -108,10 +108,7 @@ object DedupOps {
 
   // ---- MinHash + LSH ----
 
-  /** 3-word shingle set (distinct) over `words`, both dialects. */
-  private val shinglesDistinctSpark =
-    """array_distinct(transform(sequence(0, greatest(size(words)-3, 0)),
-      | i -> array_join(slice(words, i+1, 3), ' ')))""".stripMargin
+  /** 3-word shingle set (distinct) over `words`, the DuckDB dialect. */
   private val shinglesDistinctDuck =
     "list_distinct(list_transform(range(0, greatest(len(words)-3, 0) + 1)," +
       " i -> array_to_string(words[(i+1):(i+3)], ' ')))"
@@ -157,16 +154,6 @@ object DedupOps {
       .select(col("doc_id"), expr("shingle_hashes(words)").as("hs"))
   }
 
-  /** The composed-HOF form ShingleHashes replaced — kept as the
-    * equality oracle for ShingleHashesSpec. */
-  private[graft] def docShingleHashesComposed(corpus: DataFrame): DataFrame =
-    corpus
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .select(col("doc_id"), expr(shinglesDistinctSpark).as("shs"))
-      .select(col("doc_id"), expr(
-        "transform(shs, x -> cast(conv(substring(md5(x), 1, 12), 16, 10) as bigint))")
-        .as("hs"))
-
   private def docShingleHashes(s: SparkSession, d: String): DataFrame =
     docShingleHashesOf(plantedCorpus(s, d))
 
@@ -184,7 +171,7 @@ object DedupOps {
   private lazy val docShingleHashesDuck: String =
     docShingleHashesDuckOf(corpusSql)
 
-  private def plantedCorpus(s: SparkSession, d: String): DataFrame = {
+  private[graft] def plantedCorpus(s: SparkSession, d: String): DataFrame = {
     val st = plantStride(s, d)
     val docs = documents(s, d).select(col("doc_id"), col("text"))
     docs.unionByName(docs.filter(col("doc_id") % 17 === 0)
@@ -452,7 +439,7 @@ object DedupOps {
     * toy scale they fit under the threshold. The extra wall time is
     * 200-partition task overhead on three honest shuffles at sf0.1
     * (~600 near-empty tasks each), the same toy-vs-scale inversion
-    * SkewProbe documents — not an un-hinted dim join (PlanGateSpec's
+    * BASELINE.md §skew documents — not an un-hinted dim join (PlanGateSpec's
     * dim-shuffle gate passes c1; nothing here is fixed-cardinality). */
   def curationFunnel: Q = (s, d) => {
     val st = plantStride(s, d)
@@ -535,31 +522,14 @@ object DedupOps {
     * from unweighted word-hash bit votes — ONE map-only byte scan per
     * document ([[graft.functions.SimHashText]]; §2.3/§4, the SurprisalSum
     * treatment: no token explosion, no groupBy exchange). The composed
-    * explode + per-bit-sums form stays as [[simhashOfComposed]], the
-    * SimHashTextSpec equality oracle. Null-text docs are dropped in both
+    * explode + per-bit-sums form lives in SimHashTextSpec as the
+    * equality oracle. Null-text docs are dropped in both
     * arms (explode(null) emits no rows; the fused arm filters them). */
-  private def simhashOf(df: DataFrame, bits: Int, digits: Int): DataFrame =
+  private[graft] def simhashOf(df: DataFrame, bits: Int, digits: Int): DataFrame =
     df.filter(col("text").isNotNull)
       .select(col("doc_id"),
         graft.functions.SimHashText.of(col("text"), digits, bits, null)
           .as("simhash"))
-
-  /** The composed form [[simhashOf]] replaced — the spec's equality
-    * oracle. */
-  private[graft] def simhashOfComposed(df: DataFrame, bits: Int,
-      digits: Int): DataFrame = {
-    graft.functions.Md5Prefix.register(df.sparkSession)
-    val sums = (0 until bits).map(b =>
-      sum(expr(contribExpr("wh", b))).as(s"s_$b"))
-    val fp = (0 until bits).map(b =>
-      s"CASE WHEN s_$b > 0 THEN ${1L << b} ELSE 0 END").mkString(" + ")
-    df.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-      // fused digest-prefix word hash — identical to the former
-      // md5 → substring(1, digits) → conv base-16 chain (Md5PrefixSpec)
-      .select(col("doc_id"), expr(s"md5_prefix(word, $digits)").as("wh"))
-      .groupBy("doc_id").agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"), expr(fp).cast("bigint").as("simhash"))
-  }
 
   /** SimHash: per-document fingerprint; near-dups differ in few bits. */
   def simhash: Q = (s, d) =>
@@ -581,7 +551,7 @@ object DedupOps {
     * head(N+1) bounds the probe itself). */
   private[graft] val SimHashMaxVocab: Int = 1 << 20
 
-  private def weightedSimhash48(s: SparkSession, df: DataFrame,
+  private[graft] def weightedSimhash48(s: SparkSession, df: DataFrame,
       bits: Int = 48): DataFrame = {
     // word-hash width follows the fingerprint: ceil(bits/4) hex digits of
     // md5, capped at 15 (60 bits — the BIGINT-safe fold); the pinned 48-bit
@@ -625,13 +595,6 @@ object DedupOps {
     }
   }
 
-  /** Spec seams for the private fused arms (SimHashTextSpec compares
-    * them against the composed oracles). */
-  private[graft] def simhashFusedForSpec(df: DataFrame, bits: Int,
-      digits: Int): DataFrame = simhashOf(df, bits, digits)
-  private[graft] def weightedSimhashFusedForSpec(df: DataFrame,
-      bits: Int): DataFrame = weightedSimhash48(df.sparkSession, df, bits)
-
   /** The composed weighted form [[weightedSimhash48]] replaced — the
     * beyond-ceiling plan and the spec's equality oracle. */
   private[graft] def weightedSimhashJoin(s: SparkSession, df: DataFrame,
@@ -663,17 +626,10 @@ object DedupOps {
     * fingerprint (6 chunks; the pigeonhole guarantees any pair within
     * Hamming distance 5 shares an intact chunk), then verify
     * bit_count(xor) ≤ 5 on candidates only — index-then-verify entirely in
-    * integer ops, the same shape as the MinHash/LSH pipeline. */
-  def simhashPairs: Q = simhashPairsAt(8)
-
-  /** [[simhashPairs]] with the chunk width as the bucket-sparsity knob:
-    * 6 chunks of `chunkBits` bits over a 6·chunkBits fingerprint. The
-    * 6-chunk pigeonhole (any Hamming ≤ 5 pair shares an intact chunk) is
-    * width-independent, so a larger corpus widens the fingerprint —
-    * buckets per chunk = 2^chunkBits — without losing the guarantee.
-    * ScaleProbe measures the 8→10-bit operating points. */
-  private[graft] def simhashPairsAt(chunkBits: Int): Q = (s, d) =>
-    simhashPairsOver(plantedCorpus(s, d), chunkBits)
+    * integer ops, the same shape as the MinHash/LSH pipeline. The
+    * pigeonhole is width-independent, so [[simhashPairsAuto]] widens the
+    * chunks on a larger corpus without losing the guarantee. */
+  def simhashPairs: Q = (s, d) => simhashPairsOver(plantedCorpus(s, d), 8)
 
   /** Library entrypoint: SimHash near-dup pairs over any (doc_id, text)
     * frame with the chunk width derived from corpus size
@@ -687,10 +643,6 @@ object DedupOps {
     val n = countEstimate.getOrElse(df.count())
     simhashPairsOver(df, OperatingPoint.simhashChunkBits(n))
   }
-
-  /** ScaleProbe harness form of [[simhashPairsAuto]]. */
-  private[graft] val simhashPairsAutoQ: Q =
-    (s, d) => simhashPairsAuto(plantedCorpus(s, d))
 
   /** Core of the chunk-blocked SimHash pair search over (doc_id, text). */
   private[graft] def simhashPairsOver(df: DataFrame,
@@ -734,7 +686,7 @@ object DedupOps {
     *
     * This is a NAMED VARIANT, not a knob on the pinned form: xxhash64 has
     * no DuckDB equivalent, so its cross-engine gate is the plain-JVM
-    * [[graft.IndependentVerify]] recompute (`dd6w_auto`, ×10 and ×1000)
+    * IndependentVerify recompute (`dd6w_auto`, ×10 and ×1000)
     * plus the DedupOpsSpec recall gate against the planted corpus; the
     * md5-fold [[simhashPairs]] stays as the hash-gated oracle anchor. */
   private[graft] def wideSimhash(df: DataFrame, chunkBits: Int): DataFrame = {
@@ -794,12 +746,6 @@ object DedupOps {
     val n = countEstimate.getOrElse(df.count())
     simhashPairsWide(df, OperatingPoint.simhashChunkBitsWide(n))
   }
-
-  /** Harness form over the planted corpus (SixthDecade's dd6w_auto dump —
-    * same corpus the pinned dd6 and its JVM recompute use, so the wide
-    * variant is judged on the identical planted near-dup structure). */
-  private[graft] val simhashPairsWideAutoQ: Q =
-    (s, d) => simhashPairsWideAuto(plantedCorpus(s, d))
 
   /** DuckDB CTE chain ending in sh(doc_id, simhash) over `source`, matching
     * [[simhashOf]] with the same `bits`/word-hash parameters. */
@@ -922,7 +868,7 @@ object DedupOps {
     * instead of O(len·G) per-window md5. Hash values differ from the md5
     * form so there is no DuckDB oracle; PipelineOpsSpec gates it on the
     * boiler fixture (every planted carrier pair agrees on the shared
-    * span's grams) and ScaleProbe A/Bs it against [[spanGrams]]. */
+    * span's grams) and BASELINE.md §5 A/Bs it against [[spanGrams]]. */
   def spanGramsRolling: Q = (s, d) => {
     val corpus = documents(s, d).select(col("doc_id"),
       when(col("doc_id") % 19 === 0, concat(col("text"), lit(" " + SpanBoiler)))

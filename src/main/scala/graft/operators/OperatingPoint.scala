@@ -7,7 +7,7 @@ package graft.operators
   *
   *  - RP-LSH banding (v3/v6 near-dup, dd5 rank-upsert): candidate pairs per
   *    band ∝ n²/2^planes, so holding per-bucket occupancy constant needs
-  *    `planes += log2(corpus growth)` — measured in ScaleProbe (fixed 4-bit
+  *    `planes += log2(corpus growth)` — measured at 10× (fixed 4-bit
   *    config: 63-71× work at 10× data; scaled config: ~linear).
   *  - IVF cell count (v4 batch k-NN): assignment costs n·K and candidate
   *    verify costs ~2n²/K, balanced at K ≈ √n (both terms n^1.5) — the
@@ -20,7 +20,7 @@ package graft.operators
   * applied by hand; this object is the executable form. Anchors are the
   * measured sf0.1 fixture points (n≈2000 embeddings / n≈5300 planted docs)
   * where the pinned configs are known-good; derived points were validated
-  * against the hand-scaled 10× ScaleProbe rows.
+  * against the hand-scaled 10× rows of BASELINE.md §5.
   *
   * The oracle-gated queries in SparkEntry deliberately do NOT use these —
   * they pin fixture constants so the DuckDB oracle (static SQL text) can
@@ -138,7 +138,7 @@ object OperatingPoint {
     * `occupancy` is the family's COST dial — and measuring it RETIRED
     * the prior hypothesis: BASELINE §5 had claimed "candidates ≈ 2c·n
     * buys recall linearly in c", but the ×10 twin-fixture sweep
-    * (RpRecallProbe `semflat:<c>`, c ∈ {64,128,192,250}) measured ≥0.8
+    * (`semflat:<c>`, c ∈ {64,128,192,250}) measured ≥0.8
     * recall FLAT in c at dim 64 (0.905-0.919 across a 4× bill) and
     * monotonically DECREASING at dim 384 (0.979 at c=64 → 0.944 at
     * c=250): at the production dim FINER cells win on recall AND bill
@@ -389,7 +389,7 @@ object OperatingPoint {
     * because the build side stops fitting, and because a broadcast plan
     * serializes the probe work into the scan's few input partitions while
     * a shuffle spreads buckets over all reducers AND lets AQE skew-join
-    * split the hot ones. SkewProbe measured the inversion at 10x sf0.1:
+    * split the hot ones. Measured at 10x sf0.1:
     * broadcast 20.4s vs sort-merge 3.6s, and 2.2s with AQE skew splitting
     * (BASELINE.md §skew). 8 MB threshold: conservatively under Spark's
     * 10 MB default autoBroadcastJoinThreshold, ~40 bytes/row overhead. */

@@ -64,7 +64,7 @@ object RankDedup {
     * candidates) — the former dim-64 default was a footgun for a direct
     * caller on a 384-dim store (round-15 verdict). `planesPerBand` is
     * the bucket-sparsity knob: buckets per band = 2^planes, raised with
-    * corpus size (ScaleProbe measures the scaled operating point). The
+    * corpus size (BASELINE.md §5 prices the scaled operating point). The
     * default 0 means AUTO: derive it from the store's size via
     * [[OperatingPoint.rpPlanesPerBand]] (one cheap count(); pass
     * `storeCountEstimate` to skip it when the cardinality is known). The
@@ -134,23 +134,21 @@ object RankDedup {
     * several bands appears once: pair columns are distinct-ed after the
     * verify, before the best-match window. `forceShuffle` pins sort-merge —
     * auto mode sets it once the banded store outgrows a broadcast build
-    * side (OperatingPoint.preferShuffleJoin, the SkewProbe-measured 100 TB
+    * side (OperatingPoint.preferShuffleJoin, the 100 TB
     * join shape where AQE skew-join can split hot buckets); the
     * oracle-gated pinned-planes path keeps the planner's choice so
     * toy-scale plans stay toy-optimal. */
   private[graft] def bandedMatches(store: DataFrame, cand: DataFrame,
-      dim: Int, planes: Int, forceShuffle: Boolean,
-      center: Array[Double] = null): DataFrame = {
+      dim: Int, planes: Int, forceShuffle: Boolean): DataFrame = {
     // candidates may live in a DIFFERENT session than the store (streaming
     // foreachBatch hands batches a cloned session); each side's expressions
     // resolve against its own registry, so register on both when they differ
     val signs = bandSigns(dim, planes)
-    val offs = VectorOps.planeOffsets(signs, center)
     Seq(store.sparkSession, cand.sparkSession).distinct.foreach { s =>
       graft.functions.CosineSimilarity.register(s)
       graft.functions.CosineSimBounded.register(s)
       graft.functions.RpBandKeys.register(s, signs, planes,
-        s"rp_band_keys_dd_$planes", offs)
+        s"rp_band_keys_dd_$planes")
     }
     def banded(df: DataFrame, p: String) = df.select(col("id").as(p + "id"),
         col("v").as(p + "v"), col("rank").as(p + "rank"),
@@ -180,7 +178,7 @@ object RankDedup {
   def rankUpsertQuery: Q = rankUpsertQueryPlanes(PlanesPerBand)
 
   /** [[rankUpsertQuery]] at an explicit bucket-sparsity setting —
-    * ScaleProbe's scaled operating point. planes ≤ 0 = AUTO: the embedding
+    * the scaled operating point. planes ≤ 0 = AUTO: the embedding
     * dim is then MEASURED from the fixture (one `size(v)` head job, the
     * SixthDecade discipline) so the library and IndependentVerify derive
     * the same dim-aware plane count on any fixture arm; the pinned path

@@ -125,20 +125,13 @@ object TextOps {
     * expressions it claims to (a drifted inline copy would silently
     * diverge from the oracle-gated operator).
     *
-    * [[uniqRatio]]/[[stopRatio]] are the COMPOSED array forms — since
-    * round 17 they are the equality oracle for the fused
-    * [[graft.functions.WordStats]] pass (WordStatsSpec pins both
-    * generatively and on the corpus); production paths go through
-    * [[wordStats]]/[[uniqRatioOf]]/[[stopRatioOf]], which compute the
-    * same three counts in one codegen byte scan instead of a regex
-    * split plus three interpreted HOF passes (the c1/c5 plans evaluated
-    * the stop-word filter lambda three times per doc). */
+    * [[wordStats]]/[[uniqRatioOf]]/[[stopRatioOf]] compute the three word
+    * counts in one codegen byte scan ([[graft.functions.WordStats]])
+    * instead of a regex split plus three interpreted HOF passes (the
+    * c1/c5 plans evaluated the stop-word filter lambda three times per
+    * doc); WordStatsSpec pins them against the composed array forms,
+    * generatively and on the corpus. */
   private[graft] val StopWords = Seq("the", "a", "of", "and", "to", "in", "is")
-  private[graft] def uniqRatio(words: Column): Column =
-    round(size(array_distinct(words)) / size(words).cast("double"), 6)
-  private[graft] def stopRatio(words: Column): Column =
-    round(size(filter(words, w => w.isInCollection(StopWords))) /
-      size(words).cast("double"), 6)
 
   /** `word_stats(text)` = struct(n_words, n_distinct, n_stop) — one fused
     * pass, bit-equal to size(split)/size(array_distinct)/size(filter). */
@@ -515,10 +508,6 @@ object TextOps {
     val n = countEstimate.getOrElse(corpus.count())
     decontaminationOver(corpus, OperatingPoint.hashDecontaminationGrams(n))
   }
-
-  /** ScaleProbe harness form of [[decontaminationAuto]]. */
-  private[graft] val decontaminationAutoQ: Q =
-    (s, d) => decontaminationAuto(documents(s, d))
 
   /** Core of t7 over any (doc_id, text) corpus; `hashGrams` selects the
     * probe representation (identical hit semantics modulo the documented
@@ -1356,7 +1345,7 @@ object TextOps {
       (expr("(-sum_lp) div n_words") <= keepMicro).as("keep"))
   }
 
-  /** ScaleProbe harness form of [[perplexityAuto]]. */
+  /** QueryProbe harness form of [[perplexityAuto]]. */
   private[graft] val perplexityAutoQ: Q =
     (s, d) => perplexityAuto(documents(s, d))
 

@@ -550,12 +550,7 @@ object VectorOps {
     * window's WindowGroupLimitExec map-side sort filled the spill disk.
     * ANN semantics: a true neighbor outside the
     * probed cells is missed — recall is tuned by the probe count. */
-  def knnJoin: Q = knnJoinK(16)
-
-  /** [[knnJoin]] with the cell count as a knob — at larger corpora K grows
-    * (K ≈ √n keeps assignment n·K and candidate work n²/K balanced at
-    * n^1.5, the standard IVF operating point ScaleProbe measures). */
-  private[graft] def knnJoinK(K: Int): Q = (s, d) => knnJoinOver(vecs(s, d), K)
+  def knnJoin: Q = (s, d) => knnJoinOver(vecs(s, d), 16)
 
   /** Core of the IVF batch k-NN join over any (vec_id, v) frame.
     *
@@ -707,20 +702,18 @@ object VectorOps {
     * shape the join has at cluster scale, where it spreads buckets over
     * all reducers and AQE skew-join can split hot buckets; the auto
     * entrypoint derives it from corpus size
-    * ([[OperatingPoint.preferShuffleJoin]], measured in SkewProbe:
+    * ([[OperatingPoint.preferShuffleJoin]], BASELINE.md §skew:
     * broadcast 20.4s vs sort-merge 2.2-3.6s at 10x). */
   private[graft] def rpBandedNearDupOver(e: DataFrame, bands: Int,
       fname: String, planes: Int, threshold: Double = 0.30,
-      dim: Int = Dim, forceShuffle: Boolean = false,
-      center: Array[Double] = null): DataFrame = {
+      dim: Int = Dim, forceShuffle: Boolean = false): DataFrame = {
     val s = e.sparkSession
     CosineSimilarity.register(s)
     graft.functions.CosineSimBounded.register(s)
     val signs = Array.tabulate(bands * planes, dim) {
       (j, k0) => if (rpSign(j, k0 + 1) == "+") 1.0 else -1.0
     }
-    graft.functions.RpBandKeys.register(s, signs, planes, fname,
-      planeOffsets(signs, center))
+    graft.functions.RpBandKeys.register(s, signs, planes, fname)
     // prune floor: the filter keeps round(sim, 6) >= threshold, so a pair
     // may be abandoned only when provably below threshold - 5e-7 (the
     // round-half-up boundary); 1e-6 leaves that boundary strictly inside
@@ -764,45 +757,6 @@ object VectorOps {
       .groupBy("b", "key").count()
       .agg(sum(col("count") * (col("count") - 1) / 2)).head.getDouble(0).toLong
   }
-
-  /** Corpus key-center for the AUTO RP-LSH blocking (round 15): the
-    * component-wise mean, computed with the kmeans integer-sum discipline
-    * — `sum((x·1e8)::bigint)` is order-free and exact, so the plain-JVM
-    * verifier derives the IDENTICAL center bit-for-bit regardless of
-    * partitioning, and the two final double divisions are
-    * IEEE-deterministic on identical operands.
-    *
-    * Why centering: RP sign bits are `[dot(v, plane) > 0]`; on a corpus
-    * with nonzero mean the constant `dot(mu, plane)` term dominates every
-    * plane dot and whole regions of the corpus share key bits — measured
-    * at ×1000×384, the uncentered 17-plane point put 72,258 vectors in
-    * one bucket (1.15e11 candidate pairs; the dump ground >60 min where
-    * uniform-occupancy math priced minutes). Centering (bit =
-    * `[dot(v, plane) > dot(mu, plane)]`) restores per-vector entropy.
-    * AUTO-only: the pinned 4-plane forms are oracle-locked to the
-    * uncentered keys their static SQL mirrors. */
-  private[graft] def keyCenterOf(e: DataFrame, dim: Int): Array[Double] = {
-    val rows = e.select(posexplode(col("v")).as(Seq("i", "x")))
-      .groupBy("i").agg(sum((col("x") * 1e8).cast("bigint")).as("s"),
-        count(lit(1)).as("n"))
-      .collect()
-    val mu = new Array[Double](dim)
-    rows.foreach { r =>
-      mu(r.getInt(0)) = r.getLong(1).toDouble / r.getLong(2).toDouble / 1e8
-    }
-    mu
-  }
-
-  /** Per-plane key offsets from a center (left-assoc dot, the exact order
-    * the verifier mirrors); null center → null (zero offsets). */
-  private[graft] def planeOffsets(signs: Array[Array[Double]],
-      center: Array[Double]): Array[Double] =
-    if (center == null) null
-    else signs.map { p =>
-      var o = 0.0; var k = 0
-      while (k < p.length) { o += p(k) * center(k); k += 1 }
-      o
-    }
 
   /** The RP-LSH pair pipeline in DuckDB as a CTE chain ending in
     * `pairs(a_id, b_id, sim)` — shared by the v3/v6 and v8 oracles. */
@@ -983,10 +937,6 @@ object VectorOps {
       dim: Int = Dim): DataFrame = {
     val n = countEstimate.getOrElse(e.count())
     val planes = OperatingPoint.rpPlanesPerBand(n, dim)
-    // NOT centered: key-centering measured a no-op on this corpus (the
-    // ×1000 hot buckets were the sign family's period-7 negation
-    // structure, fixed in rpSign/mix64, not a mean shift); the offsets
-    // mechanism stays available for mean-shifted corpora
     rpBandedNearDupOver(e, bands, s"rp_band_keys_auto_${bands}_$planes",
       planes, threshold, dim,
       forceShuffle = OperatingPoint.preferShuffleJoin(n, bands, dim))
@@ -1025,8 +975,8 @@ object VectorOps {
     * Recall = banding recall (targeted by the band count) × the sketch
     * gate's ≥99.8% pass rate at the target sim
     * ([[OperatingPoint.sketchMaxHamming]]'s 3σ budget) — both terms
-    * deterministic, measured against planted-twin truth in RpRecallProbe
-    * and floored in VectorGateSpec. Emitted sims are the exact
+    * deterministic, measured against planted-twin truth and floored in
+    * VectorGateSpec. Emitted sims are the exact
     * round6(cosine) — bit-identical to every other family's verify. */
   private[graft] def nearDupPairsHighSimOver(e: DataFrame, bands: Int,
       planes: Int, maxHamming: Int, threshold: Double, dim: Int,
@@ -1612,13 +1562,6 @@ object VectorOps {
     val n = countEstimate.getOrElse(e.count())
     knnJoinOver(e, OperatingPoint.ivfCells(n))
   }
-
-  /** ScaleProbe harness forms of the auto entrypoints: the probe times
-    * these on 1x and 10x fixture dirs and checks the auto-derived config
-    * tracks the hand-scaled operating point. */
-  private[graft] def nearDupPairsAutoQ(bands: Int): Q =
-    (s, d) => nearDupPairsAuto(vecs(s, d), bands = bands)
-  private[graft] val knnJoinAutoQ: Q = (s, d) => knnJoinAuto(vecs(s, d))
 
   // ---- ANN at rest: the IVF index as a partitioned parquet layout ----
 

@@ -851,15 +851,19 @@ class ExecutorApiSpec extends SparkSpec {
     val api = new ExecutorApi(new EngineSession(spark), maxConcurrent = 2)
     val port = api.start()
     try {
-      val slowSql = // a few hundred ms of real aggregation work
-        "SELECT sum(x * x) AS s FROM (SELECT explode(sequence(1, 3000000)) AS x)"
+      val slowSql = // a few hundred ms of real aggregation work; the double
+        // cast keeps the square from overflowing int under ANSI mode
+        "SELECT sum(CAST(x AS DOUBLE) * x) AS s FROM " +
+          "(SELECT explode(sequence(1, 3000000)) AS x)"
       val codes = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+      val okBodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val ready = new java.util.concurrent.CyclicBarrier(12)
       val threads = (1 to 12).map { _ =>
         new Thread(() => {
           ready.await()
-          val (c, _) = call(port, "/execute", Some(s"""{"sql":"$slowSql"}"""))
+          val (c, b) = call(port, "/execute", Some(s"""{"sql":"$slowSql"}"""))
           codes.add(c)
+          if (c == 200) okBodies.add(b)
         })
       }
       threads.foreach(_.start())
@@ -878,6 +882,8 @@ class ExecutorApiSpec extends SparkSpec {
       assert(cs.count(_ == 503) >= 1, s"no rejection in $cs")
       assert(cs.count(_ == 200) >= 1, s"no success in $cs")
       assert(cs.forall(c => c == 200 || c == 503), cs.toString)
+      // each admitted request held real work and finished it
+      okBodies.forEach(b => assert(!b.contains("\"error\""), b))
       // pool threads bounded by maxConcurrent + 4 for THIS server (a few
       // more may linger from other tests' just-stopped servers): never
       // thread-per-request growth (12 concurrent vs a 6-thread pool)
@@ -921,5 +927,50 @@ class ExecutorApiSpec extends SparkSpec {
         Some(s"""{"file_paths":["$escaped"]}"""))
       assert(c == 200 && b.contains(s"1.\\nPath: $path\\nError:"), b)
     } finally api.stop()
+  }
+
+  test("concurrent /query chains log under distinct chain ids") {
+    val replies = Map(
+      "expert_selector" ->
+        "requires_dataset: true\nexpert: Data Analyst\nconfidence: 9",
+      "analyst_selector" -> "analyst: Data Analyst DF\nintent: count nations",
+      "planner" -> "plan:\n- count\nsql: |\nSELECT count(*) AS n FROM df",
+      "summarizer" -> "25 nations.")
+    // stateless stub: every chain gets the same replies on any thread
+    val api = new ExecutorApi(new EngineSession(spark),
+      llm = Some(new graft.lifecycle.Agents.LlmClient {
+        def complete(stage: String, prompt: String): String = replies(stage)
+      }))
+    val port = api.start()
+    try {
+      assert(call(port, "/upload_dataset",
+        Some(s"""{"df_id":"df","path":"$sf/nation.parquet"}"""))._1 == 200)
+      val ready = new java.util.concurrent.CyclicBarrier(8)
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+      val threads = (1 to 8).map { _ =>
+        new Thread(() => {
+          ready.await()
+          results.add(call(port, "/query",
+            Some("""{"question":"How many nations?","df_id":"df"}""")))
+        })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join(120000))
+      assert(threads.forall(!_.isAlive), "query threads hung")
+      results.forEach { case (c, b) =>
+        assert(c == 200 && b.contains("event: result"), b)
+      }
+      // 8 chains, each logging its own four stage calls
+      val perChain = api.callLogChainIds.groupBy(identity).map {
+        case (id, calls) => id -> calls.length
+      }
+      assert(perChain.size == 8, perChain)
+      assert(perChain.values.forall(_ == 4), perChain)
+    } finally {
+      // the upload cached nation in the suite-shared session; later suites
+      // assert on nation's file-scan plan, so release it
+      call(port, "/remove_primary_dataset", Some("""{"df_id":"df"}"""))
+      api.stop()
+    }
   }
 }

@@ -30,7 +30,7 @@ import scala.collection.parallel.CollectionConverters._
   * optimization available to a from-scratch recompute precisely because
   * it is independent of the engines' generic plans.
   *
-  * Usage: runMain graft.IndependentVerify <sfDir> <verifyOutDir> [namesCsv]
+  * Usage: Test/runMain graft.IndependentVerify <sfDir> <verifyOutDir> [namesCsv]
   */
 object IndependentVerify {
 
@@ -407,44 +407,19 @@ object IndependentVerify {
       pos: (Int, Int) => Boolean): Array[Array[Double]] =
     Array.tabulate(numPlanes, dim)((j, k0) => if (pos(j, k0)) 1.0 else -1.0)
 
-  /** Band keys, left-assoc dot per plane (strictly > offset sets the bit;
-    * null offsets = the uncentered pinned form, bit-identical to r14). */
+  /** Band keys, left-assoc dot per plane (strictly > 0 sets the bit). */
   private def rpKeys(v: Array[Double], signs: Array[Array[Double]],
-      planesPerBand: Int, offsets: Array[Double] = null): Array[Int] = {
+      planesPerBand: Int): Array[Int] = {
     val keys = new Array[Int](signs.length / planesPerBand)
     var j = 0
     while (j < signs.length) {
       var dot = 0.0; var k = 0
       while (k < v.length) { dot += signs(j)(k) * v(k); k += 1 }
-      val o = if (offsets == null) 0.0 else offsets(j)
-      if (dot > o) keys(j / planesPerBand) |= 1 << (j % planesPerBand)
+      if (dot > 0) keys(j / planesPerBand) |= 1 << (j % planesPerBand)
       j += 1
     }
     keys
   }
-  /** Mirror of VectorOps.keyCenterOf: component mean via the exact
-    * order-free truncated-integer sum (`(x*1e8).toLong`, summed as longs),
-    * then the same two double divisions — bit-identical to the library's
-    * Spark-side center on any partitioning. */
-  private def keyCenter(vecs: Array[Vec]): Array[Double] = {
-    val dim = vecs(0).v.length
-    val s = new Array[Long](dim)
-    vecs.foreach { x =>
-      var k = 0
-      while (k < dim) { s(k) += (x.v(k) * 1e8).toLong; k += 1 }
-    }
-    val n = vecs.length.toDouble
-    Array.tabulate(dim)(k => s(k).toDouble / n / 1e8)
-  }
-  /** Mirror of VectorOps.planeOffsets (left-assoc dot per plane). */
-  private def planeOffsets(signs: Array[Array[Double]],
-      center: Array[Double]): Array[Double] =
-    if (center == null) null
-    else signs.map { p =>
-      var o = 0.0; var k = 0
-      while (k < p.length) { o += p(k) * center(k); k += 1 }
-      o
-    }
 
   private def dot(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
@@ -1017,8 +992,7 @@ object IndependentVerify {
     * library entrypoint uses — the operating point is shared CONFIG, the
     * computation below stays independent). Bucket keys are longs
     * ((band << 32) | key) so any planes ≤ 24 fits. */
-  private def rpFront(vecs: Array[Vec], bands: Int, planes: Int = 4,
-      centered: Boolean = false)
+  private def rpFront(vecs: Array[Vec], bands: Int, planes: Int = 4)
       : (Array[Array[Int]], Array[Double], Array[Array[Double]],
          Vector[Array[Int]]) = {
     // dim from the DATA (round 14: the 384-dim fixture arm) — the sign
@@ -1026,17 +1000,9 @@ object IndependentVerify {
     // VectorOps.rpSign exactly
     val signs = buildSigns(bands * planes, vecs(0).v.length,
       (j, k0) => rpSignPos(j, k0 + 1))
-    // centering is AVAILABLE-BUT-DORMANT: no *_auto dispatch passes
-    // centered=true and the library's auto path is explicitly uncentered
-    // (VectorOps.nearDupPairsAuto "NOT centered" — the round-15 hot
-    // buckets were the sign family's period-7 negations, not a mean
-    // shift). The offsets mechanism is kept for mean-shifted corpora;
-    // any caller that flips it must flip the library side in the same
-    // change or digests diverge.
-    val offs = if (centered) planeOffsets(signs, keyCenter(vecs)) else null
     val n = vecs.length
     val keys = new Array[Array[Int]](n)
-    (0 until n).par.foreach(i => keys(i) = rpKeys(vecs(i).v, signs, planes, offs))
+    (0 until n).par.foreach(i => keys(i) = rpKeys(vecs(i).v, signs, planes))
     val norms = new Array[Double](n)
     (0 until n).par.foreach(i => norms(i) = math.sqrt(norm2(vecs(i).v)))
     val sufs = new Array[Array[Double]](n)
@@ -1079,9 +1045,8 @@ object IndependentVerify {
     * `planes` = 4 pinned, or the derived AUTO point for the `*_auto`
     * sixth-decade checks). */
   private def checkRpPairs(spark: SparkSession, vecs: Array[Vec],
-      bands: Int, out: String, planes: Int = 4,
-      centered: Boolean = false): (Digest, Digest) = {
-    val (keys, norms, sufs, bucketList) = rpFront(vecs, bands, planes, centered)
+      bands: Int, out: String, planes: Int = 4): (Digest, Digest) = {
+    val (keys, norms, sufs, bucketList) = rpFront(vecs, bands, planes)
     val exp = mergeAll(bucketList.par.map { arr =>
       val dg = new Digest
       val band = arr(0)
@@ -1187,9 +1152,8 @@ object IndependentVerify {
     * set, compared row-wise against the output. Returns mismatch count in
     * the digest slot (exp == act iff zero mismatches). */
   private def checkV8(spark: SparkSession, vecs: Array[Vec],
-      out: String, planes: Int = 4,
-      centered: Boolean = false): (Digest, Digest) = {
-    val labels = v8Labels(vecs, planes, centered)
+      out: String, planes: Int = 4): (Digest, Digest) = {
+    val labels = v8Labels(vecs, planes)
     val exp = new Digest
     vecs.foreach(v => exp.add(s"${v.id}$Sep${labels(v.id)}"))
     (exp, digestOutput(spark, out, Seq("vec_id", "component")))
@@ -1198,12 +1162,12 @@ object IndependentVerify {
   /** Component labels from union-find over the independently recomputed
     * v3 pair set ([[checkV8]]'s front half, shared with the v14
     * retention replay). */
-  private def v8Labels(vecs: Array[Vec], planes: Int, centered: Boolean)
+  private def v8Labels(vecs: Array[Vec], planes: Int)
       : scala.collection.mutable.LongMap[Long] = {
     // edges pack as (a<<32)|b — loud guard instead of silent aliasing
     require(vecs.forall(v => v.id >= 0 && v.id < (1L << 32)),
       "edge packing assumes vec_id in [0, 2^32)")
-    val (keys, norms, sufs, bucketList) = rpFront(vecs, 4, planes, centered)
+    val (keys, norms, sufs, bucketList) = rpFront(vecs, 4, planes)
     // per-bucket primitive edge arrays (first-band dedup), then one
     // sequential union-find — never a boxed global set
     val edgeChunks = bucketList.par.map { arr =>
@@ -1295,7 +1259,7 @@ object IndependentVerify {
   /** v14 pinned: retention over [[checkV8]]'s 4-plane pair graph. */
   private def checkV14(spark: SparkSession, vecs: Array[Vec],
       out: String): (Digest, Digest) =
-    retentionDigest(spark, vecs, v8Labels(vecs, 4, centered = false), out)
+    retentionDigest(spark, vecs, v8Labels(vecs, 4), out)
 
   /** v14 AUTO: retention over the policy front door's dedup-band arm
     * ([[graft.operators.VectorOps.embedRetentionAuto]] with no recall
@@ -1783,19 +1747,14 @@ object IndependentVerify {
 
   /** dd5: banded ≥0.94 match + rank-gated upsert replay. */
   private def checkDd5(spark: SparkSession, vecs: Array[Vec],
-      out: String, planes: Int = 4,
-      centered: Boolean = false): (Digest, Digest) = {
+      out: String, planes: Int = 4): (Digest, Digest) = {
     val signs = buildSigns(8 * planes, vecs(0).v.length, ddSignPos)
-    // centering is AVAILABLE-BUT-DORMANT (see rpFront): RankDedup's auto
-    // path is uncentered, and no dispatch passes centered=true; the flag
-    // stays for mean-shifted corpora, to be flipped on BOTH sides at once
-    val offs = if (centered) planeOffsets(signs, keyCenter(vecs)) else null
     final case class Item(id: Long, v: Array[Double], rank: Long, nrm: Double,
       suf: Array[Double], keys: Array[Int])
     def items(src: Array[Vec], idOff: Long, rankOff: Long): Array[Item] =
       src.map { x =>
         Item(x.id + idOff, x.v, (x.id + rankOff) % 11, math.sqrt(norm2(x.v)),
-          sufSq(x.v), rpKeys(x.v, signs, planes, offs))
+          sufSq(x.v), rpKeys(x.v, signs, planes))
       }
     val store = items(vecs, 0L, 0L)
     val cand = items(vecs.filter(_.id % 3 == 0), 10000L, 5L)

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    hot bucket (the mean-shift / correlated-bit signature) fails even
   *    when totals still look linear.
   *
-  * Usage: runMain graft.OccupancyGate <sfDir> [bands=4] [capPerN=500]
+  * Usage: Test/runMain graft.OccupancyGate <sfDir> [bands=4] [capPerN=500]
   * Exit 0 = within budget, 1 = blowout (message names the failing check).
   */
 object OccupancyGate {

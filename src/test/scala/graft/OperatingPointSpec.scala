@@ -171,7 +171,7 @@ class OperatingPointSpec extends SparkSpec {
   test("auto simhash pairs == pinned oracle query at the anchor regime") {
     val pinned = SparkEntry.queries("dd6_simhash_pairs")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val auto = DedupOps.simhashPairsAutoQ(spark, sf)
+    val auto = DedupOps.simhashPairsAuto(DedupOps.plantedCorpus(spark, sf))
       .collect().map(_.toSeq).toSet
     assert(auto == pinned)
     assert(auto.nonEmpty)
@@ -180,7 +180,7 @@ class OperatingPointSpec extends SparkSpec {
   test("auto near-dup pins sort-merge above the broadcast-size threshold") {
     // below threshold (the anchor fixture): planner's choice, no hint
     assert(!OperatingPoint.preferShuffleJoin(500, 4, 64))
-    // above: the banded side outgrows a broadcast build (SkewProbe measured
+    // above: the banded side outgrows a broadcast build (measured
     // broadcast 20.4s vs sort-merge 2.2-3.6s at 10x — BASELINE.md §skew)
     assert(OperatingPoint.preferShuffleJoin(20000, 2, 64))
     val e = Tables.load(spark, sf, "embeddings")

@@ -91,7 +91,7 @@ class PlanGateSpec extends SparkSpec {
     * cluster posture where the optimizer distrusts stats), and under it a
     * hint-less dim join silently degrades to a SortMergeJoin that
     * shuffles the corpus side for nothing — the toy-plan inversion
-    * SkewProbe documented, promoted here from a one-time audit note to a
+    * BASELINE.md §skew documented, promoted here from a one-time audit note to a
     * standing gate over every query. */
   private val fixedDims = Set("nation", "region")
 

@@ -1,7 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.DedupOps
 
 /** Equality gate for the fused ShingleHashes expression against the
   * composed three-HOF chain it replaced — the dd2/dd3/dd7/dd8/c1 oracle
@@ -12,6 +12,19 @@ class ShingleHashesSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** The composed three-HOF form ShingleHashes replaced: distinct 3-word
+    * shingles, then 48 bits of md5 per shingle. */
+  private def docShingleHashesComposed(corpus: DataFrame): DataFrame =
+    corpus
+      .select(col("doc_id"), split(col("text"), " ").as("words"))
+      .select(col("doc_id"), expr(
+        """array_distinct(transform(sequence(0, greatest(size(words)-3, 0)),
+          | i -> array_join(slice(words, i+1, 3), ' ')))""".stripMargin)
+        .as("shs"))
+      .select(col("doc_id"), expr(
+        "transform(shs, x -> cast(conv(substring(md5(x), 1, 12), 16, 10) as bigint))")
+        .as("hs"))
+
   private def viaBoth(texts: Seq[String]): (Seq[(Long, Seq[Long])], Seq[(Long, Seq[Long])]) = {
     val corpus = texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
@@ -20,7 +33,7 @@ class ShingleHashesSpec extends SparkSpec {
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), expr("shingle_hashes(words)").as("hs"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq.sortBy(_._1)
-    val composed = DedupOps.docShingleHashesComposed(corpus)
+    val composed = docShingleHashesComposed(corpus)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq.sortBy(_._1)
     (fused, composed)
   }
@@ -44,7 +57,7 @@ class ShingleHashesSpec extends SparkSpec {
     val fused = docs
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), expr("shingle_hashes(words)").as("hs"))
-    val composed = DedupOps.docShingleHashesComposed(docs)
+    val composed = docShingleHashesComposed(docs)
     assert(fused.exceptAll(composed).count() == 0 &&
       composed.exceptAll(fused).count() == 0)
   }

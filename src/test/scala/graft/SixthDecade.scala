@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * The AUTO forms hold the pair sets ~linear, which is precisely the
   * behavior the sixth decade needs to witness.
   *
-  * Usage: runMain graft.SixthDecade <sfDir> <outDir> [namesCsv]
+  * Usage: Test/runMain graft.SixthDecade <sfDir> <outDir> [namesCsv]
   * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE, SPARK_GRAFT_VERIFY_PARTS —
   * same contract as [[Verify]]. */
 object SixthDecade {
@@ -69,7 +69,10 @@ object SixthDecade {
           case "v13hier_auto" =>
             operators.VectorOps.semDedupPairsHierAuto(vecs)
           case "dd6w_auto" =>
-            operators.DedupOps.simhashPairsWideAutoQ(spark, sfDir)
+            // same planted corpus the pinned dd6 and its JVM recompute use,
+            // so the wide variant is judged on the identical near-dup structure
+            operators.DedupOps.simhashPairsWideAuto(
+              operators.DedupOps.plantedCorpus(spark, sfDir))
           case "v14_auto" =>
             operators.VectorOps.embedRetentionAuto(vecs)
         }

@@ -77,7 +77,7 @@ class VectorGateSpec extends SparkSpec {
         ("target/sfdv_smoke", 64, 0.10),
         ("target/sfdv_smoke384", 384, 0.10))) {
       if (!new java.io.File(s"$dir/embeddings.parquet").exists())
-        ScaleProbe.synthDv(spark, "/root/testdata/sf0.1", dir, copies = 10,
+        ScaleFixtures.synthDv(spark, "/root/testdata/sf0.1", dir, copies = 10,
           dim = dim)
       val ds = VectorOps.vecsCheckpointed(spark, dir)
       val n = ds.count()
@@ -112,10 +112,10 @@ class VectorGateSpec extends SparkSpec {
   test("dedup-band (>=0.8) recall floors on the twin-planted fixtures: " +
       "high-sim op holds its target; v3's survey floor pinned (x10, both dims)") {
     // The band production dedup cares about, measured against PLANTED
-    // high-sim twins (ScaleProbe.synthDv twins=true: ~0.82-0.96 cosines,
+    // high-sim twins (ScaleFixtures.synthDv twins=true: ~0.82-0.96 cosines,
     // replicated exactly per copy — the band the natural fixture lacks).
-    // Floors pinned just below measured (the v5 discipline, RpRecallProbe
-    // r16 rows):
+    // Floors pinned just below measured (the v5 discipline; r16 recall rows
+    // in BASELINE.md):
     //  - nearDupPairsHighSim (target recall 0.9 @ sim 0.8): measured
     //    0.9745 / 0.9764 at dims 64/384 → floor 0.95. This operator's
     //    bands GROW with the corpus (OperatingPoint.rpHighSimBands), so
@@ -129,7 +129,7 @@ class VectorGateSpec extends SparkSpec {
     for ((dir, dim) <- Seq(("target/sfdvt_smoke", 64),
         ("target/sfdvt_smoke384", 384))) {
       if (!new java.io.File(s"$dir/embeddings.parquet").exists())
-        ScaleProbe.synthDv(spark, "/root/testdata/sf0.1", dir, copies = 10,
+        ScaleFixtures.synthDv(spark, "/root/testdata/sf0.1", dir, copies = 10,
           dim = dim, twins = true)
       val ds = VectorOps.vecsCheckpointed(spark, dir)
       val n = ds.count()
@@ -174,7 +174,7 @@ class VectorGateSpec extends SparkSpec {
     // corpus is near-uniform random (no cluster structure to learn), so
     // the measured number is the blocker's floor geometry, not its
     // clustered-corpus behavior. Floors pinned just below measured
-    // (RpRecallProbe sem, r16: >=0.8 recall 0.9189 at dim 64 / 0.9679 at
+    // (r16 recall rows, BASELINE.md: >=0.8 recall 0.9189 at dim 64 / 0.9679 at
     // dim 384 — the higher dim blocks BETTER here because top-2 learned
     // cells carry more of the neighborhood when random cosines
     // concentrate near 0).
@@ -183,7 +183,7 @@ class VectorGateSpec extends SparkSpec {
         ("target/sfdvt_smoke", 64, 0.88),
         ("target/sfdvt_smoke384", 384, 0.93))) {
       if (!new java.io.File(s"$dir/embeddings.parquet").exists())
-        ScaleProbe.synthDv(spark, "/root/testdata/sf0.1", dir, copies = 10,
+        ScaleFixtures.synthDv(spark, "/root/testdata/sf0.1", dir, copies = 10,
           dim = dim, twins = true)
       val ds = VectorOps.vecsCheckpointed(spark, dir)
       val n = ds.count()

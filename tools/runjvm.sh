@@ -2,6 +2,7 @@
 # Plain-java runner for graft mains — avoids a second sbt server while the
 # warm tmux sbt shell is live. Usage: tools/runjvm.sh <MainClass> [args...]
 MEM="${SPARK_DRIVER_MEM:-8g}"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -18,5 +19,6 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Duser.timezone=UTC -Duser.language=en -Duser.country=US \
+  -Dfile.encoding=UTF-8 \
   -Xmx"$MEM" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:$ROOT/target/scala-2.13/test-classes:/opt/spark/jars/*" "$@"
