@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -242,21 +243,12 @@ case class CosineSimBounded(vecA: Expression, vecB: Expression,
 }
 
 object CosineSimBounded {
-  /** Register `vec_sufsq(v)` and
-    * `cosine_sim_bounded(a, b, sufa, sufb, pruneBelowLit)`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_sufsq", exprs => VecSufSq(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim_bounded", exprs => {
-        require(exprs.length == 5,
-          "usage: cosine_sim_bounded(a, b, sufa, sufb, pruneBelow)")
-        val p = exprs(4) match {
-          case Literal(v: java.lang.Number, _) => v.doubleValue()
-          case other => throw new IllegalArgumentException(
-            s"cosine_sim_bounded pruneBelow must be a numeric literal, got $other")
-        }
-        CosineSimBounded(exprs.head, exprs(1), exprs(2), exprs(3), p)
-      }, "scala_udf")
-  }
+  /** Column builder: `vec_sufsq(v)`. */
+  def sufSq(v: Column): Column = column(VecSufSq(expression(v)))
+
+  /** Column builder: `cosine_sim_bounded(a, b, sufa, sufb, pruneBelow)`. */
+  def of(a: Column, b: Column, sufA: Column, sufB: Column,
+      pruneBelow: Double): Column =
+    column(CosineSimBounded(expression(a), expression(b), expression(sufA),
+      expression(sufB), pruneBelow))
 }

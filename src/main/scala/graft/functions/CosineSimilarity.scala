@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -77,16 +78,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Register `cosine_sim(a, b)` in the session's function registry so SQL
-    * and `expr(...)` pipelines can use the native expression. Also
-    * registers its rounding companion `round6(x)` ([[Round6]]): every
-    * similarity pipeline rounds sims to 6 decimals for engine-independent
-    * ordering, and Spark's own `round` pays a BigDecimal-via-string
-    * conversion PER CANDIDATE — the profiled per-candidate bottleneck of
-    * the ×1000 runs. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs.head, exprs(1)), "scala_udf")
-    Round6.register(spark)
-  }
+  /** Column builder: `cosine_sim(a, b)`. Similarity pipelines round the
+    * result through [[Round6.of]]: Spark's own `round` pays a
+    * BigDecimal-via-string conversion PER CANDIDATE — the profiled
+    * per-candidate bottleneck of the ×1000 runs. */
+  def of(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -183,12 +184,10 @@ object HierTopCells {
     new GenericArrayData(out)
   }
 
-  /** Column builder (the TopCells pattern: the matrices cannot
-    * round-trip through the string-based function registry). */
+  /** Column builder (the TopCells pattern). */
   def top(vec: Column, probes: Int, k: Int, kl: Int,
       sup: Array[(Int, Array[Double])],
       locs: Array[(Array[Int], Array[Array[Double]])]): Column =
-    org.apache.spark.sql.GraftColumnShim.column(HierTopCells(
-      org.apache.spark.sql.GraftColumnShim.expression(vec), probes, k, kl,
+    column(HierTopCells(expression(vec), probes, k, kl,
       sup.map(_._1), sup.map(_._2), locs.map(_._1), locs.map(_._2)))
 }

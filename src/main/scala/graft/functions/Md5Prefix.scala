@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -64,16 +65,7 @@ object Md5Prefix {
     v
   }
 
-  /** Register `md5_prefix(x, digits)` (digits a literal int). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_prefix", exprs => {
-        require(exprs.length == 2, "usage: md5_prefix(x, digits)")
-        val digits = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"md5_prefix digits must be a literal int, got $other")
-        }
-        Md5Prefix(exprs.head, digits)
-      }, "scala_udf")
+  /** Column builder: `md5_prefix(x, digits)`. */
+  def of(x: Column, digits: Int): Column =
+    column(Md5Prefix(expression(x), digits))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -90,11 +91,8 @@ case class MinHashSignatures(child: Expression, a: Array[Long],
 }
 
 object MinHashSignatures {
-  /** Register `minhash_sigs(hs)` with the given hash-family parameters. */
-  def register(spark: SparkSession, a: Seq[Long], b: Seq[Long],
-      p: Long): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs",
-      exprs => MinHashSignatures(exprs.head, a.toArray, b.toArray, p),
-      "scala_udf")
+  /** Column builder: `minhash_sigs(hs)` with the given hash-family
+    * parameters. */
+  def of(hs: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
+    column(MinHashSignatures(expression(hs), a.toArray, b.toArray, p))
 }

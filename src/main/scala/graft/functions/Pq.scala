@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -155,18 +156,13 @@ case class PqAdcSim(first: Expression, second: Expression, third: Expression,
 }
 
 object Pq {
-  /** Register the PQ family: `pq_encode(v, codebook, m, kc)` and
-    * `pq_adc_sim(code, dot_lut, norm_lut, kc)` (trailing ints must be
-    * literals — they are codegen geometry, not data). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def litInt(e: Expression): Int =
-      e.eval().asInstanceOf[Number].intValue()
-    reg.createOrReplaceTempFunction("pq_encode", exprs =>
-      PqEncode(exprs.head, exprs(1), litInt(exprs(2)), litInt(exprs(3))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("pq_adc_sim", exprs =>
-      PqAdcSim(exprs.head, exprs(1), exprs(2), litInt(exprs(3))),
-      "scala_udf")
-  }
+  /** Column builder: `pq_encode(v, codebook, m, kc)` (`m` and `kc` are
+    * codegen geometry, not data). */
+  def encode(v: Column, codebook: Column, m: Int, kc: Int): Column =
+    column(PqEncode(expression(v), expression(codebook), m, kc))
+
+  /** Column builder: `pq_adc_sim(code, dot_lut, norm_lut, kc)`. */
+  def adcSim(code: Column, dotLut: Column, normLut: Column, kc: Int): Column =
+    column(PqAdcSim(expression(code), expression(dotLut),
+      expression(normLut), kc))
 }

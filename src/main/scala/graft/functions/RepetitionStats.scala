@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -69,8 +70,6 @@ case class RepetitionStats(child: Expression)
 }
 
 object RepetitionStats {
-  def register(spark: SparkSession,
-      name: String = "repetition_stats"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => RepetitionStats(exprs.head), "scala_udf")
+  /** Column builder: `repetition_stats(text)`. */
+  def of(text: Column): Column = column(RepetitionStats(expression(text)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -98,10 +99,8 @@ object Round6 {
     } else exact(x)
   }
 
-  /** Register `round6(x)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "round6", exprs => Round6(exprs.head), "scala_udf")
+  /** Column builder: `round6(x)`. */
+  def of(x: Column): Column = column(Round6(expression(x)))
 
   /** Bit-equal replication of the integer-sum mean's per-element scaling,
     * `CAST(round(x * 1e8, 0) AS BIGINT)`, for the driver-hosted Lloyd loop

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -85,13 +86,7 @@ case class RpBandKeys(child: Expression, signs: Array[Array[Double]],
 }
 
 object RpBandKeys {
-  /** Register `<name>(v)` with the given sign matrix. Distinct band configs
-    * must register under distinct names: resolution happens at DataFrame
-    * construction, so a later register would not affect already-built plans,
-    * but two configs alive in one session would race on a shared name. */
-  def register(spark: SparkSession, signs: Array[Array[Double]],
-      planesPerBand: Int, name: String = "rp_band_keys"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => RpBandKeys(exprs.head, signs, planesPerBand),
-      "scala_udf")
+  /** Column builder: the band keys of `v` under the given sign matrix. */
+  def of(v: Column, signs: Array[Array[Double]], planesPerBand: Int): Column =
+    column(RpBandKeys(expression(v), signs, planesPerBand))
 }

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -91,12 +92,10 @@ case class RpSketch(child: Expression, signs: Array[Array[Double]])
 }
 
 object RpSketch {
-  /** Register `<name>(v)` with the given 128-plane sign matrix (per-dim
-    * configs register under distinct names, the RpBandKeys convention). */
-  def register(spark: SparkSession, signs: Array[Array[Double]],
-      name: String): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => RpSketch(exprs.head, signs), "scala_udf")
+  /** Column builder: the sketch of `v` under the given 128-plane sign
+    * matrix. */
+  def of(v: Column, signs: Array[Array[Double]]): Column =
+    column(RpSketch(expression(v), signs))
 }
 
 /** Bucket-local SKETCH-GATED pair enumeration: enumerates each bucket's
@@ -175,17 +174,8 @@ object SketchHammingGate {
     * under which max occupancy sits orders of magnitude below the cap. */
   val MaxBucket: Int = 1 << 16
 
-  /** Register `sketch_gate_pairs(members, maxHammingLit)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sketch_gate_pairs", exprs => {
-        require(exprs.length == 2,
-          "usage: sketch_gate_pairs(members, maxHamming)")
-        val h = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"sketch_gate_pairs maxHamming must be an int literal, got $other")
-        }
-        SketchHammingGate(exprs.head, h)
-      }, "scala_udf")
+  /** Column builder: the generator `sketch_gate_pairs(members,
+    * maxHamming)`. */
+  def of(members: Column, maxHamming: Int): Column =
+    column(SketchHammingGate(expression(members), maxHamming))
 }

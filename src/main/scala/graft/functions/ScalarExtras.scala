@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Remaining scalar-function surface of SURVEY §2.8 not already exercised by
@@ -9,16 +9,11 @@ import org.apache.spark.sql.functions._
   */
 object ScalarExtras {
 
-  /** F7: NFKD + ASCII-ignore label normalization (utils.py:389). Column
-    * form via a registered function for label paths only (presentation,
-    * never the hot path). */
+  /** F7: NFKD + ASCII-ignore label normalization (utils.py:389), for
+    * label paths only (presentation, never the hot path). */
   def asciiNormalize(s: String): String =
     java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKD)
       .replaceAll("[^\\p{ASCII}]", "")
-
-  def registerAsciiNormalize(spark: SparkSession): Unit =
-    spark.udf.register("ascii_normalize", (s: String) =>
-      if (s == null) null else asciiNormalize(s))
 
   /** F8: textwrap.wrap(width) (utils.py:392) — greedy word wrap. */
   def wrap(text: String, width: Int): Seq[String] = {

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -143,32 +144,17 @@ object ShingleHashes {
     new GenericArrayData(arr)
   }
 
-  /** Register `shingle_hashes(words)` (3-word shingles, distinct — the
-    * MinHash front) and `gram_hashes(words, n)` (all n-gram starts in
-    * order, duplicates kept — the decontamination probe stream). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => ShingleHashes(exprs.head, 3, distinct = true), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_hashes", exprs => {
-        require(exprs.length == 2, "usage: gram_hashes(words, n)")
-        val n = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"gram_hashes n must be a literal int, got $other")
-        }
-        ShingleHashes(exprs.head, n, distinct = false)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_strings", exprs => {
-        require(exprs.length == 2, "usage: gram_strings(words, n)")
-        val n = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"gram_strings n must be a literal int, got $other")
-        }
-        GramStrings(exprs.head, n)
-      }, "scala_udf")
-  }
+  /** Column builder: `shingle_hashes(words)` (3-word shingles, distinct —
+    * the MinHash front). */
+  def shingles(words: Column): Column =
+    column(ShingleHashes(expression(words), 3, distinct = true))
+
+  /** Column builder: `gram_hashes(words, n)` (all n-gram starts in order,
+    * duplicates kept — the decontamination probe stream). */
+  def grams(words: Column, n: Int): Column =
+    column(ShingleHashes(expression(words), n, distinct = false))
+
+  /** Column builder: `gram_strings(words, n)`. */
+  def gramStrings(words: Column, n: Int): Column =
+    column(GramStrings(expression(words), n))
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -36,9 +37,7 @@ case class SimHashAgg(left: Expression, right: Expression, bits: Int,
   // Input contract: without it, an INT first argument reaches the
   // asInstanceOf[Long] below and fails at EXECUTION with a
   // ClassCastException; this turns that into an analysis-time implicit
-  // cast (or a clear analysis error for non-numeric types). Registered
-  // functions are reachable from validator-passed LLM SQL, so the
-  // analysis-time contract is load-bearing, not cosmetic.
+  // cast (or a clear analysis error for non-numeric types).
   override def inputTypes = Seq(LongType, LongType)
 
   override def dataType: DataType = LongType
@@ -104,16 +103,9 @@ case class SimHashAgg(left: Expression, right: Expression, bits: Int,
 }
 
 object SimHashAgg {
-  /** Register `simhash_agg(wh, w)` producing a `bits`-wide fingerprint. */
-  def register(spark: SparkSession, bits: Int): Unit =
-    register(spark, bits, "simhash_agg")
-
-  /** Same, under a caller-chosen function name — the wide-fingerprint
-    * variant registers one instance per word ([[graft.operators.DedupOps]]
-    * `simhashPairsWide`) and must not clobber the pinned 48-bit form's
-    * resolved expressions. */
-  def register(spark: SparkSession, bits: Int, name: String): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SimHashAgg(exprs.head, exprs(1), bits),
-      "scala_udf")
+  /** Column builder: the aggregate `simhash_agg(wh, w)` producing a
+    * `bits`-wide fingerprint. */
+  def of(wh: Column, w: Column, bits: Int): Column =
+    column(SimHashAgg(expression(wh), expression(w), bits)
+      .toAggregateExpression())
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -128,11 +129,8 @@ object SimHashText {
     }
   }
 
-  /** Column builder (the weight map cannot round-trip through the
-    * string-based function registry). `weights` null = unweighted. */
+  /** Column builder. `weights` null = unweighted. */
   def of(text: Column, digits: Int, bits: Int,
       weights: java.util.HashMap[UTF8String, java.lang.Long]): Column =
-    org.apache.spark.sql.GraftColumnShim.column(SimHashText(
-      org.apache.spark.sql.GraftColumnShim.expression(text), digits, bits,
-      weights))
+    column(SimHashText(expression(text), digits, bits, weights))
 }

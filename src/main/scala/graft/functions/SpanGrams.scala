@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -97,11 +98,9 @@ case class SpanGramHits(child: Expression, gramLen: Int)
 }
 
 object SpanGramHits {
-  /** Register `span_gram_hits(text)` with the given gram length. */
-  def register(spark: SparkSession, gramLen: Int,
-      name: String = "span_gram_hits"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => SpanGramHits(exprs.head, gramLen), "scala_udf")
+  /** Column builder: `span_gram_hits(text)` with the given gram length. */
+  def of(text: Column, gramLen: Int): Column =
+    column(SpanGramHits(expression(text), gramLen))
 }
 
 /** CDC boundary positions for t14 (TextOps.cdcChunks): every 1-indexed
@@ -158,11 +157,9 @@ case class CdcBoundaries(child: Expression, window: Int)
 }
 
 object CdcBoundaries {
-  /** Register `cdc_boundaries(text)` with the given window length. */
-  def register(spark: SparkSession, window: Int,
-      name: String = "cdc_boundaries"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => CdcBoundaries(exprs.head, window), "scala_udf")
+  /** Column builder: `cdc_boundaries(text)` with the given window length. */
+  def of(text: Column, window: Int): Column =
+    column(CdcBoundaries(expression(text), window))
 }
 
 /** The 100 TB form of [[SpanGramHits]]: a Karp-Rabin ROLLING hash makes
@@ -270,12 +267,10 @@ case class RollingGramHits(child: Expression, gramLen: Int, selBits: Int)
 }
 
 object RollingGramHits {
-  /** Register `rolling_gram_hits(text)` with the given gram length and
+  /** Column builder: `rolling_gram_hits(text)` with the given gram length and
     * selection width (1-in-2^selBits grams selected). */
-  def register(spark: SparkSession, gramLen: Int, selBits: Int = 4,
-      name: String = "rolling_gram_hits"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => RollingGramHits(exprs.head, gramLen, selBits), "scala_udf")
+  def of(text: Column, gramLen: Int, selBits: Int = 4): Column =
+    column(RollingGramHits(expression(text), gramLen, selBits))
 }
 
 /** WINNOWED gram selection — the deterministic-coverage form the at-rest
@@ -396,12 +391,10 @@ case class WinnowedGramHits(child: Expression, gramLen: Int, window: Int)
 }
 
 object WinnowedGramHits {
-  /** Register `winnowed_gram_hits(text)` with the given gram length and
+  /** Column builder: `winnowed_gram_hits(text)` with the given gram length and
     * winnowing window. */
-  def register(spark: SparkSession, gramLen: Int, window: Int = 16,
-      name: String = "winnowed_gram_hits"): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => WinnowedGramHits(exprs.head, gramLen, window), "scala_udf")
+  def of(text: Column, gramLen: Int, window: Int = 16): Column =
+    column(WinnowedGramHits(expression(text), gramLen, window))
 }
 
 /** Minimum per-window md5, fused — t4's fingerprint columns
@@ -481,9 +474,8 @@ case class MinGramHash(child: Expression, gramLen: Int)
 }
 
 object MinGramHash {
-  /** Register `<name>(text)` returning the minimum md5 hex over all
-    * `gramLen`-char windows. */
-  def register(spark: SparkSession, gramLen: Int, name: String): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinGramHash(exprs.head, gramLen), "scala_udf")
+  /** Column builder: the minimum md5 hex over all `gramLen`-char windows
+    * of `text`. */
+  def of(text: Column, gramLen: Int): Column =
+    column(MinGramHash(expression(text), gramLen))
 }

@@ -1,10 +1,10 @@
 // Lives in org.apache.spark.sql to reach the private[sql] classic
 // ExpressionUtils — the supported classic-mode bridge between a raw
-// Catalyst Expression and the public Column API. Needed because
-// graft.functions.TopCells carries a driver-collected centroid matrix,
-// which cannot round-trip through the string-based function registry the
-// other custom expressions use. GraftDatasetShim reaches the private[sql]
-// classic Dataset.ofRows the same way.
+// Catalyst Expression and the public Column API. Every graft.functions
+// builder goes through it, so operators pass typed Scala arguments
+// (sign matrices, centroids, literal ints) straight into the expression
+// and never resolve a function by name. GraftDatasetShim reaches the
+// private[sql] classic Dataset.ofRows the same way.
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -182,14 +183,13 @@ case class CosineSimQ8(left: Expression, right: Expression)
 }
 
 object Sq8 {
-  /** Register the SQ8 family in the session's function registry. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "sq8_encode", exprs => Sq8Encode(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "sq8_decode", exprs => Sq8Decode(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "cosine_sim_q8", exprs => CosineSimQ8(exprs.head, exprs(1)), "scala_udf")
-  }
+  /** Column builder: `sq8_encode(v)`. */
+  def encode(v: Column): Column = column(Sq8Encode(expression(v)))
+
+  /** Column builder: `sq8_decode(code)`. */
+  def decode(code: Column): Column = column(Sq8Decode(expression(code)))
+
+  /** Column builder: `cosine_sim_q8(code, q)`. */
+  def cosine(code: Column, q: Column): Column =
+    column(CosineSimQ8(expression(code), expression(q)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -87,11 +88,9 @@ object SurprisalSum {
     InternalRow(nWords, sum, nOov)
   }
 
-  /** Column builder (the TopCells pattern: the model cannot round-trip
-    * through the string-based function registry). */
+  /** Column builder. */
   def score(text: Column,
       vocab: java.util.HashMap[UTF8String, java.lang.Long],
       oovLp: Long): Column =
-    org.apache.spark.sql.GraftColumnShim.column(SurprisalSum(
-      org.apache.spark.sql.GraftColumnShim.expression(text), vocab, oovLp))
+    column(SurprisalSum(expression(text), vocab, oovLp))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -193,7 +194,6 @@ object TopCells {
     * (cid, components) pairs in any order (ranking is order-independent:
     * the comparator is total). */
   def top(vec: Column, k: Int, centroids: Array[(Int, Array[Double])]): Column =
-    org.apache.spark.sql.GraftColumnShim.column(TopCells(
-      org.apache.spark.sql.GraftColumnShim.expression(vec), k,
+    column(TopCells(expression(vec), k,
       centroids.map(_._1), centroids.map(_._2)))
 }

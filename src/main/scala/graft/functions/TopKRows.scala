@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
@@ -55,12 +56,13 @@ case class TopKRows(child: Expression, k: Int,
 
   require(k >= 1 && k <= (1 << 20), s"topk_rows k=$k outside [1, 2^20]")
 
-  private val structType: StructType = child.dataType match {
+  // lazy: a Column builder constructs this before its child is resolved
+  private lazy val structType: StructType = child.dataType match {
     case st: StructType => st
     case other => throw new IllegalArgumentException(
       s"topk_rows needs a struct payload, got ${other.simpleString}")
   }
-  private val fieldTypes: Array[DataType] = structType.fields.map(_.dataType)
+  private lazy val fieldTypes: Array[DataType] = structType.fields.map(_.dataType)
   @transient private lazy val fieldOrds: Array[Ordering[Any]] =
     fieldTypes.map(TypeUtils.getInterpretedOrdering)
 
@@ -195,7 +197,7 @@ object TopKRows {
     val set = spark.conf.getAll.get(key)
     val t = set.getOrElse("128")
     // diagnostics only: an unparseable value (whitespace, "2m"-style
-    // suffix) must skip the warning, never fail registration
+    // suffix) must skip the warning, never fail the query build
     val tParsed = scala.util.Try(t.trim.toLong).getOrElse(Long.MaxValue)
     if (tParsed <= 128 && warnedSessions.add(spark))
       System.err.println("[graft] WARN topk_rows: " + key + "=" + t +
@@ -205,18 +207,10 @@ object TopKRows {
         "keep the hash path")
   }
 
-  /** Register `topk_rows(payload_struct, k)` (k a literal int). */
-  def register(spark: SparkSession): Unit = {
-    warnLowFallbackThreshold(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_rows", exprs => {
-        require(exprs.length == 2, "usage: topk_rows(payload_struct, k)")
-        val k = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"topk_rows k must be a literal int, got $other")
-        }
-        TopKRows(exprs.head, k)
-      }, "scala_udf")
+  /** Column builder: the aggregate `topk_rows(payload_struct, k)`. Warns
+    * once per session (the active one) when the fallback threshold is low. */
+  def of(payload: Column, k: Int): Column = {
+    SparkSession.getActiveSession.foreach(warnLowFallbackThreshold)
+    column(TopKRows(expression(payload), k).toAggregateExpression())
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -99,8 +100,6 @@ object WordStats {
     InternalRow(nWords, nDistinct, nStop)
   }
 
-  /** Register `word_stats(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_stats", exprs => WordStats(exprs.head), "scala_udf")
+  /** Column builder: `word_stats(text)`. */
+  def of(text: Column): Column = column(WordStats(expression(text)))
 }

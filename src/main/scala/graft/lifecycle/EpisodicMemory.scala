@@ -1,8 +1,6 @@
 package graft.lifecycle
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.functions.CosineSimilarity
+import org.apache.spark.sql.SparkSession
 import graft.operators.RankDedup
 
 /** Episodic memory — the reference's vector store of solved chains
@@ -272,7 +270,6 @@ final class EpisodicMemory(spark: SparkSession,
       (i.toLong, w, r.rank)
     }.toDF("id", "v", "rank")
     val candDF = Seq((candId, v, rank)).toDF("id", "v", "rank")
-    CosineSimilarity.register(spark)
     val result = RankDedup.upsert(storeDF, candDF, embedder.dim)
       .collect().map(r => (r.getLong(0), r.getString(2))).toMap
     val replaced = records.indices.filter(i =>

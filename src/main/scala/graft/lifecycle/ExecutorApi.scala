@@ -213,9 +213,12 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
 
   private var executor: Option[java.util.concurrent.ExecutorService] = None
 
+  /** Stops serving and releases every uploaded table: each id is
+    * unpersisted and, through the eviction hook, unbound. */
   def stop(): Unit = {
     server.foreach(_.stop(0)); server = None
     executor.foreach(_.shutdown()); executor = None
+    cache.ids.foreach(cache.remove)
   }
 
   // ---- endpoints ----

@@ -25,8 +25,6 @@ final class Retriever(spark: SparkSession,
 
   import Retriever.Retrieved
 
-  CosineSimilarity.register(spark)
-
   private var index: Option[DataFrame] = None
 
   /** Build the chunk index from a (doc_id, text) corpus. Embedding runs
@@ -65,7 +63,7 @@ final class Retriever(spark: SparkSession,
       throw new IllegalStateException("indexCorpus must run before retrieve"))
     val qv = typedLit(embedder.embed(question))
     idx.select(col("doc_id"), col("chunk_idx"), col("chunk"),
-        round(call_function("cosine_sim", col("emb"), qv), 6).as("sim"))
+        round(CosineSimilarity.of(col("emb"), qv), 6).as("sim"))
       .orderBy(desc("sim"), col("doc_id"), col("chunk_idx"))
       .limit(k)
   }
@@ -87,7 +85,7 @@ final class Retriever(spark: SparkSession,
     val qv = typedLit(embedder.embed(question))
     val cands = idx.select(col("doc_id"), col("chunk_idx"), col("chunk"),
         col("emb"),
-        round(call_function("cosine_sim", col("emb"), qv), 6).as("sim"))
+        round(CosineSimilarity.of(col("emb"), qv), 6).as("sim"))
       .orderBy(desc("sim"), col("doc_id"), col("chunk_idx"))
       .limit(3 * k)
       .collect()

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{Md5Prefix, MinHashSignatures, RollingGramHits, Round6,
+  ShingleHashes, SimHashAgg, SpanGramHits}
 
 /** Deduplication operators for the training-data pipeline surface:
   * exact (hash group), MinHash+LSH (shingle → minhash → band → bucket join →
@@ -123,9 +125,8 @@ object DedupOps {
     * the k-separate `array_min(transform(...))` form evaluates interpreted
     * lambdas and dominated the 10x-scale LSH probe). Values are identical
     * to the DuckDB per-slot form. */
-  private def registerSigs(s: SparkSession): Unit =
-    graft.functions.MinHashSignatures.register(
-      s, HashAB.map(_._1), HashAB.map(_._2), P)
+  private def minhashSigs(hs: Column): Column =
+    MinHashSignatures.of(hs, HashAB.map(_._1), HashAB.map(_._2), P)
 
   /** Band key = the band's signature triple, separator-joined (no hashing
     * needed — only equality structure matters for bucketing). `||` rather
@@ -148,10 +149,9 @@ object DedupOps {
     * ~0.5 s of the ~0.7 s LSH front at sf0.1. Values are bit-identical
     * (ShingleHashesSpec pins the equality against the composed form). */
   private def docShingleHashesOf(corpus: DataFrame): DataFrame = {
-    graft.functions.ShingleHashes.register(corpus.sparkSession)
     corpus
       .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .select(col("doc_id"), expr("shingle_hashes(words)").as("hs"))
+      .select(col("doc_id"), ShingleHashes.shingles(col("words")).as("hs"))
   }
 
   private def docShingleHashes(s: SparkSession, d: String): DataFrame =
@@ -203,11 +203,10 @@ object DedupOps {
     * rows, which at 100 TB is the difference between a scan-speed pass and
     * a multi-TB exchange. */
   def minhashBands: Q = (s, d) => {
-    registerSigs(s)
     val bands = bandExprs(j => s"element_at(sigv, ${j + 1})").zipWithIndex
       .map { case (e, b) => expr(e).as(s"band_$b") }
     docShingleHashes(s, d)
-      .select(col("doc_id"), expr("minhash_sigs(hs)").as("sigv"))
+      .select(col("doc_id"), minhashSigs(col("hs")).as("sigv"))
       .select(col("doc_id") +: bands: _*)
   }
 
@@ -247,10 +246,9 @@ object DedupOps {
     * columns so an incremental append never recomputes them for the
     * existing corpus. */
   private[graft] def lshDocsOf(corpus: DataFrame): DataFrame = {
-    registerSigs(corpus.sparkSession)
     docShingleHashesOf(corpus)
       .select(col("doc_id"), col("hs"), size(col("hs")).as("n"),
-        expr("minhash_sigs(hs)").as("sigv"))
+        minhashSigs(col("hs")).as("sigv"))
       .localCheckpoint(eager = false)
   }
 
@@ -266,9 +264,8 @@ object DedupOps {
     * without needing the original text. The at-rest delete path uses it to
     * locate a doc's band-index rows. */
   private[graft] def lshBandsFromStored(rows: DataFrame): DataFrame = {
-    registerSigs(rows.sparkSession)
     lshBandsOf(rows.select(col("doc_id"), col("hs"),
-      expr("minhash_sigs(hs)").as("sigv")))
+      minhashSigs(col("hs")).as("sigv")))
   }
 
   /** Exact n-gram Jaccard ≥ 0.4 verify of candidate pairs (a_id, b_id)
@@ -279,7 +276,6 @@ object DedupOps {
     // round6, not round: the jaccard rounds once per CANDIDATE pair, and
     // Spark's round pays a BigDecimal-via-string per call (the r15
     // profile); bit-equal swap, oracle unchanged
-    graft.functions.Round6.register(cand.sparkSession)
     cand
       .join(lookup.select(col("doc_id").as("a_id"), col("hs").as("ha"),
         col("n").as("na")), Seq("a_id"))
@@ -287,7 +283,7 @@ object DedupOps {
         col("n").as("nb")), Seq("b_id"))
       .withColumn("ninter", size(array_intersect(col("ha"), col("hb"))))
       .select(col("a_id"), col("b_id"),
-        call_function("round6", col("ninter") /
+        Round6.of(col("ninter") /
           (col("na") + col("nb") - col("ninter")).cast("double"))
           .as("jaccard"))
       .filter(col("jaccard") >= 0.4)
@@ -510,8 +506,6 @@ object DedupOps {
 
   // ---- SimHash ----
 
-  private val hexDigitsSpark = (0 until 6).map(p =>
-    s"(instr('0123456789abcdef', substring(h, ${p + 1}, 1)) - 1) * ${math.pow(16, 5 - p).toLong}")
   private val hexDigitsDuck = (0 until 6).map(p =>
     s"(strpos('0123456789abcdef', substr(h, ${p + 1}, 1)) - 1) * ${math.pow(16, 5 - p).toLong}")
 
@@ -603,8 +597,6 @@ object DedupOps {
     // update loop, order-free integer merges) instead of 48 sum(CASE...)
     // columns — see graft.functions.SimHashAgg. Values are identical to
     // the DuckDB oracle's per-bit sums + fold.
-    graft.functions.SimHashAgg.register(s, bits)
-    graft.functions.Md5Prefix.register(s)
     val digits = math.min(15, (bits + 3) / 4)
     val words = df
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
@@ -616,10 +608,10 @@ object DedupOps {
       .select(col("doc_id"),
         // fused digest-prefix word hash — identical to the former
         // md5 → substring → conv chain (Md5PrefixSpec pins the equality)
-        expr(s"md5_prefix(word, $digits)").as("wh"),
+        Md5Prefix.of(col("word"), digits).as("wh"),
         expr("CASE WHEN df_ * 20 <= nd THEN 4 WHEN df_ * 5 <= nd THEN 2 ELSE 1 END")
           .as("w"))
-      .groupBy("doc_id").agg(expr("simhash_agg(wh, w)").as("simhash"))
+      .groupBy("doc_id").agg(SimHashAgg.of(col("wh"), col("w"), bits).as("simhash"))
   }
 
   /** SimHash dedup pairs: block on 8-bit chunks of the weighted 48-bit
@@ -690,9 +682,7 @@ object DedupOps {
     * plus the DedupOpsSpec recall gate against the planted corpus; the
     * md5-fold [[simhashPairs]] stays as the hash-gated oracle anchor. */
   private[graft] def wideSimhash(df: DataFrame, chunkBits: Int): DataFrame = {
-    val s = df.sparkSession
     val bitsPerWord = 3 * chunkBits
-    graft.functions.SimHashAgg.register(s, bitsPerWord, "simhash_agg_wide")
     val mask = (1L << bitsPerWord) - 1
     val words = df
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
@@ -707,8 +697,8 @@ object DedupOps {
         expr("CASE WHEN df_ * 20 <= nd THEN 4 WHEN df_ * 5 <= nd THEN 2 ELSE 1 END")
           .as("w"))
       .groupBy("doc_id").agg(
-        expr("simhash_agg_wide(wh0, w)").as("fp0"),
-        expr("simhash_agg_wide(wh1, w)").as("fp1"))
+        SimHashAgg.of(col("wh0"), col("w"), bitsPerWord).as("fp0"),
+        SimHashAgg.of(col("wh1"), col("w"), bitsPerWord).as("fp1"))
   }
 
   /** Chunk-blocked near-dup pairs over the wide fingerprint — the
@@ -842,7 +832,6 @@ object DedupOps {
     * selection modulus trades recall for stream size the way every LSH
     * knob here does ([[OperatingPoint]] pattern). */
   def spanGrams: Q = (s, d) => {
-    val g = SpanGram
     val corpus = documents(s, d).select(col("doc_id"),
       when(col("doc_id") % 19 === 0, concat(col("text"), lit(" " + SpanBoiler)))
         .otherwise(col("text")).as("text"))
@@ -850,9 +839,8 @@ object DedupOps {
     // ([[graft.functions.SpanGramHits]]): the transform/filter lambda form
     // is interpreted per element and hex-encodes every discarded gram —
     // measured 4.6 s vs 1.0 s at sf0.1 for identical output
-    graft.functions.SpanGramHits.register(s, g)
     val grams = corpus.select(col("doc_id"),
-        explode(expr("span_gram_hits(text)")).as("x"))
+        explode(SpanGramHits.of(col("text"), SpanGram)).as("x"))
       .select(col("doc_id"), col("x.off"), col("x.gh"))
     val shared = grams.groupBy("gh")
       .agg(countDistinct("doc_id").as("n_docs"), min("doc_id").as("first_doc"))
@@ -873,9 +861,8 @@ object DedupOps {
     val corpus = documents(s, d).select(col("doc_id"),
       when(col("doc_id") % 19 === 0, concat(col("text"), lit(" " + SpanBoiler)))
         .otherwise(col("text")).as("text"))
-    graft.functions.RollingGramHits.register(s, SpanGram, 4)
     val grams = corpus.select(col("doc_id"),
-        explode(expr("rolling_gram_hits(text)")).as("x"))
+        explode(RollingGramHits.of(col("text"), SpanGram, 4)).as("x"))
       .select(col("doc_id"), col("x.off"), col("x.gh"))
     val shared = grams.groupBy("gh")
       .agg(countDistinct("doc_id").as("n_docs"), min("doc_id").as("first_doc"))

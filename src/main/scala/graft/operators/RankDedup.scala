@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.CosineSimilarity
+import graft.functions.{CosineSimBounded, RpBandKeys, TopKRows}
 
 /** D2 semantic dedup-by-rank — the reference's episodic-memory upsert
   * (bambooai/qa_retrieval.py:146-202):
@@ -119,10 +119,9 @@ object RankDedup {
     * (msim DESC, then sid ASC), identical to the retired window's
     * ORDER BY msim DESC, sid and to the DuckDB oracle's row_number. */
   private[graft] def bestMatch(matches: DataFrame): DataFrame = {
-    graft.functions.TopKRows.register(matches.sparkSession)
     matches
       .groupBy(col("cid"))
-      .agg(expr("topk_rows(struct(msim, sid, srank, crank), 1)").as("top"))
+      .agg(TopKRows.of(struct("msim", "sid", "srank", "crank"), 1).as("top"))
       .select(col("cid"), col("top")(0).getField("crank").as("crank"),
         col("top")(0).getField("sid").as("sid"),
         col("top")(0).getField("srank").as("srank"))
@@ -140,20 +139,11 @@ object RankDedup {
     * toy-scale plans stay toy-optimal. */
   private[graft] def bandedMatches(store: DataFrame, cand: DataFrame,
       dim: Int, planes: Int, forceShuffle: Boolean): DataFrame = {
-    // candidates may live in a DIFFERENT session than the store (streaming
-    // foreachBatch hands batches a cloned session); each side's expressions
-    // resolve against its own registry, so register on both when they differ
     val signs = bandSigns(dim, planes)
-    Seq(store.sparkSession, cand.sparkSession).distinct.foreach { s =>
-      graft.functions.CosineSimilarity.register(s)
-      graft.functions.CosineSimBounded.register(s)
-      graft.functions.RpBandKeys.register(s, signs, planes,
-        s"rp_band_keys_dd_$planes")
-    }
     def banded(df: DataFrame, p: String) = df.select(col("id").as(p + "id"),
         col("v").as(p + "v"), col("rank").as(p + "rank"),
-        expr("vec_sufsq(v)").as(p + "sfx"),
-        posexplode(expr(s"rp_band_keys_dd_$planes(v)")).as(Seq("b", "key")))
+        CosineSimBounded.sufSq(col("v")).as(p + "sfx"),
+        posexplode(RpBandKeys.of(col("v"), signs, planes)).as(Seq("b", "key")))
     val bandedStore0 = banded(store, "s")
     val bandedStore =
       if (forceShuffle) bandedStore0.hint("merge") else bandedStore0
@@ -161,8 +151,8 @@ object RankDedup {
     // prune floor is the threshold itself (CosineSimBounded's internal
     // 1e-9 relative margin keeps boundary pairs on the full-dot path;
     // survivor msims are bit-identical to the cosine_sim form)
-    val msim =
-      expr(s"cosine_sim_bounded(cv, sv, csfx, ssfx, ${StrongThreshold}D)")
+    val msim = CosineSimBounded.of(col("cv"), col("sv"), col("csfx"),
+      col("ssfx"), StrongThreshold)
     banded(cand, "c").join(bandedStore, Seq("b", "key"))
       .withColumn("msim", msim)
       .filter(col("msim") >= StrongThreshold)
@@ -184,7 +174,6 @@ object RankDedup {
     * the same dim-aware plane count on any fixture arm; the pinned path
     * keeps the literal 64 of its static oracle's fixture. */
   private[graft] def rankUpsertQueryPlanes(planes: Int): Q = (s, d) => {
-    CosineSimilarity.register(s)
     val e = embeddings(s, d).select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
     val store = e.select(col("vec_id").as("id"), col("v"),

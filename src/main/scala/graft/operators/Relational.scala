@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.TopKRows
 
 /** Relational operator surface of SURVEY.md §2.2-§2.8: projections, filters,
   * joins, aggregations, windows, sorts, set ops, scalar functions.
@@ -612,11 +613,10 @@ object Relational {
     * `pos + 1` IS the row_number the oracle's window assigns (exact
     * equivalence incl. ties is TopKRowsSpec's pinned property). */
   def topKPerGroup: Q = (s, d) => {
-    graft.functions.TopKRows.register(s)
     orders(s, d)
       .select(col("o_orderstatus").as("status"),
         struct(col("o_totalprice"), col("o_orderkey")).as("cand"))
-      .groupBy("status").agg(expr("topk_rows(cand, 3)").as("top"))
+      .groupBy("status").agg(TopKRows.of(col("cand"), 3).as("top"))
       .select(col("status"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("status"), col("t.o_orderkey").as("order_key"),
         col("t.o_totalprice").as("price"),

@@ -76,12 +76,8 @@ object ShardManifest {
   /** The t15 shuffle key: salted md5 of the id — same family, same salt as
     * the oracle-gated query form, so a persisted manifest and the query
     * agree row for row at equal S. */
-  private def withSkey(ids: DataFrame): DataFrame = {
-    graft.functions.Md5Prefix.register(ids.sparkSession)
-    ids.select(col("doc_id"),
-      expr("md5_prefix(concat('shuffle42:', " +
-        "cast(doc_id as string)), 12)").as("skey"))
-  }
+  private def withSkey(ids: DataFrame): DataFrame =
+    ids.select(col("doc_id"), TextOps.saltedKey("shuffle42:").as("skey"))
 
   private def shardOf(shards: Int) =
     pmod(col("skey"), lit(shards.toLong)).cast("int")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.WinnowedGramHits
 
 /** Span-gram inventory AT REST — the operational form of the dd9/dd10
   * family, completing the at-rest artifact trio (cluster labels
@@ -121,21 +122,12 @@ object SpanIndex {
           "surrogate long before indexing.")
     }
 
-  /** A corpus batch's carrier rows under the stored geometry. The
-    * registered function name carries the geometry: registration is
-    * session-global and DataFrames analyze lazily, so a fixed name would
-    * let a second index with different (gramLen, window) silently rebind
-    * an earlier probe's plan to the wrong geometry. */
-  private def gramsOf(corpus: DataFrame, m: Meta): DataFrame = {
-    val s = corpus.sparkSession
-    val fn = s"span_gram_hits_g${m.gramLen}_w${m.window}"
-    graft.functions.WinnowedGramHits.register(s, m.gramLen, m.window,
-      name = fn)
+  /** A corpus batch's carrier rows under the stored geometry. */
+  private def gramsOf(corpus: DataFrame, m: Meta): DataFrame =
     corpus.select(col("doc_id"),
-        explode(expr(s"$fn(text)")).as("x"))
+        explode(WinnowedGramHits.of(col("text"), m.gramLen, m.window)).as("x"))
       .select(col("doc_id"), col("x.off").as("off"), col("x.gh").as("gh"))
       .withColumn("gb", gbOf(m.gramBuckets))
-  }
 
   /** Per-doc commit rows for a batch. Driven by the BATCH ids, not the
     * gram stream: a doc whose every gram failed selection still gets a

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{CdcBoundaries, Md5Prefix, MinGramHash, RepetitionStats,
+  ShingleHashes, TopKRows, WordStats}
 
 /** Text-analysis operators over the documents corpus (SURVEY §2.8 F6/F9 plus
   * the training-data-pipeline surface: language-ID, quality scoring, token
@@ -135,10 +137,7 @@ object TextOps {
 
   /** `word_stats(text)` = struct(n_words, n_distinct, n_stop) — one fused
     * pass, bit-equal to size(split)/size(array_distinct)/size(filter). */
-  private[graft] def wordStats(text: Column): Column =
-    org.apache.spark.sql.GraftColumnShim.column(
-      graft.functions.WordStats(
-        org.apache.spark.sql.GraftColumnShim.expression(text)))
+  private[graft] def wordStats(text: Column): Column = WordStats.of(text)
   private[graft] def uniqRatioOf(ws: Column): Column =
     round(ws.getField("n_distinct") / ws.getField("n_words").cast("double"), 6)
   private[graft] def stopRatioOf(ws: Column): Column =
@@ -444,13 +443,11 @@ object TextOps {
     * Oracle unchanged: hex is nibble-monotonic so min-over-hex equals
     * unsigned min-over-digest. */
   def fingerprint: Q = (s, d) => {
-    graft.functions.MinGramHash.register(s, 8, "min_gram8_h")
-    graft.functions.MinGramHash.register(s, 16, "min_gram16_h")
     documents(s, d).select(
       col("doc_id"),
       md5(col("text")).as("content_hash"),
-      expr("min_gram8_h(text)").as("min_gram8"),
-      expr("min_gram16_h(text)").as("min_gram16"))
+      MinGramHash.of(col("text"), 8).as("min_gram8"),
+      MinGramHash.of(col("text"), 16).as("min_gram16"))
   }
 
   /** t6: deterministic stratified sampling — the reproducible-curation
@@ -465,17 +462,23 @@ object TextOps {
   def stratifiedSample: Q = (s, d) =>
     mixtureFilter(documents(s, d).select(col("doc_id"), col("lang")))
 
+  /** The salted 48-bit md5 key of `doc_id`:
+    * `md5_prefix(concat(salt, cast(doc_id as string)), 12)`. */
+  private[graft] def saltedKey(salt: String): Column =
+    Md5Prefix.of(concat(lit(salt), col("doc_id").cast("string")), 12)
+
+  private def saltedBucket(salt: String, n: Int): Column = saltedKey(salt) % n
+
   /** The t6 bucket + quota expressions over any (doc_id, lang) frame —
     * stateless, so the SAME call works on a `readStream` source unchanged
     * (curation-on-ingest; StreamsSpec proves parity with the batch query). */
   private[graft] def mixtureFilter(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.Md5Prefix.register(docs.sparkSession)
     docs
       // md5_prefix(x, 12) IS cast(conv(substring(md5(x),1,12),16,10) as
       // bigint) read off the digest bytes (Md5Prefix scaladoc + spec) —
       // same value, minus the hex render + substring + base-16 re-parse
-      .withColumn("bucket", expr(
-        "md5_prefix(cast(doc_id as string), 12) % 100"))
+      .withColumn("bucket",
+        Md5Prefix.of(col("doc_id").cast("string"), 12) % 100)
       .filter(expr(
         "bucket < CASE lang WHEN 'en' THEN 60 WHEN 'fr' THEN 30 ELSE 10 END"))
   }
@@ -518,14 +521,13 @@ object TextOps {
     // the former transform(sequence/slice/array_join) chain evaluated its
     // lambdas interpreted per gram, and the hash arm re-parsed md5 hex —
     // strings/hashes are bit-identical (ShingleHashesSpec)
-    graft.functions.ShingleHashes.register(corpus.sparkSession)
     val docs = corpus
       .select(col("doc_id"), split(col("text"), " ").as("words"))
     val grams = if (hashGrams)
       docs.select(col("doc_id"),
-        explode(expr("gram_hashes(words, 8)")).as("g"))
+        explode(ShingleHashes.grams(col("words"), 8)).as("g"))
     else docs.select(col("doc_id"),
-      explode(expr("gram_strings(words, 8)")).as("g"))
+      explode(ShingleHashes.gramStrings(col("words"), 8)).as("g"))
     val bench = grams.filter(col("doc_id") % 97 === 0)
       .select(col("g")).distinct()
     val hits = grams.join(broadcast(bench), Seq("g"))
@@ -554,11 +556,10 @@ object TextOps {
     // query once the bench action stopped pruning it (0.825 s at sf0.1);
     // the fused hash-map/hash-set pass is O(n) dispatches with identical
     // values (oracle unchanged)
-    graft.functions.RepetitionStats.register(s, "rep_stats_t8")
     documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .select(col("doc_id"), size(col("words")).as("nw"),
-        expr("rep_stats_t8(words)").as("st"))
+        RepetitionStats.of(col("words")).as("st"))
       .select(col("doc_id"),
         round(col("st.max_word_count") / col("nw").cast("double"), 6)
           .as("top_word_frac"),
@@ -632,12 +633,11 @@ object TextOps {
     * row_number) stays hash-green, with pos + 1 as the rank.
     * PipelineOpsSpec pins the ObjectHashAggregate plan shape. */
   def domainCaps: Q = (s, d) => {
-    graft.functions.TopKRows.register(s)
     documents(s, d)
       .select(col("source"),
         struct(col("n_chars"), col("doc_id")).as("cand"))
       .groupBy(col("source"))
-      .agg(expr(s"topk_rows(cand, $DomainCap)").as("top"))
+      .agg(TopKRows.of(col("cand"), DomainCap).as("top"))
       .select(col("source"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("t.doc_id").as("doc_id"), col("source"),
         col("t.n_chars").as("n_chars"), (col("pos") + 1).cast("int").as("rk"))
@@ -737,10 +737,9 @@ object TextOps {
     // boundary detection runs fused in one native loop per document
     // ([[graft.functions.CdcBoundaries]]) — the interpreted lambda form
     // measured 12.9 s at sf0.1 vs ~1 s fused, identical output
-    graft.functions.CdcBoundaries.register(docsDf.sparkSession, 16)
     docsDf
       .select(col("doc_id"), col("text"),
-        expr("cdc_boundaries(text)").as("bs"))
+        CdcBoundaries.of(col("text"), 16).as("bs"))
       .select(col("doc_id"), col("text"), expr(
         """filter(zip_with(concat(array(0), bs),
           |   concat(bs, array(length(text))),
@@ -766,12 +765,10 @@ object TextOps {
     * weights BROADCASTS (5 rows); the explode emits copy rows map-side.
     * Downstream, [[sequencePack]] consumes exactly this manifest shape. */
   def mixtureApply: Q = (s, d) => {
-    graft.functions.Md5Prefix.register(s)
     val weights = mixtureWeights(s, d).select(col("lang"), col("weight"))
     documents(s, d).select(col("doc_id"), col("lang"))
       .join(broadcast(weights), Seq("lang"))
-      .withColumn("bucket", expr(
-        "md5_prefix(concat('mix:', cast(doc_id as string)), 12) % 1000"))
+      .withColumn("bucket", saltedBucket("mix:", 1000))
       .withColumn("n_copies",
         (floor(col("weight")) +
           when(col("bucket") <
@@ -842,9 +839,7 @@ object TextOps {
 
   /** The t12 bucket + split columns over any frame with a doc_id. */
   private[graft] def withSplit(df: DataFrame): DataFrame = {
-    graft.functions.Md5Prefix.register(df.sparkSession)
-    df.withColumn("bucket", expr(
-        "md5_prefix(concat('split:', cast(doc_id as string)), 12) % 1000"))
+    df.withColumn("bucket", saltedBucket("split:", 1000))
       .withColumn("split",
         when(col("bucket") < 980, "train")
           .when(col("bucket") < 990, "val").otherwise("test"))
@@ -890,10 +885,8 @@ object TextOps {
   }
 
   private[graft] def shuffleShardOver(df: DataFrame, shards: Int): DataFrame = {
-    graft.functions.Md5Prefix.register(df.sparkSession)
     df.select(col("doc_id"),
-        expr("md5_prefix(concat('shuffle42:', " +
-          "cast(doc_id as string)), 12)").as("skey"))
+        saltedKey("shuffle42:").as("skey"))
       .withColumn("shard", pmod(col("skey"), lit(shards.toLong)).cast("int"))
       .withColumn("pos", row_number().over(
         Window.partitionBy("shard").orderBy("skey", "doc_id")))
@@ -1324,10 +1317,7 @@ object TextOps {
         // keep ~cutoff docs: bucket into 1e6 and keep the head fraction —
         // deterministic, append-stable, independent of partitioning
         val keep = math.max(1L, (cutoff.toDouble / n.toDouble * 1e6).toLong)
-        graft.functions.Md5Prefix.register(corpus.sparkSession)
-        corpus.filter(expr(
-          "md5_prefix(concat('ppl:', cast(doc_id as string)), 12) " +
-            s"% 1000000 < $keep"))
+        corpus.filter(saltedBucket("ppl:", 1000000) < keep)
       }
     val (model, oov) = unigramModel(modelCorpus)
     // the keep ceiling is corpus-DERIVED here (round 14): the pinned 7.0

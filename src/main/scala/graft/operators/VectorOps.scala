@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{CosineSimilarity, Sq8}
+import org.apache.spark.sql.Column
+import graft.functions.{CosineSimBounded, CosineSimilarity, Pq, Round6, RpBandKeys,
+  RpSketch, SketchHammingGate, Sq8, TopKRows}
 
 /** Vector similarity operators (SURVEY §2.6 O3/O4, §2.8 F10) plus the
   * large-scale ANN path a training-data pipeline needs.
@@ -25,11 +27,20 @@ import graft.functions.{CosineSimilarity, Sq8}
 object VectorOps {
   import graft.Q.{Q, embeddings}
 
-  private def vecs(s: SparkSession, d: String): DataFrame = {
-    CosineSimilarity.register(s)
+  private def vecs(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
-  }
+
+  /** `round6(cosine_sim(a, b))` over two named columns. */
+  private def sim6(a: String, b: String): Column =
+    Round6.of(CosineSimilarity.of(col(a), col(b)))
+
+  /** The pruned exact verify: `round6(cosine_sim_bounded(...))` abandoning a
+    * pair only when provably below `threshold` (see rpBandedNearDupOver). */
+  private def boundedSim6(a: String, b: String, sufA: String, sufB: String,
+      threshold: Double): Column =
+    Round6.of(CosineSimBounded.of(col(a), col(b), col(sufA), col(sufB),
+      threshold - 1e-6))
 
   /** O3/F10: brute-force cosine top-10 against probe vector vec_id=0. */
   def cosineTopK: Q = (s, d) => {
@@ -37,7 +48,7 @@ object VectorOps {
     val probe = e.filter(col("vec_id") === 0).select(col("v").as("p"))
     e.crossJoin(broadcast(probe))
       .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), expr("round6(cosine_sim(v, p))").as("sim"))
+      .select(col("vec_id"), sim6("v", "p").as("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(10)
   }
@@ -92,7 +103,7 @@ object VectorOps {
     val shortlist = e.crossJoin(broadcast(probe))
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("v"),
-        expr("round6(cosine_sim(v, p))").as("sim"))
+        sim6("v", "p").as("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(20)
       .collect()
@@ -120,13 +131,13 @@ object VectorOps {
       .agg(expr("transform(array_sort(collect_list(struct(i, cx))), t -> t.cx)")
         .as("c"))
     val top2 = cent.crossJoin(broadcast(probe))
-      .select(col("label"), expr("cosine_sim(c, p)").as("csim"))
+      .select(col("label"), CosineSimilarity.of(col("c"), col("p")).as("csim"))
       .orderBy(desc("csim"), col("label")).limit(2)
     e.join(broadcast(top2.select("label")), Seq("label"))
       .crossJoin(broadcast(probe))
       .filter(col("vec_id") =!= 1)
       .select(col("vec_id"), col("label"),
-        expr("round6(cosine_sim(v, p))").as("sim"))
+        sim6("v", "p").as("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(10)
   }
@@ -228,13 +239,12 @@ object VectorOps {
 
   private[graft] def kmeansAssignDistributed(e: DataFrame,
       centroids: DataFrame): DataFrame = {
-    graft.functions.TopKRows.register(e.sparkSession)
     e.crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("v"), col("cid"),
-        expr("round6(cosine_sim(v, c))").as("csim"))
+        sim6("v", "c").as("csim"))
       .groupBy("vec_id")
       .agg(expr("first(v)").as("v"), // constant within the group
-        element_at(expr("topk_rows(struct(csim, cid), 1)"), 1).as("best"))
+        element_at(TopKRows.of(struct("csim", "cid"), 1), 1).as("best"))
       .select(col("vec_id"), col("v"),
         col("best.cid").as("cid"), col("best.csim").as("sim"))
   }
@@ -407,14 +417,14 @@ object VectorOps {
     def assign(centroids: DataFrame) = kmeansAssign(e, centroids)
     val probe = e.filter(col("vec_id") === 1).select(col("v").as("p"))
     val topCells = cent.crossJoin(broadcast(probe))
-      .select(col("cid"), expr("round6(cosine_sim(c, p))").as("csim"))
+      .select(col("cid"), sim6("c", "p").as("csim"))
       .orderBy(desc("csim"), col("cid")).limit(Probes)
     assign(cent)
       .join(broadcast(topCells.select("cid")), Seq("cid"))
       .crossJoin(broadcast(probe))
       .filter(col("vec_id") =!= 1)
       .select(col("vec_id"), col("cid"),
-        expr("round6(cosine_sim(v, p))").as("sim"))
+        sim6("v", "p").as("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(TopK)
   }
@@ -439,13 +449,13 @@ object VectorOps {
     // non-oracle-text row_number argmax in the vector family
     val assigned = kmeansAssign(e, cent).select("vec_id", "v", "cid")
     val topCells = cent.crossJoin(broadcast(probe))
-      .select(col("cid"), expr("round6(cosine_sim(c, p))").as("csim"))
+      .select(col("cid"), sim6("c", "p").as("csim"))
       .orderBy(desc("csim"), col("cid")).limit(Probes)
     assigned.join(broadcast(topCells.select("cid")), Seq("cid"))
       .crossJoin(broadcast(probe))
       .filter(col("vec_id") =!= 1)
       .select(col("vec_id"), col("cid"),
-        expr("round6(cosine_sim(v, p))").as("sim"))
+        sim6("v", "p").as("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(TopK)
   }
@@ -563,9 +573,6 @@ object VectorOps {
     * shuffle on its own, where K ≈ √n keeps per-cell partitions balanced;
     * no hint needed in either regime. */
   private[graft] def knnJoinOver(e0: DataFrame, K: Int): DataFrame = {
-    val s = e0.sparkSession
-    CosineSimilarity.register(s)
-    graft.functions.TopKRows.register(s)
     val e = e0.localCheckpoint(eager = false) // feeds centroids+scan
     val cent = e.filter(col("vec_id") < K)
       .select(col("vec_id").cast("int").as("cid"), col("v").as("c"))
@@ -586,10 +593,10 @@ object VectorOps {
     // checkpoint holds exactly 2n rows at any K.
     val ranked = e.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("v"), col("cid"),
-        expr("round6(cosine_sim(v, c))").as("csim"))
+        sim6("v", "c").as("csim"))
       .groupBy(col("vec_id"))
       .agg(expr("first(v)").as("v"), // constant within the group
-        expr("topk_rows(struct(csim, cid), 2)").as("cells"))
+        TopKRows.of(struct("csim", "cid"), 2).as("cells"))
       .select(col("vec_id"), col("v"),
         posexplode(col("cells")).as(Seq("pos", "cell")))
       .select(col("vec_id"), col("v"), col("cell.cid").as("cid"),
@@ -602,10 +609,10 @@ object VectorOps {
     probes.join(members, Seq("cid"))
       .filter(col("a_id") =!= col("b_id"))
       .select(col("a_id"), struct(
-        expr("round6(cosine_sim(va, vb))").as("sim"),
+        sim6("va", "vb").as("sim"),
         col("b_id")).as("cand"))
       .groupBy(col("a_id"))
-      .agg(expr("topk_rows(cand, 3)").as("top"))
+      .agg(TopKRows.of(col("cand"), 3).as("top"))
       .select(col("a_id"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("a_id"), col("t.b_id").as("b_id"), col("t.sim").as("sim"),
         (col("pos") + 1).cast("int").as("rk"))
@@ -660,6 +667,14 @@ object VectorOps {
     val x = mix64((j.toLong << 32) | k.toLong)
     if (((x >>> 33) & 1L) == 0L) "+" else "-"
   }
+
+  /** The same signs as a (bands·planes) × dim ±1 matrix, the
+    * [[graft.functions.RpBandKeys]] argument. */
+  private[graft] def rpSignMatrix(bands: Int, planes: Int,
+      dim: Int): Array[Array[Double]] =
+    Array.tabulate(bands * planes, dim) {
+      (j, k0) => if (rpSign(j, k0 + 1) == "+") 1.0 else -1.0
+    }
   private val RpBands = 2
   private val V3Bands = 4 // v3's higher-recall config (more bands = more candidates)
   private val RpPlanesPerBand = 4
@@ -684,18 +699,17 @@ object VectorOps {
     * this is the variant that works on a cold 100 TB corpus in one pass,
     * with recall tuned by bands × bits. Measured on the fixture: ~6x
     * candidate reduction vs all-pairs at sf0.1. */
-  def rpLshNearDup: Q = (s, d) => rpBandedNearDup(s, d, RpBands, "rp_band_keys")
+  def rpLshNearDup: Q = (s, d) => rpBandedNearDup(s, d, RpBands)
 
   /** Shared RP-LSH banded near-dup: band keys via the fused
     * [[graft.functions.RpBandKeys]] expression — the textual bands·planes·dim
     * ±v[k] form exceeds Janino's 64 KB method limit and falls back to
     * interpreted eval; the fused expression is one codegen'd loop. The banded
     * table is materialized once so the self-join's two sides share the key
-    * computation. Each band config registers under its own function name so
-    * v3 and v6 never clobber each other's resolved expressions. */
+    * computation. */
   private[graft] def rpBandedNearDup(s: SparkSession, d: String, bands: Int,
-      fname: String, planes: Int = RpPlanesPerBand): DataFrame =
-    rpBandedNearDupOver(vecs(s, d), bands, fname, planes)
+      planes: Int = RpPlanesPerBand): DataFrame =
+    rpBandedNearDupOver(vecs(s, d), bands, planes)
 
   /** Core of the RP-LSH banded near-dup over any (vec_id, v) frame.
     * `forceShuffle` pins the self-join to sort-merge (`merge` hint) — the
@@ -705,15 +719,9 @@ object VectorOps {
     * ([[OperatingPoint.preferShuffleJoin]], BASELINE.md §skew:
     * broadcast 20.4s vs sort-merge 2.2-3.6s at 10x). */
   private[graft] def rpBandedNearDupOver(e: DataFrame, bands: Int,
-      fname: String, planes: Int, threshold: Double = 0.30,
+      planes: Int, threshold: Double = 0.30,
       dim: Int = Dim, forceShuffle: Boolean = false): DataFrame = {
-    val s = e.sparkSession
-    CosineSimilarity.register(s)
-    graft.functions.CosineSimBounded.register(s)
-    val signs = Array.tabulate(bands * planes, dim) {
-      (j, k0) => if (rpSign(j, k0 + 1) == "+") 1.0 else -1.0
-    }
-    graft.functions.RpBandKeys.register(s, signs, planes, fname)
+    val signs = rpSignMatrix(bands, planes, dim)
     // prune floor: the filter keeps round(sim, 6) >= threshold, so a pair
     // may be abandoned only when provably below threshold - 5e-7 (the
     // round-half-up boundary); 1e-6 leaves that boundary strictly inside
@@ -723,17 +731,15 @@ object VectorOps {
     // ONCE per vector pre-explode; the banded table is materialized once
     // so the self-join's two sides share the key computation
     val bk0 = e.select(col("vec_id"), col("v"),
-      expr("vec_sufsq(v)").as("sfx"),
-      posexplode(expr(s"$fname(v)")).as(Seq("b", "key")))
+      CosineSimBounded.sufSq(col("v")).as("sfx"),
+      posexplode(RpBandKeys.of(col("v"), signs, planes)).as(Seq("b", "key")))
       .localCheckpoint(eager = false)
     val bk = if (forceShuffle) bk0.hint("merge") else bk0
-    val sim = expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, " +
-      s"${threshold - 1e-6}D)")
     bk.as("a").join(bk.as("x"),
         col("a.b") === col("x.b") && col("a.key") === col("x.key") &&
           col("a.vec_id") < col("x.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("x.vec_id").as("b_id"),
-        call_function("round6", sim).as("sim"))
+        boundedSim6("a.v", "x.v", "a.sfx", "x.sfx", threshold).as("sim"))
       .filter(col("sim") >= threshold)
       .distinct()
   }
@@ -745,18 +751,11 @@ object VectorOps {
     * uniform-occupancy prediction, and nothing failed until a ×1000 run
     * ground for hours). */
   private[graft] def rpBandedCandidateCount(e: DataFrame, bands: Int,
-      planes: Int, dim: Int): Long = {
-    val s = e.sparkSession
-    val signs = Array.tabulate(bands * planes, dim) {
-      (j, k0) => if (rpSign(j, k0 + 1) == "+") 1.0 else -1.0
-    }
-    graft.functions.RpBandKeys.register(s, signs, planes,
-      s"rp_candcount_${bands}_$planes")
-    e.select(posexplode(expr(s"rp_candcount_${bands}_$planes(v)"))
-        .as(Seq("b", "key")))
+      planes: Int, dim: Int): Long =
+    e.select(posexplode(RpBandKeys.of(col("v"),
+        rpSignMatrix(bands, planes, dim), planes)).as(Seq("b", "key")))
       .groupBy("b", "key").count()
       .agg(sum(col("count") * (col("count") - 1) / 2)).head.getDouble(0).toLong
-  }
 
   /** The RP-LSH pair pipeline in DuckDB as a CTE chain ending in
     * `pairs(a_id, b_id, sim)` — shared by the v3/v6 and v8 oracles. */
@@ -796,7 +795,7 @@ object VectorOps {
     * ~2^-planes per band, so candidate pairs shrink exponentially in the
     * planes-per-band knob — at 100 TB you raise planes (16-32 bits) and
     * bands together to hold recall while keeping buckets sparse. */
-  def nearDupPairs: Q = (s, d) => rpBandedNearDup(s, d, V3Bands, "rp_band_keys_w")
+  def nearDupPairs: Q = (s, d) => rpBandedNearDup(s, d, V3Bands)
 
   val nearDupPairsOracle: String = rpBandedNearDupOracle(V3Bands)
 
@@ -843,22 +842,19 @@ object VectorOps {
     * Singletons keep themselves (centroid_sim = 1 by construction). */
   private[graft] def embedRetentionOver(e: DataFrame,
       comps: DataFrame): DataFrame = {
-    val s = e.sparkSession
-    CosineSimilarity.register(s)
-    graft.functions.TopKRows.register(s)
     val memb = comps.join(e, "vec_id")
     val mean = centroidMeans(memb.select(col("component").as("cid"), col("v")))
       .select(col("cid").as("component"), col("c").as("cv"))
     val scored = memb.join(mean, "component")
       .select(col("vec_id"), col("component"),
-        expr("round6(cosine_sim(v, cv))").as("centroid_sim"))
+        sim6("v", "cv").as("centroid_sim"))
       .localCheckpoint(eager = false) // feeds the keep rank AND the output
     val keepRow = scored
       .select(col("component"),
         struct((-col("centroid_sim")).as("ns"), col("vec_id").as("vid"))
           .as("cand"))
       .groupBy("component")
-      .agg(element_at(expr("topk_rows(cand, 1)"), 1).as("k"))
+      .agg(element_at(TopKRows.of(col("cand"), 1), 1).as("k"))
       .select(col("component"), col("k.vid").as("canonical"))
     scored.join(keepRow, "component")
       .select(col("vec_id"), col("component"), col("centroid_sim"),
@@ -937,8 +933,7 @@ object VectorOps {
       dim: Int = Dim): DataFrame = {
     val n = countEstimate.getOrElse(e.count())
     val planes = OperatingPoint.rpPlanesPerBand(n, dim)
-    rpBandedNearDupOver(e, bands, s"rp_band_keys_auto_${bands}_$planes",
-      planes, threshold, dim,
+    rpBandedNearDupOver(e, bands, planes, threshold, dim,
       forceShuffle = OperatingPoint.preferShuffleJoin(n, bands, dim))
   }
 
@@ -979,37 +974,28 @@ object VectorOps {
     * VectorGateSpec. Emitted sims are the exact
     * round6(cosine) — bit-identical to every other family's verify. */
   private[graft] def nearDupPairsHighSimOver(e: DataFrame, bands: Int,
-      planes: Int, maxHamming: Int, threshold: Double, dim: Int,
-      fname: String): DataFrame = {
-    val s = e.sparkSession
-    CosineSimilarity.register(s)
-    graft.functions.CosineSimBounded.register(s)
-    graft.functions.SketchHammingGate.register(s)
-    val bandSigns = Array.tabulate(bands * planes, dim) {
-      (j, k0) => if (rpSign(j, k0 + 1) == "+") 1.0 else -1.0
-    }
-    graft.functions.RpBandKeys.register(s, bandSigns, planes, fname)
-    graft.functions.RpSketch.register(s, sketchSignMatrix(dim), fname + "_sk")
+      planes: Int, maxHamming: Int, threshold: Double,
+      dim: Int): DataFrame = {
     // feeds the banded stream AND both gather sides
     val v = e.localCheckpoint(eager = false)
     val banded = v
-      .select(col("vec_id"), expr(s"${fname}_sk(v)").as("sk"),
-        posexplode(expr(s"$fname(v)")).as(Seq("b", "key")))
+      .select(col("vec_id"), RpSketch.of(col("v"), sketchSignMatrix(dim)).as("sk"),
+        posexplode(RpBandKeys.of(col("v"), rpSignMatrix(bands, planes, dim), planes))
+          .as(Seq("b", "key")))
       .select(col("vec_id"), col("sk")(0).as("s0"), col("sk")(1).as("s1"),
         col("b"), col("key"))
     val cand = banded.groupBy(col("b"), col("key"))
       .agg(collect_list(struct(col("vec_id"), col("s0"), col("s1"))).as("ms"))
-      .select(expr(s"sketch_gate_pairs(ms, $maxHamming)")
+      .select(SketchHammingGate.of(col("ms"), maxHamming)
         .as(Seq("a_id", "b_id")))
       .distinct()
     val va = v.select(col("vec_id").as("a_id"), col("v").as("va"),
-      expr("vec_sufsq(v)").as("sfa"))
+      CosineSimBounded.sufSq(col("v")).as("sfa"))
     val vb = v.select(col("vec_id").as("b_id"), col("v").as("vb"),
-      expr("vec_sufsq(v)").as("sfb"))
+      CosineSimBounded.sufSq(col("v")).as("sfb"))
     cand.join(va, Seq("a_id")).join(vb, Seq("b_id"))
       .select(col("a_id"), col("b_id"),
-        call_function("round6", expr(s"cosine_sim_bounded(va, vb, sfa, sfb, " +
-          s"${threshold - 1e-6}D)")).as("sim"))
+        boundedSim6("va", "vb", "sfa", "sfb", threshold).as("sim"))
       .filter(col("sim") >= threshold)
   }
 
@@ -1029,8 +1015,7 @@ object VectorOps {
     val planes = OperatingPoint.rpPlanesPerBand(n, dim)
     val bands = OperatingPoint.rpHighSimBands(n, dim, targetSim, targetRecall)
     nearDupPairsHighSimOver(e, bands, planes,
-      OperatingPoint.sketchMaxHamming(targetSim), threshold, dim,
-      s"rp_hs_${bands}_$planes")
+      OperatingPoint.sketchMaxHamming(targetSim), threshold, dim)
   }
 
   /** Oracle-gated pinned form (v12): the v6 blocking (2 bands × 4 planes)
@@ -1050,7 +1035,7 @@ object VectorOps {
     nearDupPairsHighSimOver(vecs(s, d), bands = RpBands,
       planes = RpPlanesPerBand,
       maxHamming = OperatingPoint.sketchMaxHamming(0.60),
-      threshold = 0.30, dim = Dim, fname = "rp_hs_pinned")
+      threshold = 0.30, dim = Dim)
 
   val sketchNearDupOracle: String = {
     val h = OperatingPoint.sketchMaxHamming(0.60)
@@ -1101,10 +1086,10 @@ object VectorOps {
       cent: DataFrame): DataFrame =
     e.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("v"), col("cid"),
-        expr("round6(cosine_sim(v, c))").as("csim"))
+        sim6("v", "c").as("csim"))
       .groupBy(col("vec_id"))
       .agg(expr("first(v)").as("v"),
-        expr("topk_rows(struct(csim, cid), 2)").as("cells"))
+        TopKRows.of(struct("csim", "cid"), 2).as("cells"))
       .select(col("vec_id"), col("v"), explode(col("cells")).as("cell"))
       .select(col("vec_id"), col("v"), col("cell.cid").as("cid"))
 
@@ -1137,22 +1122,16 @@ object VectorOps {
     * luck. */
   private[graft] def semDedupPairsOver(e0: DataFrame, k: Int, iters: Int,
       threshold: Double, modInit: Boolean = false): DataFrame = {
-    val s = e0.sparkSession
-    CosineSimilarity.register(s)
-    graft.functions.CosineSimBounded.register(s)
-    graft.functions.TopKRows.register(s)
     val e = e0.localCheckpoint(eager = false) // feeds Lloyd + membership
     val cent = kmeansCentroids(e, iters, k, modInit)
     val member = cellMembers(e, cent)
-      .select(col("vec_id"), col("v"), expr("vec_sufsq(v)").as("sfx"),
+      .select(col("vec_id"), col("v"), CosineSimBounded.sufSq(col("v")).as("sfx"),
         col("cid"))
       .localCheckpoint(eager = false) // both join sides share the assign
-    val sim = expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, " +
-      s"${threshold - 1e-6}D)")
     member.as("a").join(member.as("x"),
         col("a.cid") === col("x.cid") && col("a.vec_id") < col("x.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("x.vec_id").as("b_id"),
-        call_function("round6", sim).as("sim"))
+        boundedSim6("a.v", "x.v", "a.sfx", "x.sfx", threshold).as("sim"))
       .filter(col("sim") >= threshold)
       .distinct()
   }
@@ -1163,9 +1142,6 @@ object VectorOps {
     * [[rpBandedCandidateCount]]. */
   private[graft] def semDedupCandidateCount(e0: DataFrame, k: Int,
       iters: Int, modInit: Boolean = true, hier: Boolean = false): Long = {
-    val s = e0.sparkSession
-    CosineSimilarity.register(s)
-    graft.functions.TopKRows.register(s)
     val e = e0.localCheckpoint(eager = false)
     val members =
       if (hier) hierCellMembers(e, k, iters)
@@ -1379,9 +1355,6 @@ object VectorOps {
     * beyond-guard plan and HierCellsSpec's equality oracle. */
   private[graft] def hierCellMembersJoin(e: DataFrame, k: Int,
       iters: Int): DataFrame = {
-    val s = e.sparkSession
-    CosineSimilarity.register(s)
-    graft.functions.TopKRows.register(s)
     val k1 = math.max(2, math.ceil(math.sqrt(2.0 * k)).toInt)
     val kl = math.max(1, math.ceil(k.toDouble / k1).toInt)
     // phase A: supers over the corpus (mod-K1 partition-mean init)
@@ -1391,10 +1364,10 @@ object VectorOps {
     // phase B: home super per vector (one K1-rank pass)
     val homed = e.crossJoin(broadcast(sup))
       .select(col("vec_id"), col("v"), col("sup"),
-        expr("round6(cosine_sim(v, sc))").as("csim"))
+        sim6("v", "sc").as("csim"))
       .groupBy("vec_id")
       .agg(expr("first(v)").as("v"),
-        element_at(expr("topk_rows(struct(csim, sup), 1)"), 1).as("b"))
+        element_at(TopKRows.of(struct("csim", "sup"), 1), 1).as("b"))
       .select(col("vec_id"), col("v"), col("b.sup").as("sup"))
       .localCheckpoint(eager = false)
     // phase C: local Lloyd WITHIN each super, vectorized across supers —
@@ -1415,10 +1388,10 @@ object VectorOps {
     for (_ <- 1 to iters) {
       loc = localMeans(homed.join(broadcast(loc), Seq("sup"))
         .select(col("vec_id"), col("v"), col("sup"), col("lc"),
-          expr("round6(cosine_sim(v, lcv))").as("csim"))
+          sim6("v", "lcv").as("csim"))
         .groupBy("vec_id")
         .agg(expr("first(v)").as("v"), expr("first(sup)").as("sup"),
-          element_at(expr("topk_rows(struct(csim, lc), 1)"), 1).as("b"))
+          element_at(TopKRows.of(struct("csim", "lc"), 1), 1).as("b"))
         .select(col("sup"), col("b.lc").as("lc"), col("v")))
         .localCheckpoint(eager = false)
     }
@@ -1426,18 +1399,18 @@ object VectorOps {
     // composite cells over the probed supers' locals (cid = sup·Kl + lc)
     val topSup = e.crossJoin(broadcast(sup))
       .select(col("vec_id"), col("v"), col("sup"),
-        expr("round6(cosine_sim(v, sc))").as("csim"))
+        sim6("v", "sc").as("csim"))
       .groupBy("vec_id")
       .agg(expr("first(v)").as("v"),
-        expr(s"topk_rows(struct(csim, sup), $SuperProbes)").as("ss"))
+        TopKRows.of(struct("csim", "sup"), SuperProbes).as("ss"))
       .select(col("vec_id"), col("v"), explode(col("ss.sup")).as("sup"))
     topSup.join(broadcast(loc), Seq("sup"))
       .select(col("vec_id"), col("v"),
         (col("sup") * kl + col("lc")).as("cid"),
-        expr("round6(cosine_sim(v, lcv))").as("csim"))
+        sim6("v", "lcv").as("csim"))
       .groupBy("vec_id")
       .agg(expr("first(v)").as("v"),
-        expr("topk_rows(struct(csim, cid), 2)").as("cells"))
+        TopKRows.of(struct("csim", "cid"), 2).as("cells"))
       .select(col("vec_id"), col("v"), explode(col("cells")).as("cell"))
       .select(col("vec_id"), col("v"), col("cell.cid").as("cid"))
   }
@@ -1446,21 +1419,15 @@ object VectorOps {
     * co-membership join + exact verify, cells from [[hierCellMembers]]. */
   private[graft] def semDedupPairsHierOver(e0: DataFrame, k: Int,
       iters: Int, threshold: Double): DataFrame = {
-    val s = e0.sparkSession
-    CosineSimilarity.register(s)
-    graft.functions.CosineSimBounded.register(s)
-    graft.functions.TopKRows.register(s)
     val e = e0.localCheckpoint(eager = false)
     val member = hierCellMembers(e, k, iters)
-      .select(col("vec_id"), col("v"), expr("vec_sufsq(v)").as("sfx"),
+      .select(col("vec_id"), col("v"), CosineSimBounded.sufSq(col("v")).as("sfx"),
         col("cid"))
       .localCheckpoint(eager = false)
-    val sim = expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, " +
-      s"${threshold - 1e-6}D)")
     member.as("a").join(member.as("x"),
         col("a.cid") === col("x.cid") && col("a.vec_id") < col("x.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("x.vec_id").as("b_id"),
-        call_function("round6", sim).as("sim"))
+        boundedSim6("a.v", "x.v", "a.sfx", "x.sfx", threshold).as("sim"))
       .filter(col("sim") >= threshold)
       .distinct()
   }
@@ -1576,7 +1543,6 @@ object VectorOps {
     * against one scan, no corpus shuffle beyond the partitioned write. */
   def writeIvfIndex(e0: DataFrame, K: Int, path: String): Unit =
     MaintenanceLock.withLock(e0.sparkSession, path) {
-      CosineSimilarity.register(e0.sparkSession)
       val e = e0.localCheckpoint(eager = false) // feeds centroids + assignment
       val cent = e.filter(col("vec_id") < K)
         .select(col("vec_id").cast("int").as("cid"), col("v").as("c"))
@@ -1595,7 +1561,7 @@ object VectorOps {
       topN: Int): DataFrame = {
     val scored = e.crossJoin(broadcast(cent))
       .select(col(key), col("v"), col("cid"),
-        expr("round6(cosine_sim(v, c))").as("csim"))
+        sim6("v", "c").as("csim"))
     if (topN == 1)
       // the assignment case (index build/append/retrain — the bulk paths)
       // as a PARTIAL aggregate: max(struct(csim, -cid, v)) is the same
@@ -1613,11 +1579,10 @@ object VectorOps {
       // this replaces planned as WindowGroupLimitExec, whose map-side pass
       // sorts the whole n·K expansion per task (see knnJoinOver). Ordering
       // (csim DESC, cid ASC) is TopKRows' field convention.
-      graft.functions.TopKRows.register(e.sparkSession)
       scored
         .groupBy(col(key))
         .agg(expr("first(v)").as("v"), // constant within the group
-          expr(s"topk_rows(struct(csim, cid), $topN)").as("cells"))
+          TopKRows.of(struct("csim", "cid"), topN).as("cells"))
         .select(col(key), col("v"), explode(col("cells.cid")).as("cid"))
     }
   }
@@ -1638,7 +1603,6 @@ object VectorOps {
   def appendToIvfIndex(batch: DataFrame, path: String): Unit =
     MaintenanceLock.withLock(batch.sparkSession, path) {
       val s = batch.sparkSession
-      CosineSimilarity.register(s)
       val cent = s.read.parquet(s"$path/centroids")
         .select(col("cid"), col("c"))
       val assigned = assignToCells(batch, cent)
@@ -1650,17 +1614,14 @@ object VectorOps {
       val rows =
         if (!cols.contains("code")) assigned
         else {
-          Sq8.register(s)
           val q8 = assigned.select(col("vec_id"), col("v"),
-            expr("sq8_encode(v)").as("code"), col("cid"))
+            Sq8.encode(col("v")).as("code"), col("cid"))
           if (!cols.contains("code_pq")) q8.drop("v")
           else {
-            graft.functions.Pq.register(s)
             val meta = s.read.parquet(s"$path/pq_codebook").head()
             q8.select(col("vec_id"),
-              call_function("pq_encode", col("v"),
-                typedLit(meta.getSeq[Double](2).toArray),
-                lit(meta.getInt(0)), lit(meta.getInt(1))).as("code_pq"),
+              Pq.encode(col("v"), typedLit(meta.getSeq[Double](2).toArray),
+                meta.getInt(0), meta.getInt(1)).as("code_pq"),
               col("code"), col("cid"))
           }
         }
@@ -1739,10 +1700,8 @@ object VectorOps {
   def retrainIvfIndex(s: SparkSession, path: String, iters: Int = 2): Unit =
     MaintenanceLock.withLock(s, path) {
       import s.implicits._
-      CosineSimilarity.register(s)
       val idx = s.read.parquet(s"$path/index")
       val quantized = idx.columns.contains("code")
-      if (quantized) Sq8.register(s)
       // eager checkpoints: both inputs are re-read AFTER their directories
       // are overwritten below — the lineage must not reach back to disk.
       // `payload` keeps every stored column verbatim (SQ8 code, PQ code —
@@ -1750,7 +1709,7 @@ object VectorOps {
       // recomputes ONLY the cid and can never drop a format column
       val payload = idx.drop("cid").localCheckpoint(eager = true)
       val e = (if (quantized)
-          payload.select(col("vec_id"), expr("sq8_decode(code)").as("v"))
+          payload.select(col("vec_id"), Sq8.decode(col("code")).as("v"))
         else payload.select(col("vec_id"), col("v")))
       var cent = s.read.parquet(s"$path/centroids").select(col("cid"), col("c"))
         .localCheckpoint(eager = true)
@@ -1785,11 +1744,10 @@ object VectorOps {
   /** Mean assignment cosine over the index — Lloyd's objective, exposed so
     * retrain improvement is a measured assertion, not an eyeball. */
   def ivfObjective(s: SparkSession, path: String): Double = {
-    CosineSimilarity.register(s)
     val idx = s.read.parquet(s"$path/index")
     val e =
-      if (idx.columns.contains("code")) { Sq8.register(s)
-        idx.select(col("vec_id"), expr("sq8_decode(code)").as("v")) }
+      if (idx.columns.contains("code"))
+        idx.select(col("vec_id"), Sq8.decode(col("code")).as("v"))
       else idx.select(col("vec_id"), col("v"))
     val cent = s.read.parquet(s"$path/centroids").select(col("cid"), col("c"))
     kmeansAssign(e, cent).agg(avg("sim")).collect()(0).getDouble(0)
@@ -1797,13 +1755,12 @@ object VectorOps {
 
   def ivfProbe(s: SparkSession, path: String, probe: Seq[Double],
       probes: Int = 2, k: Int = 10): DataFrame = {
-    CosineSimilarity.register(s)
     val topCells = topCellsFor(s, path, probe, probes)
     s.read.parquet(s"$path/index")
       .filter(col("cid").isin(topCells: _*))
       .select(col("vec_id"), col("cid"),
-        call_function("round6", call_function("cosine_sim", col("v"),
-          typedLit(probe.toArray))).as("sim"))
+        Round6.of(CosineSimilarity.of(col("v"), typedLit(probe.toArray)))
+          .as("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
   }
@@ -1844,15 +1801,12 @@ object VectorOps {
     * pinned in ScaleOpsSpec. */
   def writeIvfIndexQ8(e0: DataFrame, K: Int, path: String): Unit =
     MaintenanceLock.withLock(e0.sparkSession, path) {
-      val s = e0.sparkSession
-      CosineSimilarity.register(s)
-      Sq8.register(s)
       val e = e0.localCheckpoint(eager = false)
       val cent = e.filter(col("vec_id") < K)
         .select(col("vec_id").cast("int").as("cid"), col("v").as("c"))
       cent.write.mode("overwrite").parquet(s"$path/centroids")
       assignToCells(e, cent)
-        .select(col("vec_id"), expr("sq8_encode(v)").as("code"), col("cid"))
+        .select(col("vec_id"), Sq8.encode(col("v")).as("code"), col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(s"$path/index")
     }
 
@@ -1862,14 +1816,12 @@ object VectorOps {
     * so no dequantization happens anywhere in the plan. */
   def ivfProbeQ8(s: SparkSession, path: String, probe: Seq[Double],
       probes: Int = 2, k: Int = 10): DataFrame = {
-    Sq8.register(s)
-    graft.functions.Round6.register(s)
     val topCells = topCellsFor(s, path, probe, probes)
     s.read.parquet(s"$path/index")
       .filter(col("cid").isin(topCells: _*))
       .select(col("vec_id"), col("cid"),
-        call_function("round6", call_function("cosine_sim_q8", col("code"),
-          typedLit(probe.toArray))).as("sim"))
+        Round6.of(Sq8.cosine(col("code"), typedLit(probe.toArray)))
+          .as("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
   }
@@ -1888,7 +1840,6 @@ object VectorOps {
   def ivfProbeBatch(queries: DataFrame, path: String,
       probes: Int = 2, k: Int = 10): DataFrame = {
     val s = queries.sparkSession
-    CosineSimilarity.register(s)
     val cent = s.read.parquet(s"$path/centroids")
     val qCells = rankCells(queries.select(col("qid"), col("v")),
         cent, "qid", topN = probes)
@@ -1904,21 +1855,19 @@ object VectorOps {
     // (SQ8 bytes) instead of `v`, scored by the fused byte-loop — the
     // batch serving path must not force an 8x-bigger full-precision index
     val score =
-      if (idx.columns.contains("code")) { Sq8.register(s)
-        expr("cosine_sim_q8(code, qv)") }
-      else expr("cosine_sim(qv, v)")
+      if (idx.columns.contains("code")) Sq8.cosine(col("code"), col("qv"))
+      else CosineSimilarity.of(col("qv"), col("v"))
     // per-query top-k via the bounded heap aggregate (round 14): the
     // row_number window planned as WindowGroupLimitExec, whose map-side
     // pass sorts each task's whole probe×candidate stream (see
     // knnJoinOver); the heap ships ≤ k rows per query per task instead.
     // Ordering (sim DESC, vec_id ASC) is TopKRows' field convention; cid
     // rides behind the unique vec_id tie-break, so it never participates.
-    graft.functions.TopKRows.register(s)
     qCells.join(idx, Seq("cid"))
       .select(col("qid"), struct(
-        call_function("round6", score).as("sim"), col("vec_id"), col("cid")).as("cand"))
+        Round6.of(score).as("sim"), col("vec_id"), col("cid")).as("cand"))
       .groupBy(col("qid"))
-      .agg(expr(s"topk_rows(cand, $k)").as("top"))
+      .agg(TopKRows.of(col("cand"), k).as("top"))
       .select(col("qid"), explode(col("top")).as("t"))
       .select(col("qid"), col("t.vec_id").as("vec_id"),
         col("t.cid").as("cid"), col("t.sim").as("sim"))
@@ -2028,7 +1977,6 @@ object VectorOps {
     MaintenanceLock.withLock(e0.sparkSession, path) {
       val s = e0.sparkSession
       import s.implicits._
-      CosineSimilarity.register(s); Sq8.register(s); graft.functions.Pq.register(s)
       val e = e0.localCheckpoint(eager = false)
       // kc <= 0 → corpus-derived (the AUTO convention): codebook size is a
       // scale knob like every other in this library, not a pinned constant
@@ -2042,9 +1990,8 @@ object VectorOps {
       cent.write.mode("overwrite").parquet(s"$path/centroids")
       assignToCells(e, cent)
         .select(col("vec_id"),
-          call_function("pq_encode", col("v"), typedLit(cb),
-            lit(m), lit(kcUse)).as("code_pq"),
-          expr("sq8_encode(v)").as("code"),
+          Pq.encode(col("v"), typedLit(cb), m, kcUse).as("code_pq"),
+          Sq8.encode(col("v")).as("code"),
           col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(s"$path/index")
     }
@@ -2057,7 +2004,6 @@ object VectorOps {
     * probe in this file. No full-precision float math touches the scan. */
   def ivfProbePq(s: SparkSession, path: String, probe: Seq[Double],
       probes: Int = 2, k: Int = 10, overfetch: Int = 5): DataFrame = {
-    CosineSimilarity.register(s); Sq8.register(s); graft.functions.Pq.register(s)
     val meta = s.read.parquet(s"$path/pq_codebook").head()
     val m = meta.getInt(0); val kc = meta.getInt(1)
     val cb = meta.getSeq[Double](2).toArray
@@ -2086,13 +2032,13 @@ object VectorOps {
     s.read.parquet(s"$path/index")
       .filter(col("cid").isin(topCells: _*))
       .select(col("vec_id"), col("cid"), col("code"),
-        call_function("pq_adc_sim", col("code_pq"), typedLit(dotLut),
-          typedLit(normLut), lit(kc)).as("adc"))
+        Pq.adcSim(col("code_pq"), typedLit(dotLut), typedLit(normLut), kc)
+          .as("adc"))
       .orderBy(desc("adc"), col("vec_id"))
       .limit(k * overfetch)
       .select(col("vec_id"), col("cid"),
-        call_function("round6", call_function("cosine_sim_q8", col("code"),
-          typedLit(probe.toArray))).as("sim"))
+        Round6.of(Sq8.cosine(col("code"), typedLit(probe.toArray)))
+          .as("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
   }
@@ -2105,14 +2051,12 @@ object VectorOps {
     * (code_i = floor(v_i/scale*127 + 0.5), the Java Math.round contract), so
     * the quantizer itself — not just its recall — is oracle-checked. */
   def sq8TopK: Q = (s, d) => {
-    Sq8.register(s)
-    CosineSimilarity.register(s)
     val e = vecs(s, d)
     val probe = e.filter(col("vec_id") === 2).select(col("v").as("p"))
     e.crossJoin(broadcast(probe))
       .filter(col("vec_id") =!= 2)
       .select(col("vec_id"),
-        expr("round6(cosine_sim_q8(sq8_encode(v), p))").as("sim"))
+        Round6.of(Sq8.cosine(Sq8.encode(col("v")), col("p"))).as("sim"))
       .orderBy(desc("sim"), col("vec_id"))
       .limit(10)
   }

@@ -39,7 +39,8 @@ object SqlValidator {
     * a top-level one. */
   def validate(spark: SparkSession, sql: String,
       allowedRelations: Set[String],
-      extraAllowedFunctions: Set[String] = Set("cosine_sim")): Either[String, Validated] = {
+      extraAllowedFunctions: Set[String] = Set(GraftExtensions.CosineSim))
+      : Either[String, Validated] = {
     val plan =
       try spark.sessionState.sqlParser.parsePlan(sql)
       catch { case e: Exception =>

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.{CosineSimBounded, CosineSimilarity, Md5Prefix,
+  MinHashSignatures, Round6, ShingleHashes}
 
 /** Regression gate for the round-17 codegen-fallback find: a companion
   * method named `eval` gets NO static forwarder on the expression class
@@ -20,21 +22,13 @@ class CodegenCompileSpec extends SparkSpec {
   /** (doc_id, text, v) rows; `text` and `v` are nullable columns. Built
     * from an RDD, not a local Seq: ConvertToLocalRelation would evaluate a
     * projection over a LocalRelation interpreted, with no codegen at all. */
-  private def fixture: DataFrame = {
-    graft.functions.ShingleHashes.register(spark)
-    graft.functions.Md5Prefix.register(spark)
-    graft.functions.Round6.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.CosineSimBounded.register(spark)
-    graft.functions.MinHashSignatures.register(spark,
-      Seq(3L, 5L), Seq(7L, 11L), 4294967311L)
+  private def fixture: DataFrame =
     spark.sparkContext.parallelize(Seq(
       (1L, "the quick brown fox jumps over the lazy dog",
         Seq(0.1, 0.2, 0.3, 0.4)),
       (2L, "a b  c", Seq(0.5, 0.0, -0.2, 0.9)),
       (3L, "", Seq(0.0, 0.0, 0.0, 0.0))
     ), 1).toDF("doc_id", "text", "v")
-  }
 
   /** Drives every custom expression over `df` in one codegen-only stage
     * and spot-checks one value each so the expressions genuinely ran. */
@@ -42,15 +36,17 @@ class CodegenCompileSpec extends SparkSpec {
     val df = df0.withColumn("words", split(col("text"), " "))
     val out = withCodegenOnly {
       df.select(col("doc_id"),
-          expr("shingle_hashes(words)").as("sh"),
-          expr("gram_hashes(words, 2)").as("gh"),
-          expr("gram_strings(words, 2)").as("gs"),
-          expr("md5_prefix(text, 12)").as("mp"),
-          expr("round6(cast(size(words) as double) / 7.0)").as("r6"),
-          expr("cosine_sim(v, v)").as("cs"),
-          expr("cosine_sim_bounded(v, v, vec_sufsq(v), vec_sufsq(v), 0.5D)")
-            .as("csb"),
-          expr("minhash_sigs(shingle_hashes(words))").as("mh"),
+          ShingleHashes.shingles(col("words")).as("sh"),
+          ShingleHashes.grams(col("words"), 2).as("gh"),
+          ShingleHashes.gramStrings(col("words"), 2).as("gs"),
+          Md5Prefix.of(col("text"), 12).as("mp"),
+          Round6.of(expr("cast(size(words) as double) / 7.0")).as("r6"),
+          CosineSimilarity.of(col("v"), col("v")).as("cs"),
+          CosineSimBounded.of(col("v"), col("v"),
+            CosineSimBounded.sufSq(col("v")), CosineSimBounded.sufSq(col("v")),
+            0.5).as("csb"),
+          MinHashSignatures.of(ShingleHashes.shingles(col("words")),
+            Seq(3L, 5L), Seq(7L, 11L), 4294967311L).as("mh"),
           element_at(graft.functions.TopCells.top(col("v"), 1,
             Array((0, Array(0.1, 0.2, 0.3, 0.4)),
               (1, Array(-0.5, 0.1, 0.0, 0.2)))), 1).as("tc"),

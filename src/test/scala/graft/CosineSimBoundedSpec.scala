@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{CosineSimBounded, CosineSimilarity}
+import graft.functions.{CosineSimBounded, CosineSimilarity, Round6, RpBandKeys}
 import graft.operators.VectorOps
 
 /** Gates for the early-exit candidate verify (round 15): the load-bearing
@@ -13,11 +13,12 @@ import graft.operators.VectorOps
 class CosineSimBoundedSpec extends SparkSpec {
   import spark.implicits._
 
-  private def frame(vs: (Long, Seq[Double])*) = {
-    CosineSimilarity.register(spark)
-    CosineSimBounded.register(spark)
-    vs.toDF("id", "v").withColumn("sfx", expr("vec_sufsq(v)"))
-  }
+  private def frame(vs: (Long, Seq[Double])*) =
+    vs.toDF("id", "v").withColumn("sfx", CosineSimBounded.sufSq(col("v")))
+
+  /** `cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, pruneBelow)`. */
+  private def boundedSim(pruneBelow: Double) = CosineSimBounded.of(col("a.v"),
+    col("x.v"), col("a.sfx"), col("x.sfx"), pruneBelow)
 
   /** Deterministic pseudo-random unit-ish vector. */
   private def vec(seed: Int, dim: Int): Seq[Double] =
@@ -58,10 +59,10 @@ class CosineSimBoundedSpec extends SparkSpec {
     val joined = df.as("a").crossJoin(df.as("x"))
       .filter(col("a.id") < col("x.id"))
     val exact = joined.select(col("a.id"), col("x.id"),
-        expr("cosine_sim(a.v, x.v)").as("s"))
+        CosineSimilarity.of(col("a.v"), col("x.v")).as("s"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val bounded = joined.select(col("a.id"), col("x.id"),
-        expr("cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, 0.299999D)").as("s"))
+        boundedSim(0.299999).as("s"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(exact.keySet == bounded.keySet)
     var prunedCount = 0
@@ -86,7 +87,7 @@ class CosineSimBoundedSpec extends SparkSpec {
     val z = Seq.fill(384)(0.0)
     val df = frame((1L, z), (2L, vec(2, 384)))
     val out = df.as("a").crossJoin(df.as("x")).filter(col("a.id") < col("x.id"))
-      .select(expr("cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, 0.3D)"))
+      .select(boundedSim(0.3))
       .head.getDouble(0)
     assert(out == 0.0)
   }
@@ -102,16 +103,16 @@ class CosineSimBoundedSpec extends SparkSpec {
     val e = frame(base: _*).select(col("id").as("vec_id"), col("v"))
     def pairs(df: DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // also registers the rp_gate_ab_7 band-key function the reference uses
     val withExit = pairs(VectorOps.rpBandedNearDupOver(e, bands = 4,
-      "rp_gate_ab_7", planes = 7, dim = 384))
+      planes = 7, dim = 384))
     val bk = e.select(col("vec_id"), col("v"),
-      posexplode(expr("rp_gate_ab_7(v)")).as(Seq("b", "key")))
+      posexplode(RpBandKeys.of(col("v"), VectorOps.rpSignMatrix(4, 7, 384), 7))
+        .as(Seq("b", "key")))
     val fullDot = pairs(bk.as("a").join(bk.as("x"),
         col("a.b") === col("x.b") && col("a.key") === col("x.key") &&
           col("a.vec_id") < col("x.vec_id"))
       .select(col("a.vec_id"), col("x.vec_id"),
-        expr("round6(cosine_sim(a.v, x.v))").as("sim"))
+        Round6.of(CosineSimilarity.of(col("a.v"), col("x.v"))).as("sim"))
       .filter(col("sim") >= 0.30)
       .distinct())
     assert(withExit == fullDot)

@@ -6,10 +6,9 @@ import graft.functions.CosineSimilarity
 class CosineSimilaritySpec extends SparkSpec {
 
   private def simOf(a: Seq[Double], b: Seq[Double]): Double = {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     Seq((a, b)).toDF("a", "b")
-      .select(expr("cosine_sim(a, b)").as("s"))
+      .select(CosineSimilarity.of(col("a"), col("b")).as("s"))
       .collect()(0).getDouble(0)
   }
 
@@ -30,31 +29,30 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("float arrays widen to double (embeddings fixture)") {
-    CosineSimilarity.register(spark)
     val e = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val self = e.select(expr("cosine_sim(embedding, embedding)").as("s"))
+    val self = e.select(
+        CosineSimilarity.of(col("embedding"), col("embedding")).as("s"))
       .agg(min("s").as("lo"), max("s").as("hi")).collect()(0)
     assert(self.getDouble(0) > 1.0 - 1e-9 && self.getDouble(1) < 1.0 + 1e-9)
   }
 
   test("bounded in [-1, 1] across random pairs (property)") {
-    CosineSimilarity.register(spark)
     val e = Tables.load(spark, sf, "embeddings").limit(50)
       .select(col("vec_id").as("i"), col("embedding").as("a"))
     val f = Tables.load(spark, sf, "embeddings").limit(50)
       .select(col("vec_id").as("j"), col("embedding").as("b"))
     val bad = e.crossJoin(f)
-      .select(expr("cosine_sim(a, b)").as("s"))
+      .select(CosineSimilarity.of(col("a"), col("b")).as("s"))
       .filter(col("s") > 1.0 + 1e-9 || col("s") < -1.0 - 1e-9)
       .count()
     assert(bad == 0)
   }
 
   test("interpreted eval matches codegen path") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))).toDF("a", "b")
+    // the SQL name resolves through the session's GraftExtensions
     val viaSql = df.select(expr("cosine_sim(a, b)")).collect()(0).getDouble(0)
     val interp = CosineSimilarity(
       org.apache.spark.sql.catalyst.expressions.Literal(null),

@@ -3,6 +3,8 @@ package graft
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.storage.StorageLevel
+
 import graft.lifecycle.{EngineSession, ExecutorApi}
 
 /** Real-HTTP exercise of the serving surface: every request goes through a
@@ -420,6 +422,24 @@ class ExecutorApiSpec extends SparkSpec {
         """"sql":"SELECT cosine_sim(array(1d, 0d), array(1d, 0d)) AS s FROM df LIMIT 1"}"""))
       assert(ec == 200 && res.contains("\"data\":[{\"s\":1.0}]"), res)
     } finally api.stop()
+  }
+
+  test("stop() releases every uploaded table: no cached plan, no binding") {
+    val es = new EngineSession(spark)
+    val api = new ExecutorApi(es)
+    val port = api.start()
+    val df = try {
+      val (uc, up) = call(port, "/upload_dataset",
+        Some(s"""{"df_id":"stop_t","path":"$sf/region.parquet"}"""))
+      assert(uc == 200, up)
+      val d = es.current("stop_t").get
+      assert(d.storageLevel != StorageLevel.NONE, "upload did not cache")
+      d
+    } finally api.stop()
+    assert(df.storageLevel == StorageLevel.NONE,
+      "the uploaded table is still cached after stop()")
+    assert(!es.names.contains("stop_t"))
+    assert(!spark.catalog.tableExists("stop_t"))
   }
 
   test("LRU eviction drops the bound temp view; .json document upload parses") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.{CosineSimBounded, Round6}
 import graft.operators.VectorOps
 
 /** Equality gate for the fused two-level membership
@@ -58,13 +59,14 @@ class HierCellsSpec extends SparkSpec {
       .select("a_id", "b_id", "sim")
     // replay with the composed membership via the guarded seam
     val member = VectorOps.hierCellMembersJoin(e, 37, 2)
-      .select(col("vec_id"), col("v"), expr("vec_sufsq(v)").as("sfx"),
+      .select(col("vec_id"), col("v"), CosineSimBounded.sufSq(col("v")).as("sfx"),
         col("cid")).localCheckpoint(eager = false)
-    val sim = expr(s"cosine_sim_bounded(a.v, x.v, a.sfx, x.sfx, ${0.30 - 1e-6}D)")
+    val sim = CosineSimBounded.of(col("a.v"), col("x.v"), col("a.sfx"),
+      col("x.sfx"), 0.30 - 1e-6)
     val composed = member.as("a").join(member.as("x"),
         col("a.cid") === col("x.cid") && col("a.vec_id") < col("x.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("x.vec_id").as("b_id"),
-        call_function("round6", sim).as("sim"))
+        Round6.of(sim).as("sim"))
       .filter(col("sim") >= 0.30).distinct()
     assert(pairs.exceptAll(composed).count() == 0 &&
       composed.exceptAll(pairs).count() == 0)

@@ -162,7 +162,6 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("allow-listed custom function cosine_sim passes validation") {
-    graft.functions.CosineSimilarity.register(spark)
     val v = SqlValidator.validate(spark,
       "SELECT cosine_sim(array(1.0d), array(1.0d))", Set.empty)
     assert(v.isRight)

@@ -206,10 +206,10 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("features feed VectorOps-compatible embedding column") {
-    graft.functions.CosineSimilarity.register(spark)
     val f = Multimodal.featureFrame(spark, sf).limit(10)
       .select(col("media_id"), col("embedding"))
-    val self = f.select(expr("cosine_sim(embedding, embedding)").as("s"))
+    val self = f.select(graft.functions.CosineSimilarity.of(col("embedding"),
+        col("embedding")).as("s"))
       .agg(min("s")).collect()(0).getDouble(0)
     assert(self > 1.0 - 1e-6)
   }

@@ -54,18 +54,13 @@ object OccupancyGate {
   /** Bucket stats of the v-family AUTO blocking over a (vec_id, v) frame
     * at an explicit plane count (planes ≤ 0 → derive from n and dim). */
   def stats(e: DataFrame, bands: Int, planesIn: Int = 0): Stats = {
-    val s = e.sparkSession
     val n = e.count()
     val dim = e.select(size(col("v"))).head.getInt(0)
     val planes =
       if (planesIn > 0) planesIn
       else operators.OperatingPoint.rpPlanesPerBand(n, dim)
-    val signs = Array.tabulate(bands * planes, dim) { (j, k0) =>
-      if (((operators.VectorOps.mix64((j.toLong << 32) | (k0 + 1).toLong)
-        >>> 33) & 1L) == 0L) 1.0 else -1.0
-    }
-    functions.RpBandKeys.register(s, signs, planes, s"occ_gate_${bands}_$planes")
-    val st = e.select(posexplode(expr(s"occ_gate_${bands}_$planes(v)"))
+    val signs = operators.VectorOps.rpSignMatrix(bands, planes, dim)
+    val st = e.select(posexplode(functions.RpBandKeys.of(col("v"), signs, planes))
         .as(Seq("b", "key")))
       .groupBy("b", "key").count()
       .agg(count(lit(1)).as("buckets"), max("count").as("maxocc"),

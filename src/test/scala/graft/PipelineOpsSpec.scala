@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.{CdcBoundaries, MinGramHash, RepetitionStats,
+  RollingGramHits, SpanGramHits}
 import graft.multimodal.Multimodal
 import graft.operators.{DedupOps, Relational, TextOps, VectorOps}
 
@@ -259,9 +261,8 @@ class PipelineOpsSpec extends SparkSpec {
       (3L, ("lorem ipsum dolor sit amet " * 15) + boiler),
       (4L, "héllo wörld ünïcode çhars — " * 12)   // multi-byte fallback path
     ).toDF("doc_id", "text")
-    graft.functions.SpanGramHits.register(spark, 50)
     val viaExpr = docs.select(col("doc_id"),
-        explode(expr("span_gram_hits(text)")).as("x"))
+        explode(SpanGramHits.of(col("text"), 50)).as("x"))
       .select(col("doc_id"), col("x.off"), col("x.gh"))
     val viaSql = docs.select(col("doc_id"),
         explode(expr(
@@ -330,9 +331,9 @@ class PipelineOpsSpec extends SparkSpec {
     val docs = (1L to 6L).map(id => (id,
       (0 until 400).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString)) :+
       (7L, "tiny") :+ (8L, "ünïcode çhars rolled over the char päth " * 12)
-    graft.functions.RollingGramHits.register(spark, 13, 2)
     val got = docs.toDF("doc_id", "text")
-      .select(col("doc_id"), explode(expr("rolling_gram_hits(text)")).as("x"))
+      .select(col("doc_id"),
+        explode(RollingGramHits.of(col("text"), 13, 2)).as("x"))
       .select(col("doc_id"), col("x.off"), col("x.gh")).collect()
       .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2))))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -362,10 +363,10 @@ class PipelineOpsSpec extends SparkSpec {
     // selection rate: 1-in-16 content-defined, so the selected fraction
     // over the corpus sits near 1/16 (loose 2x bounds)
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr, explode}
+    import org.apache.spark.sql.functions.{col, explode}
     val docs = Tables.load(spark, sf, "documents")
-    graft.functions.RollingGramHits.register(spark, 50, 4)
-    val nSel = docs.select(explode(expr("rolling_gram_hits(text)")))
+    val rolling = RollingGramHits.of(col("text"), 50, 4)
+    val nSel = docs.select(explode(rolling))
       .count().toDouble
     val nTot = docs.selectExpr("greatest(length(text) - 49, 1) AS n")
       .agg(org.apache.spark.sql.functions.sum("n")).collect()(0).getLong(0)
@@ -378,7 +379,7 @@ class PipelineOpsSpec extends SparkSpec {
     val pair = Seq((1L, s"prefix one $span suffix"),
       (2L, s"präfix zwölf ün $span another")).toDF("doc_id", "text")
     val shared = pair
-      .select(col("doc_id"), explode(expr("rolling_gram_hits(text)")).as("x"))
+      .select(col("doc_id"), explode(rolling).as("x"))
       .groupBy("x.gh").count().filter(col("count") >= 2).count()
     assert(shared >= 1, "ascii and unicode paths disagree on a shared span")
   }
@@ -488,9 +489,8 @@ class PipelineOpsSpec extends SparkSpec {
       (2L, ("the quick brown fox jumps over it " * 40)),
       (3L, "héllo wörld ünïcode çhars everywhere " * 30)  // multi-byte path
     ).toDF("doc_id", "text")
-    graft.functions.CdcBoundaries.register(spark, 16, name = "cdc_t")
     val viaExpr = docs.select(col("doc_id"),
-        explode(expr("cdc_t(text)")).as("i"))
+        explode(CdcBoundaries.of(col("text"), 16)).as("i"))
     val viaSql = docs.select(col("doc_id"), explode(expr(
       """filter(transform(sequence(16, greatest(length(text), 16)),
         | i -> CASE WHEN i <= length(text) AND
@@ -600,7 +600,6 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("t4 fused min-gram hash equals the SQL HOF form at every row") {
     import spark.implicits._
-    graft.functions.MinGramHash.register(spark, 8, "mg8_t")
     // fixture rows exercise the clamp (short + empty), non-ASCII, and an
     // ASTRAL char (surrogate pair: Spark windows by code points, so the
     // fused fallback must too — UTF-16 indexing would shift every window
@@ -609,7 +608,7 @@ class PipelineOpsSpec extends SparkSpec {
       .as[String].take(50).toSeq ++ Seq("", "ab", "héllo wörld répeat",
         "emoji 😀 in the middle of window text")
     val out = docs.toDF("text").select(
-        expr("mg8_t(text)").as("fused"),
+        MinGramHash.of(col("text"), 8).as("fused"),
         expr("""array_min(transform(sequence(1, greatest(length(text)-7, 1)),
           | i -> md5(substring(text, i, 8))))""".stripMargin).as("sql"))
       .collect()
@@ -618,13 +617,12 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("t8 fused repetition stats equal the SQL HOF form at every row") {
     import spark.implicits._
-    graft.functions.RepetitionStats.register(spark, "rs_t")
     val docs = Tables.load(spark, sf, "documents").select(col("text"))
       .as[String].take(50).toSeq ++
       Seq("a", "a a a a a a", "one two three four five one two three four five")
     val out = docs.toDF("text")
       .select(expr("split(text, ' ')").as("words"))
-      .select(expr("rs_t(words)").as("st"),
+      .select(RepetitionStats.of(col("words")).as("st"),
         expr("""array_max(transform(array_distinct(words),
           | w -> size(filter(words, x -> x = w))))""".stripMargin).as("mw"),
         expr("""transform(sequence(0, greatest(size(words)-5, 0)),
@@ -642,12 +640,10 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("rolling/md5 gram hits: zero-length text emits no grams (no mutual empty carriers)") {
     import spark.implicits._
-    graft.functions.RollingGramHits.register(spark, 50, 4, "rgh_t")
-    graft.functions.SpanGramHits.register(spark, 50, "sgh_t")
     val r = Seq(("a", ""), ("b", ""), ("c", "x"))
       .toDF("doc_id", "text")
-      .select(col("doc_id"), expr("size(rgh_t(text))").as("nr"),
-        expr("size(sgh_t(text))").as("nm"))
+      .select(col("doc_id"), size(RollingGramHits.of(col("text"), 50, 4)).as("nr"),
+        size(SpanGramHits.of(col("text"), 50)).as("nm"))
       .collect().map(x => x.getString(0) -> (x.getInt(1), x.getInt(2))).toMap
     // two empty docs share NO gram on either path (pre-fix the rolling
     // path emitted fmix(0), which always passes 1-in-2^k selection)

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.functions.ScalarExtras
+import graft.functions.{CosineSimilarity, Pq, ScalarExtras, Sq8}
 import graft.operators.Profile
 
 /** Property tests (SURVEY §5.3): invariants over generated inputs, run with
@@ -105,7 +105,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("cosine similarity bounded in [-1,1] and 1 on self for random vectors") {
-    graft.functions.CosineSimilarity.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val vecs = Seq.tabulate(200) { i =>
@@ -113,18 +112,16 @@ class PropertySpec extends SparkSpec {
       (i.toLong, Seq.fill(16)(rnd.nextDouble() * 2 - 1))
     }.toDF("i", "v")
     val stats = vecs.as("a").crossJoin(vecs.as("b")).limit(5000)
-      .select(expr("cosine_sim(a.v, b.v)").as("s"))
+      .select(CosineSimilarity.of(col("a.v"), col("b.v")).as("s"))
       .agg(min("s"), max("s")).collect()(0)
     assert(stats.getDouble(0) >= -1.0 - 1e-9 && stats.getDouble(1) <= 1.0 + 1e-9)
-    val self = vecs.select(expr("cosine_sim(v, v)").as("s"))
+    val self = vecs.select(CosineSimilarity.of(col("v"), col("v")).as("s"))
       .agg(min("s")).collect()(0).getDouble(0)
     assert(self > 1.0 - 1e-9)
   }
 
   test("sq8: roundtrip within half a step, re-encode is an identity, " +
       "quantized cosine tracks exact — random signs and magnitudes") {
-    graft.functions.Sq8.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // magnitudes spanning 1e-6..1e6, signs mixed, plus an all-zero vector
@@ -134,7 +131,7 @@ class PropertySpec extends SparkSpec {
       (i.toLong, Seq.fill(16)((rnd.nextDouble() * 2 - 1) * mag))
     } :+ ((200L, Seq.fill(16)(0.0)))).toDF("i", "v")
     val bad = vecs.select(col("v"),
-        expr("sq8_decode(sq8_encode(v))").as("w"),
+        Sq8.decode(Sq8.encode(col("v"))).as("w"),
         expr("array_max(transform(v, x -> abs(x)))").as("scale"))
       .select(expr(
         "aggregate(zip_with(v, w, (a, b) -> abs(a - b)), 0D, " +
@@ -148,9 +145,10 @@ class PropertySpec extends SparkSpec {
     // exactly and scales relatively. (Nothing at rest depends on binary
     // identity: retrainIvfIndex preserves stored payloads verbatim.)
     val reenc = vecs.select(
-        expr("substring(sq8_encode(sq8_decode(sq8_encode(v))), 9)").as("r2"),
-        expr("substring(sq8_encode(v), 9)").as("r1"),
-        expr("sq8_decode(sq8_encode(v))").as("w"), col("v")).collect()
+        substring(Sq8.encode(Sq8.decode(Sq8.encode(col("v")))), 9, Int.MaxValue)
+          .as("r2"),
+        substring(Sq8.encode(col("v")), 9, Int.MaxValue).as("r1"),
+        Sq8.decode(Sq8.encode(col("v"))).as("w"), col("v")).collect()
     reenc.foreach { r =>
       assert(r.getAs[Array[Byte]](0).toSeq == r.getAs[Array[Byte]](1).toSeq,
         "codes changed on re-encode")
@@ -160,17 +158,15 @@ class PropertySpec extends SparkSpec {
         math.abs(s2 - s1) <= math.ulp(s1), s"scale drifted: $s1 vs $s2")
     }
     // quantized-vs-exact cosine error small at uniform per-vector scale
-    val probe = Seq.fill(16)(0.5)
+    val probe = array(Seq.fill(16)(lit(0.5)): _*)
     val worst = vecs.filter(col("i") =!= 200)
-      .select(abs(expr(s"cosine_sim_q8(sq8_encode(v), " +
-        s"array(${probe.map(_ + "D").mkString(",")})) - " +
-        s"cosine_sim(v, array(${probe.map(_ + "D").mkString(",")}))")).as("d"))
+      .select(abs(Sq8.cosine(Sq8.encode(col("v")), probe) -
+        CosineSimilarity.of(col("v"), probe)).as("d"))
       .agg(max("d")).collect()(0).getDouble(0)
     assert(worst < 0.03, s"worst quantized-cosine error $worst")
   }
 
   test("pq: codes stay below kc and ADC matches the driver-side LUT sum") {
-    graft.functions.Pq.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val m = 4; val kc = 4; val dsub = 4
@@ -193,11 +189,10 @@ class PropertySpec extends SparkSpec {
       dotLut(mi * kc + ki) = dot / qnorm; normLut(mi * kc + ki) = n2
     }
     val rows = vecs.select(col("i"),
-        call_function("pq_encode", col("v"), typedLit(cb),
-          lit(m), lit(kc)).as("code"))
+        Pq.encode(col("v"), typedLit(cb), m, kc).as("code"))
       .select(col("i"), col("code"),
-        call_function("pq_adc_sim", col("code"), typedLit(dotLut),
-          typedLit(normLut), lit(kc)).as("adc"))
+        Pq.adcSim(col("code"), typedLit(dotLut), typedLit(normLut), kc)
+          .as("adc"))
       .collect()
     rows.foreach { r =>
       val code = r.getAs[Array[Byte]](1)

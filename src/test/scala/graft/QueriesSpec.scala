@@ -27,6 +27,20 @@ class QueriesSpec extends SparkSpec {
         if (n == 0) Some(name) else None
       }
     }
+    queryPassRan = true
     assert(empty.isEmpty, s"queries with zero rows: $empty")
+  }
+
+  private var queryPassRan = false
+
+  // Operators build their engine expressions as typed Columns, so the
+  // pass above leaves no temporary function behind: the only name beyond
+  // the builtins is the cosine_sim GraftExtensions injects for /execute.
+  test("the query pass leaves no temporary function in the session registry") {
+    assume(queryPassRan, "needs the query pass above")
+    val temp = spark.sessionState.catalog.listTemporaryFunctions()
+      .map(_.funcName).toSet
+    assert(temp.subsetOf(Set("cosine_sim")),
+      s"temporary functions left behind: ${temp - "cosine_sim"}")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.CosineSimilarity
 import graft.operators.RankDedup
 
 /** D2 upsert matrix (qa_retrieval.py:146-202): sim × rank quadrants. */
@@ -13,7 +12,6 @@ class RankDedupSpec extends SparkSpec {
 
   private def run(store: Seq[(Long, Seq[Double], Long)],
       cand: Seq[(Long, Seq[Double], Long)]): Map[Long, (Long, String)] = {
-    CosineSimilarity.register(spark)
     RankDedup.upsert(df(store: _*), df(cand: _*), dim = 3)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
   }
@@ -47,7 +45,6 @@ class RankDedupSpec extends SparkSpec {
   }
 
   test("idempotence: equal-rank resubmission against the survivor is discarded") {
-    CosineSimilarity.register(spark)
     // state after a replace: 100 holds vA at rank 9
     val store2 = df((100L, vA, 9L), (2L, vB, 8L))
     val again = RankDedup.upsert(store2, df((200L, vA, 9L)), dim = 3)
@@ -57,7 +54,6 @@ class RankDedupSpec extends SparkSpec {
 
   test("dim defaults to MEASURED from the store: a 384-dim upsert works " +
       "without passing dim (the former dim-64 default failed loudly here)") {
-    CosineSimilarity.register(spark)
     def unit384(seed: Int): Seq[Double] = {
       val raw = Array.tabulate(384)(k =>
         1.0 + 0.001 * (((seed * 384 + k) * 2654435761L >>> 40) & 0xff))
@@ -77,7 +73,6 @@ class RankDedupSpec extends SparkSpec {
 
   test("keep-best is the bounded heap aggregate: ObjectHashAggregate, " +
       "no WindowGroupLimit / window sort") {
-    CosineSimilarity.register(spark)
     val matches = RankDedup.bandedMatches(df((1L, vA, 7L), (2L, vB, 8L)),
       df((100L, vA, 9L)), dim = 3, planes = 4, forceShuffle = false)
     val plan = RankDedup.bestMatch(matches)
@@ -92,7 +87,6 @@ class RankDedupSpec extends SparkSpec {
   }
 
   test("sim-join is band-blocked: equi hash join, no nested-loop/cartesian") {
-    CosineSimilarity.register(spark)
     val plan = RankDedup.upsert(df((1L, vA, 7L)), df((100L, vA, 9L)), dim = 3)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)

@@ -23,8 +23,7 @@ class Round6Spec extends AnyFunSuite with SparkSpec {
 
   private def ours(xs: Seq[Double]): Seq[Double] = {
     import spark.implicits._
-    Round6.register(spark)
-    xs.toDF("x").select(expr("round6(x)").as("r"))
+    xs.toDF("x").select(Round6.of(col("x")).as("r"))
       .collect().map(_.getDouble(0)).toSeq
   }
 

@@ -14,17 +14,15 @@ class RpBandKeysSpec extends SparkSpec {
     Array(-1.0, -1.0, -1.0)) // plane 3 (band 1, bit 1)
 
   test("band keys match hand-computed sign bits") {
-    RpBandKeys.register(spark, signs, 2)
     val df = Seq(Seq(1.0, 2.0, 3.0)).toDF("v")
-      .select(expr("rp_band_keys(v)").as("k"))
+      .select(RpBandKeys.of(col("v"), signs, 2).as("k"))
     // dots: 6 > 0 (bit0), -2 (no), 2 > 0 (bit0), -6 (no) -> keys [1, 1]
     assert(df.collect()(0).getSeq[Int](0) == Seq(1, 1))
   }
 
   test("dimension mismatch fails loudly instead of hashing a partial dot") {
-    RpBandKeys.register(spark, signs, 2)
     val short = Seq(Seq(1.0, 2.0)).toDF("v")
-      .select(expr("rp_band_keys(v)").as("k"))
+      .select(RpBandKeys.of(col("v"), signs, 2).as("k"))
     val e = intercept[Exception] { short.collect() }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
@@ -40,13 +38,12 @@ class RpBandKeysSpec extends SparkSpec {
   }
 
   test("array<float> input gets an implicit cast (analysis-time contract)") {
-    RpBandKeys.register(spark, signs, 2)
     val df = Seq(Seq(1.0f, 2.0f, 3.0f)).toDF("v")
-      .select(expr("rp_band_keys(v)").as("k"))
+      .select(RpBandKeys.of(col("v"), signs, 2).as("k"))
     assert(df.collect()(0).getSeq[Int](0) == Seq(1, 1))
     // a non-array input is an analysis error, not a runtime ClassCastException
     intercept[org.apache.spark.sql.AnalysisException] {
-      Seq(1.0).toDF("v").select(expr("rp_band_keys(v)")).collect()
+      Seq(1.0).toDF("v").select(RpBandKeys.of(col("v"), signs, 2)).collect()
     }
   }
 }

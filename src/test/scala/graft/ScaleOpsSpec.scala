@@ -279,14 +279,13 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("SQ8 quantization: bounded error, 4x+ smaller index, recall holds") {
     import graft.operators.VectorOps
-    import graft.functions.Sq8
-    Sq8.register(spark)
+    import graft.functions.{CosineSimilarity, Sq8}
     val e = VectorOps.vecsCheckpointed(spark, sf)
 
     // per-element roundtrip error is bounded by half a quantization step
     // (scale/254); exercised through the CODEGEN encode and eval decode
     val bad = e.select(col("v"),
-        expr("sq8_decode(sq8_encode(v))").as("w"),
+        Sq8.decode(Sq8.encode(col("v"))).as("w"),
         expr("array_max(transform(v, x -> abs(x)))").as("scale"))
       .select(expr(
         "aggregate(zip_with(v, w, (a, b) -> abs(a - b)), 0D, " +
@@ -297,9 +296,8 @@ class ScaleOpsSpec extends SparkSpec {
     // quantized cosine tracks the exact cosine tightly on real fixtures
     val probeVec = e.filter(col("vec_id") === 1).collect()(0).getSeq[Double](2)
     val worst = e.select(abs(
-        call_function("cosine_sim_q8", expr("sq8_encode(v)"),
-          typedLit(probeVec.toArray)) -
-        call_function("cosine_sim", col("v"), typedLit(probeVec.toArray)))
+        Sq8.cosine(Sq8.encode(col("v")), typedLit(probeVec.toArray)) -
+        CosineSimilarity.of(col("v"), typedLit(probeVec.toArray)))
         .as("d"))
       .agg(max("d")).collect()(0).getDouble(0)
     assert(worst < 0.02, s"worst quantized-cosine error $worst")
@@ -408,14 +406,12 @@ class ScaleOpsSpec extends SparkSpec {
     // a float-typed vector column encodes identically to its double cast
     // (ArrayData.getDouble on a float-backed array reads wrong bytes
     // silently — the guard must pick getFloat)
-    graft.functions.Pq.register(spark)
-    val fr = spark.sql(
-      """SELECT
-        | pq_encode(cast(array(1.0, 2.0) as array<float>),
-        |   cast(array(9.0, 9.0, 1.0, 2.0) as array<double>), 1, 2) AS cf,
-        | pq_encode(cast(array(1.0, 2.0) as array<double>),
-        |   cast(array(9.0, 9.0, 1.0, 2.0) as array<double>), 1, 2) AS cd
-        |""".stripMargin).head()
+    val cb = expr("cast(array(9.0, 9.0, 1.0, 2.0) as array<double>)")
+    val fr = spark.range(1).select(
+      graft.functions.Pq.encode(expr("cast(array(1.0, 2.0) as array<float>)"),
+        cb, 1, 2).as("cf"),
+      graft.functions.Pq.encode(expr("cast(array(1.0, 2.0) as array<double>)"),
+        cb, 1, 2).as("cd")).head()
     assert(fr.getAs[Array[Byte]](0).toSeq == fr.getAs[Array[Byte]](1).toSeq)
     assert(fr.getAs[Array[Byte]](0)(0) == 1, "nearest code must be code 1")
 

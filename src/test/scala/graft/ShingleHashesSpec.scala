@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.{Md5Prefix, ShingleHashes}
 
 /** Equality gate for the fused ShingleHashes expression against the
   * composed three-HOF chain it replaced — the dd2/dd3/dd7/dd8/c1 oracle
@@ -28,10 +29,9 @@ class ShingleHashesSpec extends SparkSpec {
   private def viaBoth(texts: Seq[String]): (Seq[(Long, Seq[Long])], Seq[(Long, Seq[Long])]) = {
     val corpus = texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    graft.functions.ShingleHashes.register(spark)
     val fused = corpus
       .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .select(col("doc_id"), expr("shingle_hashes(words)").as("hs"))
+      .select(col("doc_id"), ShingleHashes.shingles(col("words")).as("hs"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq.sortBy(_._1)
     val composed = docShingleHashesComposed(corpus)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq.sortBy(_._1)
@@ -53,10 +53,9 @@ class ShingleHashesSpec extends SparkSpec {
 
   test("fused == composed on the sf0.001 documents corpus") {
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
-    graft.functions.ShingleHashes.register(spark)
     val fused = docs
       .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .select(col("doc_id"), expr("shingle_hashes(words)").as("hs"))
+      .select(col("doc_id"), ShingleHashes.shingles(col("words")).as("hs"))
     val composed = docShingleHashesComposed(docs)
     assert(fused.exceptAll(composed).count() == 0 &&
       composed.exceptAll(fused).count() == 0)
@@ -79,7 +78,6 @@ class ShingleHashesSpec extends SparkSpec {
       Seq.fill(200)(Seq.fill(rnd.nextInt(20))(s"w${rnd.nextInt(7)}").mkString(" "))
     val corpus = texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    graft.functions.ShingleHashes.register(spark)
     val docs = corpus
       .select(col("doc_id"), split(col("text"), " ").as("words"))
     val gram8 =
@@ -90,7 +88,7 @@ class ShingleHashesSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
     val fusedStr = docs
       .select(col("doc_id"),
-        posexplode(expr("gram_strings(words, 8)")).as(Seq("p", "g")))
+        posexplode(ShingleHashes.gramStrings(col("words"), 8)).as(Seq("p", "g")))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
     assert(fusedStr == composedStr)
     val composedHash = docs
@@ -100,7 +98,7 @@ class ShingleHashesSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     val fusedHash = docs
       .select(col("doc_id"),
-        posexplode(expr("gram_hashes(words, 8)")).as(Seq("p", "g")))
+        posexplode(ShingleHashes.grams(col("words"), 8)).as(Seq("p", "g")))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     assert(fusedHash == composedHash)
   }
@@ -110,12 +108,11 @@ class ShingleHashesSpec extends SparkSpec {
     val xs = (Seq("", "a", "héllo", "the quick brown fox") ++
       Seq.fill(500)(rnd.alphanumeric.take(rnd.nextInt(24)).mkString))
       .toDF("x")
-    graft.functions.Md5Prefix.register(spark)
     for (digits <- Seq(1, 6, 12, 15)) {
       val composed = xs.select(expr(
         s"cast(conv(substring(md5(x), 1, $digits), 16, 10) as bigint)"))
         .collect().map(_.getLong(0)).toSeq
-      val fused = xs.select(expr(s"md5_prefix(x, $digits)"))
+      val fused = xs.select(Md5Prefix.of(col("x"), digits))
         .collect().map(_.getLong(0)).toSeq
       assert(fused == composed, s"md5_prefix mismatch at digits=$digits")
     }

@@ -18,7 +18,6 @@ class SimHashTextSpec extends SparkSpec {
     * of each sum into the fingerprint. */
   private def simhashOfComposed(df: DataFrame, bits: Int,
       digits: Int): DataFrame = {
-    graft.functions.Md5Prefix.register(df.sparkSession)
     val sums = (0 until bits).map(b =>
       sum(expr(s"CASE WHEN (wh & ${1L << b}) != 0 THEN 1 ELSE -1 END"))
         .as(s"s_$b"))
@@ -27,7 +26,8 @@ class SimHashTextSpec extends SparkSpec {
     df.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       // fused digest-prefix word hash — identical to the former
       // md5 → substring(1, digits) → conv base-16 chain (Md5PrefixSpec)
-      .select(col("doc_id"), expr(s"md5_prefix(word, $digits)").as("wh"))
+      .select(col("doc_id"),
+        graft.functions.Md5Prefix.of(col("word"), digits).as("wh"))
       .groupBy("doc_id").agg(sums.head, sums.tail: _*)
       .select(col("doc_id"), expr(fp).cast("bigint").as("simhash"))
   }

@@ -40,11 +40,8 @@ object SixthDecade {
       logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     val parts = sys.env.get("SPARK_GRAFT_VERIFY_PARTS").map(_.toInt)
-    def vecs = {
-      graft.functions.CosineSimilarity.register(spark)
-      Tables.load(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    }
+    def vecs = Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // embedding dim comes from the FIXTURE (the 384-dim arm measures the
     // dimensionality law at the production operating point; the RP-LSH
     // planes must span whatever the data carries)

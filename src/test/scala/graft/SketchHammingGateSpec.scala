@@ -10,7 +10,6 @@ class SketchHammingGateSpec extends SparkSpec {
 
   test("skew cap fails loudly on a bucket of 65,537 members") {
     assert(SketchHammingGate.MaxBucket == 65536)
-    SketchHammingGate.register(spark)
     // constant band key => one bucket of MaxBucket + 1 members
     val members = spark.range(SketchHammingGate.MaxBucket + 1L)
       .select(lit(0).as("b"), lit(0L).as("key"),
@@ -19,7 +18,7 @@ class SketchHammingGateSpec extends SparkSpec {
     val ex = intercept[Exception] {
       members.groupBy(col("b"), col("key"))
         .agg(collect_list(col("m")).as("ms"))
-        .select(expr("sketch_gate_pairs(ms, 0)").as(Seq("a_id", "b_id")))
+        .select(SketchHammingGate.of(col("ms"), 0).as(Seq("a_id", "b_id")))
         .count()
     }
     def chain(t: Throwable): Seq[String] =

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.WinnowedGramHits
 import graft.operators.{DedupOps, OperatingPoint, SpanIndex}
 
 /** Gates for the at-rest span-gram inventory: the artifact must equal an
@@ -27,9 +28,8 @@ class SpanIndexSpec extends SparkSpec {
   /** Independent inventory recompute straight from the expression — NOT
     * through SpanIndex's own plumbing. */
   private def directShared(docs: DataFrame): Set[(Long, Long, Long)] = {
-    graft.functions.WinnowedGramHits.register(spark, 50, 16,
-      name = "sis_direct")
-    docs.select(col("doc_id"), explode(expr("sis_direct(text)")).as("x"))
+    docs.select(col("doc_id"),
+        explode(WinnowedGramHits.of(col("text"), 50, 16)).as("x"))
       .groupBy(col("x.gh").as("gh"))
       .agg(countDistinct("doc_id").as("n_docs"), min("doc_id").as("first_doc"))
       .filter(col("n_docs") >= 2)
@@ -163,9 +163,8 @@ class SpanIndexSpec extends SparkSpec {
     val span = rndText(300)
     val d1 = rndText(137) + span + rndText(90)
     val d2 = rndText(211) + span + rndText(40)
-    graft.functions.WinnowedGramHits.register(spark, g, w, name = "win_t")
     val hits = Seq((1L, d1), (2L, d2)).toDF("doc_id", "text")
-      .select(col("doc_id"), explode(expr("win_t(text)")).as("x"))
+      .select(col("doc_id"), explode(WinnowedGramHits.of(col("text"), g, w)).as("x"))
       .select(col("doc_id"), col("x.off"), col("x.gh")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     // 1. the winnowing guarantee inside one doc: consecutive selected

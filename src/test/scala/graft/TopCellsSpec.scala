@@ -42,7 +42,6 @@ class TopCellsSpec extends SparkSpec {
   }
 
   test("TopCells expression == distributed crossJoin + topk_rows heap on random frames (k=1 and k=2)") {
-    graft.functions.CosineSimilarity.register(spark)
     val dim = 16
     val n = 500
     val e = (0L until n).map(id => (id, randVec(dim).toSeq)).toDF("vec_id", "v")
@@ -78,8 +77,6 @@ class TopCellsSpec extends SparkSpec {
   }
 
   test("fit probe: beyond-guard and empty centroid sets route WITHOUT a driver collect") {
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.TopKRows.register(spark)
     // beyond-guard: 2^22 doubles is the ceiling; 5M rows × dim 2 exceeds
     // it — built lazily from range(), so a collect() here would blow the
     // test JVM's heap long before the assert; the probe must answer from
@@ -98,7 +95,6 @@ class TopCellsSpec extends SparkSpec {
   }
 
   test("Lloyd centroids from the RDD loop == one distributed means+assign step ahead (both inits)") {
-    graft.functions.CosineSimilarity.register(spark)
     val e = (0L until 400L).map(id => (id, randVec(32).toSeq))
       .toDF("vec_id", "v").localCheckpoint()
     for (modInit <- Seq(false, true)) {

@@ -20,9 +20,8 @@ class TopKRowsSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def heapForm(df: org.apache.spark.sql.DataFrame, k: Int) = {
-    TopKRows.register(spark)
     df.select(col("g"), struct(col("s"), col("id")).as("cand"))
-      .groupBy("g").agg(expr(s"topk_rows(cand, $k)").as("top"))
+      .groupBy("g").agg(TopKRows.of(col("cand"), k).as("top"))
       .select(col("g"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("g"), col("t.s").as("s"), col("t.id").as("id"),
         (col("pos") + 1).cast("int").as("rk"))
@@ -79,16 +78,21 @@ class TopKRowsSpec extends AnyFunSuite with SparkSpec {
       spark.conf.set(key, "1")
       assert(asSet(heapForm(df, 3)) == expected)
     } finally spark.conf.set(key, prev)
-    // the registration warning names a deliberate value as set, and says
-    // "(default)" only when the conf is unset (fresh sessions: the warning
-    // fires once per session)
+    // the builder's warning names a deliberate value as set, and says
+    // "(default)" only when the conf is unset (fresh sessions, each made
+    // active: the warning fires once per session)
     def warning(value: Option[String]): String = {
       val s = spark.newSession()
       value.fold(s.conf.unset(key))(s.conf.set(key, _))
       val buf = new java.io.ByteArrayOutputStream()
       val err = System.err
       System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-      try TopKRows.register(s) finally System.setErr(err)
+      org.apache.spark.sql.SparkSession.setActiveSession(s)
+      try TopKRows.of(col("cand"), 3)
+      finally {
+        org.apache.spark.sql.SparkSession.setActiveSession(spark)
+        System.setErr(err)
+      }
       buf.toString("UTF-8").linesIterator.find(_.contains("topk_rows")).getOrElse("")
     }
     val deliberate = warning(Some("1"))
@@ -99,13 +103,12 @@ class TopKRowsSpec extends AnyFunSuite with SparkSpec {
 
   test("null payload structs are skipped; null fields rank last") {
     import spark.implicits._
-    TopKRows.register(spark)
     val df = Seq[(Int, Option[java.lang.Double], Long)](
       (1, Some(0.9), 1L), (1, None, 2L), (1, Some(0.1), 3L))
       .toDF("g", "s", "id")
     // null FIELD in the ordering slot: sorts after every non-null score
     val kept = df.select(col("g"), struct(col("s"), col("id")).as("cand"))
-      .groupBy("g").agg(expr("topk_rows(cand, 2)").as("top"))
+      .groupBy("g").agg(TopKRows.of(col("cand"), 2).as("top"))
       .select(posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("t.id")).collect().map(_.getLong(0)).toSeq
     assert(kept == Seq(1L, 3L))
@@ -113,7 +116,7 @@ class TopKRowsSpec extends AnyFunSuite with SparkSpec {
     val kept2 = df.select(col("g"),
         when(col("id") === 2L, lit(null))
           .otherwise(struct(col("s"), col("id"))).as("cand"))
-      .groupBy("g").agg(expr("topk_rows(cand, 3)").as("top"))
+      .groupBy("g").agg(TopKRows.of(col("cand"), 3).as("top"))
       .select(size(col("top"))).head().getInt(0)
     assert(kept2 == 2)
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.{CosineSimilarity, Round6}
 import graft.operators.VectorOps
 
 /** Hard gate for the one oracle-less query (v5_kmeans_ivf, float-iterative
@@ -24,7 +25,7 @@ class VectorGateSpec extends SparkSpec {
     val ds = VectorOps.vecsCheckpointed(spark, dir)
     val probe = ds.filter(col("vec_id") === 1).select(col("v").as("p"))
     val brute = ds.crossJoin(broadcast(probe)).filter(col("vec_id") =!= 1)
-      .select(col("vec_id"), expr("cosine_sim(v, p)").as("sim"))
+      .select(col("vec_id"), CosineSimilarity.of(col("v"), col("p")).as("sim"))
       .orderBy(desc("sim"), col("vec_id")).limit(10)
       .collect().map(_.getLong(0)).toSet
     val ivf = VectorOps.kmeansIvf(spark, dir)
@@ -88,7 +89,7 @@ class VectorGateSpec extends SparkSpec {
       val base = ds.filter(col("vec_id") < 1000000L)
       val planted = base.as("a").crossJoin(base.as("x"))
         .filter(col("a.vec_id") < col("x.vec_id"))
-        .filter(expr("round(cosine_sim(a.v, x.v), 6)") >= 0.30)
+        .filter(round(CosineSimilarity.of(col("a.v"), col("x.v")), 6) >= 0.30)
         .select(col("a.vec_id").as("pa"), col("x.vec_id").as("pb"))
         .localCheckpoint()
       val plantedN = planted.count()
@@ -139,7 +140,7 @@ class VectorGateSpec extends SparkSpec {
         .select((col("vec_id") - 500000L).as("pa"), col("v").as("tv"))
       val truth = base.join(twins, base("vec_id") === twins("pa"))
         .select(col("pa"), (col("pa") + 500000L).as("pb"),
-          expr("round6(cosine_sim(v, tv))").as("ts"))
+          Round6.of(CosineSimilarity.of(col("v"), col("tv"))).as("ts"))
         .filter(col("ts") >= 0.8).localCheckpoint()
       val planted = truth.count()
       assert(planted > 50, s"twin fixture $dir lost its planted >=0.8 band")
@@ -194,7 +195,7 @@ class VectorGateSpec extends SparkSpec {
         .select((col("vec_id") - 500000L).as("pa"), col("v").as("tv"))
       val truth = base.join(twins, base("vec_id") === twins("pa"))
         .select(col("pa"), (col("pa") + 500000L).as("pb"),
-          expr("round6(cosine_sim(v, tv))").as("ts"))
+          Round6.of(CosineSimilarity.of(col("v"), col("tv"))).as("ts"))
         .filter(col("ts") >= 0.8).localCheckpoint()
       val planted = truth.count()
       def recallOf(found: org.apache.spark.sql.DataFrame): Double =
