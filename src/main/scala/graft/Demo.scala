@@ -48,9 +48,10 @@ object Demo {
     println(s"intent   : ${r.analyst.intent}")
     println(s"plan     : ${r.plan.steps.mkString(" -> ")}")
     println(s"repairs  : ${r.repair.attempts} (errors seen: ${r.repair.errors.size})")
-    r.repair.df.foreach { df =>
+    // the rows the chain collected for its summary: the result runs once
+    r.repair.df.zip(r.rows).foreach { case (df, rows) =>
       println("result   :")
-      println(Profile.renderTable(df.limit(12)))
+      println(Profile.renderTable(df.columns.toSeq, rows.take(12)))
     }
     println(s"summary  : ${r.summary.getOrElse("<none>")}")
 

@@ -1,6 +1,6 @@
 package graft.lifecycle
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
 import graft.operators.{Profile, RankDedup}
 
 /** Agent-pipeline adapters (SURVEY §3.1, §7.2 step 6): the reference's
@@ -88,9 +88,18 @@ object Agents {
     Plan(steps, sql)
   }
 
+  /** Rows of a chain's result that reach anyone: the client's `result`
+    * event carries up to this many, and the summarizer reads the first
+    * [[SummaryRows]] of them. */
+  val ResultRows = 100
+  val SummaryRows = 10
+
+  /** `rows` holds the result's first ≤ [[ResultRows]] rows, collected once;
+    * it is empty exactly when `repair.df` is (no answer, or the research
+    * path). */
   final case class ChainResult(expert: ExpertChoice, analyst: AnalystChoice,
       plan: Plan, repair: RepairResult, summary: Option[String],
-      fromMemory: Boolean = false)
+      fromMemory: Boolean = false, rows: Option[Seq[Row]] = None)
 
   /** Full chain: profile context → route → episodic-memory probe → plan →
     * validated SQL with bounded repair → summarize → learn. Prompts carry
@@ -98,6 +107,13 @@ object Agents {
     * bambooai.py:550-565 `_process_question`). A memory hit at sim ≥ 0.80
     * skips the Planner (bambooai.py:265-291,380-386); a result ranked ≥ 6
     * is stored back through the rank-dedup gate (:638-684).
+    *
+    * The validated result runs once (the reference summarizes the output of
+    * its one execution, bambooai.py:885-908): one collect of ≤
+    * [[ResultRows]] rows, carried on the result as `rows`. The summarizer
+    * prompt renders the first [[SummaryRows]] of them, and a caller that
+    * shows the result reads the same rows, so the summary describes exactly
+    * what the client receives.
     *
     * Research routing (bambooai.py:456-473): when the Expert Selector picks
     * the Research Specialist — or the question does not require the
@@ -153,8 +169,9 @@ object Agents {
 
     val repair = es.executeWithRepair(plan.sql, (bad, err) =>
       Some(llm.complete("error_corrector", s"SQL: $bad\nERROR: $err")))
-    val summary = repair.df.map { d =>
-      val rendered = Profile.renderTable(d.limit(10))
+    val rows = repair.df.map(_.limit(ResultRows).collect().toSeq)
+    val summary = repair.df.zip(rows).map { case (d, rs) =>
+      val rendered = Profile.renderTable(d.columns.toSeq, rs.take(SummaryRows))
       llm.complete("summarizer", s"QUESTION: $question\nRESULT:\n$rendered")
     }
     if (repair.df.nonEmpty && storeRank >= RankDedup.MinRank)
@@ -164,7 +181,7 @@ object Agents {
         intent = analyst.intent, dataDescr = profile,
         plan = plan.steps.map("- " + _).mkString("\n"), sql = plan.sql,
         rank = storeRank)))
-    ChainResult(expert, analyst, plan, repair, summary, recalled.nonEmpty)
+    ChainResult(expert, analyst, plan, repair, summary, recalled.nonEmpty, rows)
   }
 
   /** I7: mermaid rendering of a data model (utils.py:400-730 shape):

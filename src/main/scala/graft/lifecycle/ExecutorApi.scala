@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.operators.Profile
 import graft.plans.Lifecycle
@@ -226,9 +226,11 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   /** Serializes /execute's Spark work: validation, analysis, the cache
     * write-back and the preview collect. Each statement has its own `df`
     * scope, so the lock shapes load rather than isolating requests: on
-    * the closed-loop serve mix, removing it halved the /execute mean but
-    * slowed /query by about a quarter and grew the live heap by a tenth
-    * (ROADMAP item 1). The pool keeps every other endpoint live. */
+    * the closed-loop serve mix (4 clients, 4 cores, 5 alternating pairs,
+    * /query running its result once), removing it cut the mean operation
+    * latency 1,047 → 594 ms (−43%) but slowed /query 313 → 458 ms (+47%)
+    * and grew the live heap 102 → 112 MB (+9%) (ROADMAP item 1). The pool
+    * keeps every other endpoint live. */
   private val execLock = new Object
 
   /** /execute: `{"sql": ..., "df_id"?: ...}`. When df_id hits the cache
@@ -429,12 +431,18 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   /** /df_utils/df_to_string: the I2 row-25 contract; `order_by` is a
     * comma-separated column list (Spark tables are unordered — the caller
     * names the order that defines "row 25", defaulting to schema order). */
-  private def dfToString(req: JsonNode): (Int, String) = withDf(req) { (_, df) =>
+  private def dfToString(req: JsonNode): (Int, String) = withDf(req) { (id, df) =>
     val n = Json.long(req, "num_rows").getOrElse(5L).toInt
     val orderCols = Json.text(req, "order_by")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(df.columns.toSeq)
-    (200, s"""{"data":${Json.str(Profile.dataframeToString(df, orderCols, n))}}""")
+    // the binding's memoized I1 profile: the summary jobs run once per
+    // version, not once per call
+    session.profile(id) match {
+      case Some(p) =>
+        (200, s"""{"data":${Json.str(Profile.dataframeToString(df, orderCols, p, n))}}""")
+      case None => (404, err("DataFrame not found in cache"))
+    }
   }
 
   /** /query: `{"question": ..., "df_id": ...}` → `text/event-stream`. The
@@ -443,7 +451,9 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     * synchronous, so a tap client emits one `stage` event per completed
     * LLM call in chain order, then one `result` event with the bounded
     * preview + summary (or an `error` event — errors are events on this
-    * surface, the stream IS the response). */
+    * surface, the stream IS the response). The preview is the chain's own
+    * rows: the summarizer and the `result` event read one collect of ≤ 100
+    * rows, so the result runs once per answered question. */
   private def query(ex: HttpExchange): Unit = {
     val body =
       try new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
@@ -519,11 +529,11 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
           val r = Agents.converse(session, tap, qInContext, dfId, memory,
             planning = planning)
           if (r.repair.df.nonEmpty) lastChain = Some((dfId, r))
-          r.repair.df match {
-            case Some(d) =>
+          r.repair.df.zip(r.rows) match {
+            case Some((d, rows)) =>
               record("assistant", r.summary.getOrElse(""))
               emit("result",
-                recordsJson(d).dropRight(1) +
+                recordsJson(d.columns.toSeq, rows).dropRight(1) +
                   s""","summary":${r.summary.map(Json.str).getOrElse("null")}""" +
                   s""","attempts":${r.repair.attempts}}""")
             case None =>
@@ -1090,14 +1100,17 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   /** `{"data": [row objects...], "columns": [...]}` — the shape
     * compute_df_sample returns (code_executor_api.py:262-266), bounded by
     * `limit` BEFORE collect. */
-  private def recordsJson(df: DataFrame, limit: Int = 100): String = {
-    val cols = df.columns.toSeq
-    val rows = df.limit(limit).collect().map { r =>
+  private def recordsJson(df: DataFrame, limit: Int = 100): String =
+    recordsJson(df.columns.toSeq, df.limit(limit).collect().toSeq)
+
+  /** [[recordsJson]] over rows already collected: runs no Spark job. */
+  private def recordsJson(cols: Seq[String], rows: Seq[Row]): String = {
+    val data = rows.map { r =>
       cols.indices.map(i =>
         Json.str(cols(i)) + ":" + PlotSpec.jsonValue(r.get(i)))
         .mkString("{", ",", "}")
     }.mkString("[", ",", "]")
-    s"""{"data":$rows,"columns":${cols.map(Json.str).mkString("[", ",", "]")}}"""
+    s"""{"data":$data,"columns":${cols.map(Json.str).mkString("[", ",", "]")}}"""
   }
 
   private def err(msg: String): String = s"""{"error":${Json.str(msg)}}"""

@@ -122,9 +122,11 @@ object Profile {
   }
 
   /** Pandas-like to_string(index=False): right-aligned fixed-width columns. */
-  def renderTable(df: DataFrame): String = {
-    val cols = df.columns
-    val rows = df.collect().map(_.toSeq.map {
+  def renderTable(df: DataFrame): String = renderTable(df.columns.toSeq, df.collect().toSeq)
+
+  /** [[renderTable]] over rows already collected: runs no Spark job. */
+  def renderTable(cols: Seq[String], collected: Seq[Row]): String = {
+    val rows = collected.map(_.toSeq.map {
       case null => "NaN"
       case v => v.toString
     })
@@ -140,15 +142,18 @@ object Profile {
   }
 
   /** I2: dataframe_to_string (utils.py:89-133) — head rows [25, 25+n) with
-    * fallback to row 1, plus the I1 summary. Spark tables are unordered, so
-    * the caller supplies the ordering that defines "row 25". */
-  def dataframeToString(df: DataFrame, orderCols: Seq[String],
-      numRows: Int = 5, approx: Boolean = false): String = {
+    * fallback to row 1, plus `summary`, the I1 string of `df`. Spark tables
+    * are unordered, so the caller supplies the ordering that defines
+    * "row 25". The summary is passed in so a caller holding a memoized
+    * profile ([[graft.lifecycle.EngineSession.profile]]) does not run the
+    * I1 jobs again. */
+  def dataframeToString(df: DataFrame, orderCols: Seq[String], summary: String,
+      numRows: Int = 5): String = {
     val total = df.count()
     val firstRow = if (25 + numRows * 2 > total) 1 else 25
     val slice = df.orderBy(orderCols.map(col): _*)
       .offset(firstRow).limit(numRows)
-    s"DF Head:\n${renderTable(slice)}\n\nDF Summary:\n${summaryString(df, approx)}"
+    s"DF Head:\n${renderTable(slice)}\n\nDF Summary:\n$summary"
   }
 
   /** I3: get_dataframe_columns (utils.py:190-203). */

@@ -81,6 +81,26 @@ class AgentsSpec extends SparkSpec {
     assert(r.repair.df.get.count() == 12)
   }
 
+  test("the chain collects its result once: the summary renders its first " +
+      "rows; no rows when the repair loop gives up") {
+    val rec = new Recording(new Agents.ScriptedLlm(fixtures(false) +
+      ("planner" -> Seq("plan:\n- list\nsql: SELECT o_orderkey FROM orders ORDER BY 1"))))
+    val r = Agents.converse(session(), rec, "List the orders.", "orders")
+    val rows = r.rows.getOrElse(fail("an answered chain carries its rows"))
+    assert(rows.length == Agents.ResultRows)
+    val rendered = rec.calls.find(_._1 == "summarizer").get._2
+      .split("RESULT:\n", 2)(1).linesIterator.map(_.trim).toSeq
+    assert(rendered == "o_orderkey" +: rows.take(Agents.SummaryRows)
+      .map(_.get(0).toString), rendered)
+
+    val stuck = new Recording(new Agents.ScriptedLlm(fixtures(true) +
+      ("error_corrector" -> Seq("SELECT month_of(o_orderdate) FROM orders"))))
+    val gaveUp = Agents.converse(session(), stuck, "How many orders?", "orders")
+    assert(gaveUp.repair.df.isEmpty && gaveUp.repair.errors.nonEmpty)
+    assert(gaveUp.rows.isEmpty && gaveUp.summary.isEmpty)
+    assert(!stuck.calls.exists(_._1 == "summarizer"))
+  }
+
   test("yaml plan parsing: steps list + block sql") {
     val p = Agents.parsePlan("plan:\n- a\n- b\nsql: |\nSELECT 1")
     assert(p.steps == Seq("a", "b") && p.sql == "SELECT 1")

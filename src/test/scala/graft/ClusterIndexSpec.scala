@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.operators.{ClusterIndex, DedupOps, GraphOps, MaintenanceLock, OperatingPoint, VectorOps}
 
@@ -317,10 +319,18 @@ class ClusterIndexSpec extends SparkSpec {
     val sink = new graft.streaming.Streams.ClusterIndexSink(path)
     val novelOnly = appendBatch.filter(col("doc_id") >= 700000)
     sink.processBatch(novelOnly, 0L)
-    val plan = sink.freshDocs(appendBatch).queryExecution.executedPlan.toString
-    assert(plan.contains("seen_ids"), s"guard does not read the sidecar:\n$plan")
-    assert(!plan.contains("labels"),
-      s"guard still scans the label artifact:\n$plan")
+    // the file scans' exact root paths, relative to the index: the plan's
+    // text abbreviates a scan's location, so a long checkout path would cut
+    // the directory names off it
+    val index = new java.io.File(path).getAbsolutePath + "/"
+    val scanned = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(
+        sink.freshDocs(appendBatch).queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths
+    }.flatten.map(_.toUri.getPath.stripPrefix(index))
+    assert(scanned.contains("_stream_commits/seen_ids"),
+      s"guard does not read the sidecar: $scanned")
+    assert(!scanned.exists(p => p == "labels" || p.startsWith("labels/")),
+      s"guard still scans the label artifact: $scanned")
     // and the guard actually filters: the already-streamed novels are gone
     val freshIds = sink.freshDocs(appendBatch).select("doc_id")
       .collect().map(_.getLong(0)).toSet

@@ -993,4 +993,74 @@ class ExecutorApiSpec extends SparkSpec {
       api.stop()
     }
   }
+
+  test("an answered /query runs its result once; the summary reads the " +
+      "result event's first rows") {
+    val summarizerPrompt = new java.util.concurrent.atomic.AtomicReference("")
+    // more than 10 rows, so the summary's cut shows; the query-time column
+    // differs between two runs of the statement, so a summary rendered from
+    // a second run would not match the rows the client receives
+    val sql = "SELECT o_orderkey, unix_micros(current_timestamp()) AS at_us " +
+      "FROM once ORDER BY o_orderkey"
+    val scripted = new graft.lifecycle.Agents.ScriptedLlm(Map(
+      "expert_selector" -> Seq(
+        "requires_dataset: true\nexpert: Data Analyst\nconfidence: 9"),
+      "analyst_selector" -> Seq("analyst: Data Analyst DF\nintent: list orders"),
+      "planner" -> Seq(s"plan:\n- list\nsql: |\n$sql"),
+      "summarizer" -> Seq("listed")))
+    val capture = new graft.lifecycle.Agents.LlmClient {
+      def complete(stage: String, prompt: String): String = {
+        if (stage == "summarizer") summarizerPrompt.set(prompt)
+        scripted.complete(stage, prompt)
+      }
+    }
+    val api = new ExecutorApi(new EngineSession(spark), llm = Some(capture))
+    val port = api.start()
+    try {
+      assert(call(port, "/upload_dataset",
+        Some(s"""{"df_id":"once","path":"$sf/orders.parquet"}"""))._1 == 200)
+      // warm the binding's profile, so the chain's only Spark work is its
+      // result
+      assert(call(port, "/df_utils/df_summary", Some("""{"df_id":"once"}"""))._1 == 200)
+      val ((qc, stream), actions) = new ActionLog(spark).during(call(port, "/query",
+        Some("""{"question":"List the orders.","df_id":"once"}""")))
+      assert(qc == 200 && stream.contains("event: result"), stream)
+      assert(actions.map(_._1) == Seq("collect"),
+        actions.map { case (f, qe) => s"$f: ${qe.logical}" }.mkString("\n"))
+
+      val result = stream.linesIterator.dropWhile(_ != "event: result")
+        .drop(1).next().stripPrefix("data: ")
+      val data = graft.lifecycle.Json.elements(
+        graft.lifecycle.Json.parse(result).get("data"))
+        .map(r => Seq(r.get("o_orderkey").asText, r.get("at_us").asText))
+      assert(data.length == 100)
+      val rendered = summarizerPrompt.get.split("RESULT:\n", 2)(1)
+        .linesIterator.map(_.trim.split("\\s+").toSeq).toSeq
+      assert(rendered.head == Seq("o_orderkey", "at_us"), rendered)
+      assert(rendered.tail == data.take(10), rendered)
+    } finally api.stop()
+  }
+
+  test("/df_utils/df_to_string reads the binding's memoized profile") {
+    val api = new ExecutorApi(new EngineSession(spark))
+    val port = api.start()
+    try {
+      assert(call(port, "/upload_dataset",
+        Some(s"""{"df_id":"dts","path":"$sf/orders.parquet"}"""))._1 == 200)
+      val body = """{"df_id":"dts","order_by":"o_orderkey","num_rows":3}"""
+      val (c1, first) = call(port, "/df_utils/df_to_string", Some(body))
+      assert(c1 == 200, first)
+      val ((c2, second), actions) = new ActionLog(spark).during(
+        call(port, "/df_utils/df_to_string", Some(body)))
+      assert(c2 == 200 && second == first, second)
+      // the row count and the head slice; the I1 summary does not run again
+      assert(actions.map(_._1) == Seq("count", "collect"),
+        actions.map { case (f, qe) => s"$f: ${qe.logical}" }.mkString("\n"))
+      // the text the endpoint produced when it profiled on every call
+      val orders = spark.read.parquet(s"$sf/orders.parquet")
+      assert(graft.lifecycle.Json.text(graft.lifecycle.Json.parse(second), "data")
+        .contains(graft.operators.Profile.dataframeToString(orders,
+          Seq("o_orderkey"), graft.operators.Profile.summaryString(orders), 3)))
+    } finally api.stop()
+  }
 }

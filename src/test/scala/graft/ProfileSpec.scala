@@ -34,11 +34,11 @@ class ProfileSpec extends SparkSpec {
 
   test("I2 preview starts at row 25, falls back to row 1 on short tables") {
     val long = (0 until 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val head = Profile.dataframeToString(long, Seq("id"))
+    val head = Profile.dataframeToString(long, Seq("id"), Profile.summaryString(long))
     assert(head.startsWith("DF Head:\n"))
     assert(head.contains("v25") && !head.contains("v24") && !head.contains("v30"))
     val short = (0 until 10).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val s2 = Profile.dataframeToString(short, Seq("id"))
+    val s2 = Profile.dataframeToString(short, Seq("id"), Profile.summaryString(short))
     assert(s2.contains("v1") && !s2.contains("v0 ") && s2.contains("DF Summary"))
   }
 
