@@ -133,9 +133,7 @@ object Bench {
     * historical meaning; the rows ride only the named maps (additive,
     * per the bench contract). Pair-emitting operators are deliberately
     * absent: ×N copies of identical texts would go quadratic in PAIRS,
-    * measuring blowup, not parallelism. Measured isolated (5-run
-    * medians, back-to-back): x300_dd2 2.87 s @32c vs 6.04 s @8c (2.10×),
-    * x300_c3 0.91 vs 1.77 (1.94×), x300_t13_score 1.13 vs 1.56 (1.38×).
+    * measuring blowup, not parallelism.
     *
     * ×n expansion with the RANGE side streaming: s.range carries
     * defaultParallelism partitions (= the core count), so the expansion

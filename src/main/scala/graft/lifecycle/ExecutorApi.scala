@@ -911,13 +911,12 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
       case Some(paths) =>
         val n = Json.long(req, "num_rows").getOrElse(100L).toInt
         val htmls = (if (paths.isEmpty)
-          Seq("<table><tr><th>Error</th></tr><tr><td>No auxiliary dataset paths provided.</td></tr></table>")
+          Seq(cellTable("Error", "No auxiliary dataset paths provided."))
         else paths.map { p =>
           try Sources.toHtml(auxRead(p, n), n)
           catch { case e: Exception =>
-            "<table><tr><th>Error</th></tr><tr><td>" + Lifecycle.condense(
-              Option(e.getMessage).getOrElse(e.getClass.getSimpleName)) +
-              "</td></tr></table>" }
+            cellTable("Error", Lifecycle.condense(
+              Option(e.getMessage).getOrElse(e.getClass.getSimpleName))) }
         }).map(Json.str).mkString("[", ",", "]")
         (200, s"""{"html_results":$htmls}""")
     }
@@ -945,8 +944,10 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     s"""{"dataframe_html":${Json.str(inner)}}"""
   }
 
+  /** A one-cell table; the cell text is escaped (it may echo request
+    * input such as a file path). */
   private def cellTable(k: String, v: String): String =
-    s"<table><tr><th>$k</th></tr><tr><td>$v</td></tr></table>"
+    s"<table><tr><th>$k</th></tr><tr><td>${Sources.htmlEscape(v)}</td></tr></table>"
 
   private def baseName(p: String): String =
     p.substring(p.lastIndexOf('/') + 1)

@@ -6,8 +6,8 @@ import scala.util.Try
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 
 /** The engine's one JSON reader: request bodies, provider replies, the
-  * agent config, stored threads and favourites, search responses and the
-  * safetensors header all parse through the Jackson mapper here (the
+  * agent config, stored threads and favourites and search responses all
+  * parse through the Jackson mapper here (the
   * reference decodes with Flask's `request.json` and `json.load`,
   * storage_manager.py:137-243). It also owns the one string-literal
   * escaper every hand-assembled response uses.

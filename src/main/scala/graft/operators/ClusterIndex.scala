@@ -99,8 +99,8 @@ object ClusterIndex {
     * standard failpoint pattern): set to `"after-gains:<leaf>"` and the
     * bucket rewrite of a dir ending in `<leaf>` throws AFTER the
     * unaffected-bucket gains landed but BEFORE any affected bucket
-    * swapped — the exact duplicate-visible window the ClusterIndexSink
-    * repair path must close. Null in production; specs set and clear. */
+    * swapped — the exact duplicate-visible window a re-run of the same
+    * [[append]] must close. Null in production; specs set and clear. */
   private[graft] val failpoint =
     new java.util.concurrent.atomic.AtomicReference[String](null)
 
@@ -198,9 +198,9 @@ object ClusterIndex {
     * in the index is absorbed IDEMPOTENTLY under the same-id-same-content
     * contract — its stored components are force-touched, so its old rows
     * are rewritten rather than duplicated. That makes a full re-run of the
-    * same batch converge to the same artifact, which is what lets the
-    * streaming sink repair a crash-interrupted fold by simply re-running
-    * it (the ADVICE-identified duplicate-visible window: a crash between
+    * same batch converge to the same artifact, which is what lets a
+    * caller repair a crash-interrupted fold by simply re-running it (the
+    * ADVICE-identified duplicate-visible window: a crash between
     * the gains and swaps of [[rewriteBuckets]] can leave a migrated
     * component visible in two buckets — on re-run both copies' components
     * are touched, so both buckets rewrite and the duplicate dies).
@@ -323,8 +323,8 @@ object ClusterIndex {
     // present in labels is therefore fully applied EXCEPT in the
     // duplicate-visible window a crash inside the labels rewrite leaves
     // (gains landed, swaps pending); re-running the SAME batch closes it
-    // (see the idempotence notes above), which is why the streaming sink
-    // persists each batch durably before folding it. Candidate pairs are
+    // (see the idempotence notes above), so a caller keeps each batch
+    // until its append returns. Candidate pairs are
     // distinct'd, so the duplicate band rows a re-run appends only add
     // join work, and the re-resolved edge rewrite recomputes the same
     // components (pair discovery was checkpointed before the first write
@@ -568,8 +568,8 @@ object ClusterIndex {
       OperatingPoint.bandIndexBuckets(n) != m.bandBuckets
   }
 
-  /** Geometry step-up — the sixth lifecycle operation beside [[write]],
-    * [[append]], [[delete]], [[compact]] and the streaming sink. Appends
+  /** Geometry step-up — the lifecycle operation beside [[write]],
+    * [[append]], [[delete]] and [[compact]]. Appends
     * deliberately pin the STORED `_meta` geometry (hashing consistency),
     * so an index seeded at corpus size n keeps its bucket counts while the
     * corpus grows past them — per-bucket volume drifts off the
@@ -636,8 +636,7 @@ object ClusterIndex {
     * crash window is DUPLICATE-visible, not loss: appends landed but an
     * affected bucket not yet swapped still holds the old copy of a
     * migrated component until the swap completes — closed by re-running
-    * the same append ([[append]]'s force-touch idempotence), which the
-    * streaming sink guarantees via its durable pending batches. Orphaned
+    * the same append ([[append]]'s force-touch idempotence). Orphaned
     * staging/retired dirs from a previous crashed run are cleared on
     * entry (single-writer maintenance, enforced by [[MaintenanceLock]],
     * as with the IVF index). At 100 TB this artifact graduates to a

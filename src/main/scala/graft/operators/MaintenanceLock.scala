@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * than `staleMs` can only belong to a crashed writer: it is broken and
   * re-taken (the artifact protocols already recover from a crashed
   * writer's partial state on the next run — orphan cleanup in
-  * `rewriteBuckets`, pending-batch repair in the streaming sink). A LIVE
+  * `rewriteBuckets`, a re-run of the interrupted append). A LIVE
   * second writer gets an IllegalStateException naming the held stamp.
   *
   * This is an advisory fence, not a distributed lock service: the

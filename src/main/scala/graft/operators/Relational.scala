@@ -696,9 +696,9 @@ object Relational {
       col("event_id"),
       get_json_object(col("props"), "$.k").cast("bigint").as("k"))
 
-  /** Tumbling-window batch equivalent of the streaming agg (§2.10): hourly
-    * event counts — identical result to the streaming window($"ts","1 hour")
-    * since tumbling windows are epoch-aligned. */
+  /** §2.10 tumbling window in batch: hourly event counts —
+    * `window($"ts", "1 hour")` buckets are epoch-aligned, so the hour
+    * start is the truncated timestamp. */
   def hourlyEvents: Q = (s, d) =>
     events(s, d)
       .groupBy(window(col("ts"), "1 hour").getField("start").as("hour"),
@@ -717,9 +717,7 @@ object Relational {
         col("n"), col("total_value"))
 
   /** §2.10 session windows in batch: `session_window(ts, 30 min)` per user —
-    * the streaming-native gap-session operator (Streams.sessionWindows runs
-    * the SAME expression under readStream; StreamsSpec pins batch/stream
-    * parity). Semantics: a session absorbs an event iff its timestamp is
+    * Spark's gap-session operator. Semantics: a session absorbs an event iff its timestamp is
     * strictly inside the previous window's [start, last+gap) extent, so a
     * gap of exactly 30 minutes starts a new session; window end = last
     * event + gap. One shuffle on user_id; session merging is per-key local.

@@ -470,8 +470,8 @@ object TextOps {
   private def saltedBucket(salt: String, n: Int): Column = saltedKey(salt) % n
 
   /** The t6 bucket + quota expressions over any (doc_id, lang) frame —
-    * stateless, so the SAME call works on a `readStream` source unchanged
-    * (curation-on-ingest; StreamsSpec proves parity with the batch query). */
+    * stateless, so the same call filters any arriving batch of documents
+    * exactly as the batch query filters the corpus. */
   private[graft] def mixtureFilter(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     docs
       // md5_prefix(x, 12) IS cast(conv(substring(md5(x),1,12),16,10) as
@@ -1113,9 +1113,8 @@ object TextOps {
 
   /** The h2 scoring over any [[htmlExtractOver]] output — the reusable
     * form: the oracle-gated [[webCuration]] drops `clean_text` for its
-    * hash gate; the streaming crawl-ingest chain
-    * ([[graft.streaming.Streams.crawlIngest]]) keeps it, because the
-    * kept text IS what lands in the corpus. */
+    * hash gate; an ingest chain keeps it, because the kept text IS what
+    * lands in the corpus. */
   private[graft] def webCurationOver(extracted: DataFrame): DataFrame =
     extracted
       .select(col("doc_id"), col("n_kept"), col("clean_len"),
@@ -1359,9 +1358,8 @@ object TextOps {
   }
 
   /** t13's scoring half over any (doc_id, text) frame — stateless w.r.t.
-    * the corpus once the model frames exist, so the SAME call scores a
-    * `readStream` of arriving documents against a static pre-trained
-    * model (curation-on-ingest; StreamsSpec proves parity with batch). */
+    * the corpus once the model frames exist, so the same call scores a
+    * batch of arriving documents against a static pre-trained model. */
   private[graft] def surprisalScored(docs: DataFrame, model: DataFrame,
       oov: DataFrame, keepMicro: Long = 7000000L): DataFrame =
     surprisalAgg(docs, model, oov)

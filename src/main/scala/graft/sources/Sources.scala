@@ -198,9 +198,9 @@ object Sources {
     spark.createDataFrame(rows)
   }
 
-  /** Chunk stream → record iterator, shared by the batch and streaming
-    * readers. Whitespace-only chunks are skipped ONLY at record position
-    * (a record chunk always opens with its version/header line, so a
+  /** Chunk stream → record iterator for [[warc]]. Whitespace-only
+    * chunks are skipped ONLY at record position (a record chunk always
+    * opens with its version/header line, so a
     * blank chunk there can only be stray terminator bytes — e.g. a file
     * truncated right after a delimiter). Inside the Content-Length
     * demand loop the iterator is consumed UNFILTERED: an empty chunk
@@ -221,28 +221,11 @@ object Sources {
     }
   }
 
-  /** One parsed WARC record — the row type the batch and streaming
-    * readers share (field order IS the column order). */
+  /** One parsed WARC record — the row type [[warc]] emits (field order
+    * IS the column order). */
   final case class WarcRec(url: String, warc_type: String,
       content_type: String, http_status: Option[Int], body: String,
       framing_valid: Boolean)
-
-  /** Streaming WARC reader — [[warc]]'s record framing over a landing
-    * DIRECTORY watched by the file stream source: new `.warc` archives
-    * dropped into the dir become new microbatches (the shape a crawler
-    * hand-off actually has — archives land as files, the pipeline tails
-    * the dir). The text source's `lineSep` plays the TextInputFormat
-    * delimiter role and each partition runs the same demand-driven
-    * Content-Length reassembly, so the streamed rows are byte-identical
-    * to a batch [[warc]] read of the same archives. */
-  def warcStream(spark: SparkSession, landingDir: String): DataFrame = {
-    import spark.implicits._
-    spark.readStream
-      .option("lineSep", "\r\n\r\nWARC/")
-      .textFile(landingDir)
-      .mapPartitions(warcRecordIterator)
-      .toDF()
-  }
 
   /** UTF-8 octet count of `s` without materializing the byte array —
     * Content-Length (ISO 28500 §5.1) counts payload OCTETS, and bodies
@@ -671,15 +654,32 @@ object Sources {
       .csv(lines.toDS())
   }
 
-  /** S12: HTML preview sink (utils.py:314, code_executor_api.py:555). */
+  /** S12: HTML preview sink (utils.py:314, code_executor_api.py:555).
+    * Column names and cells are escaped, as pandas' `to_html` does by
+    * default: a value holding markup renders as text. */
   def toHtml(df: DataFrame, n: Int = 20): String = {
     val cols = df.columns
-    val head = cols.map(c => s"<th>$c</th>").mkString
+    val head = cols.map(c => s"<th>${htmlEscape(c)}</th>").mkString
     val rows = df.limit(n).collect().map { r =>
-      val tds = r.toSeq.map(v => s"<td>${Option(v).getOrElse("")}</td>").mkString
+      val tds = r.toSeq.map(v =>
+        s"<td>${htmlEscape(Option(v).fold("")(_.toString))}</td>").mkString
       s"<tr>$tds</tr>"
     }.mkString("\n")
     s"<table border=\"1\"><thead><tr>$head</tr></thead><tbody>\n$rows\n</tbody></table>"
+  }
+
+  /** Escapes `&`, `<`, `>` and `"` so text placed in an HTML element or
+    * attribute renders as written. */
+  def htmlEscape(text: String): String = {
+    val sb = new StringBuilder(text.length)
+    text.foreach {
+      case '&' => sb.append("&amp;")
+      case '<' => sb.append("&lt;")
+      case '>' => sb.append("&gt;")
+      case '"' => sb.append("&quot;")
+      case c => sb.append(c)
+    }
+    sb.toString
   }
 }
 

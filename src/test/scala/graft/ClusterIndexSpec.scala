@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.operators.{ClusterIndex, DedupOps, GraphOps, MaintenanceLock, OperatingPoint, VectorOps}
 
@@ -155,42 +153,6 @@ class ClusterIndexSpec extends SparkSpec {
     novel.foreach { case (id, comp, keep) => assert(comp == id && keep) }
   }
 
-  test("streaming sink folds microbatches into the at-rest index, replay-safe") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    // two paths seeded identically from the base corpus
-    val pathStream = "target/cluster_index_stream"
-    val pathBatch = "target/cluster_index_stream_ref"
-    Seq(pathStream, pathBatch).foreach { p =>
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively()
-      ClusterIndex.write(base, p)
-    }
-
-    // the append batch split into two waves: near-dup chains then novels
-    val rows = appendBatch.select("doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val (wave1, wave2) = rows.partition(_._1 < 700000)
-
-    val sink = new graft.streaming.Streams.ClusterIndexSink(pathStream)
-    val ms = MemoryStream[(Long, String)]
-    val q = sink.attach(ms.toDF().toDF("doc_id", "text"))
-    ms.addData(wave1); q.processAllAvailable()
-    ms.addData(wave2); q.processAllAvailable()
-    // at-least-once redelivery: the whole second wave replays — no-op
-    ms.addData(wave2); q.processAllAvailable()
-    q.stop()
-
-    ClusterIndex.append(appendBatch, pathBatch)
-    assert(labelSet(pathStream) == labelSet(pathBatch),
-      "streamed microbatch appends must equal one batch append")
-    // no duplicate doc_id rows survived the replay
-    val dups = ClusterIndex.labels(spark, pathStream)
-      .groupBy("doc_id").count().filter(col("count") > 1).count()
-    assert(dups == 0)
-  }
-
   test("write persists a corpus-derived layout and the band probe prunes") {
     val path = "target/cluster_index_meta"
     new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
@@ -224,8 +186,8 @@ class ClusterIndexSpec extends SparkSpec {
     ClusterIndex.write(base, path)
     ClusterIndex.append(appendBatch, path)
     val before = labelSet(path)
-    // the full batch again — e.g. the streaming guard missed (sidecar
-    // loss) or an operator retry: force-touch must rewrite, not duplicate
+    // the full batch again — e.g. an operator retry after a lost
+    // acknowledgement: force-touch must rewrite, not duplicate
     val affected = ClusterIndex.append(appendBatch, path)
     assert(affected.nonEmpty, "resubmission must force-touch stored components")
     assert(labelSet(path) == before, "resubmission changed the labels")
@@ -253,10 +215,10 @@ class ClusterIndexSpec extends SparkSpec {
       .localCheckpoint(eager = true)
     assert(migration.count() >= 3)
 
-    val sink = new graft.streaming.Streams.ClusterIndexSink(pathCrash)
     ClusterIndex.failpoint.set("after-gains:labels")
-    try intercept[IllegalStateException] { sink.processBatch(migration, 99L) }
-    finally ClusterIndex.failpoint.set(null)
+    try intercept[IllegalStateException] {
+      ClusterIndex.append(migration, pathCrash)
+    } finally ClusterIndex.failpoint.set(null)
 
     // the partial state is REAL: gains landed, swaps didn't — the base
     // docs are now visible under both their old and migrated components
@@ -264,17 +226,13 @@ class ClusterIndexSpec extends SparkSpec {
       .groupBy("doc_id").count().filter(col("count") > 1).count()
     assert(dupsMid > 0, "crash window did not produce the duplicate state " +
       "this test exists to repair")
-    // and the durable intent survived: pending without marker
-    assert(new java.io.File(s"$pathCrash/_stream_commits/pending-99").exists())
-    assert(!new java.io.File(s"$pathCrash/_stream_commits/batch-99").exists())
 
-    // redelivery of the same batchId repairs: pending re-runs, force-touch
-    // rewrites BOTH copies' buckets, the duplicate dies
-    sink.processBatch(migration, 99L)
+    // re-running the same append repairs: force-touch rewrites BOTH
+    // copies' buckets, the duplicate dies
+    ClusterIndex.append(migration, pathCrash)
     val dupsAfter = ClusterIndex.labels(spark, pathCrash)
       .groupBy("doc_id").count().filter(col("count") > 1).count()
     assert(dupsAfter == 0)
-    assert(!new java.io.File(s"$pathCrash/_stream_commits/pending-99").exists())
     // exact parity with an uncrashed batch append
     ClusterIndex.append(migration, pathRef)
     assert(labelSet(pathCrash) == labelSet(pathRef))
@@ -310,32 +268,6 @@ class ClusterIndexSpec extends SparkSpec {
     intercept[IllegalStateException] {
       VectorOps.writeIvfIndex(e, K = 8, ivfPath)
     }
-  }
-
-  test("streaming guard probes the compact id sidecar, not the label artifact") {
-    val path = "target/cluster_index_guard"
-    new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
-    ClusterIndex.write(base, path)
-    val sink = new graft.streaming.Streams.ClusterIndexSink(path)
-    val novelOnly = appendBatch.filter(col("doc_id") >= 700000)
-    sink.processBatch(novelOnly, 0L)
-    // the file scans' exact root paths, relative to the index: the plan's
-    // text abbreviates a scan's location, so a long checkout path would cut
-    // the directory names off it
-    val index = new java.io.File(path).getAbsolutePath + "/"
-    val scanned = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(
-        sink.freshDocs(appendBatch).queryExecution.executedPlan) {
-      case s: FileSourceScanExec => s.relation.location.rootPaths
-    }.flatten.map(_.toUri.getPath.stripPrefix(index))
-    assert(scanned.contains("_stream_commits/seen_ids"),
-      s"guard does not read the sidecar: $scanned")
-    assert(!scanned.exists(p => p == "labels" || p.startsWith("labels/")),
-      s"guard still scans the label artifact: $scanned")
-    // and the guard actually filters: the already-streamed novels are gone
-    val freshIds = sink.freshDocs(appendBatch).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(freshIds.forall(_ < 700000))
-    assert(freshIds.nonEmpty)
   }
 
   test("append clears orphaned staging dirs and leaves none behind") {

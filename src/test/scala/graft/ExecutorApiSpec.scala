@@ -949,6 +949,20 @@ class ExecutorApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("preview tables escape request text: a markup file name renders as text") {
+    val api = new ExecutorApi(new EngineSession(spark))
+    val port = api.start()
+    try {
+      val (c, b) = call(port, "/get_dataset_preview",
+        Some("""{"file_path":"x<script>.csv"}"""))
+      assert(c == 200 && b.contains("x&lt;script&gt;.csv") &&
+        !b.contains("<script>"), b)
+      val (_, hs) = call(port, "/file_utils/compute_aux_dataset_sample",
+        Some("""{"file_paths":["x<script>.csv"]}"""))
+      assert(hs.contains("<th>Error</th>") && !hs.contains("<script>"), hs)
+    } finally api.stop()
+  }
+
   test("concurrent /query chains log under distinct chain ids") {
     val replies = Map(
       "expert_selector" ->

@@ -435,55 +435,6 @@ class ScaleOpsSpec extends SparkSpec {
       afterRetrain.toString)
   }
 
-  test("streaming IVF sink appends exactly once and repairs crashed folds") {
-    import graft.operators.VectorOps
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val e = VectorOps.vecsCheckpointed(spark, sf)
-    val path = "target/ivf_stream"
-    val pathRef = "target/ivf_stream_ref"
-    Seq(path, pathRef).foreach(p =>
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())
-    val seed = e.filter(col("vec_id") < 400)
-    VectorOps.writeIvfIndexQ8(seed, K = 8, path)
-    VectorOps.writeIvfIndexQ8(seed, K = 8, pathRef)
-
-    // streamed waves vs one batch append, with a full redelivery replay
-    val waves = e.filter(col("vec_id") >= 400 && col("vec_id") < 480)
-      .select("vec_id", "v")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    val (wave1, wave2) = waves.partition(_._1 < 440)
-    val sink = new graft.streaming.Streams.IvfIndexSink(path)
-    val ms = MemoryStream[(Long, Seq[Double])]
-    val q = sink.attach(ms.toDF().toDF("vec_id", "v"))
-    ms.addData(wave1); q.processAllAvailable()
-    ms.addData(wave2); q.processAllAvailable()
-    ms.addData(wave2); q.processAllAvailable() // at-least-once redelivery
-    q.stop()
-    VectorOps.appendToIvfIndex(
-      e.filter(col("vec_id") >= 400 && col("vec_id") < 480)
-        .select("vec_id", "v"), pathRef)
-    def ids(p: String) = spark.read.parquet(s"$p/index")
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(ids(path).sorted == ids(pathRef).sorted,
-      "streamed appends must equal one batch append")
-    assert(ids(path).distinct.length == ids(path).length, "duplicate rows")
-
-    // crashed fold: pending landed and PART of the append did, no marker —
-    // the next entry must delete the partial rows and re-fold exactly
-    val crash = e.filter(col("vec_id") >= 480 && col("vec_id") < 500)
-      .select("vec_id", "v").localCheckpoint(eager = true)
-    crash.write.parquet(s"$path/_stream_commits/pending-99")
-    VectorOps.appendToIvfIndex(crash.limit(7), path) // the partial prefix
-    sink.processBatch(crash, 99L) // entry repair, then marker short-circuit
-    val streamed = spark.read.parquet(s"$path/index")
-      .filter(col("vec_id") >= 480 && col("vec_id") < 500)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(streamed.length == 20 && streamed.distinct.length == 20,
-      s"crash repair left ${streamed.length} rows (${streamed.distinct.length} distinct)")
-  }
-
   test("IVF retrain re-centers drifted cells and grows K toward sqrt(n)") {
     import graft.operators.VectorOps
     val e = VectorOps.vecsCheckpointed(spark, sf)

@@ -108,6 +108,11 @@ class SourcesSpec extends SparkSpec {
   test("S12 html preview renders header and rows") {
     val html = Sources.toHtml(Seq((1, "a")).toDF("k", "v"))
     assert(html.contains("<th>k</th>") && html.contains("<td>a</td>"))
+    // markup in a header or a cell renders as text, as pandas' to_html does
+    val marked = Sources.toHtml(Seq((1, "<b>&x")).toDF("k", "<b>&x"))
+    assert(marked.contains("<th>&lt;b&gt;&amp;x</th>") &&
+      marked.contains("<td>&lt;b&gt;&amp;x</td>") && !marked.contains("<b>"),
+      marked)
   }
 
   test("jsonl: sink/source roundtrip, schema read without inference, corrupt lines visible") {

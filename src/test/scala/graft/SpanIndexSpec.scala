@@ -89,6 +89,16 @@ class SpanIndexSpec extends SparkSpec {
     // re-append of an applied batch: guard skips every id, nothing changes
     assert(SpanIndex.append(half2, incr) == 0L)
     assert(snapshot(s"$incr/grams") ++ snapshot(s"$incr/docs") == after)
+    // an appended doc's text is corpus-known to the next batch's scrub
+    import spark.implicits._
+    val known = half2.filter(length(col("text")) >= 200)
+      .select("text").head().getString(0)
+    val (nCut, clean) = SpanIndex.probeScrub(
+        Seq((900003L, s"fresh opening words $known and a fresh tail"))
+          .toDF("doc_id", "text"), incr)
+      .collect().map(r => (r.getInt(1), r.getString(3))).head
+    assert(nCut >= 1 && !clean.contains(known.substring(40, 90)),
+      s"appended text survived the scrub: $clean")
   }
 
   test("probeScrub: cuts corpus-known spans from new docs, probe prunes buckets") {
@@ -237,98 +247,6 @@ class SpanIndexSpec extends SparkSpec {
     assert(storedShared(path) == want)
   }
 
-  test("scrub-ingest sink: later waves lose earlier waves' spans; replay reuses scrub output") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    val idx = fresh("target/span_scrub_ingest_idx")
-    val out = fresh("target/span_scrub_ingest_out")
-    val rnd = new scala.util.Random(23)
-    def t(n: Int) = (0 until n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    val boiler = t(300)
-    // seed: an index must exist before the sink attaches
-    SpanIndex.write(Seq((1L, t(200) + " " + boiler)).toDF("doc_id", "text"),
-      idx)
-
-    val sink = new graft.streaming.Streams.ScrubIngestSink(idx, out)
-    val ms = MemoryStream[(Long, String)]
-    val q = sink.attach(ms.toDF().toDF("doc_id", "text"))
-    // wave 1: a novel doc AND a doc carrying the seeded boiler
-    val w1Novel = t(250)
-    ms.addData(Seq((10L, w1Novel), (11L, t(90) + " " + boiler + " tail")))
-    q.processAllAvailable()
-    // wave 2: a doc carrying wave 1's novel text — the index has folded
-    // wave 1, so the ingest scrub now cuts it
-    ms.addData(Seq((20L, t(70) + " " + w1Novel + " more")))
-    q.processAllAvailable()
-    ms.addData(Seq((20L, t(70) + " " + w1Novel + " more"))) // redelivery
-    q.processAllAvailable()
-    q.stop()
-
-    val cleaned = sink.cleaned(spark).collect()
-      .map(r => r.getLong(0) -> (r.getInt(1), r.getString(3))).toMap
-    assert(cleaned.keySet == Set(10L, 11L, 20L))
-    // wave 1: novel doc untouched; seeded-boiler carrier scrubbed
-    assert(cleaned(10L)._1 == 0 && cleaned(10L)._2 == w1Novel)
-    assert(cleaned(11L)._1 >= 1 &&
-      !cleaned(11L)._2.contains(boiler.substring(40, 90)))
-    // wave 2: wave 1's text is now corpus-known and cut
-    assert(cleaned(20L)._1 >= 1 &&
-      !cleaned(20L)._2.contains(w1Novel.substring(40, 90)))
-    // the index itself holds all four docs (seed doc 1 + docs 10, 11, 20)
-    assert(SpanIndex.docs(spark, idx).count() == 4)
-
-    // crash-replay determinism: simulate wave 2's fold crashing AFTER its
-    // scrub output and append landed but BEFORE the marker — the repair
-    // must NOT re-scrub (the batch's own grams are in the index now, so a
-    // fresh scrub would cut differently); it must reuse the written output
-    val fs = new org.apache.hadoop.fs.Path(s"$idx/_stream_commits")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq((20L, t(70) + " " + w1Novel + " more")).toDF("doc_id", "text")
-      .write.mode("overwrite")
-      .parquet(s"$idx/_stream_commits/pending-1")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$idx/_stream_commits/batch-1"),
-      false)
-    sink.processBatch(Seq.empty[(Long, String)].toDF("doc_id", "text"), 99L)
-    val after = sink.cleaned(spark).collect()
-      .map(r => r.getLong(0) -> (r.getInt(1), r.getString(3))).toMap
-    assert(after == cleaned, "replay re-scrubbed an already-folded batch")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$idx/_stream_commits/batch-1")), "repair did not re-commit")
-  }
-
-  test("streaming sink: waves equal one batch append; redelivery is a no-op") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    val half1 = corpus.filter(col("doc_id") % 2 === 0)
-    val streamed = fresh("target/span_index_stream")
-    val ref = fresh("target/span_index_stream_ref")
-    Seq(streamed, ref).foreach(p =>
-      SpanIndex.write(half1, p, countEstimate = Some(corpus.count())))
-
-    val rows = corpus.filter(col("doc_id") % 2 === 1)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val (wave1, wave2) = rows.splitAt(rows.length / 2)
-
-    val sink = new graft.streaming.Streams.SpanIndexSink(streamed)
-    val ms = MemoryStream[(Long, String)]
-    val q = sink.attach(ms.toDF().toDF("doc_id", "text"))
-    ms.addData(wave1); q.processAllAvailable()
-    ms.addData(wave2); q.processAllAvailable()
-    ms.addData(wave2); q.processAllAvailable() // at-least-once redelivery
-    q.stop()
-
-    SpanIndex.append(corpus.filter(col("doc_id") % 2 === 1), ref)
-    assert(storedShared(streamed) == storedShared(ref))
-    // the redelivered wave left no duplicate commit rows
-    val dups = SpanIndex.docs(spark, streamed)
-      .groupBy("doc_id").count().filter(col("count") > 1).count()
-    assert(dups == 0)
-  }
-
   test("doc_id contract: int ids route like longs; string ids rejected loudly") {
     import spark.implicits._
     val path = fresh("target/span_index_idtype")
@@ -441,75 +359,5 @@ class SpanIndexSpec extends SparkSpec {
     assert(SpanIndex.meta(spark, path2).gramBuckets == nm.gramBuckets)
     assert(SpanIndex.docs(spark, path2).filter(col("doc_id") === 850L)
       .count() == 1)
-  }
-
-  test("cleanedCorpus: empty dir yields empty frame; uncommitted batch dirs excluded") {
-    import graft.streaming.Streams
-    import spark.implicits._
-    val out = fresh("target/span_cleaned_view")
-    // no batch has ever committed: empty frame with the scrub schema,
-    // not a path-not-found error
-    val empty = Streams.cleanedCorpus(spark, out)
-    assert(empty.columns.toSeq ==
-      Seq("doc_id", "n_cut_spans", "chars_cut", "clean_text"))
-    assert(empty.count() == 0)
-    // one committed batch + one crashed batch (no _SUCCESS): the view
-    // serves exactly the committed rows
-    val good = Seq((1L, 0, 0L, "kept")).toDF(
-      "doc_id", "n_cut_spans", "chars_cut", "clean_text")
-    good.write.parquet(s"$out/batch-0")
-    good.withColumn("doc_id", lit(2L)).write.parquet(s"$out/batch-1")
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/batch-1/_SUCCESS"), false)
-    val got = Streams.cleanedCorpus(spark, out).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(got == Set(1L), "crashed batch leaked into the consumer view")
-  }
-
-  test("compactCleaned: folds committed batch dirs, duplicate-free through crash windows") {
-    import graft.streaming.Streams
-    import spark.implicits._
-    val out = fresh("target/span_cleaned_compact")
-    def mk(id: Long, dir: String): Unit =
-      Seq((id, 0, 0L, s"doc-$id")).toDF(
-        "doc_id", "n_cut_spans", "chars_cut", "clean_text")
-        .write.parquet(s"$out/$dir")
-    (0L to 2L).foreach(i => mk(i, s"batch-$i"))
-    mk(99L, "batch-99") // crashed batch: no _SUCCESS
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/batch-99/_SUCCESS"), false)
-    def view(): Set[Long] = Streams.cleanedCorpus(spark, out)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-
-    assert(view() == Set(0L, 1L, 2L))
-    // consolidation absorbs exactly the committed dirs; the view is
-    // row-identical and the dir count collapses to one (+ the crashed dir)
-    assert(Streams.compactCleaned(spark, out) == 3)
-    assert(view() == Set(0L, 1L, 2L))
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(out))
-      .filter(_.isDirectory).map(_.getPath.getName).toSet
-    assert(dirs.count(_.startsWith("batch-c")) == 1, dirs.toString)
-    assert(!dirs.contains("batch-0") && dirs.contains("batch-99"), dirs)
-
-    // crash window: a consolidation landed (manifest committed) but its
-    // source dirs were not yet deleted — the manifest excludes them, so
-    // the view serves NO duplicate rows
-    mk(3L, "batch-3")
-    val before = Streams.cleanedCorpus(spark, out).count()
-    assert(before == 4)
-    assert(Streams.compactCleaned(spark, out) == 2) // c-dir + batch-3
-    // resurrect an absorbed source as the crash would leave it
-    mk(3L, "batch-3")
-    val rows = Streams.cleanedCorpus(spark, out)
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(rows.sorted == Seq(0L, 1L, 2L, 3L),
-      s"duplicate rows through the crash window: $rows")
-    // the next consolidation sweeps the leftover without re-absorbing it
-    Streams.compactCleaned(spark, out, minDirs = 99)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$out/batch-3")),
-      "janitor did not sweep the absorbed leftover")
-    assert(view() == Set(0L, 1L, 2L, 3L))
   }
 }

@@ -1,25 +1,20 @@
 package graft.lifecycle
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import scala.util.{Random, Try}
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.lifecycle.TransformerEmbedder.SafeTensors
-
-/** Generative coverage for the safetensors container and the JSON reader
-  * its header and `config.json` parse through ([[Json.parse]], the
+/** Generative coverage for the JSON reader every request body, provider
+  * reply, config and stored file parses through ([[Json.parse]], the
   * engine's one Jackson mapper, strict about trailing content). The
   * generator builds the document AST first (the ground truth), serializes
   * it with an INDEPENDENT writer that sprinkles the freedoms the format
   * allows (whitespace between tokens, short vs `\\uXXXX` escapes, hex case,
-  * `\\/`, header space-padding, tensor order), and requires the parser to
-  * recover the AST exactly — the same build-the-truth-first discipline
-  * that found real holes in the WARC, TTL, SQL-gate, multipart, and MJPEG
-  * parsers.
+  * `\\/`), and requires the parser to recover the AST exactly — the same
+  * build-the-truth-first discipline that found real holes in the WARC,
+  * TTL, SQL-gate, multipart, and MJPEG parsers.
   *
   * Properties:
   *  1. JSON round-trip: parse(write(ast)) == ast with TYPE fidelity
@@ -30,12 +25,6 @@ import graft.lifecycle.TransformerEmbedder.SafeTensors
   *  2. prefix loudness: every strict prefix of an object-rooted
   *     document fails the parse — nothing truncated ever parses
   *     quietly (the root's closing brace is its last byte).
-  *  3. safetensors round-trip: every planted tensor comes back
-  *     bit-identical (shape, offsets, F32 payload) regardless of
-  *     tensor order, `__metadata__`, unicode names, or header padding.
-  *  4. safetensors truncation: for ANY byte-prefix of a valid
-  *     container, each tensor read either throws or returns exactly
-  *     the planted floats — corruption is loud, never silent.
   */
 class MiniJsonPropSpec extends AnyFunSuite {
 
@@ -182,96 +171,4 @@ class MiniJsonPropSpec extends AnyFunSuite {
         Try(Json.parse(doc.substring(0, cut))).isFailure)
     }, n = 80)
   }
-
-  // ---- properties: SafeTensors ----------------------------------------------
-
-  import MiniJsonPropSpec.PlantedTensor
-
-  private val tensorName: Gen[String] = for {
-    base <- Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, Gen.frequency(
-      8 -> Gen.alphaNumStr.map(_.take(6)),
-      1 -> Gen.oneOf("层", "k.v", "a b", "q\"x", "e\\y"))))
-  } yield base.mkString(".")
-
-  private val genTensor: Gen[PlantedTensor] = for {
-    name  <- tensorName
-    rank  <- Gen.choose(0, 3)
-    shape <- Gen.listOfN(rank, Gen.choose(1, 4))
-    seed  <- genSeed
-  } yield {
-    val n = shape.product
-    val rnd = new Random(seed)
-    // finite bit patterns only: FloatBuffer round-trips those exactly,
-    // while NaN payloads may legally canonicalize in intBitsToFloat
-    val bits = Array.fill(n)(
-      java.lang.Float.floatToRawIntBits(
-        (rnd.nextDouble() * 2e8 - 1e8).toFloat))
-    PlantedTensor(name, shape, bits)
-  }
-
-  private val genContainer: Gen[(Array[Byte], List[PlantedTensor])] = for {
-    k       <- Gen.choose(1, 5)
-    raw     <- Gen.listOfN(k, genTensor)
-    meta    <- Gen.option(genObj(0).map(_.map { case (mk, _) => mk -> "v" }))
-    pad     <- Gen.choose(0, 7)
-    seed    <- genSeed
-  } yield {
-    val ts = raw.groupBy(_.name).map(_._2.head).toList // distinct names
-    val rnd = new Random(seed)
-    var cur = 0L
-    val entries: Map[String, Any] = ts.map { t =>
-      val sz = t.bits.length * 4L
-      val e: (String, Any) = t.name -> Map[String, Any](
-        "dtype" -> "F32",
-        "shape" -> t.shape.map(_.toLong: Any),
-        "data_offsets" -> Seq[Any](cur, cur + sz))
-      cur += sz
-      e
-    }.toMap ++ meta.map(m => "__metadata__" -> (m: Any)).toMap
-    val headerBytes =
-      (write(entries, rnd) + (" " * pad)).getBytes("UTF-8")
-    val buf = ByteBuffer.allocate(8 + headerBytes.length + cur.toInt)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    buf.putLong(headerBytes.length.toLong).put(headerBytes)
-    ts.foreach(_.bits.foreach(b => buf.putInt(b)))
-    (buf.array(), ts)
-  }
-
-  test("safetensors round-trip: every planted tensor reads back bit-exact") {
-    holds(Prop.forAll(genContainer) { case (bytes, planted) =>
-      val st = new SafeTensors(bytes)
-      st.tensors.keySet == planted.map(_.name).toSet &&
-        planted.forall { t =>
-          val got = st(t.name)
-          st.tensors(t.name).shape == t.shape &&
-            got.length == t.bits.length &&
-            got.indices.forall(i =>
-              java.lang.Float.floatToRawIntBits(got(i)) == t.bits(i))
-        }
-    })
-  }
-
-  test("safetensors truncation: a cut anywhere is loud or exact, never wrong") {
-    holds(Prop.forAll(genContainer, genSeed) { case ((bytes, planted), seed) =>
-      val rnd = new Random(seed)
-      val cuts = (Seq(0, 4, 8, 9, bytes.length - 1) ++
-        Array.fill(12)(rnd.nextInt(bytes.length))).filter(_ < bytes.length)
-      cuts.forall { cut =>
-        val prefix = java.util.Arrays.copyOf(bytes, cut)
-        planted.forall { t =>
-          Try(new SafeTensors(prefix)).flatMap(st => Try(st(t.name))) match {
-            case scala.util.Failure(_) => true
-            case scala.util.Success(got) =>
-              got.length == t.bits.length && got.indices.forall(i =>
-                java.lang.Float.floatToRawIntBits(got(i)) == t.bits(i))
-          }
-        }
-      }
-    }, n = 60)
-  }
-}
-
-private object MiniJsonPropSpec {
-  final case class PlantedTensor(name: String, shape: Seq[Int],
-      bits: Array[Int])
 }
