@@ -157,9 +157,9 @@ object Bench {
   // only ~1-3 CORE-seconds of compute against ~0.7 s of fixed job-chain
   // latency, so 8c/32c still read ≈1.0 — the ratio needs compute ≫
   // fixed. The t13 row is the SCORING half only (model trained on the
-  // base corpus, one SurprisalSum map over the expansion): the full
-  // auto operator chains ~6 sequential jobs whose launch latency
-  // swamps the signal at any factor.
+  // base corpus, one SurprisalSum map over the expansion): building the
+  // model inside the row would add its sequential jobs, whose launch
+  // latency swamps the signal at any factor.
   private[graft] val scaleNamed: Seq[(String, (SparkSession, String) =>
       org.apache.spark.sql.DataFrame)] = Seq(
     "x300_c3_quality_lr" ->

@@ -7,11 +7,8 @@ package graft
   * without paying a full Bench sweep.
   */
 object QueryProbe {
-  /** Probe-only names: AUTO/library forms that are not gated queries but
-    * need isolated pricing (the BASELINE cost rows). */
-  private val extras: Map[String, Q.Q] = Map(
-    "t13_perplexity_auto" -> graft.operators.TextOps.perplexityAutoQ) ++
-    Bench.scaleNamed.toMap // the ×30 scale rows, for isolated 8c/32c A/Bs
+  /** Probe-only names: the ×300 scale rows, for isolated 8c/32c A/Bs. */
+  private val extras: Map[String, Q.Q] = Bench.scaleNamed.toMap
 
   def main(args: Array[String]): Unit = {
     val name = args(0)

@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** 128-bit random-hyperplane sign sketch — the candidate-gating half of the
-  * HIGH-SIM blocking operating point ([[graft.operators.VectorOps
-  * .nearDupPairsHighSim]]).
+  * sketch-gated near-dup ([[graft.operators.VectorOps
+  * .nearDupPairsHighSimOver]], the v12 query's core).
   *
   * Why a sketch: a recall target at the dedup band (cos ≥ 0.8) needs the
   * band count to GROW with corpus size (per-band hit rate p^planes falls as

@@ -54,7 +54,6 @@ object ScalarExtras {
     }
   }
 
-  /** F15: base64 column helpers (code_executor.py:150-151) — built-ins. */
+  /** F15: base64 column helper (code_executor.py:150-151) — a built-in. */
   def b64(c: Column): Column = base64(c.cast("binary"))
-  def unb64(c: Column): Column = unbase64(c).cast("string")
 }

@@ -106,9 +106,8 @@ object TopCells {
   /** round6(cosine) of an ArrayData row vector against one centroid —
     * the shared rank kernel: the same accumulation loop as
     * [[CosineSimilarity]] (left-to-right doubles, min-length, zero-norm
-    * → 0.0), then [[Round6.round6]]. Shared by [[topk]] and
-    * [[HierTopCells]] so the flat and hierarchical ranks cannot drift. */
-  def cosRound6(v: ArrayData, c: Array[Double]): Double = {
+    * → 0.0), then [[Round6.round6]]. */
+  private def cosRound6(v: ArrayData, c: Array[Double]): Double = {
     val n = math.min(v.numElements(), c.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {

@@ -298,7 +298,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
       // pass); .json = a standard multi-line DOCUMENT — feeding it to
       // the line reader would silently bind an all-corrupt table
       else if (fmt.contains("jsonl") || path.endsWith(".jsonl"))
-        Sources.jsonlAuto(session.spark, path)
+        Sources.jsonlProbed(session.spark, path)
       else if (fmt.contains("json") || path.endsWith(".json"))
         Sources.jsonDoc(session.spark, path)
       // raw-crawl archives bind as the records table (url, warc_type,

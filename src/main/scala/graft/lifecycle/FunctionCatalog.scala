@@ -32,10 +32,6 @@ object FunctionCatalog {
   val semicirclesToDegrees: Column => Column =
     c => c * (180.0 / math.pow(2, 31))
 
-  /** duration seconds between two timestamps (default_prompts.yaml:45-47). */
-  def durationSeconds(start: Column, end: Column): Column =
-    unix_timestamp(end.cast("timestamp")) - unix_timestamp(start.cast("timestamp"))
-
   /** The reference's `compute_dataframe_index` (default_prompts.yaml:
     * 1244-1289): per-activity multi-agg index — generalized to (groupKey,
     * time, measure) so it applies to any activity-shaped table. */

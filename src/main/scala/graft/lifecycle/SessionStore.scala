@@ -10,8 +10,7 @@ import scala.jdk.CollectionConverters._
   * messages/message_manager.py:41-154 QA pairs + windowed eviction).
   */
 final class SessionStore(root: Path) {
-
-  final case class Message(role: String, content: String)
+  import SessionStore.Message
 
   /** Context window: 4 conversation pairs → at most 2*4-1 retained beyond
     * the system message (bambooai.py:18, message_manager.py:8,128-138). */
@@ -79,4 +78,9 @@ final class SessionStore(root: Path) {
     val hadFile = Files.deleteIfExists(p)
     hadLive || hadFile
   }
+}
+
+object SessionStore {
+  /** One chat turn; a single type shared by every store. */
+  final case class Message(role: String, content: String)
 }

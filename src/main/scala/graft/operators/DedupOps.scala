@@ -618,23 +618,8 @@ object DedupOps {
     * fingerprint (6 chunks; the pigeonhole guarantees any pair within
     * Hamming distance 5 shares an intact chunk), then verify
     * bit_count(xor) ≤ 5 on candidates only — index-then-verify entirely in
-    * integer ops, the same shape as the MinHash/LSH pipeline. The
-    * pigeonhole is width-independent, so [[simhashPairsAuto]] widens the
-    * chunks on a larger corpus without losing the guarantee. */
+    * integer ops, the same shape as the MinHash/LSH pipeline. */
   def simhashPairs: Q = (s, d) => simhashPairsOver(plantedCorpus(s, d), 8)
-
-  /** Library entrypoint: SimHash near-dup pairs over any (doc_id, text)
-    * frame with the chunk width derived from corpus size
-    * ([[OperatingPoint.simhashChunkBits]]: +1 bit per doubling over the
-    * sf0.1 anchor, capped at the 60-bit fingerprint the BIGINT word-hash
-    * fold supports). Pass `countEstimate` to skip the cheap count(). The
-    * oracle-gated [[simhashPairs]] pins 8-bit chunks for the static
-    * DuckDB oracle. */
-  def simhashPairsAuto(df: DataFrame,
-      countEstimate: Option[Long] = None): DataFrame = {
-    val n = countEstimate.getOrElse(df.count())
-    simhashPairsOver(df, OperatingPoint.simhashChunkBits(n))
-  }
 
   /** Core of the chunk-blocked SimHash pair search over (doc_id, text). */
   private[graft] def simhashPairsOver(df: DataFrame,
@@ -657,84 +642,6 @@ object DedupOps {
         expr("bit_count(a.simhash ^ b.simhash)").cast("int").as("hamming"))
       .filter(col("hamming") <= 5)
       .distinct()
-  }
-
-  // ---- wide-fingerprint SimHash (the sixth-decade variant, round 14) ----
-
-  /** IDF-weighted WIDE SimHash: the fingerprint spans TWO 63-bit BIGINT
-    * words (6 chunks of `chunkBits` ≤ 21 bits, chunks 0-2 in word 0,
-    * 3-5 in word 1), lifting [[OperatingPoint.simhashChunkBits]]'s 10-bit
-    * cap — the md5-hex fold behind the 48/60-bit form tops out at one
-    * BIGINT (15 hex digits), so past ~500k docs its chunk buckets stop
-    * growing and the chunk self-join goes quadratic (measured at ×1000:
-    * ~9e10 candidates, BASELINE §5 r13). Word hashes here are xxhash64:
-    * word 0 votes with `xxhash64(word)`, word 1 with `xxhash64(word, 1L)`
-    * (Spark chains multi-argument xxhash64 as seed-threading, so the
-    * second is a full avalanche re-mix of the first — the standard
-    * double-hash expansion), each masked to its word's vote width. The
-    * IDF weighting, 6-chunk pigeonhole (any Hamming ≤ 5 pair shares an
-    * intact chunk — width-independent), candidate verify, and dedup are
-    * EXACTLY [[simhashPairsOver]]'s.
-    *
-    * This is a NAMED VARIANT, not a knob on the pinned form: xxhash64 has
-    * no DuckDB equivalent, so its cross-engine gate is the plain-JVM
-    * IndependentVerify recompute (`dd6w_auto`, ×10 and ×1000)
-    * plus the DedupOpsSpec recall gate against the planted corpus; the
-    * md5-fold [[simhashPairs]] stays as the hash-gated oracle anchor. */
-  private[graft] def wideSimhash(df: DataFrame, chunkBits: Int): DataFrame = {
-    val bitsPerWord = 3 * chunkBits
-    val mask = (1L << bitsPerWord) - 1
-    val words = df
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-    val n = df.agg(count(lit(1)).as("nd"))
-    val dfreq = df
-      .select(explode(array_distinct(split(col("text"), " "))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("df_"))
-    words.join(broadcast(dfreq), "word").crossJoin(broadcast(n))
-      .select(col("doc_id"),
-        expr(s"xxhash64(word) & ${mask}L").as("wh0"),
-        expr(s"xxhash64(word, cast(1 as bigint)) & ${mask}L").as("wh1"),
-        expr("CASE WHEN df_ * 20 <= nd THEN 4 WHEN df_ * 5 <= nd THEN 2 ELSE 1 END")
-          .as("w"))
-      .groupBy("doc_id").agg(
-        SimHashAgg.of(col("wh0"), col("w"), bitsPerWord).as("fp0"),
-        SimHashAgg.of(col("wh1"), col("w"), bitsPerWord).as("fp1"))
-  }
-
-  /** Chunk-blocked near-dup pairs over the wide fingerprint — the
-    * [[simhashPairsOver]] pipeline with two-word chunk extraction and a
-    * two-word Hamming verify. Output (a_id, b_id, hamming), same contract. */
-  private[graft] def simhashPairsWide(df: DataFrame,
-      chunkBits: Int): DataFrame = {
-    require(chunkBits >= 8 && chunkBits <= 21,
-      s"chunkBits=$chunkBits outside [8,21] (6 chunks across two 63-bit words)")
-    val mask = (1L << chunkBits) - 1
-    val sh = wideSimhash(df, chunkBits).localCheckpoint(eager = false)
-    val chunks = sh.select(col("doc_id"), col("fp0"), col("fp1"),
-      posexplode(expr(
-        s"""transform(sequence(0, 5), c ->
-           |  shiftright(if(c < 3, fp0, fp1), (c % 3) * $chunkBits) & ${mask}L)"""
-          .stripMargin))
-        .as(Seq("c", "ck")))
-    chunks.as("a").join(chunks.as("b"),
-        col("a.c") === col("b.c") && col("a.ck") === col("b.ck") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        (expr("bit_count(a.fp0 ^ b.fp0)") + expr("bit_count(a.fp1 ^ b.fp1)"))
-          .cast("int").as("hamming"))
-      .filter(col("hamming") <= 5)
-      .distinct()
-  }
-
-  /** Library entrypoint: wide SimHash near-dup pairs with the chunk width
-    * derived from corpus size ([[OperatingPoint.simhashChunkBitsWide]] —
-    * same +1-bit-per-doubling rule as the narrow form, ceiling 21 instead
-    * of 10, so chunk buckets keep shrinking through the sixth decade:
-    * 18-bit chunks at 5M docs ≈ 20 docs per (chunk, key) bucket). */
-  def simhashPairsWideAuto(df: DataFrame,
-      countEstimate: Option[Long] = None): DataFrame = {
-    val n = countEstimate.getOrElse(df.count())
-    simhashPairsWide(df, OperatingPoint.simhashChunkBitsWide(n))
   }
 
   /** DuckDB CTE chain ending in sh(doc_id, simhash) over `source`, matching

@@ -156,13 +156,6 @@ object Profile {
     s"DF Head:\n${renderTable(slice)}\n\nDF Summary:\n$summary"
   }
 
-  /** I3: get_dataframe_columns (utils.py:190-203). */
-  def columnsString(df: DataFrame): String = df.columns.mkString(", ")
-
-  /** I3b: columns with dtypes (code_executor_api.py:356-375). */
-  def columnsWithTypes(df: DataFrame): String =
-    df.dtypes.map { case (n, t) => s"$n: $t" }.mkString(", ")
-
   /** I4: computeDataframeSample — head(100) preview (utils.py:252-271). */
   def sample(df: DataFrame, n: Int = 100): DataFrame = df.limit(n)
 

@@ -165,15 +165,7 @@ object RankDedup {
     * Identical vectors give sim 1.0 ≥ 0.94 against exactly their source
     * (random cross-pairs stay below 0.94 — verified ≤ 0.51 in the fixture),
     * so every replace/discard/insert branch is exercised deterministically. */
-  def rankUpsertQuery: Q = rankUpsertQueryPlanes(PlanesPerBand)
-
-  /** [[rankUpsertQuery]] at an explicit bucket-sparsity setting —
-    * the scaled operating point. planes ≤ 0 = AUTO: the embedding
-    * dim is then MEASURED from the fixture (one `size(v)` head job, the
-    * SixthDecade discipline) so the library and IndependentVerify derive
-    * the same dim-aware plane count on any fixture arm; the pinned path
-    * keeps the literal 64 of its static oracle's fixture. */
-  private[graft] def rankUpsertQueryPlanes(planes: Int): Q = (s, d) => {
+  def rankUpsertQuery: Q = (s, d) => {
     val e = embeddings(s, d).select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
     val store = e.select(col("vec_id").as("id"), col("v"),
@@ -181,8 +173,7 @@ object RankDedup {
     val cand = e.filter(col("vec_id") % 3 === 0)
       .select((col("vec_id") + 10000).as("id"), col("v"),
         ((col("vec_id") + 5) % 11).as("rank"))
-    val dim = if (planes <= 0) e.select(size(col("v"))).head.getInt(0) else 64
-    upsert(store, cand, dim, planes)
+    upsert(store, cand, 64, PlanesPerBand)
   }
 
   val oracle: String =

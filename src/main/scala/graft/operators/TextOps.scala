@@ -492,41 +492,21 @@ object TextOps {
     * Scale shape: the eval set's distinct n-gram table is SMALL by nature
     * (benchmarks are thousands of documents, not billions), so the check
     * is a broadcast hash probe against every corpus n-gram — map-side, no
-    * corpus shuffle; only the per-doc hit count aggregates. The gram
-    * REPRESENTATION is the corpus-derived knob: the oracle-gated query
-    * pins the string form (clear, exactly mirrorable in DuckDB);
-    * [[decontaminationAuto]] switches to the dd-family 48-bit md5 fold
-    * above [[OperatingPoint.hashDecontaminationGrams]], shrinking the
-    * broadcast (8 bytes vs ~50-byte strings) and making every probe
-    * comparison a long-equality instead of a string compare. */
+    * corpus shuffle; only the per-doc hit count aggregates. Grams are
+    * compared as strings, which DuckDB mirrors exactly. */
   def decontamination: Q = (s, d) =>
-    decontaminationOver(documents(s, d), hashGrams = false)
+    decontaminationOver(documents(s, d))
 
-  /** Library entrypoint with the gram representation derived from corpus
-    * size. The 48-bit fold's collision odds are birthday-bounded (~1e-4 at
-    * 1M distinct eval grams) and a collision can only FLAG an extra doc —
-    * the conservative direction for decontamination. */
-  def decontaminationAuto(corpus: org.apache.spark.sql.DataFrame,
-      countEstimate: Option[Long] = None): org.apache.spark.sql.DataFrame = {
-    val n = countEstimate.getOrElse(corpus.count())
-    decontaminationOver(corpus, OperatingPoint.hashDecontaminationGrams(n))
-  }
-
-  /** Core of t7 over any (doc_id, text) corpus; `hashGrams` selects the
-    * probe representation (identical hit semantics modulo the documented
-    * fold collisions — TextOpsSpec asserts fixture parity). */
-  private[graft] def decontaminationOver(corpus: org.apache.spark.sql.DataFrame,
-      hashGrams: Boolean): org.apache.spark.sql.DataFrame = {
-    // both gram streams run fused (graft.functions.ShingleHashes family):
+  /** Core of t7 over any (doc_id, text) corpus. */
+  private[graft] def decontaminationOver(
+      corpus: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    // the gram stream runs fused (graft.functions.ShingleHashes family):
     // the former transform(sequence/slice/array_join) chain evaluated its
-    // lambdas interpreted per gram, and the hash arm re-parsed md5 hex —
-    // strings/hashes are bit-identical (ShingleHashesSpec)
+    // lambdas interpreted per gram — strings are bit-identical
+    // (ShingleHashesSpec)
     val docs = corpus
       .select(col("doc_id"), split(col("text"), " ").as("words"))
-    val grams = if (hashGrams)
-      docs.select(col("doc_id"),
-        explode(ShingleHashes.grams(col("words"), 8)).as("g"))
-    else docs.select(col("doc_id"),
+    val grams = docs.select(col("doc_id"),
       explode(ShingleHashes.gramStrings(col("words"), 8)).as("g"))
     val bench = grams.filter(col("doc_id") % 97 === 0)
       .select(col("g")).distinct()
@@ -680,31 +660,14 @@ object TextOps {
     * per-doc score groupBy and the final small roll-up — no
     * materialization barrier between stages, so Catalyst pipelines the
     * filters into the scans at any scale. */
-  def curationPipeline: Q = (s, d) =>
-    curationPipelineOver(documents(s, d), derivedKeep = false)
+  def curationPipeline: Q = (s, d) => curationPipelineOver(documents(s, d))
 
-  /** Library entrypoint: c5 with the perplexity keep ceiling
-    * corpus-DERIVED ([[surprisalKeepMicroOf]] — the median-anchored
-    * [[OperatingPoint.surprisalKeepMicro]]). The pinned [[curationPipeline]]
-    * keeps the 7.0 literal so its static DuckDB oracle mirrors the exact
-    * filter; this is the form a shifted-base-rate corpus runs (the ×1000
-    * disjoint-vocab widening drove the literal to keep-nothing — measured
-    * round 13; spec-gated here in PipelineOpsSpec). */
-  def curationPipelineAuto(docs: DataFrame): DataFrame =
-    curationPipelineOver(docs, derivedKeep = true)
-
-  private[graft] def curationPipelineOver(docs: DataFrame,
-      derivedKeep: Boolean): DataFrame = {
+  private[graft] def curationPipelineOver(docs: DataFrame): DataFrame = {
     val (model, oov) = unigramModel(docs)
     val quality = qualityLrOf(docs).filter(col("keep")).select("doc_id")
-    val scoredAgg0 = surprisalAgg(docs.select("doc_id", "text"), model, oov)
-    val scoredAgg =
-      if (derivedKeep) scoredAgg0.localCheckpoint(eager = false) // + quantile
-      else scoredAgg0
     // same integer-quotient keep gate as surprisalScored (tie-proof)
-    val keepMicro = if (derivedKeep) surprisalKeepMicroOf(scoredAgg)
-      else 7000000L
-    val scored = scoredAgg.filter(expr("(-sum_lp) div n_words") <= keepMicro)
+    val scored = surprisalAgg(docs.select("doc_id", "text"), model, oov)
+      .filter(expr("(-sum_lp) div n_words") <= SurprisalKeepMicro)
     val kept = quality.join(scored, "doc_id")
       .join(docs.select("doc_id", "lang"), "doc_id")
     withSplit(kept).groupBy("split", "lang")
@@ -862,28 +825,6 @@ object TextOps {
     * before sharding. */
   def shuffleShard: Q = (s, d) => shuffleShardOver(documents(s, d), shards = 8)
 
-  /** Library entrypoint: shard count derived from the corpus size
-    * ([[graft.operators.OperatingPoint.shuffleShards]] — ~64k docs per
-    * shard in power-of-two steps), so the per-shard rank window and the
-    * loader fleet both scale with the corpus instead of funneling a
-    * grown corpus through a pinned-S window. The oracle-gated
-    * [[shuffleShard]] pins S=8 so the static DuckDB SQL mirrors the
-    * exact blocking structure, the same fixture-pin discipline as the
-    * LSH family.
-    *
-    * Stability contract: shard ROUTING is append-stable only at FIXED S —
-    * re-deriving S after the corpus crosses a pow2 boundary remaps ~half
-    * of all docs (key mod S changes). A pipeline extending a persisted
-    * manifest must pin the S the manifest was written with (pass it via
-    * [[shuffleShardOver]], the `_meta` discipline the at-rest indexes
-    * persist their geometry under) and step S up as a deliberate
-    * re-shard on the rebucket cadence, not implicitly per call. */
-  def shuffleShardAuto(df: DataFrame,
-      countEstimate: Option[Long] = None): DataFrame = {
-    val n = math.max(1L, countEstimate.getOrElse(df.count()))
-    shuffleShardOver(df, OperatingPoint.shuffleShards(n))
-  }
-
   private[graft] def shuffleShardOver(df: DataFrame, shards: Int): DataFrame = {
     df.select(col("doc_id"),
         saltedKey("shuffle42:").as("skey"))
@@ -1005,9 +946,7 @@ object TextOps {
   /** h1 stages 1-3 over any frame with (doc_id, html): payload strip,
     * block segmentation, per-block scoring — everything up to (but not
     * including) the boilerplate filter, ending in the `scored` array of
-    * (clean, links, nw) block structs. Shared by the filter
-    * ([[htmlExtractOver]]) and the corpus block profile ([[h1Profile]])
-    * so the knobs are derived from exactly the blocks they gate. */
+    * (clean, links, nw) block structs that [[htmlExtractOver]] filters. */
   private[graft] def blockScored(html: DataFrame): DataFrame = {
     val entityDecode = (x: String) =>
       s"""replace(replace(replace(replace(replace(replace($x,
@@ -1039,9 +978,8 @@ object TextOps {
     * synthesized fixture, the composed web-curation query feeds its
     * output into the t3 scoring pieces, and the same narrow expressions
     * run unchanged under Structured Streaming (stateless projection).
-    * The default knobs are the anchor operating point the oracles pin
-    * (block word floor 5, link-density multiplier 3);
-    * [[htmlExtractAuto]] derives them from the corpus instead.
+    * The knobs are the anchor operating point the oracles pin (block word
+    * floor 5, link-density multiplier 3).
     *
     * Known limitation shared by every regex-stage extractor in this
     * class (and by the RE2 oracle replay, so the gate is unaffected):
@@ -1050,11 +988,10 @@ object TextOps {
     * leaks into text. Real-world incidence is low (HTML authors escape
     * it as `&gt;`); an extractor that must handle it needs a stateful
     * tokenizer, which is a different operator, not a regex fix. */
-  private[graft] def htmlExtractOver(html: DataFrame, minWords: Int = 5,
-      linkMult: Int = 3): DataFrame =
+  private[graft] def htmlExtractOver(html: DataFrame): DataFrame =
     blockScored(html)
       .withColumn("kept", expr(
-        s"filter(scored, x -> x.nw >= $minWords AND x.links * $linkMult <= x.nw)"))
+        "filter(scored, x -> x.nw >= 5 AND x.links * 3 <= x.nw)"))
       .select(col("doc_id"),
         expr("cast(size(scored) as int)").as("n_blocks"),
         expr("cast(size(kept) as int)").as("n_kept"),
@@ -1062,39 +999,6 @@ object TextOps {
       .select(col("doc_id"), col("n_blocks"), col("n_kept"),
         length(col("clean_text")).as("clean_len"),
         md5(col("clean_text")).as("clean_md5"), col("clean_text"))
-
-  /** Corpus block profile for the h1 knobs: (median candidate-block
-    * words, anchor tags per kiloword of block text), measured on the
-    * SAME scored blocks the filter gates. One aggregation pass — at
-    * corpus scale run it over a calibration sample and reuse the derived
-    * knobs for the full pass (the `countEstimate` discipline of the
-    * index operating points). */
-  private[graft] def h1Profile(html: DataFrame): (Long, Long) = {
-    val r = blockScored(html)
-      .select(explode(col("scored")).as("b"))
-      .agg(expr("percentile_approx(b.nw, 0.5)").as("median_nw"),
-        sum(col("b.links").cast("long")).as("links"),
-        sum(col("b.nw").cast("long")).as("nw"))
-      .head()
-    val nw = math.max(1L, r.getAs[Number]("nw").longValue)
-    (r.getAs[Number]("median_nw").longValue,
-      math.round(1000.0 * r.getAs[Number]("links").longValue / nw))
-  }
-
-  /** h1 with CORPUS-DERIVED knobs: the block word floor and link-density
-    * multiplier come from [[h1Profile]] through the
-    * [[OperatingPoint.h1MinWords]] / [[OperatingPoint.h1LinkDensityMult]]
-    * derivations instead of pinned literals — the same no-pinned-knobs
-    * discipline as the index geometries. On the anchor fixture corpus the
-    * derived knobs equal the pinned (5, 3), so the oracle-gated h1/h2
-    * output is unchanged there (pinned by spec). Pass `profileOf` to
-    * derive from a calibration sample instead of the full input. */
-  def htmlExtractAuto(html: DataFrame,
-      profileOf: Option[DataFrame] = None): DataFrame = {
-    val (medianNw, apk) = h1Profile(profileOf.getOrElse(html))
-    htmlExtractOver(html, OperatingPoint.h1MinWords(medianNw),
-      OperatingPoint.h1LinkDensityMult(apk))
-  }
 
   /** h2: raw-web CURATION — the c1/c5 composition discipline applied at
     * the crawl grain: [[htmlExtractOver]] feeding the FACTORED t3 scoring
@@ -1284,60 +1188,6 @@ object TextOps {
     surprisalScored(documents(s, d).select("doc_id", "text"), model, oov)
   }
 
-  /** Library entrypoint: t13 with the model-build cost DECOUPLED from
-    * corpus size — the CCNet shape the scaladoc above describes in prose
-    * (Wenzek et al. train the LM once on a calibration corpus, then score
-    * everything; the model never scales with the data being filtered).
-    * Above [[OperatingPoint.perplexityCalibrationDocs]] the unigram model
-    * trains on a deterministic md5-bucket CALIBRATION SAMPLE of ~that many
-    * documents (the t6/t12 hash machinery under its own 'ppl:' salt, so
-    * sampling never correlates with split or mixture decisions); at or
-    * below the cutoff it is exactly [[perplexityFilter]]'s build. Scoring
-    * is unchanged either way — one broadcast-model join over the full
-    * corpus. Sample-vs-full keep-decision parity is spec-measured
-    * (PipelineOpsSpec: ≥ 97% agreement at a forced half-corpus sample on the fixture);
-    * the ≤ 7.0 threshold is an avg-surprisal-per-word cut, and sampled
-    * counts scale ~proportionally (c and n shrink together inside
-    * ln((c+1)/(n+v))), which is what makes the decision approximately
-    * sample-invariant. */
-  def perplexityAuto(corpus: DataFrame,
-      countEstimate: Option[Long] = None): DataFrame = {
-    val n = countEstimate.getOrElse(corpus.count())
-    perplexitySampled(corpus, n, OperatingPoint.perplexityCalibrationDocs)
-  }
-
-  /** [[perplexityAuto]]'s core with the cutoff as a parameter (the spec
-    * forces a small cutoff to measure parity at fixture scale). */
-  private[graft] def perplexitySampled(corpus: DataFrame, n: Long,
-      cutoff: Long): DataFrame = {
-    val modelCorpus =
-      if (n <= cutoff) corpus
-      else {
-        // keep ~cutoff docs: bucket into 1e6 and keep the head fraction —
-        // deterministic, append-stable, independent of partitioning
-        val keep = math.max(1L, (cutoff.toDouble / n.toDouble * 1e6).toLong)
-        corpus.filter(saltedBucket("ppl:", 1000000) < keep)
-      }
-    val (model, oov) = unigramModel(modelCorpus)
-    // the keep ceiling is corpus-DERIVED here (round 14): the pinned 7.0
-    // literal is a fixture calibration — on a corpus whose surprisal base
-    // rate shifts (×1000 disjoint vocabularies: +ln 1000 per word; any
-    // multi-domain crawl: less, same direction) it degenerates to
-    // keep-nothing while relative quality is unchanged. The median-anchored
-    // ceiling keeps cutting the same RELATIVE tail; at the fixture it
-    // reproduces the literal's decisions exactly (PipelineOpsSpec parity).
-    val scored = surprisalAgg(corpus.select("doc_id", "text"), model, oov)
-      .localCheckpoint(eager = false) // feeds the quantile AND the output
-    val keepMicro = surprisalKeepMicroOf(scored)
-    scored.select(col("doc_id"), col("n_words"), col("n_oov"),
-      expr("cast((-sum_lp) div n_words as double) / 1e6").as("avg_surprisal"),
-      (expr("(-sum_lp) div n_words") <= keepMicro).as("keep"))
-  }
-
-  /** QueryProbe harness form of [[perplexityAuto]]. */
-  private[graft] val perplexityAutoQ: Q =
-    (s, d) => perplexityAuto(documents(s, d))
-
   /** The t13 model: (word → scaled logprob) plus the OOV floor, built from
     * any (doc_id, text) corpus. Vocab-sized frames — the broadcast side of
     * every scoring join. */
@@ -1361,7 +1211,7 @@ object TextOps {
     * the corpus once the model frames exist, so the same call scores a
     * batch of arriving documents against a static pre-trained model. */
   private[graft] def surprisalScored(docs: DataFrame, model: DataFrame,
-      oov: DataFrame, keepMicro: Long = 7000000L): DataFrame =
+      oov: DataFrame): DataFrame =
     surprisalAgg(docs, model, oov)
       .select(col("doc_id"), col("n_words"), col("n_oov"),
         // INTEGER quotient of the 1e6-scaled sum, display-scaled — the
@@ -1371,27 +1221,13 @@ object TextOps {
         // Spark's truncating div and DuckDB's flooring // agree.
         // keep compares the INTEGER quotient against the micro ceiling
         // (micro <= 7000000 ⟺ micro/1e6 <= 7.0 exactly, so the pinned
-        // t13 oracle is unchanged); the auto path passes a corpus-derived
-        // ceiling ([[surprisalKeepMicroOf]]) instead of the literal.
+        // t13 oracle is unchanged)
         expr("cast((-sum_lp) div n_words as double) / 1e6")
           .as("avg_surprisal"),
-        (expr("(-sum_lp) div n_words") <= keepMicro).as("keep"))
+        (expr("(-sum_lp) div n_words") <= SurprisalKeepMicro).as("keep"))
 
-  /** Corpus-derived keep ceiling for the surprisal gate: the (approximate)
-    * median of the corpus's integer micro-surprisal quotients, mapped
-    * through [[OperatingPoint.surprisalKeepMicro]] (anchored to reproduce
-    * the pinned 7.0 on the fixture). One single-row aggregate over the
-    * scored frame — the quantile sketch is the scale form (an exact
-    * percentile buffers a per-value count map); its tiny run-to-run
-    * rigidity is irrelevant here because the ceiling gates a QUALITY
-    * decision, not a hash-checked value (the pinned queries keep the
-    * literal precisely so their oracles stay static). */
-  private[graft] def surprisalKeepMicroOf(scoredAgg: DataFrame): Long = {
-    val med = scoredAgg
-      .agg(expr("percentile_approx((-sum_lp) div n_words, 0.5, 10000)"))
-      .head().getLong(0)
-    OperatingPoint.surprisalKeepMicro(med)
-  }
+  /** The t13/c5 keep ceiling: average surprisal 7.0 per word, micro-scaled. */
+  private val SurprisalKeepMicro = 7000000L
 
   /** Vocab-row ceiling for the driver-hosted scoring arm: the model is
     * ALREADY broadcast-joined (vocab-sized by construction — the c ≥ 2

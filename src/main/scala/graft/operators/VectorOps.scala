@@ -164,10 +164,8 @@ object VectorOps {
     * collected to the driver and rides the stage's task-binary broadcast
     * inside [[graft.functions.TopCells]], so it must stay comfortably
     * plan-sized. 2^22 doubles = 32 MB — K ≤ 65k cells at dim 64, ≤ 10.9k
-    * at dim 384; every current operating point (pinned K=8, IVF K ≈
-    * 16·√(n/2000), the n/128 blocking grain through ×1000×64, hier
-    * supers/locals) fits. Beyond it the distributed crossJoin+heap form
-    * below remains the honest plan. */
+    * at dim 384; the pinned K=8 fits with room to spare. Beyond it the
+    * distributed crossJoin+heap form below remains the honest plan. */
   private[graft] val TopCellsMaxDoubles: Long = 1L << 22
 
   /** Collect a (cid, c) centroid frame to driver arrays, cid-ascending
@@ -711,16 +709,10 @@ object VectorOps {
       planes: Int = RpPlanesPerBand): DataFrame =
     rpBandedNearDupOver(vecs(s, d), bands, planes)
 
-  /** Core of the RP-LSH banded near-dup over any (vec_id, v) frame.
-    * `forceShuffle` pins the self-join to sort-merge (`merge` hint) — the
-    * shape the join has at cluster scale, where it spreads buckets over
-    * all reducers and AQE skew-join can split hot buckets; the auto
-    * entrypoint derives it from corpus size
-    * ([[OperatingPoint.preferShuffleJoin]], BASELINE.md §skew:
-    * broadcast 20.4s vs sort-merge 2.2-3.6s at 10x). */
+  /** Core of the RP-LSH banded near-dup over any (vec_id, v) frame. */
   private[graft] def rpBandedNearDupOver(e: DataFrame, bands: Int,
       planes: Int, threshold: Double = 0.30,
-      dim: Int = Dim, forceShuffle: Boolean = false): DataFrame = {
+      dim: Int = Dim): DataFrame = {
     val signs = rpSignMatrix(bands, planes, dim)
     // prune floor: the filter keeps round(sim, 6) >= threshold, so a pair
     // may be abandoned only when provably below threshold - 5e-7 (the
@@ -730,11 +722,10 @@ object VectorOps {
     // and the x1000 digests are unchanged. Suffix checkpoints are computed
     // ONCE per vector pre-explode; the banded table is materialized once
     // so the self-join's two sides share the key computation
-    val bk0 = e.select(col("vec_id"), col("v"),
+    val bk = e.select(col("vec_id"), col("v"),
       CosineSimBounded.sufSq(col("v")).as("sfx"),
       posexplode(RpBandKeys.of(col("v"), signs, planes)).as(Seq("b", "key")))
       .localCheckpoint(eager = false)
-    val bk = if (forceShuffle) bk0.hint("merge") else bk0
     bk.as("a").join(bk.as("x"),
         col("a.b") === col("x.b") && col("a.key") === col("x.key") &&
           col("a.vec_id") < col("x.vec_id"))
@@ -743,19 +734,6 @@ object VectorOps {
       .filter(col("sim") >= threshold)
       .distinct()
   }
-
-  /** Candidate-pair count of the banded blocking (Σ C(occupancy, 2) over
-    * (band, key) buckets) — the quantity the AUTO derivation must hold
-    * ∝ n, measured directly (the VectorGateSpec candidates-linear gate:
-    * the round-15 sign-family bug made this 196-1646× the
-    * uniform-occupancy prediction, and nothing failed until a ×1000 run
-    * ground for hours). */
-  private[graft] def rpBandedCandidateCount(e: DataFrame, bands: Int,
-      planes: Int, dim: Int): Long =
-    e.select(posexplode(RpBandKeys.of(col("v"),
-        rpSignMatrix(bands, planes, dim), planes)).as(Seq("b", "key")))
-      .groupBy("b", "key").count()
-      .agg(sum(col("count") * (col("count") - 1) / 2)).head.getDouble(0).toLong
 
   /** The RP-LSH pair pipeline in DuckDB as a CTE chain ending in
     * `pairs(a_id, b_id, sim)` — shared by the v3/v6 and v8 oracles. */
@@ -899,44 +877,6 @@ object VectorOps {
        |  s.vec_id = k.canonical AS keep, k.canonical
        |FROM scored s JOIN keepr k USING (component)""".stripMargin
 
-  /** Library entrypoint: retention over the policy-dispatched pair graph
-    * ([[dedupPairsAuto]]) — state the sim band and optional recall
-    * contract, get back per-vector keep/drop decisions with canonical
-    * survivors. The end-to-end form of the embedding dedup pipeline:
-    * blocker policy → exact-verified pairs → connected components →
-    * SemDeDup keep. */
-  def embedRetentionAuto(e: DataFrame, targetSim: Double = 0.8,
-      recallTarget: Option[Double] = None,
-      countEstimate: Option[Long] = None, dim: Int = Dim): DataFrame = {
-    val pairs = dedupPairsAuto(e, targetSim, recallTarget,
-        countEstimate, dim)
-      .select(col("a_id").as("a"), col("b_id").as("b"))
-    val comps = GraphOps.connectedComponents(
-        e.select(col("vec_id").as("id")), pairs)
-      .select(col("id").as("vec_id"), col("component"))
-    embedRetentionOver(e, comps)
-  }
-
-  // ---- corpus-size-derived (AUTO) library entrypoints ----
-
-  /** Library entrypoint: embedding near-dup pairs over any
-    * (vec_id, v: array&lt;double&gt;) frame with the RP-LSH operating point
-    * derived from corpus size ([[OperatingPoint.rpPlanesPerBand]]:
-    * planes += log2(growth) over the measured sf0.1 anchor, so candidate
-    * pairs stay ~linear in n). Pass `countEstimate` when the cardinality is
-    * already known (catalog statistic, prior stage); otherwise one cheap
-    * count() job runs first. The oracle-gated [[nearDupPairs]] keeps its
-    * pinned 4-plane config so the static DuckDB oracle SQL can mirror the
-    * exact blocking structure. */
-  def nearDupPairsAuto(e: DataFrame, threshold: Double = 0.30,
-      countEstimate: Option[Long] = None, bands: Int = V3Bands,
-      dim: Int = Dim): DataFrame = {
-    val n = countEstimate.getOrElse(e.count())
-    val planes = OperatingPoint.rpPlanesPerBand(n, dim)
-    rpBandedNearDupOver(e, bands, planes, threshold, dim,
-      forceShuffle = OperatingPoint.preferShuffleJoin(n, bands, dim))
-  }
-
   // ---- high-sim (dedup-band) blocking: sketch-gated, recall-targeted ----
 
   /** Deterministic ±1 sketch-plane signs — the [[mix64]] family in its own
@@ -958,8 +898,8 @@ object VectorOps {
     * verify that gathers each surviving pair's vectors once.
     *
     * Why this shape: holding recall at the dedup band (cos ≥ 0.8) as the
-    * corpus grows requires bands ~ n^ρ ([[OperatingPoint.rpHighSimBands]];
-    * 57 bands at ×1000), and at tens of bands the vector-carrying
+    * corpus grows requires bands ~ n^ρ (57 bands at ×1000, BASELINE §5
+    * r16), and at tens of bands the vector-carrying
     * banded self-join ([[rpBandedNearDupOver]]) would shuffle ≈3 KB ×
     * bands per vector (≈365 GB at ×1000×384). Here the banded rows are
     * (id, s0, s1, band, key) — dimension-independent 24 B payloads — the
@@ -967,12 +907,11 @@ object VectorOps {
     * exactly TWICE (the two gather joins), on the output-scale survivor
     * set, not the candidate set.
     *
-    * Recall = banding recall (targeted by the band count) × the sketch
+    * Recall = banding recall (set by the band count) × the sketch
     * gate's ≥99.8% pass rate at the target sim
-    * ([[OperatingPoint.sketchMaxHamming]]'s 3σ budget) — both terms
-    * deterministic, measured against planted-twin truth and floored in
-    * VectorGateSpec. Emitted sims are the exact
-    * round6(cosine) — bit-identical to every other family's verify. */
+    * ([[OperatingPoint.sketchMaxHamming]]'s 3σ budget). Emitted sims are
+    * the exact round6(cosine) — bit-identical to every other family's
+    * verify. */
   private[graft] def nearDupPairsHighSimOver(e: DataFrame, bands: Int,
       planes: Int, maxHamming: Int, threshold: Double,
       dim: Int): DataFrame = {
@@ -997,25 +936,6 @@ object VectorOps {
       .select(col("a_id"), col("b_id"),
         boundedSim6("va", "vb", "sfa", "sfb", threshold).as("sim"))
       .filter(col("sim") >= threshold)
-  }
-
-  /** Library entrypoint: near-dup pairs AT A RECALL TARGET — the dedup
-    * operating point the 100 TB review asks for. Planes follow the
-    * candidates-linear rule; bands grow with the corpus to hold
-    * `targetRecall` at `targetSim` ([[OperatingPoint.rpHighSimBands]]);
-    * the sketch gate keeps the candidate bill at popcount cost. The plain
-    * [[nearDupPairsAuto]] remains the cheap low-band survey point (its
-    * recall DECAYS with corpus size by construction — the documented
-    * trade); this is the one to run when missing a ≥0.8 duplicate costs
-    * more than extra bands. */
-  def nearDupPairsHighSim(e: DataFrame, targetSim: Double = 0.8,
-      targetRecall: Double = 0.9, threshold: Double = 0.8,
-      countEstimate: Option[Long] = None, dim: Int = Dim): DataFrame = {
-    val n = countEstimate.getOrElse(e.count())
-    val planes = OperatingPoint.rpPlanesPerBand(n, dim)
-    val bands = OperatingPoint.rpHighSimBands(n, dim, targetSim, targetRecall)
-    nearDupPairsHighSimOver(e, bands, planes,
-      OperatingPoint.sketchMaxHamming(targetSim), threshold, dim)
   }
 
   /** Oracle-gated pinned form (v12): the v6 blocking (2 bands × 4 planes)
@@ -1110,10 +1030,9 @@ object VectorOps {
     * distinct (a pair sharing both probed cells arrives twice).
     *
     * Scale: candidates = Σ_cells C(members, 2) ≈ 2n²/K, so K = n/c holds
-    * candidates ≈ 2c·n — LINEAR, gated like the RP family
-    * (VectorGateSpec). The bill is assignment: n·K rounded cosines per
-    * Lloyd pass (n²·dim/c at the blocking grain) — affordable to ×1000
-    * measured, and the documented mitigation at true 100 TB grain is a
+    * candidates ≈ 2c·n — LINEAR. The bill is assignment: n·K rounded
+    * cosines per Lloyd pass (n²·dim/c at the blocking grain) — affordable
+    * to ×1000 measured; the mitigation at true 100 TB grain would be a
     * two-level quantizer (assign against √K super-cells, then only that
     * super-cell's fine centroids: n·2√K cosines). The LSH family's
     * counter-pitch is zero training passes; this operator is what you run
@@ -1121,9 +1040,9 @@ object VectorOps {
     * premise) and recall at the dedup band must not depend on hyperplane
     * luck. */
   private[graft] def semDedupPairsOver(e0: DataFrame, k: Int, iters: Int,
-      threshold: Double, modInit: Boolean = false): DataFrame = {
+      threshold: Double): DataFrame = {
     val e = e0.localCheckpoint(eager = false) // feeds Lloyd + membership
-    val cent = kmeansCentroids(e, iters, k, modInit)
+    val cent = kmeansCentroids(e, iters, k)
     val member = cellMembers(e, cent)
       .select(col("vec_id"), col("v"), CosineSimBounded.sufSq(col("v")).as("sfx"),
         col("cid"))
@@ -1134,20 +1053,6 @@ object VectorOps {
         boundedSim6("a.v", "x.v", "a.sfx", "x.sfx", threshold).as("sim"))
       .filter(col("sim") >= threshold)
       .distinct()
-  }
-
-  /** Candidate-pair count of the learned-cell blocking (Σ C(members, 2)
-    * over cells of the top-2 membership) — the sem family's
-    * candidates-linear gate quantity, mirroring
-    * [[rpBandedCandidateCount]]. */
-  private[graft] def semDedupCandidateCount(e0: DataFrame, k: Int,
-      iters: Int, modInit: Boolean = true, hier: Boolean = false): Long = {
-    val e = e0.localCheckpoint(eager = false)
-    val members =
-      if (hier) hierCellMembers(e, k, iters)
-      else cellMembers(e, kmeansCentroids(e, iters, k, modInit))
-    members.groupBy("cid").count()
-      .agg(sum(col("count") * (col("count") - 1) / 2)).head.getDouble(0).toLong
   }
 
   /** Oracle-gated pinned form (v13): K = [[KmK]] cells, [[KmIters]] Lloyd
@@ -1167,368 +1072,6 @@ object VectorOps {
        |  ${oracleCosSql("a.v", "x.v")} AS sim
        |FROM m a JOIN m x ON a.cid = x.cid AND a.vec_id < x.vec_id
        |WHERE ${oracleCosSql("a.v", "x.v")} >= 0.30""".stripMargin
-
-  // ---- hierarchical (two-level) k-means: the blocking grain's 100 TB
-  //      training/assignment cost answer ----
-
-  /** Two-level cell structure: K₁ ≈ √(2K) SUPER cells Lloyd-trained over
-    * the corpus, then each super's members Lloyd-split into Kl = ⌈K/K₁⌉
-    * LOCAL cells (composite cell id = sup·Kl + local) — the classic
-    * hierarchical/coarse-fine quantizer (FAISS IMI lineage). Flat Lloyd
-    * at the blocking grain K = n/128 costs n·K ranked cosines PER PASS —
-    * n²·dim/128, the quadratic bill the flat ×1000×384 arm measures in
-    * hours; here every pass ranks only K₁ supers or Kl locals, so
-    * training + membership total ≈ n·(4K₁ + 5Kl) ranked cosines — ~45×
-    * less at the ×1000 grain, and the ratio GROWS with n.
-    *
-    * Approximation (vs flat): a vector's true nearest fine cells might
-    * live in a super it does not probe; membership probes the top-
-    * [[SuperProbes]] supers and ranks ALL their locals — the probe width
-    * buys recall at pure RANK cost (n·probes·Kl cosines), never pair
-    * cost: final membership is still the top-2 composite cells, so the
-    * candidate bill is identical to flat. Measured at ×10: 2 probes lost
-    * 7pp of ≥0.8 recall vs flat (0.847 vs 0.919 at dim 64 — K₁ ≈ 19
-    * supers is coarse at fixture scale), 4 probes close the gap (gated
-    * in VectorGateSpec).
-    * Determinism: every stage is the same rounded-cosine rank + integer-
-    * sum means the flat path uses, so the whole pipeline replays in the
-    * plain-JVM verifier and carries ×1000 digests. */
-  /** Super cells ranked per vector before the local-cell rank — width of
-    * the coarse probe ([[hierCellMembers]] phase D). */
-  private[graft] val SuperProbes = 4
-
-  /** Size guard for the fused two-level membership: (K₁ + K)·dim doubles
-    * ride the task binary inside [[graft.functions.HierTopCells]] — the
-    * SAME bytes the composed form's per-iteration `broadcast(loc)`
-    * shipped to every executor, so this is not a new memory class, and
-    * the ceiling can sit above the flat path's [[TopCellsMaxDoubles]]:
-    * 2^24 doubles = 128 MB covers the ×1000×384 blocking grain
-    * (K = 16.5k × dim 384 ≈ 6.4M doubles ≈ 51 MB). Beyond it the
-    * composed broadcast-join form ([[hierCellMembersJoin]]) remains the
-    * honest plan — at a grain where even THAT broadcast fails, neither
-    * arm fits and assignment must become a shuffle, which no current
-    * operating point reaches. */
-  private[graft] val HierTopCellsMaxDoubles: Long = 1L << 24
-
-  private[graft] def hierCellMembers(e: DataFrame, k: Int,
-      iters: Int): DataFrame =
-    hierCellMembersGuarded(e, k, iters, HierTopCellsMaxDoubles)
-
-  /** Guarded dispatch (maxDoubles is a parameter so the spec can force
-    * the join route on fixture-sized frames): the dim probe reads ONE
-    * row — never the corpus — and an empty corpus routes to the join
-    * form, whose plan yields zero rows without a driver dependency on
-    * first(). */
-  private[graft] def hierCellMembersGuarded(e: DataFrame, k: Int,
-      iters: Int, maxDoubles: Long): DataFrame = {
-    val k1 = math.max(2, math.ceil(math.sqrt(2.0 * k)).toInt)
-    val dim = e.select(size(col("v"))).take(1)
-    if (dim.isEmpty || (k.toLong + k1) * dim(0).getInt(0) > maxDoubles)
-      hierCellMembersJoin(e, k, iters)
-    else hierCellMembersLocal(e, k, iters)
-  }
-
-  /** Two-level training + membership with DRIVER-HOSTED centroids — the
-    * [[kmeansCentroidsLocal]] treatment applied to the hierarchy (guide
-    * §2.3/§4; VERDICT r16's top item — the composed form's phase C paid
-    * an n·Kl broadcast-join expansion + a posexplode double-groupBy PER
-    * LLOYD ITERATION, and phase D two more expansions):
-    *  - phase A: supers via the RDD Lloyd loop (unchanged);
-    *  - phase B: home super per vector via [[graft.functions.TopCells]].argmax
-    *    — map-only on a persisted RDD, no crossJoin, no heap aggregate;
-    *  - phase C: local Lloyd vectorized across supers on the SAME RDD —
-    *    per pass one treeAggregate job of composite-keyed integer sums
-    *    (the exact localMeans discipline: per-(sup,lc,i)
-    *    sum(round(x·1e8)::bigint)::double / count::double / 1e8), no
-    *    per-iteration Catalyst plan at all;
-    *  - phase D: ONE map-only select with the fused
-    *    [[graft.functions.HierTopCells]] rank (super probe + composite
-    *    top-2 in a single codegen loop).
-    * Every stage replays the composed arm's exact comparator
-    * ((csim DESC, id ASC) on round6 cosines) and integer-sum means, so
-    * membership is BIT-EQUAL (HierCellsSpec exceptAll-gates both
-    * directions; the ×N digests pin it at scale). */
-  private[graft] def hierCellMembersLocal(e: DataFrame, k: Int,
-      iters: Int): DataFrame = {
-    val k1 = math.max(2, math.ceil(math.sqrt(2.0 * k)).toInt)
-    val kl = math.max(1, math.ceil(k.toDouble / k1).toInt)
-    // phase A: supers over the corpus (mod-K1 partition-mean init)
-    val sup = kmeansCentroidsLocal(e, iters, k1, modInit = true)
-    val supCids = sup.map(_._1); val supCents = sup.map(_._2)
-    // phase B: home super per vector — argmax against the driver-hosted
-    // super matrix, fused into the RDD load (one pass, then persisted
-    // for the iters+1 phase-C aggregations)
-    val rdd = e.select(col("vec_id"), col("v")).rdd
-      .map { r =>
-        val v = r.getSeq[Double](1).toArray
-        (r.getLong(0), v, graft.functions.TopCells.argmax(v, supCids, supCents))
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // phase C: composite-keyed integer-sum means (cid = sup·kl + lc).
-      // assign returns Int.MinValue to DROP a vector from the pass —
-      // mirroring the composed form's inner join on sup, which
-      // contributed nothing for a super absent from loc.
-      type Acc = java.util.HashMap[Int, (Array[Long], Array[Long])]
-      def localMeans(assign: (Long, Array[Double], Int) => Int)
-          : (Array[Array[Int]], Array[Array[Array[Double]]]) = {
-        val seqOp = (acc: Acc, row: (Long, Array[Double], Int)) => {
-          val cid = assign(row._1, row._2, row._3)
-          if (cid != Int.MinValue) {
-            val v = row._2
-            var slot = acc.get(cid)
-            if (slot == null) {
-              slot = (new Array[Long](v.length), new Array[Long](1))
-              acc.put(cid, slot)
-            } else require(slot._1.length == v.length,
-              s"ragged vectors in cell $cid")
-            var i = 0
-            while (i < v.length) {
-              slot._1(i) += graft.functions.Round6.microLong(v(i))
-              i += 1
-            }
-            slot._2(0) += 1
-          }
-          acc
-        }
-        val combOp = (a: Acc, b: Acc) => {
-          val it = b.entrySet().iterator()
-          while (it.hasNext) {
-            val en = it.next()
-            val slot = a.get(en.getKey)
-            if (slot == null) a.put(en.getKey, en.getValue)
-            else {
-              val s2 = en.getValue._1
-              require(slot._1.length == s2.length,
-                s"ragged vectors in cell ${en.getKey}")
-              var i = 0
-              while (i < s2.length) { slot._1(i) += s2(i); i += 1 }
-              slot._2(0) += en.getValue._2(0)
-            }
-          }
-          a
-        }
-        val totals = rdd.treeAggregate(new Acc)(seqOp, combOp, depth = 2)
-        // decompose composite keys into per-super arrays PARALLEL to
-        // supCids (lc ∈ [0, kl) by construction, so cid/kl is the super)
-        import scala.jdk.CollectionConverters._
-        val bySup = totals.entrySet().iterator().asScala.map { en =>
-          val cnt = en.getValue._2(0)
-          (en.getKey / kl, en.getKey % kl,
-            en.getValue._1.map(s => s.toDouble / cnt.toDouble / 1e8))
-        }.toArray.groupBy(_._1)
-        val lcids = new Array[Array[Int]](supCids.length)
-        val lcents = new Array[Array[Array[Double]]](supCids.length)
-        var j = 0
-        while (j < supCids.length) {
-          val cells = bySup.getOrElse(supCids(j),
-            Array.empty[(Int, Int, Array[Double])]).sortBy(_._2)
-          lcids(j) = cells.map(_._2)
-          lcents(j) = cells.map(_._3)
-          j += 1
-        }
-        (lcids, lcents)
-      }
-      // init: lc = pmod(vec_id, kl), every homed vector contributes
-      var (lcids, lcents) = localMeans((id, _, supCid) =>
-        supCid * kl + java.lang.Math.floorMod(id, kl.toLong).toInt)
-      for (_ <- 1 to iters) {
-        val (lc0, lv0) = (lcids, lcents)
-        val assigned = localMeans { (_, v, supCid) =>
-          val idx = java.util.Arrays.binarySearch(supCids, supCid)
-          if (idx < 0 || lc0(idx).length == 0) Int.MinValue
-          else supCid * kl +
-            graft.functions.TopCells.argmax(v, lc0(idx), lv0(idx))
-        }
-        lcids = assigned._1; lcents = assigned._2
-      }
-      // phase D: fused membership — super probe + composite top-2 in one
-      // map-only codegen loop; no expansion, no join, no exchange
-      e.select(col("vec_id"), col("v"),
-          explode(graft.functions.HierTopCells.top(col("v"), SuperProbes,
-            2, kl, sup, lcids.zip(lcents))).as("cell"))
-        .select(col("vec_id"), col("v"), col("cell.cid").as("cid"))
-    } finally rdd.unpersist(blocking = false)
-  }
-
-  /** The composed two-level form [[hierCellMembersLocal]] replaced — the
-    * beyond-guard plan and HierCellsSpec's equality oracle. */
-  private[graft] def hierCellMembersJoin(e: DataFrame, k: Int,
-      iters: Int): DataFrame = {
-    val k1 = math.max(2, math.ceil(math.sqrt(2.0 * k)).toInt)
-    val kl = math.max(1, math.ceil(k.toDouble / k1).toInt)
-    // phase A: supers over the corpus (mod-K1 partition-mean init)
-    val sup = kmeansCentroids(e, iters, k1, modInit = true)
-      .select(col("cid").as("sup"), col("c").as("sc"))
-      .localCheckpoint(eager = false)
-    // phase B: home super per vector (one K1-rank pass)
-    val homed = e.crossJoin(broadcast(sup))
-      .select(col("vec_id"), col("v"), col("sup"),
-        sim6("v", "sc").as("csim"))
-      .groupBy("vec_id")
-      .agg(expr("first(v)").as("v"),
-        element_at(TopKRows.of(struct("csim", "sup"), 1), 1).as("b"))
-      .select(col("vec_id"), col("v"), col("b.sup").as("sup"))
-      .localCheckpoint(eager = false)
-    // phase C: local Lloyd WITHIN each super, vectorized across supers —
-    // centroid key (sup, lc); assignment joins on the home super so each
-    // vector ranks only its super's Kl locals
-    def localMeans(assigned: DataFrame): DataFrame =
-      assigned
-        .select(col("sup"), col("lc"), posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("sup", "lc", "i")
-        .agg((sum(round(col("x") * 1e8).cast("bigint")).cast("double") /
-          count(lit(1)).cast("double") / lit(1e8)).as("cx"))
-        .groupBy("sup", "lc")
-        .agg(expr("transform(array_sort(collect_list(struct(i, cx))), t -> t.cx)")
-          .as("lcv"))
-    var loc = localMeans(homed.select(col("sup"),
-      pmod(col("vec_id"), lit(kl.toLong)).cast("int").as("lc"), col("v")))
-      .localCheckpoint(eager = false)
-    for (_ <- 1 to iters) {
-      loc = localMeans(homed.join(broadcast(loc), Seq("sup"))
-        .select(col("vec_id"), col("v"), col("sup"), col("lc"),
-          sim6("v", "lcv").as("csim"))
-        .groupBy("vec_id")
-        .agg(expr("first(v)").as("v"), expr("first(sup)").as("sup"),
-          element_at(TopKRows.of(struct("csim", "lc"), 1), 1).as("b"))
-        .select(col("sup"), col("b.lc").as("lc"), col("v")))
-        .localCheckpoint(eager = false)
-    }
-    // phase D: membership — top-SuperProbes supers per vector, then top-2
-    // composite cells over the probed supers' locals (cid = sup·Kl + lc)
-    val topSup = e.crossJoin(broadcast(sup))
-      .select(col("vec_id"), col("v"), col("sup"),
-        sim6("v", "sc").as("csim"))
-      .groupBy("vec_id")
-      .agg(expr("first(v)").as("v"),
-        TopKRows.of(struct("csim", "sup"), SuperProbes).as("ss"))
-      .select(col("vec_id"), col("v"), explode(col("ss.sup")).as("sup"))
-    topSup.join(broadcast(loc), Seq("sup"))
-      .select(col("vec_id"), col("v"),
-        (col("sup") * kl + col("lc")).as("cid"),
-        sim6("v", "lcv").as("csim"))
-      .groupBy("vec_id")
-      .agg(expr("first(v)").as("v"),
-        TopKRows.of(struct("csim", "cid"), 2).as("cells"))
-      .select(col("vec_id"), col("v"), explode(col("cells")).as("cell"))
-      .select(col("vec_id"), col("v"), col("cell.cid").as("cid"))
-  }
-
-  /** [[semDedupPairsOver]] with hierarchical membership — same
-    * co-membership join + exact verify, cells from [[hierCellMembers]]. */
-  private[graft] def semDedupPairsHierOver(e0: DataFrame, k: Int,
-      iters: Int, threshold: Double): DataFrame = {
-    val e = e0.localCheckpoint(eager = false)
-    val member = hierCellMembers(e, k, iters)
-      .select(col("vec_id"), col("v"), CosineSimBounded.sufSq(col("v")).as("sfx"),
-        col("cid"))
-      .localCheckpoint(eager = false)
-    member.as("a").join(member.as("x"),
-        col("a.cid") === col("x.cid") && col("a.vec_id") < col("x.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("x.vec_id").as("b_id"),
-        boundedSim6("a.v", "x.v", "a.sfx", "x.sfx", threshold).as("sim"))
-      .filter(col("sim") >= threshold)
-      .distinct()
-  }
-
-  /** Library entrypoint: the learned-cell blocker at the corpus-derived
-    * operating point — K = [[OperatingPoint.semDedupCells]] (n/128:
-    * constant ~128-vector occupancy ⇒ candidates ≈ 256·n, inside the
-    * family's 500·n linear gate), mod-K partition-mean init (every cell
-    * seeded regardless of id layout), [[KmIters]] Lloyd steps. Above
-    * [[OperatingPoint.semHierCells]] the flat n·K training/assignment
-    * bill dominates everything else in the pipeline, so the operator
-    * switches to the two-level structure ([[hierCellMembers]]) — the
-    * form you would actually run at 100 TB. */
-  def semDedupPairsAuto(e: DataFrame, threshold: Double = 0.8,
-      countEstimate: Option[Long] = None,
-      targetOccupancy: Int = 128): DataFrame = {
-    val n = countEstimate.getOrElse(e.count())
-    val k = OperatingPoint.semDedupCells(n, targetOccupancy)
-    if (k > OperatingPoint.semHierCells)
-      semDedupPairsHierAuto(e, threshold, Some(n), targetOccupancy)
-    else semDedupPairsFlatAuto(e, threshold, Some(n), targetOccupancy)
-  }
-
-  /** The flat arm at the auto operating point (A/B harness name:
-    * v13flat_auto). */
-  private[graft] def semDedupPairsFlatAuto(e: DataFrame,
-      threshold: Double = 0.8, countEstimate: Option[Long] = None,
-      targetOccupancy: Int = 128): DataFrame = {
-    val n = countEstimate.getOrElse(e.count())
-    semDedupPairsOver(e,
-      OperatingPoint.semDedupCells(n, targetOccupancy), KmIters,
-      threshold, modInit = true)
-  }
-
-  /** The two-level arm at the auto operating point. */
-  private[graft] def semDedupPairsHierAuto(e: DataFrame,
-      threshold: Double = 0.8, countEstimate: Option[Long] = None,
-      targetOccupancy: Int = 128): DataFrame = {
-    val n = countEstimate.getOrElse(e.count())
-    semDedupPairsHierOver(e,
-      OperatingPoint.semDedupCells(n, targetOccupancy), KmIters,
-      threshold)
-  }
-
-  /** Library FRONT DOOR for embedding near-dup blocking: state the sim
-    * band and (optionally) a recall contract; the measured policy
-    * ([[OperatingPoint.dedupBlocker]] — three blockers, three measured
-    * scale laws on one planted-twin fixture family, BASELINE §5 r16)
-    * picks the operator you would actually run at 100 TB:
-    *
-    *  - a recall target ⇒ [[nearDupPairsHighSim]] (bands ~n^ρ — the only
-    *    design that HOLDS recall as the corpus grows);
-    *  - dedup band (targetSim ≥ 0.7), no contract ⇒ [[semDedupPairsAuto]]
-    *    (data-adaptive learned cells, flat 2·occupancy·n candidate bill);
-    *  - survey band ⇒ [[nearDupPairsAuto]] (cheapest linear point,
-    *    recall decays with n by construction — the documented trade).
-    *
-    * Every arm emits the same (a_id, b_id, sim) schema with the exact
-    * round6(cosine) sim, so downstream cluster resolution
-    * ([[GraphOps.connectedComponents]]) is arm-independent. */
-  def dedupPairsAuto(e: DataFrame, targetSim: Double = 0.8,
-      recallTarget: Option[Double] = None,
-      countEstimate: Option[Long] = None, dim: Int = Dim,
-      targetOccupancy: Int = 128): DataFrame =
-    OperatingPoint.dedupBlocker(targetSim, recallTarget) match {
-      case "rp-highsim" =>
-        nearDupPairsHighSim(e, targetSim, recallTarget.get,
-          threshold = targetSim, countEstimate = countEstimate, dim = dim)
-      case "sem" =>
-        semDedupPairsAuto(e, threshold = targetSim,
-          countEstimate = countEstimate, targetOccupancy = targetOccupancy)
-      case _ =>
-        nearDupPairsAuto(e, threshold = targetSim,
-          countEstimate = countEstimate, dim = dim)
-    }
-
-  /** Library entrypoint: v8's transitive cluster resolution over the
-    * AUTO-blocked pair graph — [[nearDupPairsAuto]] pairs (planes derived
-    * from corpus size) into the same [[GraphOps.connectedComponents]] the
-    * pinned [[embedClusters]] uses. The sixth-decade harness form: past
-    * the pinned anchor's decade the 4-plane pair graph is edge-quadratic
-    * BY DESIGN, so the cluster operator you would actually run on a
-    * larger corpus is this one. */
-  def embedClustersAuto(e: DataFrame,
-      countEstimate: Option[Long] = None, dim: Int = Dim): DataFrame = {
-    val pairs = nearDupPairsAuto(e, countEstimate = countEstimate, dim = dim)
-      .select(col("a_id").as("a"), col("b_id").as("b"))
-    GraphOps.connectedComponents(
-        e.select(col("vec_id").as("id")), pairs)
-      .select(col("id").as("vec_id"), col("component"))
-  }
-
-  /** Library entrypoint: IVF batch k-NN join with the cell count derived
-    * from corpus size (K ≈ √n, [[OperatingPoint.ivfCells]] — balances
-    * n·K assignment against n²/K candidate work). The oracle-gated
-    * [[knnJoin]] keeps K=16 pinned for the static oracle. */
-  def knnJoinAuto(e: DataFrame,
-      countEstimate: Option[Long] = None): DataFrame = {
-    val n = countEstimate.getOrElse(e.count())
-    knnJoinOver(e, OperatingPoint.ivfCells(n))
-  }
 
   // ---- ANN at rest: the IVF index as a partitioned parquet layout ----
 

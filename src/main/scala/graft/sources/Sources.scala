@@ -105,7 +105,7 @@ object Sources {
     * is `_corrupt_record`, and the first query over it dies on Spark's
     * QUERY_ONLY_CORRUPT_RECORD_COLUMN analysis error; fail at upload,
     * not at a later query. */
-  def jsonlAuto(spark: SparkSession, path: String): DataFrame = {
+  def jsonlProbed(spark: SparkSession, path: String): DataFrame = {
     val probed = jsonlSchema(spark, path)
     // two degenerate probes: an empty/blank head infers NO fields, a head
     // of non-JSON text (a CSV misnamed .jsonl) infers ONLY the
@@ -113,7 +113,7 @@ object Sources {
     // dies on QUERY_ONLY_CORRUPT_RECORD_COLUMN
     val dataFields = probed.fieldNames.filterNot(_ == "_corrupt_record")
     if (dataFields.isEmpty) throw new IllegalArgumentException(
-      s"jsonlAuto: no data schema could be probed from $path (empty file, " +
+      s"jsonlProbed: no data schema could be probed from $path (empty file, " +
         "blank lines, or no parseable JSON objects in the head). Supply " +
         "an explicit schema via jsonl(), or fix the file.")
     jsonl(spark, path, probed)

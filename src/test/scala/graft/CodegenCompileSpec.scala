@@ -50,12 +50,6 @@ class CodegenCompileSpec extends SparkSpec {
           element_at(graft.functions.TopCells.top(col("v"), 1,
             Array((0, Array(0.1, 0.2, 0.3, 0.4)),
               (1, Array(-0.5, 0.1, 0.0, 0.2)))), 1).as("tc"),
-          graft.functions.HierTopCells.top(col("v"), 2, 2, 3,
-            Array((0, Array(0.1, 0.2, 0.3, 0.4)),
-              (1, Array(-0.5, 0.1, 0.0, 0.2))),
-            Array((Array(0, 1), Array(Array(0.3, 0.1, 0.0, 0.2),
-                Array(-0.1, 0.4, 0.2, 0.0))),
-              (Array(0), Array(Array(0.2, -0.2, 0.5, 0.1))))).as("htc"),
           graft.operators.TextOps.wordStats(col("text")).as("wst"),
           graft.functions.SimHashText.of(col("text"), 12, 48, null)
             .as("sht"),

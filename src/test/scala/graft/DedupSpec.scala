@@ -42,47 +42,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs.exists { case (a, b, _) => b == a + 100000 })
   }
 
-  test("wide simhash: planted recall tracks the narrow family, pair hygiene") {
-    // Recall on THIS fixture is margin-bound, not family-bound: the planted
-    // suffix is 3 rare (weight-4) words — ±12 votes per bit — against short
-    // sf0.001 docs, so each family catches the planted pairs whose vote
-    // margins happen to exceed that (narrow md5-fold: measured ~2/3). The
-    // wide xxhash64 family is the same statistic under an independent hash
-    // draw; gate it against the narrow form's own measured recall, not an
-    // absolute.
-    val narrowHits = DedupOps.simhashPairs(spark, sf).collect()
-      .count(r => r.getLong(1) == r.getLong(0) + 100000L)
-    val corpus = graft.Q.documents(spark, sf)
-      .select(col("doc_id"), col("text"))
-      .unionByName(graft.Q.documents(spark, sf)
-        .filter(col("doc_id") % 17 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"),
-          concat(col("text"), lit(" zz qq vv")).as("text")))
-    for (bits <- Seq(8, 12)) { // 12 > the narrow form's 10-bit ceiling
-      val pairs = DedupOps.simhashPairsWide(corpus, bits)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      assert(pairs.forall { case (a, b, h) => a < b && h <= 5 }, s"bits=$bits")
-      assert(pairs.length == pairs.distinct.length, s"bits=$bits")
-      val hits = pairs.count { case (a, b, _) => b == a + 100000L }
-      assert(hits >= math.max(1L, narrowHits / 2),
-        s"bits=$bits: $hits wide vs $narrowHits narrow")
-    }
-  }
-
-  test("xxhash64 JVM helpers match the SQL function exactly") {
-    import spark.implicits._
-    // the IndependentVerify dd6w recompute rides on these two identities —
-    // cover ascii, unicode (multi-byte UTF-8), empty, and long strings
-    val samples = Seq("", "a", "the", "zz qq vv", "naïve-Ünïcodé-日本語",
-      "x" * 1000, "word_v999", "\t\n mixed  ctrl")
-    val got = samples.toDF("s")
-      .select(expr("xxhash64(s)"), expr("xxhash64(s, cast(1 as bigint))"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val want = samples.map(s =>
-      (IndependentVerify.xxh64(s), IndependentVerify.xxh64b(s)))
-    assert(got.toSeq == want)
-  }
-
   test("simhash is deterministic and near-uniform across docs") {
     val h1 = DedupOps.simhash(spark, sf).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))

@@ -760,7 +760,7 @@ class ExecutorApiSpec extends SparkSpec {
       // right reader (the spool lowercases the suffix for the dispatch)
       val (uc, ub) = postMultipart(port, "file", "REPORT.CSV", csv)
       assert(uc == 200 && ub.contains("\"df_id\":\"REPORT\""), ub)
-      // a text file misnamed .jsonl FAILS CLEANLY: jsonlAuto rejects the
+      // a text file misnamed .jsonl FAILS CLEANLY: jsonlProbed rejects the
       // corrupt-only probe at registration and the rollback leaves no
       // cached df behind (the round-9 poisoned-binding class, both layers)
       val (jc, jb) = postMultipart(port, "file", "notjson.jsonl",

@@ -57,21 +57,6 @@ object IndependentVerify {
   private def hex12(s: String): Long =
     java.lang.Long.parseLong(md5hex(s).substring(0, 12), 16)
 
-  /** Spark's `xxhash64(s)` over a string column: XXH64 of the UTF-8 bytes,
-    * seed 42. The XXH64 primitive is reused from Spark's public catalyst
-    * class the same way md5 reuses MessageDigest — a hash CONSTANT; the
-    * pipeline around it is what this file recomputes independently.
-    * Spec-pinned against the SQL function in DedupSpec. */
-  private[graft] def xxh64(s: String): Long = {
-    val u = org.apache.spark.unsafe.types.UTF8String.fromString(s)
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-  }
-  /** Spark's `xxhash64(s, 1L)`: multi-argument xxhash64 seed-chains, so
-    * the long literal re-mixes the string hash. */
-  private[graft] def xxh64b(s: String): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(1L, xxh64(s))
-
   /** Spark's round(col, scale) on doubles: HALF_UP on the shortest decimal
     * representation (BigDecimal.valueOf). */
   private def rnd(x: Double, scale: Int): Double =
@@ -697,159 +682,6 @@ object IndependentVerify {
     (exp, digestOutput(spark, out, Seq("a_id", "b_id", "hamming")))
   }
 
-  /** dd6w: WIDE-fingerprint SimHash pairs (xxhash64-pair word hashes, 6
-    * chunks of `chunkBits` across two 63-bit words — the
-    * [[graft.operators.DedupOps]] `simhashPairsWide` variant) over the
-    * planted corpus, at the [[graft.operators.OperatingPoint]]
-    * `simhashChunkBitsWide` width the library derives from the same corpus
-    * count. Mirrors [[checkDd6]]'s distinct-text exploitation; fingerprints
-    * are (fp0, fp1) pairs and Hamming sums both words. */
-  private def checkDd6Wide(spark: SparkSession, docs: Array[Doc], st: Long,
-      out: String): (Digest, Digest) = {
-    val corpus = planted2(docs, st).toVector
-    val nd = corpus.size.toLong
-    val chunkBits = graft.operators.OperatingPoint.simhashChunkBitsWide(nd)
-    val bitsPerWord = 3 * chunkBits
-    val wMask = (1L << bitsPerWord) - 1
-    val cMask = (1L << chunkBits) - 1
-    val grouped = groupByTextLite(corpus)
-    val df = new java.util.HashMap[String, Long]()
-    grouped.foreach { case (text, ids) =>
-      words(text).distinct.foreach { w =>
-        df.merge(w, ids.length.toLong, (a, b) => a + b)
-      }
-    }
-    def weight(w: String): Long = {
-      val f = df.get(w)
-      if (f * 20 <= nd) 4L else if (f * 5 <= nd) 2L else 1L
-    }
-    // word hashes are text-functions — cache once per distinct word so the
-    // vote pass is hash-free (the corpus re-observes its head constantly)
-    val wh = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-    val sh = grouped.par.map { case (text, ids) =>
-      val votes0 = new Array[Long](bitsPerWord)
-      val votes1 = new Array[Long](bitsPerWord)
-      words(text).foreach { w =>
-        val (h0, h1) = wh.computeIfAbsent(w,
-          x => (xxh64(x) & wMask, xxh64b(x) & wMask))
-        val wt = weight(w)
-        var b = 0
-        while (b < bitsPerWord) {
-          votes0(b) += (if (((h0 >> b) & 1L) != 0L) wt else -wt)
-          votes1(b) += (if (((h1 >> b) & 1L) != 0L) wt else -wt)
-          b += 1
-        }
-      }
-      var fp0 = 0L; var fp1 = 0L; var b = 0
-      while (b < bitsPerWord) {
-        if (votes0(b) > 0) fp0 |= 1L << b
-        if (votes1(b) > 0) fp1 |= 1L << b
-        b += 1
-      }
-      ((fp0, fp1), ids)
-    }.seq.toVector
-    // group member lists by (fp0, fp1) — identical texts share one, and
-    // distinct texts can collide
-    val byFp = new java.util.HashMap[(Long, Long), java.util.ArrayList[Long]]()
-    sh.foreach { case (fp, ids) =>
-      val l = byFp.computeIfAbsent(fp, _ => new java.util.ArrayList[Long]())
-      ids.foreach(l.add)
-    }
-    val fps = new java.util.ArrayList[((Long, Long), Array[Long])](byFp.size)
-    byFp.forEach((fp, l) => fps.add((fp,
-      l.toArray(new Array[java.lang.Long](0)).map(_.longValue).sorted)))
-    val fpArr = (0 until fps.size).map(fps.get).toArray
-    require(fpArr.length.toLong < (1L << 31),
-      s"pair-key packing assumes <2^31 distinct fingerprints, got ${fpArr.length}")
-    // chunk c's value comes from word c/3 (chunkBits ≤ 21)
-    @inline def chunkVal(g: Int, c: Int): Long =
-      ((if (c < 3) fpArr(g)._1._1 else fpArr(g)._1._2)
-        >> ((c % 3) * chunkBits)) & cMask
-    // Chunk-blocked candidates over DISTINCT fingerprints, in primitive
-    // buffers with the checkRpPairs first-collision dedup (a pair is
-    // emitted only from the FIRST chunk whose values collide) — at the
-    // sixth decade the prior global boxed HashSet held ~3e8 candidate
-    // keys and blew a 48 GB heap; this walk allocates nothing per pair.
-    val buckets = new java.util.HashMap[Long, IntBuf]()
-    fpArr.indices.foreach { i =>
-      var c = 0
-      while (c < 6) {
-        buckets.computeIfAbsent(c.toLong << 48 | chunkVal(i, c),
-          _ => new IntBuf).add(i)
-        c += 1
-      }
-    }
-    val bucketList = Vector.newBuilder[Array[Int]]
-    buckets.forEach { (bk, buf) =>
-      val arr = new Array[Int](buf.n + 1)
-      arr(0) = (bk >>> 48).toInt // the chunk index rides in slot 0
-      System.arraycopy(buf.a, 0, arr, 1, buf.n)
-      bucketList += arr
-    }
-    buckets.clear()
-    val cross = mergeAll(bucketList.result().par.map { arr =>
-      val dg = new Digest
-      val c = arr(0)
-      var i = 1
-      while (i < arr.length) {
-        val gi = arr(i); var j = i + 1
-        while (j < arr.length) {
-          val gj = arr(j)
-          var cc = 0; var met = false
-          while (cc < c && !met) {
-            if (chunkVal(gi, cc) == chunkVal(gj, cc)) met = true
-            cc += 1
-          }
-          if (!met) {
-            val ham =
-              java.lang.Long.bitCount(fpArr(gi)._1._1 ^ fpArr(gj)._1._1) +
-                java.lang.Long.bitCount(fpArr(gi)._1._2 ^ fpArr(gj)._1._2)
-            if (ham <= 5) {
-              val A = fpArr(gi)._2; val B = fpArr(gj)._2
-              var x = 0
-              while (x < A.length) {
-                var y = 0
-                while (y < B.length) {
-                  val a = A(x); val b = B(y)
-                  if (a < b) dg.add(s"$a$Sep$b$Sep$ham")
-                  else if (b < a) dg.add(s"$b$Sep$a$Sep$ham")
-                  y += 1
-                }
-                x += 1
-              }
-            }
-          }
-          j += 1
-        }
-        i += 1
-      }
-      dg
-    }.seq)
-    // within-fingerprint pairs (hamming 0) once per multi-member group —
-    // every fingerprint collides with itself in all six of its chunks
-    val self = mergeAll(fpArr.par.map { case (_, a) =>
-      val dg = new Digest
-      var i = 0
-      while (i < a.length) {
-        var j = i + 1
-        while (j < a.length) { dg.add(s"${a(i)}$Sep${a(j)}${Sep}0"); j += 1 }
-        i += 1
-      }
-      dg
-    }.seq)
-    (cross.merge(self), digestOutput(spark, out, Seq("a_id", "b_id", "hamming")))
-  }
-
-  /** Growable primitive int buffer — bucket lists at sixth-decade counts
-    * can't afford boxed Integers. */
-  private final class IntBuf {
-    var a = new Array[Int](8); var n = 0
-    def add(v: Int): Unit = {
-      if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
-      a(n) = v; n += 1
-    }
-  }
-
   private def groupByTextLite(corpus: Iterable[(Long, String)])
       : Vector[(String, Array[Long])] = {
     val m = new java.util.HashMap[String, java.util.ArrayList[Long]]()
@@ -983,16 +815,10 @@ object IndependentVerify {
 
   // ---------- vector family ----------
 
-  /** RP-LSH banding front shared by v3/v6/v8: per-vector band keys,
-    * norms, and the bucket → member-index lists. */
-  /** Banded RP-LSH front: per-band sign keys, norms, and the bucket lists.
-    * `planes` generalizes the pinned 4-bit config to the AUTO operating
-    * points (round 13: the sixth-decade checks derive planes from corpus
-    * size via the same [[graft.operators.OperatingPoint]] formula the
-    * library entrypoint uses — the operating point is shared CONFIG, the
-    * computation below stays independent). Bucket keys are longs
+  /** Banded RP-LSH front shared by v3/v6/v8/v12: per-band sign keys,
+    * norms, and the bucket → member-index lists. Bucket keys are longs
     * ((band << 32) | key) so any planes ≤ 24 fits. */
-  private def rpFront(vecs: Array[Vec], bands: Int, planes: Int = 4)
+  private def rpFront(vecs: Array[Vec], bands: Int, planes: Int)
       : (Array[Array[Int]], Array[Double], Array[Array[Double]],
          Vector[Array[Int]]) = {
     // dim from the DATA (round 14: the 384-dim fixture arm) — the sign
@@ -1041,12 +867,11 @@ object IndependentVerify {
     false
   }
 
-  /** Banded RP-LSH near-dup pair digest (v3: 4 bands, v6: 2 bands;
-    * `planes` = 4 pinned, or the derived AUTO point for the `*_auto`
-    * sixth-decade checks). */
+  /** Banded RP-LSH near-dup pair digest (v3: 4 bands, v6: 2 bands; 4
+    * planes per band). */
   private def checkRpPairs(spark: SparkSession, vecs: Array[Vec],
-      bands: Int, out: String, planes: Int = 4): (Digest, Digest) = {
-    val (keys, norms, sufs, bucketList) = rpFront(vecs, bands, planes)
+      bands: Int, out: String): (Digest, Digest) = {
+    val (keys, norms, sufs, bucketList) = rpFront(vecs, bands, 4)
     val exp = mergeAll(bucketList.par.map { arr =>
       val dg = new Digest
       val band = arr(0)
@@ -1152,8 +977,8 @@ object IndependentVerify {
     * set, compared row-wise against the output. Returns mismatch count in
     * the digest slot (exp == act iff zero mismatches). */
   private def checkV8(spark: SparkSession, vecs: Array[Vec],
-      out: String, planes: Int = 4): (Digest, Digest) = {
-    val labels = v8Labels(vecs, planes)
+      out: String): (Digest, Digest) = {
+    val labels = v8Labels(vecs)
     val exp = new Digest
     vecs.foreach(v => exp.add(s"${v.id}$Sep${labels(v.id)}"))
     (exp, digestOutput(spark, out, Seq("vec_id", "component")))
@@ -1162,12 +987,12 @@ object IndependentVerify {
   /** Component labels from union-find over the independently recomputed
     * v3 pair set ([[checkV8]]'s front half, shared with the v14
     * retention replay). */
-  private def v8Labels(vecs: Array[Vec], planes: Int)
+  private def v8Labels(vecs: Array[Vec])
       : scala.collection.mutable.LongMap[Long] = {
     // edges pack as (a<<32)|b — loud guard instead of silent aliasing
     require(vecs.forall(v => v.id >= 0 && v.id < (1L << 32)),
       "edge packing assumes vec_id in [0, 2^32)")
-    val (keys, norms, sufs, bucketList) = rpFront(vecs, 4, planes)
+    val (keys, norms, sufs, bucketList) = rpFront(vecs, 4, 4)
     // per-bucket primitive edge arrays (first-band dedup), then one
     // sequential union-find — never a boxed global set
     val edgeChunks = bucketList.par.map { arr =>
@@ -1197,7 +1022,7 @@ object IndependentVerify {
     uf.labels(vecs.iterator.map(_.id).toVector)
   }
 
-  /** Shared tail of the v14 retention replays: component labels →
+  /** Tail of the v14 retention replay: component labels →
     * integer-sum component means (the `centroidMeans` discipline:
     * per-(component, i) bigint sums of round(x·1e8), then
     * sum/count/1e8 in the library's division order) → round6 centroid
@@ -1259,33 +1084,12 @@ object IndependentVerify {
   /** v14 pinned: retention over [[checkV8]]'s 4-plane pair graph. */
   private def checkV14(spark: SparkSession, vecs: Array[Vec],
       out: String): (Digest, Digest) =
-    retentionDigest(spark, vecs, v8Labels(vecs, 4), out)
+    retentionDigest(spark, vecs, v8Labels(vecs), out)
 
-  /** v14 AUTO: retention over the policy front door's dedup-band arm
-    * ([[graft.operators.VectorOps.embedRetentionAuto]] with no recall
-    * contract dispatches to the learned-cell blocker at the auto
-    * operating point — same flat/hier switch as v13_auto), replayed
-    * end to end: sem membership → pair edges → union-find → the shared
-    * retention tail. */
-  private def checkV14Auto(spark: SparkSession, vecs: Array[Vec],
-      out: String): (Digest, Digest) = {
-    val k = graft.operators.OperatingPoint.semDedupCells(vecs.length)
-    val (cell1, cell2) =
-      if (k > graft.operators.OperatingPoint.semHierCells)
-        semCellsHier(vecs, k, 3)
-      else semCellsFlat(vecs, k, 3, modInit = true)
-    val (_, edges) =
-      semPairsCompute(vecs, cell1, cell2, 0.8, collectEdges = true)
-    val uf = new UnionFind
-    edges.foreach(pk => uf.union(pk >>> 32, pk & 0xffffffffL))
-    retentionDigest(spark, vecs,
-      uf.labels(vecs.iterator.map(_.id).toVector), out)
-  }
-
-  /** v4: IVF batch k-NN join (first-`kCells` centroids, 2 probes, top-3;
-    * 16 pinned, or the derived √n AUTO point for `v4_auto`). */
+  /** v4: IVF batch k-NN join (first-16 centroids, 2 probes, top-3). */
   private def checkV4(spark: SparkSession, vecs: Array[Vec],
-      out: String, kCells: Int = 16): (Digest, Digest) = {
+      out: String): (Digest, Digest) = {
+    val kCells = 16
     val cent = vecs.filter(_.id < kCells).sortBy(_.id)
       .map(v => (v.id.toInt, v.v))
     require(cent.length == kCells,
@@ -1413,9 +1217,8 @@ object IndependentVerify {
   /** Lloyd's centroids after `iters` steps, mirroring the library's
     * kmeansCentroids: rounded-cosine argmax assignment ([[assign]]) and
     * integer-scaled component means (sum(round(x·1e8)::long)/count/1e8 —
-    * order-free sums, IEEE-deterministic divisions). `modInit` seeds each
-    * cell with the mean of its id-mod-K partition (the auto paths' layout-
-    * independent init); otherwise cells seed from the first-K ids. */
+    * order-free sums, IEEE-deterministic divisions). Cells seed from the
+    * first-K ids. */
   /** [[assign]] with the norms hoisted — bit-equal by construction:
     * [[cosine]]'s fused loop accumulates d/na/nb in the same left-assoc
     * order as [[dot]]/[[norm2]] over the same arrays, so
@@ -1447,8 +1250,8 @@ object IndependentVerify {
     out
   }
 
-  private def lloydCentroids(vecs: Array[Vec], iters: Int, k: Int,
-      modInit: Boolean): Array[(Int, Array[Double])] = {
+  private def lloydCentroids(vecs: Array[Vec], iters: Int,
+      k: Int): Array[(Int, Array[Double])] = {
     val dim = vecs(0).v.length
     // the integer-scaled components round(x*1e8) are functions of the
     // CONSTANT vectors — precompute once, in parallel
@@ -1473,16 +1276,14 @@ object IndependentVerify {
       }
       next.result().sortBy(_._1).toArray
     }
-    var cent =
-      if (modInit) means(vecs.map(v => (v.id % k).toInt))
-      else vecs.filter(_.id < k).sortBy(_.id).map(v => (v.id.toInt, v.v))
+    var cent = vecs.filter(_.id < k).sortBy(_.id).map(v => (v.id.toInt, v.v))
     for (_ <- 1 to iters) cent = means(assignFast(vecs, cent))
     cent
   }
 
   private def checkV5Kmeans(spark: SparkSession, vecs: Array[Vec],
       out: String): (Digest, Digest) = {
-    val cent = lloydCentroids(vecs, 3, 8, modInit = false)
+    val cent = lloydCentroids(vecs, 3, 8)
     val assigned = assign(vecs, cent)
     val exp = new Digest
     top10Rows(vecs, cent, assigned).foreach(exp.add)
@@ -1528,22 +1329,6 @@ object IndependentVerify {
   private def semPairsDigest(spark: SparkSession, vecs: Array[Vec],
       cell1: Array[Int], cell2: Array[Int], threshold: Double,
       out: String): (Digest, Digest) = {
-    val (exp, _) =
-      semPairsCompute(vecs, cell1, cell2, threshold, collectEdges = false)
-    (exp, digestOutput(spark, out, Seq("a_id", "b_id", "sim")))
-  }
-
-  /** The sem families' pair loop, emitting the expected-side digest and —
-    * when `collectEdges` — the surviving pairs packed as (a<<32)|b for
-    * the v14 retention replay's union-find (same packing/guard as
-    * [[v8Labels]]; ~8 B/pair, bounded by the family's candidates-linear
-    * gate). */
-  private def semPairsCompute(vecs: Array[Vec],
-      cell1: Array[Int], cell2: Array[Int], threshold: Double,
-      collectEdges: Boolean): (Digest, Array[Long]) = {
-    if (collectEdges)
-      require(vecs.forall(v => v.id >= 0 && v.id < (1L << 32)),
-        "edge packing assumes vec_id in [0, 2^32)")
     val n = vecs.length
     val norms = new Array[Double](n)
     val sufs = new Array[Array[Double]](n)
@@ -1574,9 +1359,8 @@ object IndependentVerify {
     import scala.jdk.CollectionConverters._
     val work = buckets.entrySet().asScala.toVector
       .map(e => (e.getKey.intValue, e.getValue.result()))
-    val results = work.par.map { case (cid, arr) =>
+    val exp = mergeAll(work.par.map { case (cid, arr) =>
       val dg = new Digest
-      val eb = new scala.collection.mutable.ArrayBuilder.ofLong
       var i = 0
       while (i < arr.length) {
         var j = i + 1
@@ -1593,7 +1377,6 @@ object IndependentVerify {
                   if (vecs(a).id < vecs(b).id) (vecs(a).id, vecs(b).id)
                   else (vecs(b).id, vecs(a).id)
                 dg.add(s"$x$Sep$y$Sep${java.lang.Double.toString(sim)}")
-                if (collectEdges) eb += (x << 32) | y
               }
             }
           }
@@ -1601,15 +1384,9 @@ object IndependentVerify {
         }
         i += 1
       }
-      (dg, eb.result())
-    }.seq
-    val edges =
-      if (collectEdges) {
-        val out = new scala.collection.mutable.ArrayBuilder.ofLong
-        results.foreach(r => out ++= r._2)
-        out.result()
-      } else Array.emptyLongArray
-    (mergeAll(results.map(_._1)), edges)
+      dg
+    }.seq)
+    (exp, digestOutput(spark, out, Seq("a_id", "b_id", "sim")))
   }
 
   /** v13: SemDeDup-shape learned-cell near-dup
@@ -1617,137 +1394,20 @@ object IndependentVerify {
     * centroids, top-2 cell membership, co-membership pairs, exact
     * verify. */
   private def checkSemPairs(spark: SparkSession, vecs: Array[Vec],
-      out: String, k: Int, iters: Int, threshold: Double,
-      modInit: Boolean): (Digest, Digest) = {
-    val (cell1, cell2) = semCellsFlat(vecs, k, iters, modInit)
-    semPairsDigest(spark, vecs, cell1, cell2, threshold, out)
-  }
-
-  /** Flat-arm top-2 cell membership ([[checkSemPairs]]'s front half,
-    * shared with the v14 retention replay). */
-  private def semCellsFlat(vecs: Array[Vec], k: Int, iters: Int,
-      modInit: Boolean): (Array[Int], Array[Int]) = {
-    val cent = lloydCentroids(vecs, iters, k, modInit)
+      out: String, k: Int, iters: Int, threshold: Double): (Digest, Digest) = {
+    val cent = lloydCentroids(vecs, iters, k)
     val norms = new Array[Double](vecs.length)
     (0 until vecs.length).par.foreach(i =>
       norms(i) = math.sqrt(norm2(vecs(i).v)))
     val cands = cent.map { case (cid, c) => (cid, c, math.sqrt(norm2(c))) }
-    top2Cells(vecs, norms, _ => cands)
-  }
-
-  /** v13 HIERARCHICAL arm
-    * ([[graft.operators.VectorOps.semDedupPairsHierOver]]): supers via
-    * Lloyd over the corpus (mod-K₁ init), home super per vector, local
-    * Lloyd within each super on the composite (sup, lc) key, membership =
-    * top-2 supers → top-2 composite cells over both supers' locals
-    * (cid = sup·Kl + lc), then the shared pairs/verify tail. */
-  private def checkSemPairsHier(spark: SparkSession, vecs: Array[Vec],
-      out: String, k: Int, iters: Int, threshold: Double): (Digest, Digest) = {
-    val (cell1, cell2) = semCellsHier(vecs, k, iters)
+    val (cell1, cell2) = top2Cells(vecs, norms, _ => cands)
     semPairsDigest(spark, vecs, cell1, cell2, threshold, out)
-  }
-
-  /** Hier-arm top-2 composite-cell membership ([[checkSemPairsHier]]'s
-    * front half, shared with the v14 retention replay). */
-  private def semCellsHier(vecs: Array[Vec], k: Int,
-      iters: Int): (Array[Int], Array[Int]) = {
-    val n = vecs.length
-    val k1 = math.max(2, math.ceil(math.sqrt(2.0 * k)).toInt)
-    val kl = math.max(1, math.ceil(k.toDouble / k1).toInt)
-    val norms = new Array[Double](n)
-    (0 until n).par.foreach(i => norms(i) = math.sqrt(norm2(vecs(i).v)))
-    val scaled = new Array[Array[Long]](n)
-    (0 until n).par.foreach { i =>
-      scaled(i) = vecs(i).v.map(x => rndLong(x * 1e8))
-    }
-    val dim = vecs(0).v.length
-    // phase A: supers over the corpus; phase B: home super per vector
-    val sup = lloydCentroids(vecs, iters, k1, modInit = true)
-    val home = assignFast(vecs, sup)
-    // phase C: local Lloyd within each super — group members by home,
-    // then per super (parallel) run the mod-Kl-init Lloyd with the
-    // integer-sum means over the precomputed scaled components
-    val bySup = new java.util.HashMap[Integer,
-      scala.collection.mutable.ArrayBuilder.ofInt]()
-    (0 until n).foreach { i =>
-      bySup.computeIfAbsent(home(i),
-        _ => new scala.collection.mutable.ArrayBuilder.ofInt) += i
-    }
-    import scala.jdk.CollectionConverters._
-    val superGroups = bySup.entrySet().asScala.toVector
-      .map(e => (e.getKey.intValue, e.getValue.result()))
-    // locals(sup) = array of (lc, centroid, norm)
-    val locals = new java.util.concurrent.ConcurrentHashMap[Integer,
-      Array[(Int, Array[Double], Double)]]()
-    superGroups.par.foreach { case (s, members) =>
-      def means(assignedLc: Array[Int]): Array[(Int, Array[Double])] = {
-        val sums = new java.util.HashMap[Integer, (Array[Long], Array[Long])]()
-        var m = 0
-        while (m < members.length) {
-          val e = sums.computeIfAbsent(assignedLc(m),
-            _ => (new Array[Long](dim), new Array[Long](1)))
-          val v = scaled(members(m)); var j = 0
-          while (j < dim) { e._1(j) += v(j); j += 1 }
-          e._2(0) += 1
-          m += 1
-        }
-        val next = Vector.newBuilder[(Int, Array[Double])]
-        sums.forEach { (lc, e) =>
-          val c = new Array[Double](dim); var j = 0
-          while (j < dim) {
-            c(j) = e._1(j).toDouble / e._2(0).toDouble / 1e8; j += 1
-          }
-          next += ((lc.intValue, c))
-        }
-        next.result().sortBy(_._1).toArray
-      }
-      var loc = means(members.map(i => (vecs(i).id % kl).toInt))
-      for (_ <- 1 to iters) {
-        val ln = loc.map { case (_, c) => math.sqrt(norm2(c)) }
-        val assignedLc = members.map { i =>
-          var bestS = -2.0; var bestC = Int.MaxValue
-          var j = 0
-          while (j < loc.length) {
-            val raw =
-              if (norms(i) == 0.0 || ln(j) == 0.0) 0.0
-              else dot(vecs(i).v, loc(j)._2) / (norms(i) * ln(j))
-            val cs = rnd(raw, 6)
-            if (cs > bestS || (cs == bestS && loc(j)._1 < bestC)) {
-              bestS = cs; bestC = loc(j)._1
-            }
-            j += 1
-          }
-          bestC
-        }
-        loc = means(assignedLc)
-      }
-      locals.put(s, loc.map { case (lc, c) => (lc, c, math.sqrt(norm2(c))) })
-    }
-    // phase D: top-SuperProbes supers per vector ((rnd-cosine desc, sup
-    // asc) — TopKRows' total order), then top-2 composite cells over the
-    // probed supers' locals
-    val probes = graft.operators.VectorOps.SuperProbes
-    val supCands = sup.map { case (cid, c) => (cid, c, math.sqrt(norm2(c))) }
-    val topSup = new Array[Array[Int]](n)
-    (0 until n).par.foreach { i =>
-      topSup(i) = supCands.map { case (cid, c, nb) =>
-        val raw =
-          if (norms(i) == 0.0 || nb == 0.0) 0.0
-          else dot(vecs(i).v, c) / (norms(i) * nb)
-        (rnd(raw, 6), cid)
-      }.sortBy { case (cs, cid) => (-cs, cid) }.take(probes).map(_._2)
-    }
-    top2Cells(vecs, norms, { i =>
-      topSup(i).flatMap { s =>
-        locals.getOrDefault(s, Array.empty[(Int, Array[Double], Double)])
-          .map { case (lc, c, nn) => (s * kl + lc, c, nn) }
-      }
-    })
   }
 
   /** dd5: banded ≥0.94 match + rank-gated upsert replay. */
   private def checkDd5(spark: SparkSession, vecs: Array[Vec],
-      out: String, planes: Int = 4): (Digest, Digest) = {
+      out: String): (Digest, Digest) = {
+    val planes = 4
     val signs = buildSigns(8 * planes, vecs(0).v.length, ddSignPos)
     final case class Item(id: Long, v: Array[Double], rank: Long, nrm: Double,
       suf: Array[Double], keys: Array[Int])
@@ -1918,19 +1578,10 @@ object IndependentVerify {
       "v4_knn_join", "v5_ivf_assign", "v5_kmeans_ivf", "v6_rp_lsh_neardup",
       "v8_embed_clusters", "v12_sketch_neardup", "v13_semdedup_pairs",
       "v14_embed_retention")
-    // the AUTO operating-point recomputes (graft.SixthDecade dumps them) —
-    // opt-in by name, never part of the default pinned sweep
-    val autoNames = Seq("v3_auto", "v6_auto", "v8_auto", "v4_auto",
-      "dd5_auto", "dd6w_auto", "v12_auto", "v13_auto", "v13flat_auto",
-      "v13hier_auto", "v14_auto")
     val wanted =
       if (args.length >= 3) {
         val fs = args(2).split(",").toSeq
-        // substring match selects only the PINNED sweep; an auto variant
-        // must be named exactly — 'v4' against a pinned-only dump dir must
-        // not drag in 'v4_auto' and fail on its missing parquet (the
-        // opt-in-by-name contract)
-        all.filter(n => fs.exists(n.contains)) ++ autoNames.filter(fs.contains)
+        all.filter(n => fs.exists(n.contains))
       } else all
     // the verifier COLLECTS the corpus by design (plain-JVM recompute);
     // the 2M×384 fixture is ~6 GB of vectors, over the 1g default cap
@@ -1940,16 +1591,6 @@ object IndependentVerify {
     lazy val docs = loadDocs(spark, sfDir)
     lazy val st = stride(docs)
     lazy val vecs = loadVecs(spark, sfDir)
-    // Embedding dim, inferred ONCE for every dim-aware dispatch arm — a
-    // mixed-dimension corpus must fail loudly here, not silently derive
-    // planes from whichever row loads first on each side.
-    lazy val vecDim = {
-      val d = vecs.headOption.map(_.v.length).getOrElse(64)
-      require(vecs.forall(_.v.length == d),
-        s"mixed embedding dimensions in $sfDir (first row has $d)")
-      d
-    }
-
     var failed = 0
     wanted.foreach { name =>
       val t0 = System.nanoTime()
@@ -1975,41 +1616,8 @@ object IndependentVerify {
           case "v5_ivf_assign"         => checkV5Assign(spark, vecs, path)
           case "v5_kmeans_ivf"         => checkV5Kmeans(spark, vecs, path)
           case "v13_semdedup_pairs"    => checkSemPairs(spark, vecs, path,
-            8, 3, 0.30, modInit = false)
+            8, 3, 0.30)
           case "v14_embed_retention"   => checkV14(spark, vecs, path)
-          // AUTO operating points: derived from corpus size by the SAME
-          // OperatingPoint formulas the library entrypoints use (shared
-          // config, independent computation)
-          case "v3_auto" => checkRpPairs(spark, vecs, 4, path,
-            graft.operators.OperatingPoint.rpPlanesPerBand(vecs.length, vecDim))
-          case "v6_auto" => checkRpPairs(spark, vecs, 2, path,
-            graft.operators.OperatingPoint.rpPlanesPerBand(vecs.length, vecDim))
-          case "v8_auto" => checkV8(spark, vecs, path,
-            graft.operators.OperatingPoint.rpPlanesPerBand(vecs.length, vecDim))
-          case "v4_auto" => checkV4(spark, vecs, path,
-            graft.operators.OperatingPoint.ivfCells(vecs.length))
-          case "dd5_auto" => checkDd5(spark, vecs, path,
-            graft.operators.OperatingPoint.rpPlanesPerBand(vecs.length, vecDim))
-          case "dd6w_auto" => checkDd6Wide(spark, docs, st, path)
-          case "v12_auto" => checkSketchPairs(spark, vecs, path,
-            graft.operators.OperatingPoint.rpHighSimBands(vecs.length, vecDim),
-            graft.operators.OperatingPoint.rpPlanesPerBand(vecs.length, vecDim),
-            graft.operators.OperatingPoint.sketchMaxHamming(0.8), 0.8)
-          // v13_auto mirrors the library's flat/hier switch at the same
-          // OperatingPoint threshold; the explicit arm names pin one form
-          // for A/Bs regardless of corpus size
-          case "v13_auto" =>
-            val kA = graft.operators.OperatingPoint.semDedupCells(vecs.length)
-            if (kA > graft.operators.OperatingPoint.semHierCells)
-              checkSemPairsHier(spark, vecs, path, kA, 3, 0.8)
-            else checkSemPairs(spark, vecs, path, kA, 3, 0.8, modInit = true)
-          case "v13flat_auto" => checkSemPairs(spark, vecs, path,
-            graft.operators.OperatingPoint.semDedupCells(vecs.length),
-            3, 0.8, modInit = true)
-          case "v13hier_auto" => checkSemPairsHier(spark, vecs, path,
-            graft.operators.OperatingPoint.semDedupCells(vecs.length),
-            3, 0.8)
-          case "v14_auto" => checkV14Auto(spark, vecs, path)
         }
         val secs = (System.nanoTime() - t0) / 1e9
         val ok = exp.same(act)

@@ -43,32 +43,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(rows.forall(r => r.getBoolean(3) == (r.getLong(2) > 0)))
   }
 
-  test("decontamination hashed-gram switch: long-key broadcast, parity with strings") {
-    val docs = Tables.load(spark, sf, "documents").select(col("doc_id"), col("text"))
-    val hashed = TextOps.decontaminationOver(docs, hashGrams = true)
-    // the broadcast probe joins on a BIGINT gram (g#NL), not a string —
-    // the 100 TB form where the eval table broadcasts 8 bytes per gram
-    val plan = hashed.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert("\\[g#\\d+L\\]".r.findFirstIn(plan).nonEmpty,
-      s"hashed variant must join on a long gram column: $plan")
-    val strPlan = TextOps.decontaminationOver(docs, hashGrams = false)
-      .queryExecution.executedPlan.toString
-    assert("\\[g#\\d+L\\]".r.findFirstIn(strPlan).isEmpty,
-      "string variant unexpectedly joins on a long column")
-    // identical verdicts on the fixture (the 48-bit fold is
-    // collision-free at this gram count)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getBoolean(3)))
-      .toSet
-    assert(rows(hashed) == rows(TextOps.decontaminationOver(docs, hashGrams = false)))
-    // the AUTO entrypoint picks strings at fixture size and longs at 10x —
-    // derivation checked directly against the documented cutoff
-    import graft.operators.OperatingPoint
-    assert(!OperatingPoint.hashDecontaminationGrams(5300L))
-    assert(OperatingPoint.hashDecontaminationGrams(53000L))
-  }
-
   test("frame sampling yields fixed 32-byte frames incl. frame 0 per media") {
     val frames = Multimodal.sampleFrames(Multimodal.mediaTable(spark, sf))
     assert(frames.filter(_.frame.length != 32).count() == 0)
@@ -147,47 +121,6 @@ class PipelineOpsSpec extends SparkSpec {
       .groupBy(_._2)
     assert(bySrc.values.forall(g => g.length <= TextOps.DomainCap &&
       g.map(_._4).sorted.sameElements(1 to g.length)))
-  }
-
-  test("derived surprisal gate keeps the corpus the pinned literal kills") {
-    // 64 disjoint-vocabulary variants (the synthDv scheme): every word's
-    // probability divides by ~64, adding ln 64 ≈ 4.16 to every doc's
-    // surprisal — base docs sit at 3.4-4.0, so ALL shift past the pinned
-    // 7.0 and the literal keeps NOTHING, though relative quality is
-    // untouched (the round-13 ×1000 finding, reproduced small). The
-    // median-anchored derived ceiling must keep cutting the same relative
-    // tail instead.
-    val base = graft.Q.documents(spark, sf).select("doc_id", "text", "lang")
-    val corpus = base.crossJoin(
-        spark.range(64).select(col("id").as("cp")))
-      .select((col("doc_id") + col("cp") * 1000000L).as("doc_id"),
-        expr("""CASE WHEN cp = 0 THEN text
-                | ELSE array_join(transform(split(text, ' '),
-                |        w -> concat(w, '_v', cast(cp as string))), ' ')
-                | END""".stripMargin).as("text"),
-        col("lang"))
-      .localCheckpoint()
-    val n = corpus.count()
-    val (model, oov) = TextOps.unigramModel(corpus)
-    val pinnedKept = TextOps.surprisalScored(
-        corpus.select("doc_id", "text"), model, oov)
-      .filter(col("keep")).count()
-    assert(pinnedKept == 0L, s"pinned literal kept $pinnedKept of $n")
-    val autoKept = TextOps.perplexityAuto(corpus, Some(n))
-      .filter(col("keep")).count()
-    assert(autoKept >= n * 9 / 10, s"derived gate kept $autoKept of $n")
-    // at the FIXTURE the derived ceiling reproduces the pinned decisions
-    // exactly (the anchor contract) — c5's auto form equals the pinned c5
-    val fixtureDocs = graft.Q.documents(spark, sf)
-    val pinnedC5 = TextOps.curationPipelineOver(fixtureDocs, derivedKeep = false)
-      .collect().map(_.toSeq).toSet
-    val autoC5 = TextOps.curationPipelineAuto(fixtureDocs)
-      .collect().map(_.toSeq).toSet
-    assert(autoC5 == pinnedC5)
-    // and on the shifted corpus c5's auto form keeps a sane population
-    val autoC5Big = TextOps.curationPipelineAuto(corpus)
-      .agg(sum("n_docs")).head().getLong(0)
-    assert(autoC5Big > 0L)
   }
 
   test("c2 mixture weights: shares sum to 1, weights rebalance to target") {
@@ -565,12 +498,6 @@ class PipelineOpsSpec extends SparkSpec {
     val fullShard = a.map(t => t._1 -> t._2).toMap
     assert(half.nonEmpty &&
       half.forall { case (id, sh) => fullShard(id) == sh })
-    // the AUTO form equals the pinned oracle query at the anchor regime
-    // (fixture n derives the floor S=8), like the LSH auto entrypoints
-    val auto = TextOps.shuffleShardAuto(
-        Tables.load(spark, sf, "documents").select("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    assert(auto == a.toSet)
   }
 
   test("h1 html extract: markup gone, boilerplate dropped, kept words come from the body") {
@@ -794,33 +721,6 @@ class PipelineOpsSpec extends SparkSpec {
     val cnts = full.map(_.getLong(4))
     assert(cnts.zip(cnts.tail).forall { case (a, b) => b <= a },
       cnts.mkString(","))
-  }
-
-  test("t13 perplexityAuto: at/below the cutoff it IS perplexityFilter; " +
-      "above it a calibration-sample model preserves keep decisions") {
-    val docs = Tables.load(spark, sf, "documents")
-    val n = docs.count()
-    // cutoff not exceeded → bit-identical to the full-model filter
-    val full = TextOps.perplexityFilter(spark, sf)
-      .select("doc_id", "n_words", "n_oov", "avg_surprisal", "keep")
-      .collect().map(r => (r.getLong(0),
-        (r.getInt(1), r.getInt(2), r.getDouble(3), r.getBoolean(4)))).toMap
-    val atCut = TextOps.perplexitySampled(docs, n, cutoff = n)
-      .select("doc_id", "n_words", "n_oov", "avg_surprisal", "keep")
-      .collect().map(r => (r.getLong(0),
-        (r.getInt(1), r.getInt(2), r.getDouble(3), r.getBoolean(4)))).toMap
-    assert(atCut == full)
-    // forced ~50% calibration sample → the keep DECISION survives the
-    // sampled model (scores shift — ln((c+1)/(n+v)) moves with the
-    // sampled counts — but the ≤7.0 avg-surprisal cut is designed to be
-    // ~sample-invariant; this pins the measured parity floor)
-    val sampled = TextOps.perplexitySampled(docs, n, n / 2)
-      .select("doc_id", "keep").collect()
-      .map(r => (r.getLong(0), r.getBoolean(1))).toMap
-    assert(sampled.keySet == full.keySet) // scoring covers the FULL corpus
-    val agree = full.count { case (id, f) => sampled(id) == f._4 }
-    assert(agree.toDouble / n >= 0.97,
-      s"keep parity ${agree.toDouble / n} below the measured 0.97 floor")
   }
 
   test("t16 bpe train: fully-fused single-letter word emits no phantom " +

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 /** Scale fixtures: synthesize an N-times copy of a base fixture (keys
   * offset per copy so group/join/session cardinalities scale with the
   * data, as a larger TPC-H SF does). The widened directories feed the
-  * scale checks: [[IndependentVerify]] and [[SixthDecade]] read them as
-  * input data, and VectorGateSpec builds its ×10 fixtures through
-  * [[synthDv]]. Writes only under the given output directory.
+  * scale checks: [[IndependentVerify]] reads them as input data, and
+  * VectorGateSpec builds its ×10 fixtures through [[synthDv]]. Writes only under the given output directory.
   *
   * Four modes, one per widening:
   *  - `synth`: [[synth]], the r12 scheme behind target/sf1 and

@@ -152,11 +152,11 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.jsonlPreview(spark, s"$dir/out", 1).count() == 1)
 
     // head-probed schema: inference is bounded by the probe lines, and
-    // jsonlAuto serves the whole file under it without a full-scan
+    // jsonlProbed serves the whole file under it without a full-scan
     // inference pass
     val probed = Sources.jsonlSchema(spark, s"$dir/out", lines = 1)
     assert(probed.fieldNames.toSet == Set("doc_id", "lang", "text"))
-    assert(Sources.jsonlAuto(spark, s"$dir/out").count() == 2)
+    assert(Sources.jsonlProbed(spark, s"$dir/out").count() == 2)
 
     // an empty/all-blank drop fails AT REGISTRATION with a clear message
     // (binding it would die later on QUERY_ONLY_CORRUPT_RECORD_COLUMN at
@@ -166,7 +166,7 @@ class SourcesSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$emptyDir/part.jsonl"), "\n\n")
     val emptyErr = intercept[IllegalArgumentException] {
-      Sources.jsonlAuto(spark, emptyDir)
+      Sources.jsonlProbed(spark, emptyDir)
     }
     assert(emptyErr.getMessage.contains("no data schema could be probed"))
     // a CSV misnamed .jsonl probes ONLY _corrupt_record — equally
@@ -176,7 +176,7 @@ class SourcesSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$csvDir/part.jsonl"), "a,b\n1,x\n2,y\n")
     val csvErr = intercept[IllegalArgumentException] {
-      Sources.jsonlAuto(spark, csvDir)
+      Sources.jsonlProbed(spark, csvDir)
     }
     assert(csvErr.getMessage.contains("no data schema could be probed"))
 

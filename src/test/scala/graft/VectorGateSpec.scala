@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{CosineSimilarity, Round6}
+import graft.functions.{CosineSimilarity, RpBandKeys}
 import graft.operators.VectorOps
 
 /** Hard gate for the one oracle-less query (v5_kmeans_ivf, float-iterative
@@ -46,8 +45,10 @@ class VectorGateSpec extends SparkSpec {
   }
 
   test("auto blocking: candidates stay linear AND high-sim recall holds (x10, both dims)") {
-    // The two sides of the AUTO blocking contract, both MEASURED (round
-    // 15, after the sign-family fix — VectorOps.mix64 scaladoc):
+    // The two sides of the size-derived RP-LSH blocking contract (planes
+    // from OperatingPoint.rpPlanesPerBand, as RankDedup.upsert derives
+    // them), both MEASURED (round 15, after the sign-family fix —
+    // VectorOps.mix64 scaladoc):
     //  (a) candidate pairs ∝ n. This is the gate the round-15 bug class
     //      needed: the raw-LCG family's period-7 plane negations capped
     //      key entropy, candidates ran 196-1646× the n²/2^planes math at
@@ -60,8 +61,7 @@ class VectorGateSpec extends SparkSpec {
     //      the 2000-vector base corpus exactly (synthDv's shared-rotation
     //      construction) and cross-copy sims sit σ-far below at either
     //      dim, so truth(×10) = 10 × brute-force truth(base) — free and
-    //      exact. The dedup-relevant ≥0.8 band is gated SEPARATELY on the
-    //      twin-planted fixtures (the next test), where that band exists.
+    //      exact.
     // Floors pinned just below measured (the v5 discipline). Candidate
     // budget: bucket occupancy at the derived point is the ANCHOR's
     // (n/2^planes tracks 2000/2^4 by construction), so candidates/n ≈
@@ -69,7 +69,7 @@ class VectorGateSpec extends SparkSpec {
     // skew, and the broken family sat 5-50× above it. Recall is over the
     // PLANTED pair set (the base corpus's ≥0.30 pairs, replicated exactly
     // within every copy by synthDv's shared-rotation construction) — the
-    // honest AUTO recall at the derived point is LOW by design (the
+    // honest recall at the derived point is LOW by design (the
     // candidates-stay-linear contract trades it away; the pinned 4-plane
     // form keeps the high-recall anchor), so this is a REGRESSION floor,
     // not a quality claim.
@@ -85,7 +85,11 @@ class VectorGateSpec extends SparkSpec {
       val planes = OperatingPoint.rpPlanesPerBand(n, dim)
       assert(planes == 7, s"x10 operating point moved: planes=$planes — " +
         "re-measure the floors before re-pinning")
-      val cands = VectorOps.rpBandedCandidateCount(ds, 4, planes, dim)
+      // candidate pairs: Σ C(occupancy, 2) over the (band, key) buckets
+      val cands = ds.select(posexplode(RpBandKeys.of(col("v"),
+          VectorOps.rpSignMatrix(4, planes, dim), planes)).as(Seq("b", "key")))
+        .groupBy("b", "key").count()
+        .agg(sum(col("count") * (col("count") - 1) / 2)).head.getDouble(0).toLong
       val base = ds.filter(col("vec_id") < 1000000L)
       val planted = base.as("a").crossJoin(base.as("x"))
         .filter(col("a.vec_id") < col("x.vec_id"))
@@ -93,7 +97,7 @@ class VectorGateSpec extends SparkSpec {
         .select(col("a.vec_id").as("pa"), col("x.vec_id").as("pb"))
         .localCheckpoint()
       val plantedN = planted.count()
-      val foundPlanted = VectorOps.nearDupPairsAuto(ds, dim = dim)
+      val foundPlanted = VectorOps.rpBandedNearDupOver(ds, 4, planes, dim = dim)
         .filter((col("a_id") / 1000000L).cast("long") ===
           (col("b_id") / 1000000L).cast("long"))
         .select((col("a_id") % 1000000L).as("pa"),
@@ -108,146 +112,6 @@ class VectorGateSpec extends SparkSpec {
       assert(recall >= recallFloor,
         f"dim=$dim planted recall $recall%.3f < pinned floor $recallFloor")
     }
-  }
-
-  test("dedup-band (>=0.8) recall floors on the twin-planted fixtures: " +
-      "high-sim op holds its target; v3's survey floor pinned (x10, both dims)") {
-    // The band production dedup cares about, measured against PLANTED
-    // high-sim twins (ScaleFixtures.synthDv twins=true: ~0.82-0.96 cosines,
-    // replicated exactly per copy — the band the natural fixture lacks).
-    // Floors pinned just below measured (the v5 discipline; r16 recall rows
-    // in BASELINE.md):
-    //  - nearDupPairsHighSim (target recall 0.9 @ sim 0.8): measured
-    //    0.9745 / 0.9764 at dims 64/384 → floor 0.95. This operator's
-    //    bands GROW with the corpus (OperatingPoint.rpHighSimBands), so
-    //    the floor is scale-stable by construction — the ×1000 rows in
-    //    BASELINE §5 confirm.
-    //  - nearDupPairsAuto (the candidates-linear survey point): measured
-    //    0.8208 / 0.8151 at ×10 → REGRESSION floor 0.78, not a quality
-    //    claim — its recall DECAYS with corpus size by construction
-    //    (planes grow, bands don't; ~0.15 predicted and measured at
-    //    ×1000), which is exactly why the high-sim operator exists.
-    for ((dir, dim) <- Seq(("target/sfdvt_smoke", 64),
-        ("target/sfdvt_smoke384", 384))) {
-      if (!new java.io.File(s"$dir/embeddings.parquet").exists())
-        ScaleFixtures.synthDv(spark, "/root/testdata/sf0.1", dir, copies = 10,
-          dim = dim, twins = true)
-      val ds = VectorOps.vecsCheckpointed(spark, dir)
-      val n = ds.count()
-      val copies = 10L
-      val base = ds.filter(col("vec_id") < 1000000L).localCheckpoint()
-      val twins = base.filter(col("vec_id") >= 500000L)
-        .select((col("vec_id") - 500000L).as("pa"), col("v").as("tv"))
-      val truth = base.join(twins, base("vec_id") === twins("pa"))
-        .select(col("pa"), (col("pa") + 500000L).as("pb"),
-          Round6.of(CosineSimilarity.of(col("v"), col("tv"))).as("ts"))
-        .filter(col("ts") >= 0.8).localCheckpoint()
-      val planted = truth.count()
-      assert(planted > 50, s"twin fixture $dir lost its planted >=0.8 band")
-      def recallOf(found: org.apache.spark.sql.DataFrame): Double = {
-        val hits = found
-          .filter((col("a_id") / 1000000L).cast("long") ===
-            (col("b_id") / 1000000L).cast("long"))
-          .select((col("a_id") % 1000000L).as("pa"),
-            (col("b_id") % 1000000L).as("pb"))
-          .join(truth, Seq("pa", "pb")).count()
-        hits.toDouble / (planted * copies)
-      }
-      val hs = recallOf(VectorOps.nearDupPairsHighSim(ds,
-        countEstimate = Some(n), dim = dim))
-      val v3 = recallOf(VectorOps.nearDupPairsAuto(ds,
-        countEstimate = Some(n), dim = dim))
-      info(f"dim=$dim planted=$planted x$copies: highSim recall=$hs%.4f " +
-        f"(floor 0.95), v3_auto recall=$v3%.4f (regression floor 0.78)")
-      assert(hs >= 0.95, f"dim=$dim high-sim >=0.8 recall $hs%.4f < 0.95")
-      assert(v3 >= 0.78, f"dim=$dim v3_auto >=0.8 recall $v3%.4f < 0.78")
-    }
-  }
-
-  test("learned-cell (SemDeDup) blocker: candidates stay linear AND " +
-      "dedup-band recall holds on the twin fixtures (x10, both dims)") {
-    // The sem family's version of the auto-blocking contract
-    // (semDedupPairsAuto): K = n/128 pins ~128-vector cell occupancy, so
-    // top-2 membership candidates ≈ 2n²/K = 256·n — same 500·n cap as
-    // the RP gate. Recall at the ≥0.8 band vs the planted twins: a twin
-    // pair is found iff the two vectors share a top-2 learned cell. NOTE
-    // the fixture is ADVERSARIAL for a data-adaptive blocker — the synth
-    // corpus is near-uniform random (no cluster structure to learn), so
-    // the measured number is the blocker's floor geometry, not its
-    // clustered-corpus behavior. Floors pinned just below measured
-    // (r16 recall rows, BASELINE.md: >=0.8 recall 0.9189 at dim 64 / 0.9679 at
-    // dim 384 — the higher dim blocks BETTER here because top-2 learned
-    // cells carry more of the neighborhood when random cosines
-    // concentrate near 0).
-    import graft.operators.OperatingPoint
-    for ((dir, dim, recallFloor) <- Seq(
-        ("target/sfdvt_smoke", 64, 0.88),
-        ("target/sfdvt_smoke384", 384, 0.93))) {
-      if (!new java.io.File(s"$dir/embeddings.parquet").exists())
-        ScaleFixtures.synthDv(spark, "/root/testdata/sf0.1", dir, copies = 10,
-          dim = dim, twins = true)
-      val ds = VectorOps.vecsCheckpointed(spark, dir)
-      val n = ds.count()
-      val k = OperatingPoint.semDedupCells(n)
-      val cands = VectorOps.semDedupCandidateCount(ds, k, 3)
-      val base = ds.filter(col("vec_id") < 1000000L).localCheckpoint()
-      val twins = base.filter(col("vec_id") >= 500000L)
-        .select((col("vec_id") - 500000L).as("pa"), col("v").as("tv"))
-      val truth = base.join(twins, base("vec_id") === twins("pa"))
-        .select(col("pa"), (col("pa") + 500000L).as("pb"),
-          Round6.of(CosineSimilarity.of(col("v"), col("tv"))).as("ts"))
-        .filter(col("ts") >= 0.8).localCheckpoint()
-      val planted = truth.count()
-      def recallOf(found: org.apache.spark.sql.DataFrame): Double =
-        found
-          .filter((col("a_id") / 1000000L).cast("long") ===
-            (col("b_id") / 1000000L).cast("long"))
-          .select((col("a_id") % 1000000L).as("pa"),
-            (col("b_id") % 1000000L).as("pb"))
-          .join(truth, Seq("pa", "pb")).count().toDouble / (planted * 10L)
-      val recall = recallOf(
-        VectorOps.semDedupPairsFlatAuto(ds, countEstimate = Some(n)))
-      // the TWO-LEVEL arm (the form the auto operator takes past
-      // OperatingPoint.semHierCells — the 100 TB training-cost answer):
-      // same planted truth, floored 2pp under flat. At 2 super probes the
-      // boundary approximation cost 7pp (0.847 vs 0.919 at dim 64);
-      // SuperProbes=4 buys it back at pure rank cost. Candidates gated
-      // too: hier membership is still ≤ 2 cells/vector.
-      val recallH = recallOf(
-        VectorOps.semDedupPairsHierAuto(ds, countEstimate = Some(n)))
-      val candsH = VectorOps.semDedupCandidateCount(ds, k, 3, hier = true)
-      info(f"dim=$dim K=$k flat: candidates=$cands%,d " +
-        f"(${cands.toDouble / n}%.1f·n, cap 500·n), >=0.8 recall " +
-        f"$recall%.4f (floor $recallFloor); hier: candidates=$candsH%,d " +
-        f"(${candsH.toDouble / n}%.1f·n), recall $recallH%.4f")
-      assert(cands <= 500L * n,
-        f"dim=$dim sem candidates $cands%,d exceed 500·n")
-      assert(recall >= recallFloor,
-        f"dim=$dim sem >=0.8 recall $recall%.4f < floor $recallFloor")
-      assert(candsH <= 500L * n,
-        f"dim=$dim hier candidates $candsH%,d exceed 500·n")
-      assert(recallH >= recallFloor - 0.02,
-        f"dim=$dim hier >=0.8 recall $recallH%.4f < floor ${recallFloor - 0.02}")
-    }
-  }
-
-  test("dedupPairsAuto front door: each policy arm equals its direct operator") {
-    // the dispatcher adds POLICY, not computation — every arm must be
-    // row-identical to calling the underlying operator directly, so the
-    // three blockers' oracle/digest/recall evidence transfers verbatim
-    def rows(df: DataFrame): Set[Seq[Any]] =
-      df.collect().map(_.toSeq).toSet
-    val n = Some(e.count())
-    // recall contract -> the n^rho-band high-sim point
-    assert(rows(VectorOps.dedupPairsAuto(e, 0.8, Some(0.9), n)) ==
-      rows(VectorOps.nearDupPairsHighSim(e, 0.8, 0.9, threshold = 0.8,
-        countEstimate = n)))
-    // dedup band, no contract -> the learned-cell blocker
-    assert(rows(VectorOps.dedupPairsAuto(e, 0.8, None, n)) ==
-      rows(VectorOps.semDedupPairsAuto(e, 0.8, n)))
-    // survey band -> the candidates-linear RP point
-    assert(rows(VectorOps.dedupPairsAuto(e, 0.3, None, n)) ==
-      rows(VectorOps.nearDupPairsAuto(e, 0.3, n)))
   }
 
   test("embed retention: SemDeDup keep-farthest semantics on a hand-built cluster") {
