@@ -21,7 +21,7 @@ package graft.operators
   */
 object OperatingPoint {
 
-  /** Extra sign/chunk bits over the anchor so 2^bits tracks n: one bit per
+  /** Extra bits over the anchor so 2^bits tracks n: one bit per
     * doubling, rounded. Never negative — below the anchor the base config
     * is already sparse enough. */
   private[graft] def extraBits(n: Long, anchorN: Long): Int = {

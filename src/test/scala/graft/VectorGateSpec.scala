@@ -46,9 +46,9 @@ class VectorGateSpec extends SparkSpec {
 
   test("auto blocking: candidates stay linear AND high-sim recall holds (x10, both dims)") {
     // The two sides of the size-derived RP-LSH blocking contract (planes
-    // from OperatingPoint.rpPlanesPerBand, as RankDedup.upsert derives
-    // them), both MEASURED (round 15, after the sign-family fix —
-    // VectorOps.mix64 scaladoc):
+    // from OperatingPoint.rpPlanesPerBand, the rule RankDedup.upsert
+    // applies over the same mix64 sign family), both MEASURED (round 15,
+    // after the sign-family fix — VectorOps.mix64 scaladoc):
     //  (a) candidate pairs ∝ n. This is the gate the round-15 bug class
     //      needed: the raw-LCG family's period-7 plane negations capped
     //      key entropy, candidates ran 196-1646× the n²/2^planes math at
