@@ -29,22 +29,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * the hash, so a 48-bit collision between distinct shingles still emits
   * both hashes — exactly like the original.
   */
-case class ShingleHashes(child: Expression, n: Int, distinct: Boolean)
+case class ShingleHashes(child: Expression)
   extends UnaryExpression with ImplicitCastInputTypes {
-
-  require(n >= 1, s"shingle width $n must be >= 1")
 
   override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = if (distinct) "shingle_hashes" else "gram_hashes"
+  override def prettyName: String = "shingle_hashes"
 
   override def nullSafeEval(input: Any): Any =
-    ShingleHashes.evalHashes(input.asInstanceOf[ArrayData], n, distinct)
+    ShingleHashes.evalHashes(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
       s"""
-         |${ev.value} = graft.functions.ShingleHashes.evalHashes($v, $n, $distinct);
+         |${ev.value} = graft.functions.ShingleHashes.evalHashes($v);
        """.stripMargin
     })
 
@@ -109,16 +107,17 @@ object ShingleHashes {
   // of the same name — the generated code's static call then fails Janino
   // compilation and the WHOLE STAGE silently falls back out of codegen
   // (measured round 17: 78 CompileExceptions per bench run on this call).
-  def evalHashes(words: ArrayData, gramLen: Int, distinct: Boolean): ArrayData = {
+  def evalHashes(words: ArrayData): ArrayData = {
+    val gramLen = 3
     val n = words.numElements()
-    // sequence(0, greatest(n-gramLen, 0)) → shingle starts 0..max(n-gramLen, 0)
+    // sequence(0, greatest(n-3, 0)) → shingle starts 0..max(n-3, 0)
     val last = math.max(n - gramLen, 0)
-    val seen = if (distinct) new java.util.HashSet[UTF8String]() else null
+    val seen = new java.util.HashSet[UTF8String]()
     val out = new java.util.ArrayList[java.lang.Long](last + 1)
     val md = digest.get()
     var i = 0
     while (i <= last) {
-      // slice(words, i+1, gramLen): up to gramLen words from i, ' '-joined
+      // slice(words, i+1, 3): up to 3 words from i, ' '-joined
       val hi = math.min(i + gramLen, n)
       var shingle = if (i < n) words.getUTF8String(i) else UTF8String.EMPTY_UTF8
       var w = i + 1
@@ -127,7 +126,7 @@ object ShingleHashes {
           UTF8String.fromString(" "), words.getUTF8String(w))
         w += 1
       }
-      if (seen == null || seen.add(shingle)) {
+      if (seen.add(shingle)) {
         md.reset()
         val d = md.digest(shingle.getBytes)
         // first 6 digest bytes == substring(hex, 1, 12) parsed base 16
@@ -147,12 +146,7 @@ object ShingleHashes {
   /** Column builder: `shingle_hashes(words)` (3-word shingles, distinct —
     * the MinHash front). */
   def shingles(words: Column): Column =
-    column(ShingleHashes(expression(words), 3, distinct = true))
-
-  /** Column builder: `gram_hashes(words, n)` (all n-gram starts in order,
-    * duplicates kept — the decontamination probe stream). */
-  def grams(words: Column, n: Int): Column =
-    column(ShingleHashes(expression(words), n, distinct = false))
+    column(ShingleHashes(expression(words)))
 
   /** Column builder: `gram_strings(words, n)`. */
   def gramStrings(words: Column, n: Int): Column =

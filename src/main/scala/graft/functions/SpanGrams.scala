@@ -50,10 +50,10 @@ case class SpanGramHits(child: Expression, gramLen: Int)
 
   override def nullSafeEval(v: Any): Any = {
     val u = v.asInstanceOf[UTF8String]
-    // zero-length text emits nothing (same guard as WinnowedGramHits).
-    // Output-identical to the clamp it replaces: the clamped empty
-    // window hashed md5("") = d41d8..., which never passes the
-    // leading-nibble selection anyway — this just makes it structural.
+    // zero-length text emits nothing. Output-identical to the clamp it
+    // replaces: the clamped empty window hashed md5("") = d41d8..., which
+    // never passes the leading-nibble selection anyway — this just makes
+    // it structural.
     if (u.numBytes == 0) return new GenericArrayData(Array.empty[Any])
     val md = java.security.MessageDigest.getInstance("MD5")
     val hits = scala.collection.mutable.ArrayBuffer
@@ -160,241 +160,6 @@ object CdcBoundaries {
   /** Column builder: `cdc_boundaries(text)` with the given window length. */
   def of(text: Column, window: Int): Column =
     column(CdcBoundaries(expression(text), window))
-}
-
-/** The 100 TB form of [[SpanGramHits]]: a Karp-Rabin ROLLING hash makes
-  * gram hashing O(len) per document instead of O(len·G) — at G=50 that is
-  * the difference between hashing the corpus once and hashing it fifty
-  * times. Same content-defined selection contract (a selected gram is
-  * selected wherever it sits, so cross-doc span agreement needs no offset
-  * alignment); the hash VALUE differs from the md5 form, so dd9's DuckDB
-  * oracle stays on [[SpanGramHits]] and this form is gated by properties
-  * instead (rolling == direct recompute at every offset; identical
-  * selected-gram sets for a shared span; ~1/2^selBits selection rate) —
-  * the same accepted-structure pattern as v5's float-order nondeterminism.
-  *
-  * Hash: polynomial over UTF-16 char values mod 2^64 (Long wraparound),
-  * odd base so every position influences the low bits, then a murmur3
-  * finalizer before both the selection test and the emitted value — the
-  * raw polynomial's low bits are dominated by the trailing chars, and
-  * selection keys on the low `selBits`. The ASCII fast path rolls over
-  * the UTF8String's bytes without materializing a String; char==byte for
-  * ASCII, so both paths compute the identical hash.
-  */
-case class RollingGramHits(child: Expression, gramLen: Int, selBits: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("off", IntegerType, nullable = false),
-    StructField("gh", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "rolling_gram_hits"
-
-  private val B = 1000003L
-  /** B^(G-1) mod 2^64, the outgoing-char eviction multiplier. */
-  private val BPow: Long = {
-    var p = 1L; var i = 0
-    while (i < gramLen - 1) { p *= B; i += 1 }
-    p
-  }
-  private val selMask: Long = (1L << selBits) - 1
-
-  @inline private def fmix(h0: Long): Long = {
-    var h = h0
-    h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
-    h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
-    h ^ (h >>> 33)
-  }
-
-  override def nullSafeEval(v: Any): Any = {
-    val u = v.asInstanceOf[UTF8String]
-    // zero-length text emits NOTHING: the clamped empty window would
-    // hash to fmix(0) = 0, which always passes the (f & selMask) == 0
-    // selection, silently making every empty doc a mutual span carrier
-    // (the WinnowedGramHits guard, applied here too).
-    if (u.numBytes == 0) return new GenericArrayData(Array.empty[Any])
-    val hits = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.catalyst.InternalRow]
-    val bytes = u.getBytes
-    var ascii = true
-    var i = 0
-    while (i < bytes.length && ascii) { ascii = bytes(i) >= 0; i += 1 }
-    @inline def emit(off: Int, raw: Long): Unit = {
-      val f = fmix(raw)
-      if ((f & selMask) == 0L)
-        hits += org.apache.spark.sql.catalyst.InternalRow(off, f)
-    }
-    if (ascii) {
-      val n = bytes.length
-      if (n < gramLen) {
-        var h = 0L; var j = 0
-        while (j < n) { h = h * B + bytes(j); j += 1 }
-        emit(1, h)
-      } else {
-        var h = 0L; var j = 0
-        while (j < gramLen) { h = h * B + bytes(j); j += 1 }
-        emit(1, h)
-        var off = 1
-        while (off + gramLen <= n) {
-          h = (h - bytes(off - 1) * BPow) * B + bytes(off + gramLen - 1)
-          emit(off + 1, h)
-          off += 1
-        }
-      }
-    } else {
-      val s = u.toString
-      val n = s.length
-      if (n < gramLen) {
-        var h = 0L; var j = 0
-        while (j < n) { h = h * B + s.charAt(j); j += 1 }
-        emit(1, h)
-      } else {
-        var h = 0L; var j = 0
-        while (j < gramLen) { h = h * B + s.charAt(j); j += 1 }
-        emit(1, h)
-        var off = 1
-        while (off + gramLen <= n) {
-          h = (h - s.charAt(off - 1) * BPow) * B + s.charAt(off + gramLen - 1)
-          emit(off + 1, h)
-          off += 1
-        }
-      }
-    }
-    new GenericArrayData(hits.toArray[Any])
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object RollingGramHits {
-  /** Column builder: `rolling_gram_hits(text)` with the given gram length and
-    * selection width (1-in-2^selBits grams selected). */
-  def of(text: Column, gramLen: Int, selBits: Int = 4): Column =
-    column(RollingGramHits(expression(text), gramLen, selBits))
-}
-
-/** WINNOWED gram selection — the deterministic-coverage form the at-rest
-  * span index stores ([[graft.operators.SpanIndex]]). Independent
-  * 1-in-2^k selection ([[RollingGramHits]]) leaves geometric gaps between
-  * selected grams: with p=1/16 a gap longer than the gram itself occurs a
-  * few percent of the time per junction, so a scrub driven by those hits
-  * can leave slivers of a shared span standing (observed in SpanIndexSpec
-  * before this form existed). Winnowing (Schleimer, Wilkerson & Aiken,
-  * SIGMOD 2003 — the MOSS fingerprinting scheme) instead selects, for
-  * every window of `window` consecutive gram hashes, the RIGHTMOST
-  * minimal hash. Guarantees that follow:
-  *  - every window of `window` grams contributes ≥1 selection, so within
-  *    a span shared by two docs, consecutive selected offsets are at most
-  *    `window` apart — and with window < gramLen the selected gram
-  *    INTERVALS overlap, so the island merge reconstructs the span's
-  *    interior with NO gaps, deterministically;
-  *  - selection depends only on the window's hash values, so any window
-  *    fully inside a shared span selects the SAME gram in every carrier —
-  *    alignment-invariant like the 1-in-2^k form, with boundary fuzz
-  *    bounded by window-1 chars at each end of the span;
-  *  - density ≈ 2/(window+1), the winnowing paper's bound.
-  * Same Karp-Rabin rolling hash + murmur finalizer as [[RollingGramHits]];
-  * O(len) per doc via a monotonic-deque sliding minimum. Docs shorter than
-  * one window still emit their global-min gram (every NON-EMPTY doc
-  * fingerprints; zero-length text emits nothing — a shared empty-string
-  * fingerprint would make all empty docs mutual span carriers and let a
-  * scrub report chars_cut > doc length). */
-case class WinnowedGramHits(child: Expression, gramLen: Int, window: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("off", IntegerType, nullable = false),
-    StructField("gh", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "winnowed_gram_hits"
-
-  private val B = 1000003L
-  private val BPow: Long = {
-    var p = 1L; var i = 0
-    while (i < gramLen - 1) { p *= B; i += 1 }
-    p
-  }
-
-  @inline private def fmix(h0: Long): Long = {
-    var h = h0
-    h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
-    h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
-    h ^ (h >>> 33)
-  }
-
-  override def nullSafeEval(v: Any): Any = {
-    val u = v.asInstanceOf[UTF8String]
-    val bytes = u.getBytes
-    var ascii = true
-    var i = 0
-    while (i < bytes.length && ascii) { ascii = bytes(i) >= 0; i += 1 }
-    // char accessor + length, unified over the byte fast path and the
-    // String fallback (char==byte for ASCII, so both hash identically)
-    val (charAt, n): (Int => Int, Int) =
-      if (ascii) ((j: Int) => bytes(j).toInt, bytes.length)
-      else { val s = u.toString; ((j: Int) => s.charAt(j).toInt, s.length) }
-    // Zero-length text carries no span: without this guard the count
-    // clamp below would fingerprint the empty string (fmix(0)), making
-    // every empty doc a mutual carrier of one hot gram — and a scrub
-    // would then report chars_cut > doc length on a 0-length doc.
-    if (n == 0) return new GenericArrayData(Array.empty[Any])
-    val count = math.max(n - gramLen + 1, 1)
-    val hs = new Array[Long](count)
-    var h = 0L
-    var j = 0
-    val firstLen = math.min(gramLen, n)
-    while (j < firstLen) { h = h * B + charAt(j); j += 1 }
-    hs(0) = fmix(h)
-    var off = 1
-    while (off < count) {
-      h = (h - charAt(off - 1) * BPow) * B + charAt(off + gramLen - 1)
-      hs(off) = fmix(h)
-      off += 1
-    }
-    // winnow: rightmost minimum of each length-`window` window, deduped
-    // by offset. Unsigned comparison so the murmur output is uniform.
-    val sel = new java.util.TreeSet[Integer]()
-    if (count <= window) {
-      var best = 0; var k = 1
-      while (k < count) {
-        if (java.lang.Long.compareUnsigned(hs(k), hs(best)) <= 0) best = k
-        k += 1
-      }
-      sel.add(best)
-    } else {
-      // monotonic deque of indices with strictly increasing hash values;
-      // ties resolve to the RIGHTMOST (newer index evicts equal hashes)
-      val deque = new Array[Int](count)
-      var head = 0; var tail = 0 // [head, tail)
-      var k = 0
-      while (k < count) {
-        while (tail > head && java.lang.Long.compareUnsigned(
-            hs(deque(tail - 1)), hs(k)) >= 0) tail -= 1
-        deque(tail) = k; tail += 1
-        if (deque(head) <= k - window) head += 1
-        if (k >= window - 1) sel.add(deque(head))
-        k += 1
-      }
-    }
-    val hits = new Array[Any](sel.size())
-    val it = sel.iterator()
-    var w = 0
-    while (it.hasNext) {
-      val o = it.next().intValue()
-      hits(w) = org.apache.spark.sql.catalyst.InternalRow(o + 1, hs(o))
-      w += 1
-    }
-    new GenericArrayData(hits)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WinnowedGramHits {
-  /** Column builder: `winnowed_gram_hits(text)` with the given gram length and
-    * winnowing window. */
-  def of(text: Column, gramLen: Int, window: Int = 16): Column =
-    column(WinnowedGramHits(expression(text), gramLen, window))
 }
 
 /** Minimum per-window md5, fused — t4's fingerprint columns

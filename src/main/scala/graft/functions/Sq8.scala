@@ -4,8 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnShim.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Int8 scalar quantization (SQ8) of embedding columns — the standard
@@ -18,14 +17,12 @@ import org.apache.spark.sql.types._
   * Code layout: `[8-byte IEEE-754 big-endian scale][n int8 codes]`, where
   * `scale` = max |v_i| and `code_i` = round(v_i / scale * 127). The scale
   * rides INSIDE the binary so the quantized column is self-contained — no
-  * second column to keep aligned through shuffles and index maintenance.
+  * second column to keep aligned through shuffles.
   *
   * Cosine over codes needs NO dequantization: with v_i ≈ code_i·s/127 the
   * scale cancels from dot/(‖a‖‖b‖), so [[CosineSimQ8]] loops raw bytes
   * against the double-precision query — a single fused whole-stage-codegen
-  * loop like [[CosineSimilarity]], reading 1/8th the bytes. Decode exists
-  * for parity checks and any exact-rerank path ([[Sq8Decode]], eval-only —
-  * it is never in a hot loop).
+  * loop like [[CosineSimilarity]], reading 1/8th the bytes.
   *
   * The reference has no quantization surface (its embeddings sit in pandas
   * float arrays, qa_retrieval.py:90-98); this is a scale extension.
@@ -100,33 +97,6 @@ case class Sq8Encode(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Dequantize an SQ8 code back to array<double> — parity/debug and any
-  * exact-rerank seam; never a hot loop, so eval-only. */
-case class Sq8Decode(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "sq8_decode"
-
-  override def nullSafeEval(v: Any): Any = {
-    val c = v.asInstanceOf[Array[Byte]]
-    var bits = 0L
-    var j = 0
-    while (j < 8) { bits = (bits << 8) | (c(j) & 0xffL); j += 1 }
-    val scale = java.lang.Double.longBitsToDouble(bits)
-    val out = new Array[Double](c.length - 8)
-    var i = 0
-    while (i < out.length) {
-      out(i) = c(8 + i) * scale / 127.0
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Cosine similarity of an SQ8 code (left, binary) against a raw
   * double/float array query (right) — the probe hot path. The per-vector
   * scale cancels from the cosine, so the loop reads raw bytes: same fused
@@ -185,9 +155,6 @@ case class CosineSimQ8(left: Expression, right: Expression)
 object Sq8 {
   /** Column builder: `sq8_encode(v)`. */
   def encode(v: Column): Column = column(Sq8Encode(expression(v)))
-
-  /** Column builder: `sq8_decode(code)`. */
-  def decode(code: Column): Column = column(Sq8Decode(expression(code)))
 
   /** Column builder: `cosine_sim_q8(code, q)`. */
   def cosine(code: Column, q: Column): Column =

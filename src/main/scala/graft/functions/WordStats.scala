@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *  - `size(split(text, " "))`,
   *  - `size(array_distinct(split(text, " ")))`,
-  *  - `size(filter(split(text, " "), w -> w IN TextOps.StopWords))`.
+  *  - `size(filter(split(text, " "), w -> w IN (the stop set)))`.
   *
   * The composed chain materializes the words array (regex split), the
   * distinct array, and the filtered array, and the `filter` lambda is
@@ -30,8 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * leading/trailing empties are KEPT (limit -1), and the empty string
   * yields `[""]` — so n_words = (number of spaces) + 1, always ≥ 1, and
   * the empty token participates in distinctness exactly like any other
-  * value. The stop set is [[graft.operators.TextOps.StopWords]] — the
-  * list is frozen here as byte comparisons; WordStatsSpec pins equality
+  * value. The stop set ("the", "a", "of", "and", "to", "in", "is") lives
+  * only in `isStop`'s byte table below; WordStatsSpec pins equality
   * against the composed chain generatively and on the corpus so the two
   * can never drift silently. */
 case class WordStats(child: Expression) extends UnaryExpression
@@ -61,8 +61,8 @@ object WordStats {
     StructField("n_distinct", IntegerType, nullable = false),
     StructField("n_stop", IntegerType, nullable = false)))
 
-  /** TextOps.StopWords as bytes: "the", "a", "of", "and", "to", "in",
-    * "is" — checked by length + byte compare, no allocation per token. */
+  /** The stop set as bytes: "the", "a", "of", "and", "to", "in", "is" —
+    * checked by length + byte compare, no allocation per token. */
   private def isStop(b: Array[Byte], off: Int, len: Int): Boolean = len match {
     case 1 => b(off) == 'a'
     case 2 =>

@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{Md5Prefix, MinHashSignatures, RollingGramHits, Round6,
-  ShingleHashes, SimHashAgg, SpanGramHits}
+import graft.functions.{Md5Prefix, MinHashSignatures, Round6, ShingleHashes,
+  SimHashAgg, SpanGramHits}
 
 /** Deduplication operators for the training-data pipeline surface:
   * exact (hash group), MinHash+LSH (shingle → minhash → band → bucket join →
@@ -242,9 +242,7 @@ object DedupOps {
     * cache(): blocks are released when the plan is GC'd (no CacheManager
     * entry leaked per invocation) and a later invocation can never
     * silently reuse an earlier one's materialization through plan-equality
-    * matching. [[graft.operators.ClusterIndex]] persists exactly these
-    * columns so an incremental append never recomputes them for the
-    * existing corpus. */
+    * matching. */
   private[graft] def lshDocsOf(corpus: DataFrame): DataFrame = {
     docShingleHashesOf(corpus)
       .select(col("doc_id"), col("hs"), size(col("hs")).as("n"),
@@ -253,26 +251,16 @@ object DedupOps {
   }
 
   /** LSH band bucket keys of an [[lshDocsOf]] frame: (doc_id, bk). */
-  private[graft] def lshBandsOf(docs: DataFrame): DataFrame = {
+  private def lshBandsOf(docs: DataFrame): DataFrame = {
     val bandArr = array(bandExprs(j => s"element_at(sigv, ${j + 1})").map(expr): _*)
     docs.select(col("doc_id"), explode(bandArr).as("bk"))
-  }
-
-  /** Band keys reconstructed from STORED shingle hashes (`hs`, as the
-    * cluster index persists per label row) — `minhash_sigs` is
-    * deterministic on `hs`, so this equals [[lshBandsOf]] ∘ [[lshDocsOf]]
-    * without needing the original text. The at-rest delete path uses it to
-    * locate a doc's band-index rows. */
-  private[graft] def lshBandsFromStored(rows: DataFrame): DataFrame = {
-    lshBandsOf(rows.select(col("doc_id"), col("hs"),
-      minhashSigs(col("hs")).as("sigv")))
   }
 
   /** Exact n-gram Jaccard ≥ 0.4 verify of candidate pairs (a_id, b_id)
     * against a (doc_id, hs, n) lookup covering both sides — a map-side
     * array_intersect on the two fetched hash sets, in candidate-pair
     * cardinality (the LSH point). */
-  private[graft] def lshVerify(cand: DataFrame, lookup: DataFrame): DataFrame = {
+  private def lshVerify(cand: DataFrame, lookup: DataFrame): DataFrame = {
     // round6, not round: the jaccard rounds once per CANDIDATE pair, and
     // Spark's round pays a BigDecimal-via-string per call (the r15
     // profile); bit-equal swap, oracle unchanged
@@ -290,7 +278,7 @@ object DedupOps {
   }
 
   /** Full banded pair discovery over an [[lshDocsOf]] frame. */
-  private[graft] def lshPairsFromDocs(docs: DataFrame): DataFrame = {
+  private def lshPairsFromDocs(docs: DataFrame): DataFrame = {
     val bands = lshBandsOf(docs)
     val cand = bands.as("a").join(bands.as("b"),
         col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
@@ -758,28 +746,6 @@ object DedupOps {
         (col("doc_id") =!= col("first_doc")).as("is_foreign"))
   }
 
-  /** dd9's 100 TB form: the identical inventory pipeline over
-    * [[graft.functions.RollingGramHits]] — O(len) Karp-Rabin gram hashing
-    * instead of O(len·G) per-window md5. Hash values differ from the md5
-    * form so there is no DuckDB oracle; PipelineOpsSpec gates it on the
-    * boiler fixture (every planted carrier pair agrees on the shared
-    * span's grams) and BASELINE.md §5 A/Bs it against [[spanGrams]]. */
-  def spanGramsRolling: Q = (s, d) => {
-    val corpus = documents(s, d).select(col("doc_id"),
-      when(col("doc_id") % 19 === 0, concat(col("text"), lit(" " + SpanBoiler)))
-        .otherwise(col("text")).as("text"))
-    val grams = corpus.select(col("doc_id"),
-        explode(RollingGramHits.of(col("text"), SpanGram, 4)).as("x"))
-      .select(col("doc_id"), col("x.off"), col("x.gh"))
-    val shared = grams.groupBy("gh")
-      .agg(countDistinct("doc_id").as("n_docs"), min("doc_id").as("first_doc"))
-      .filter(col("n_docs") >= 2)
-    grams.join(shared, "gh")
-      .select(col("doc_id"), col("off"), col("gh"), col("n_docs"),
-        col("first_doc"),
-        (col("doc_id") =!= col("first_doc")).as("is_foreign"))
-  }
-
   val spanGramsOracle: String =
     s"""WITH corpus AS (SELECT doc_id,
        |  CASE WHEN doc_id % 19 = 0 THEN text || ' $SpanBoiler'
@@ -828,11 +794,11 @@ object DedupOps {
         md5(col("clean_text")).as("clean_md5"))
   }
 
-  /** The span-surgery core shared by dd10 and [[SpanIndex.probeScrub]]:
-    * merge `(doc_id, off)` hit windows of width `g` gaps-and-islands into
-    * disjoint [a, b) char intervals, cut them from `corpus`'s text with one
-    * left-to-right `aggregate` walk, and return the affected docs as
-    * (doc_id, n_cut_spans, chars_cut, clean_text). Both windows and the
+  /** dd10's span-surgery core: merge `(doc_id, off)` hit windows of width
+    * `g` gaps-and-islands into disjoint [a, b) char intervals, cut them
+    * from `corpus`'s text with one left-to-right `aggregate` walk, and
+    * return the affected docs as (doc_id, n_cut_spans, chars_cut,
+    * clean_text). Both windows and the
     * interval groupBy run over the HIT stream only; the corpus joins once
     * on doc_id against the affected-docs interval arrays. One accounting
     * nuance: `chars_cut` sums merged WINDOW extents [a, b), so for a doc
@@ -840,7 +806,7 @@ object DedupOps {
     * window size rather than the (smaller) removed char count — clean_len
     * is exact either way (the substring arithmetic clamps), and the dd10
     * oracle computes the identical sum, so the two engines agree. */
-  private[operators] def cutSpans(corpus: DataFrame, hits: DataFrame,
+  private def cutSpans(corpus: DataFrame, hits: DataFrame,
       g: Int): DataFrame = {
     val w = Window.partitionBy("doc_id").orderBy("off")
     val ivs = hits

@@ -3,12 +3,12 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Single-writer fence for the at-rest artifacts ([[ClusterIndex]] and the
-  * IVF index in [[VectorOps]]). Their maintenance operations mutate
-  * multi-file layouts through staged renames; the protocols are crash-safe
-  * for ONE writer but two concurrent appends would interleave staged
-  * renames and corrupt buckets silently — the scaladocs state the
-  * single-writer contract, this makes a violation fail LOUDLY instead.
+/** Single-writer fence for the at-rest IVF index
+  * ([[VectorOps.writeIvfIndex]]). The write overwrites two directories
+  * (`centroids`, then the cell-partitioned `index`); two concurrent writers
+  * to one path would interleave them and leave an index whose cells were
+  * assigned against another writer's centroids — silently. The index's
+  * contract is single-writer; this makes a violation fail LOUDLY instead.
   *
   * The lock is a file created with `FileSystem.create(path, overwrite =
   * false)`, which is atomic create-fails-if-exists on both HDFS and the
@@ -16,23 +16,19 @@ import org.apache.spark.sql.SparkSession
   * log relies on. The file body carries an epoch-millis + UUID stamp for
   * diagnostics. Holders always delete on exit (finally), so a lock older
   * than `staleMs` can only belong to a crashed writer: it is broken and
-  * re-taken (the artifact protocols already recover from a crashed
-  * writer's partial state on the next run — orphan cleanup in
-  * `rewriteBuckets`, a re-run of the interrupted append). A LIVE
-  * second writer gets an IllegalStateException naming the held stamp.
+  * re-taken (a re-run of the crashed write overwrites its partial state).
+  * A LIVE second writer gets an IllegalStateException naming the held
+  * stamp.
   *
   * This is an advisory fence, not a distributed lock service: the
   * create-vs-staleness race window (two writers both observing a stale
   * lock) is the well-known limit of file-based locking and is acceptable
-  * insurance for an artifact whose contract is already single-writer. At
-  * 100 TB the artifact graduates to a transactional table format whose
-  * commit log subsumes this.
+  * insurance for an artifact whose contract is already single-writer.
   */
 object MaintenanceLock {
 
-  /** Default staleness: no maintenance op on these artifacts legitimately
-    * runs this long (the 100x full rebuild measured minutes, appends
-    * seconds); past it the holder is presumed crashed. */
+  /** Default staleness: no index write legitimately runs this long;
+    * past it the holder is presumed crashed. */
   val DefaultStaleMs: Long = 30 * 60 * 1000L
 
   private[graft] def lockPath(artifactRoot: String): Path =
@@ -77,8 +73,8 @@ object MaintenanceLock {
       .getOrElse("just created by a racing writer")
     throw new IllegalStateException(
       s"concurrent maintenance on ${lock.getParent}: lock $lock is held " +
-        s"($stamp). These artifacts are single-writer; a second append " +
-        "would interleave staged renames and corrupt buckets. If the " +
-        s"holder crashed, the lock goes stale after ${staleMs / 1000}s.")
+        s"($stamp). The index is single-writer; a second write would " +
+        "interleave its directory overwrites. If the holder crashed, the " +
+        s"lock goes stale after ${staleMs / 1000}s.")
   }
 }

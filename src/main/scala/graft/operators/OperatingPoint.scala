@@ -7,9 +7,7 @@ package graft.operators
   * [[RankDedup.upsert]] default): candidate pairs per band ∝ n²/2^planes,
   * so holding per-bucket occupancy constant needs
   * `planes += log2(corpus growth)` — measured at 10× (fixed 4-bit config:
-  * 63-71× work at 10× data; scaled config: ~linear). The at-rest indexes
-  * ([[ClusterIndex]], [[SpanIndex]], [[ShardManifest]], the IVF-PQ
-  * codebooks) derive their geometry here once, when they are written.
+  * 63-71× work at 10× data; scaled config: ~linear).
   *
   * Anchors are the measured sf0.1 fixture points (n≈2000 embeddings)
   * where the pinned configs are known-good; derived points were validated
@@ -24,7 +22,7 @@ object OperatingPoint {
   /** Extra bits over the anchor so 2^bits tracks n: one bit per
     * doubling, rounded. Never negative — below the anchor the base config
     * is already sparse enough. */
-  private[graft] def extraBits(n: Long, anchorN: Long): Int = {
+  private def extraBits(n: Long, anchorN: Long): Int = {
     require(n > 0, s"corpus count must be positive, got $n")
     math.max(0, math.round(math.log(n.toDouble / anchorN) / math.log(2.0)).toInt)
   }
@@ -73,96 +71,6 @@ object OperatingPoint {
     val mean = 128.0 * theta
     val sd = math.sqrt(128.0 * theta * (1.0 - theta))
     math.min(127, math.ceil(mean + 3.0 * sd).toInt)
-  }
-
-  /** t13/c5 keep ceiling (micro-scaled average surprisal) derived from the
-    * corpus's OWN surprisal distribution — a QUALITY operating point: it
-    * tracks where the corpus's typical document sits, not a universal
-    * constant. The pinned 7.0 literal is calibrated to the
-    * fixture corpus (median avg-surprisal 3.402214 at sf0.1, so 7.0 cuts
-    * ~2.06× median — a loose high-perplexity-tail ceiling, CCNet-style);
-    * on a corpus whose base rate shifts (the ×1000 disjoint-vocabulary
-    * widening adds ln 1000 ≈ +6.9 to every word's surprisal; a multi-domain
-    * crawl shifts it less dramatically but in the same way) the literal
-    * degenerates to keep-nothing even though relative quality is unchanged
-    * — measured in round 13. Anchored so the fixture median reproduces the
-    * pinned gate EXACTLY: surprisalKeepMicro(3402214) == 7000000.
-    * The oracle-gated t13/c5 stay pinned at 7.0 (static SQL mirrors the
-    * exact filter — the fixture-pin discipline). */
-  def surprisalKeepMicro(medianSurprisalMicro: Long): Long = {
-    require(medianSurprisalMicro > 0,
-      s"median surprisal must be positive, got $medianSurprisalMicro")
-    medianSurprisalMicro * 7000000L / 3402214L
-  }
-
-  /** Next power of two ≥ x (x already clamped to int range by callers). */
-  private def pow2Ceil(x: Long): Int = {
-    require(x <= (1L << 30), s"pow2Ceil input $x out of range")
-    if (x <= 1L) 1 else Integer.highestOneBit((x - 1).toInt) << 1
-  }
-
-  /** Component-bucket count for the at-rest cluster index
-    * ([[ClusterIndex]]): labels and edges are bucketed by component hash so
-    * an append reads and rewrites only the touched buckets. The knob must
-    * grow with the corpus or each bucket rewrite grows linearly with it —
-    * target ≈1k docs per bucket (a label row carries the doc's shingle-hash
-    * set, so 1k docs ≈ a few MB of parquet — comfortably above
-    * small-file territory, bounded rewrite work per touched component).
-    * Power-of-two steps so the knob moves in doublings like the LSH bit
-    * knobs. Floor 64 keeps fixture artifacts readable and pruning
-    * demonstrable; cap 64k bounds the partition-directory count (at the cap
-    * a 1e10-doc corpus holds ~150k docs/bucket — the scale where this
-    * artifact graduates to a transactional table format anyway, per the
-    * [[ClusterIndex]] scaladoc). Derived ONCE at [[ClusterIndex.write]] and
-    * persisted in the index `_meta` — appends must keep using the layout
-    * the artifact was written with, never re-derive from the grown count. */
-  def clusterIndexParts(n: Long): Int = {
-    require(n > 0, s"corpus count must be positive, got $n")
-    clamp(pow2Ceil(math.min(n / 1024L, 1L << 16)), 64, 1 << 16)
-  }
-
-  /** Bucket count for the cluster index's at-rest LSH band table
-    * (`bands/`, partitioned by `bkb = pmod(bk, B)`): an append's candidate
-    * probe joins its batch's band keys against the stored table, and with
-    * the table bucketed the probe reads ONLY the buckets the batch's keys
-    * hash into (partition pruning on `bkb`) instead of scanning every
-    * stored band row. The batch's distinct `bkb` set is collected to drive
-    * the pruning `isin` — bounded by B, so the cap (4096) is also the
-    * bound on that driver-side metadata. Floor 16 keeps a small append's
-    * probe visibly pruned on fixtures (a one-doc batch touches ≤ NumBands
-    * buckets). Same ~1k-docs-per-bucket growth target as
-    * [[clusterIndexParts]]; persisted in `_meta` alongside it. */
-  def bandIndexBuckets(n: Long): Int = {
-    require(n > 0, s"corpus count must be positive, got $n")
-    clamp(pow2Ceil(math.min(n / 1024L, 1L << 12)), 16, 1 << 12)
-  }
-
-  /** Shard count for the t15 training-order manifest
-    * ([[ShardManifest]]): the per-shard rank window and the
-    * loader fleet both parallelize at S, so S must grow with the corpus —
-    * target ~64k docs per shard (a loader's working unit: tens to a few
-    * hundred MB of text) in power-of-two steps. Floor 8 keeps fixture
-    * manifests multi-shard; cap 64k bounds the shard-dir count like
-    * [[clusterIndexParts]]. */
-  def shuffleShards(n: Long): Int = {
-    require(n > 0, s"corpus count must be positive, got $n")
-    clamp(pow2Ceil(math.min(n / 65536L, 1L << 16)), 8, 1 << 16)
-  }
-
-  /** PQ codebook size per subspace (IVF-PQ ADC serving): k-means needs
-    * enough training points per centroid to generalize (public practice —
-    * FAISS warns below ~39 points/centroid and recommends 256 entries only
-    * for large corpora), so Kc grows with n between the fixture-measured
-    * 16 (2k vectors ≈ 125 points/centroid) and the byte-code ceiling 256,
-    * holding ≥64 training points per centroid: one doubling of Kc per
-    * doubling of corpus past the anchor. M stays at dim/8 granularity —
-    * subspace width is geometry (dim must divide), not corpus size. */
-  def pqCodebookSize(n: Long): Int = {
-    // shift capped at the ceiling's exponent (256 = 16 << 4): an uncapped
-    // `16 << extraBits` wraps past 2^31 around n ≈ 2.7e11 — the 100 TB
-    // embedding-corpus regime — and the clamp would collapse to the FLOOR
-    val kcRaw = 16 << math.min(4, extraBits(n, 2000L))
-    clamp(kcRaw, 16, math.min(256L, math.max(16L, n / 64L)).toInt)
   }
 
   /** Join-strategy knob for the banded self-joins: once the banded side

@@ -81,7 +81,7 @@ object RankDedup {
             else 0L
     val planes = if (auto) OperatingPoint.rpPlanesPerBand(n, d) else planesPerBand
     val matches = bandedMatches(store, cand, d, planes,
-      forceShuffle = auto && OperatingPoint.preferShuffleJoin(n, Bands, dim))
+      forceShuffle = auto && OperatingPoint.preferShuffleJoin(n, Bands, d))
     // best feeds both the accept and the replace branch — materialize it
     // once so the banded similarity join (the expensive part) doesn't
     // run twice. localCheckpoint rather than cache(): upsert runs once per

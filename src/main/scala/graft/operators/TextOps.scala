@@ -132,10 +132,9 @@ object TextOps {
     * instead of a regex split plus three interpreted HOF passes (the
     * c1/c5 plans evaluated the stop-word filter lambda three times per
     * doc); WordStatsSpec pins them against the composed array forms,
-    * generatively and on the corpus. */
-  private[graft] val StopWords = Seq("the", "a", "of", "and", "to", "in", "is")
-
-  /** `word_stats(text)` = struct(n_words, n_distinct, n_stop) — one fused
+    * generatively and on the corpus.
+    *
+    * `word_stats(text)` = struct(n_words, n_distinct, n_stop) — one fused
     * pass, bit-equal to size(split)/size(array_distinct)/size(filter). */
   private[graft] def wordStats(text: Column): Column = WordStats.of(text)
   private[graft] def uniqRatioOf(ws: Column): Column =
@@ -689,9 +688,8 @@ object TextOps {
     * — which is what makes chunk-level dedup and incremental re-embedding
     * work (the same content-defined principle as dd9's gram selection;
     * FastCDC is the production form of this rule). Narrow per-doc
-    * map-side transform, no shuffle; at 100 TB the boundary hash
-    * graduates to the rolling form like dd9's
-    * ([[graft.functions.RollingGramHits]] machinery). */
+    * map-side transform, no shuffle; at 100 TB the per-window md5 would
+    * give way to an O(len) rolling hash (Karp-Rabin, as in FastCDC). */
   def cdcChunks: Q = (s, d) => cdcChunksOf(documents(s, d))
 
   /** The t14 chunker over any (doc_id, text) frame — stateless, so the
@@ -1226,7 +1224,11 @@ object TextOps {
           .as("avg_surprisal"),
         (expr("(-sum_lp) div n_words") <= SurprisalKeepMicro).as("keep"))
 
-  /** The t13/c5 keep ceiling: average surprisal 7.0 per word, micro-scaled. */
+  /** The t13/c5 keep ceiling: average surprisal 7.0 per word, micro-scaled.
+    * Calibrated to the fixture corpus: the sf0.1 median average surprisal
+    * is 3.402214, so 7.0 cuts at ~2.06× the median — a loose
+    * high-perplexity-tail ceiling, CCNet-style. Pinned, not derived, so the
+    * static oracle SQL mirrors the exact filter. */
   private val SurprisalKeepMicro = 7000000L
 
   /** Vocab-row ceiling for the driver-hosted scoring arm: the model is

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
-import graft.functions.{CosineSimBounded, CosineSimilarity, Pq, Round6, RpBandKeys,
+import graft.functions.{CosineSimBounded, CosineSimilarity, Round6, RpBandKeys,
   RpSketch, SketchHammingGate, Sq8, TopKRows}
 
 /** Vector similarity operators (SURVEY §2.6 O3/O4, §2.8 F10) plus the
@@ -1094,208 +1094,26 @@ object VectorOps {
         .write.mode("overwrite").partitionBy("cid").parquet(s"$path/index")
     }
 
-  /** Top-N centroid cells per vector — broadcast of the K centroid rows
-    * against one scan, the ONE cell-ranking shape shared by the index
-    * build (`key`=vec_id, topN=1), incremental append (same), and batch
-    * probing (`key`=qid, topN=probes). A single definition keeps the
-    * rounding policy and tie-break locked together across all three, so a
-    * query's probed cells can never drift from the index's assignment. */
-  private def rankCells(e: DataFrame, cent: DataFrame, key: String,
-      topN: Int): DataFrame = {
-    val scored = e.crossJoin(broadcast(cent))
-      .select(col(key), col("v"), col("cid"),
-        sim6("v", "c").as("csim"))
-    if (topN == 1)
-      // the assignment case (index build/append/retrain — the bulk paths)
-      // as a PARTIAL aggregate: max(struct(csim, -cid, v)) is the same
-      // (csim desc, cid asc) order the window form ranks by, but it
-      // combines map-side, so the n·K candidate expansion collapses to
-      // n rows BEFORE the shuffle — at 100x the window form was measured
-      // shuffling the full expansion (2.8B rows for 2M vectors, K=√n)
-      scored.select(col(key),
-          struct(col("csim"), (-col("cid")).as("ncid"), col("v")).as("cand"))
-        .groupBy(key).agg(max("cand").as("best"))
-        .select(col(key), col("best.v").as("v"), (-col("best.ncid")).as("cid"))
-    else {
-      // topN > 1 (batch probing): same partial-aggregate reasoning, via the
-      // bounded [[graft.functions.TopKRows]] heap — the row_number window
-      // this replaces planned as WindowGroupLimitExec, whose map-side pass
-      // sorts the whole n·K expansion per task (see knnJoinOver). Ordering
-      // (csim DESC, cid ASC) is TopKRows' field convention.
-      scored
-        .groupBy(col(key))
-        .agg(expr("first(v)").as("v"), // constant within the group
-          TopKRows.of(struct("csim", "cid"), topN).as("cells"))
-        .select(col(key), col("v"), explode(col("cells.cid")).as("cid"))
-    }
-  }
-
-  /** Nearest-existing-centroid assignment of a (vec_id, v) frame. */
+  /** Nearest-centroid assignment of a (vec_id, v) frame — broadcast of the
+    * K centroid rows against one scan, as a PARTIAL aggregate:
+    * max(struct(csim, -cid, v)) is the (csim desc, cid asc) order a
+    * row_number window would rank by, but it combines map-side, so the
+    * n·K candidate expansion collapses to n rows BEFORE the shuffle — at
+    * 100x the window form was measured shuffling the full expansion (2.8B
+    * rows for 2M vectors, K=√n). */
   private def assignToCells(e: DataFrame, cent: DataFrame): DataFrame =
-    rankCells(e, cent, "vec_id", topN = 1)
-
-  /** Incremental maintenance of the at-rest index: assign a NEW batch to
-    * the nearest EXISTING centroid and APPEND to the cell partitions — no
-    * rebuild, no read of existing index data (the append lands new parquet
-    * files inside the assigned cell directories only). This is the
-    * operational answer to a growing corpus: appends keep the index fresh
-    * between periodic re-train+rebuild cycles, with recall degrading
-    * gracefully as centroids drift (standard IVF practice). Probes see
-    * appended vectors immediately — same directory pruning, asserted in
-    * ScaleOpsSpec. */
-  def appendToIvfIndex(batch: DataFrame, path: String): Unit =
-    MaintenanceLock.withLock(batch.sparkSession, path) {
-      val s = batch.sparkSession
-      val cent = s.read.parquet(s"$path/centroids")
-        .select(col("cid"), col("c"))
-      val assigned = assignToCells(batch, cent)
-      // match the stored row format: quantized indexes get encoded rows,
-      // and a PQ index ALSO gets ADC codes from its stored codebook — an
-      // append that omitted a column would silently diverge the parquet
-      // schema and read back as nulls under the ADC scan
-      val cols = s.read.parquet(s"$path/index").columns
-      val rows =
-        if (!cols.contains("code")) assigned
-        else {
-          val q8 = assigned.select(col("vec_id"), col("v"),
-            Sq8.encode(col("v")).as("code"), col("cid"))
-          if (!cols.contains("code_pq")) q8.drop("v")
-          else {
-            val meta = s.read.parquet(s"$path/pq_codebook").head()
-            q8.select(col("vec_id"),
-              Pq.encode(col("v"), typedLit(meta.getSeq[Double](2).toArray),
-                meta.getInt(0), meta.getInt(1)).as("code_pq"),
-              col("code"), col("cid"))
-          }
-        }
-      rows.write.mode("append").partitionBy("cid").parquet(s"$path/index")
-    }
-
-  /** Incremental DELETION from the at-rest IVF index: takedown maintenance,
-    * mirroring [[graft.operators.ClusterIndex.delete]]. Victim cells are
-    * located with a column-pruned (vec_id, cid) scan — no vector data read —
-    * then ONLY those `cid=` partitions are rewritten via the shared
-    * staged-rename protocol; every other cell's files stay byte-identical.
-    * Centroids are deliberately NOT re-trained (standard IVF practice:
-    * deletion, like append, degrades recall gracefully until the periodic
-    * re-train+rebuild; a deleted seed vector does not move its centroid).
-    * At 100 TB the locate scan wants a vec_id→cid sidecar; the column-pruned
-    * scan is the dependency-free analog.
-    *
-    * @return the affected cell ids (diagnostics + specs)
-    */
-  def deleteFromIvfIndex(vecIds: DataFrame, path: String): Seq[Int] =
-    MaintenanceLock.withLock(vecIds.sparkSession, path) {
-      val s = vecIds.sparkSession
-      val ids = vecIds.select(col("vec_id").cast("long").as("vec_id"))
-        .distinct().localCheckpoint(eager = true)
-      val index = s.read.parquet(s"$path/index")
-      val affected = index.select("vec_id", "cid").join(ids, Seq("vec_id"))
-        .select("cid").distinct().collect().map(_.getInt(0)).toSeq
-      if (affected.isEmpty) Seq.empty
-      else {
-        // column-agnostic keep (full-precision `v` or quantized `code`)
-        val kept = index.filter(col("cid").isin(affected: _*))
-          .join(ids, Seq("vec_id"), "left_anti")
-        ClusterIndex.rewriteBuckets(kept, affected, s"$path/index", s, "cid")
-        affected
-      }
-    }
-
-  /** Compact fragmented cells of the at-rest IVF index: every
-    * [[appendToIvfIndex]] lands new files inside its assigned `cid=` dirs
-    * and every [[deleteFromIvfIndex]] re-emits its victims' cells from a
-    * multi-task shuffle, so hot cells accumulate small parquet files over
-    * a maintenance history — the same small-files decay
-    * [[graft.operators.ClusterIndex.compact]] repairs for the cluster
-    * artifact, and the two share one implementation. Cells at or below
-    * `maxFiles` stay byte-identical; probes see identical rows (asserted
-    * in ScaleOpsSpec).
-    *
-    * @return the compacted cell ids (diagnostics + specs)
-    */
-  def compactIvfIndex(s: SparkSession, path: String,
-      maxFiles: Int = 4): Seq[Int] =
-    MaintenanceLock.withLock(s, path) {
-      ClusterIndex.compactDir(s, s"$path/index", "cid", maxFiles)
-    }
+    e.crossJoin(broadcast(cent))
+      .select(col("vec_id"),
+        struct(sim6("v", "c").as("csim"), (-col("cid")).as("ncid"), col("v"))
+          .as("cand"))
+      .groupBy("vec_id").agg(max("cand").as("best"))
+      .select(col("vec_id"), col("best.v").as("v"), (-col("best.ncid")).as("cid"))
 
   /** Probe the at-rest IVF index: rank cells against the K-row centroid
     * table (driver-side — it is index metadata, bounded by K, the one
     * collect this operator is allowed), then exact-score ONLY the top-p
     * cells' partitions. The `isin` on the partition column is what turns
     * the probe into directory pruning. */
-  /** Periodic RE-TRAIN of the at-rest index — the drift repair the
-    * [[appendToIvfIndex]] scaladoc defers to ("recall degrading gracefully
-    * as centroids drift" between "periodic re-train+rebuild cycles").
-    * Reads the index's OWN rows (decoding SQ8 codes when quantized — the
-    * codes ARE the stored data, so retraining on them is exact w.r.t. what
-    * probes will scan), grows the cell count toward √n when the corpus has
-    * outgrown it — new seeds are the vectors FARTHEST from their current
-    * centroid (deterministic: lowest assignment sim, vec_id tie-break),
-    * which splits exactly the worst-covered regions — then runs
-    * warm-started Lloyd passes and rewrites centroids + index in the
-    * stored format. Cells no vector chooses vanish in the update step
-    * (standard Lloyd); the write path is the usual lock-fenced overwrite.
-    * Each Lloyd pass is one broadcast assignment + one (cid, dim) shuffle;
-    * the corpus itself shuffles only in the final partitioned rewrite.
-    * Monotone objective improvement is asserted via [[ivfObjective]]. */
-  def retrainIvfIndex(s: SparkSession, path: String, iters: Int = 2): Unit =
-    MaintenanceLock.withLock(s, path) {
-      import s.implicits._
-      val idx = s.read.parquet(s"$path/index")
-      val quantized = idx.columns.contains("code")
-      // eager checkpoints: both inputs are re-read AFTER their directories
-      // are overwritten below — the lineage must not reach back to disk.
-      // `payload` keeps every stored column verbatim (SQ8 code, PQ code —
-      // neither changes when only cell boundaries move), so the rewrite
-      // recomputes ONLY the cid and can never drop a format column
-      val payload = idx.drop("cid").localCheckpoint(eager = true)
-      val e = (if (quantized)
-          payload.select(col("vec_id"), Sq8.decode(col("code")).as("v"))
-        else payload.select(col("vec_id"), col("v")))
-      var cent = s.read.parquet(s"$path/centroids").select(col("cid"), col("c"))
-        .localCheckpoint(eager = true)
-      val kCur = cent.count().toInt
-      val kTarget = math.max(kCur, math.sqrt(e.count().toDouble).toInt)
-      if (kTarget > kCur) {
-        val maxCid = cent.agg(max("cid")).collect()(0).getInt(0)
-        // bounded collect: ≤ √n seed rows — centroid-table-scale metadata
-        val seeds = kmeansAssign(e, cent)
-          .orderBy(asc("sim"), col("vec_id")).limit(kTarget - kCur)
-          .select(col("vec_id"), col("v")).collect()
-          .zipWithIndex.map { case (r, i) =>
-            (maxCid + 1 + i, r.getSeq[Double](1)) }.toSeq
-        cent = cent.union(seeds.toDF("cid", "c"))
-      }
-      for (_ <- 1 to iters) {
-        cent = kmeansAssign(e, cent)
-          .select(col("cid"), posexplode(col("v")).as(Seq("i", "x")))
-          .groupBy("cid", "i").agg(avg("x").as("cx"))
-          .groupBy("cid")
-          .agg(expr("transform(array_sort(collect_list(struct(i, cx))), t -> t.cx)")
-            .as("c"))
-          .localCheckpoint(eager = false)
-      }
-      cent = cent.localCheckpoint(eager = true)
-      cent.write.mode("overwrite").parquet(s"$path/centroids")
-      assignToCells(e, cent).select(col("vec_id"), col("cid"))
-        .join(payload, Seq("vec_id"))
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/index")
-    }
-
-  /** Mean assignment cosine over the index — Lloyd's objective, exposed so
-    * retrain improvement is a measured assertion, not an eyeball. */
-  def ivfObjective(s: SparkSession, path: String): Double = {
-    val idx = s.read.parquet(s"$path/index")
-    val e =
-      if (idx.columns.contains("code"))
-        idx.select(col("vec_id"), Sq8.decode(col("code")).as("v"))
-      else idx.select(col("vec_id"), col("v"))
-    val cent = s.read.parquet(s"$path/centroids").select(col("cid"), col("c"))
-    kmeansAssign(e, cent).agg(avg("sim")).collect()(0).getDouble(0)
-  }
-
   def ivfProbe(s: SparkSession, path: String, probe: Seq[Double],
       probes: Int = 2, k: Int = 10): DataFrame = {
     val topCells = topCellsFor(s, path, probe, probes)
@@ -1308,13 +1126,12 @@ object VectorOps {
       .limit(k)
   }
 
-  /** Driver-side cell ranking shared by the single-probe forms: cosine of
-    * the query against the K-row centroid table (index METADATA, bounded
-    * by K — the one collect these operators allow). round(·,6) before
-    * ranking so the cell choice is engine-independent — HALF_UP, the same
-    * policy as Spark's round() and DuckDB's round() in the v7 oracle
-    * (math.rint is half-even and could diverge on an exact .5e-6 tie
-    * between the driver ranking and the oracle's). */
+  /** Driver-side cell ranking of [[ivfProbe]]: cosine of the query against
+    * the K-row centroid table. round(·,6) before ranking so the cell
+    * choice is engine-independent — HALF_UP, the same policy as Spark's
+    * round() and DuckDB's round() in the v7 oracle (math.rint is half-even
+    * and could diverge on an exact .5e-6 tie between the driver ranking
+    * and the oracle's). */
   private def topCellsFor(s: SparkSession, path: String, probe: Seq[Double],
       probes: Int): Seq[Int] = {
     def cos(a: Seq[Double], b: Seq[Double]): Double = {
@@ -1330,90 +1147,6 @@ object VectorOps {
       .map(r => (r.getInt(0), r6(cos(r.getSeq[Double](1), probe))))
       .sortBy { case (cid, c) => (-c, cid) }
       .take(probes).map(_._1).toSeq
-  }
-
-  /** Write the at-rest IVF index with SQ8-QUANTIZED vectors: same
-    * assignment and cell partitioning as [[writeIvfIndex]], but each cell
-    * row stores the [[graft.functions.Sq8Encode]] code (1 byte/element +
-    * 8-byte scale) instead of 8-byte doubles — an ~8x raw scan/memory
-    * reduction, which at 100 TB is the difference between a float corpus
-    * that must be probed from disk and a quantized one that fits hot
-    * tiers. Centroids stay full precision: K rows of metadata, and
-    * quantizing them would shift every cell boundary for no byte savings.
-    * Recall floor vs the full-precision probe and the byte reduction are
-    * pinned in ScaleOpsSpec. */
-  def writeIvfIndexQ8(e0: DataFrame, K: Int, path: String): Unit =
-    MaintenanceLock.withLock(e0.sparkSession, path) {
-      val e = e0.localCheckpoint(eager = false)
-      val cent = e.filter(col("vec_id") < K)
-        .select(col("vec_id").cast("int").as("cid"), col("v").as("c"))
-      cent.write.mode("overwrite").parquet(s"$path/centroids")
-      assignToCells(e, cent)
-        .select(col("vec_id"), Sq8.encode(col("v")).as("code"), col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/index")
-    }
-
-  /** Probe the quantized index: identical cell choice to [[ivfProbe]]
-    * (full-precision centroids), scoring via the fused byte-loop
-    * [[graft.functions.CosineSimQ8]] — the scale cancels from the cosine,
-    * so no dequantization happens anywhere in the plan. */
-  def ivfProbeQ8(s: SparkSession, path: String, probe: Seq[Double],
-      probes: Int = 2, k: Int = 10): DataFrame = {
-    val topCells = topCellsFor(s, path, probe, probes)
-    s.read.parquet(s"$path/index")
-      .filter(col("cid").isin(topCells: _*))
-      .select(col("vec_id"), col("cid"),
-        Round6.of(Sq8.cosine(col("code"), typedLit(probe.toArray)))
-          .as("sim"))
-      .orderBy(desc("sim"), col("vec_id"))
-      .limit(k)
-  }
-
-  /** Batch form of [[ivfProbe]]: N query vectors against the at-rest index
-    * in ONE plan. Queries pick their top-p cells via the broadcast K-row
-    * centroid table (no per-query driver work), the
-    * union of probed cells — bounded by K, index METADATA — prunes the
-    * index scan via `isin` on the partition column, and a per-query
-    * [[graft.functions.TopKRows]] heap takes top-k (map-side combinable —
-    * no sort of the probe×candidate stream; see knnJoinOver).
-    * The single-probe form remains the interactive one-shot
-    * path; this is the 100 TB shape for query WORKLOADS, where per-query
-    * driver round-trips would serialize the batch. Per-query parity with
-    * [[ivfProbe]] is asserted in ScaleOpsSpec. */
-  def ivfProbeBatch(queries: DataFrame, path: String,
-      probes: Int = 2, k: Int = 10): DataFrame = {
-    val s = queries.sparkSession
-    val cent = s.read.parquet(s"$path/centroids")
-    val qCells = rankCells(queries.select(col("qid"), col("v")),
-        cent, "qid", topN = probes)
-      .select(col("qid"), col("v").as("qv"), col("cid"))
-      .localCheckpoint(eager = false) // feeds the cell list AND the scoring join
-    // the union of probed cells is ≤ K values — metadata, so the collect
-    // is bounded; it must be literal for the scan to prune directories
-    val cells = qCells.select(col("cid")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val idx = s.read.parquet(s"$path/index")
-      .filter(col("cid").isin(cells: _*))
-    // format-aware like append/delete: a quantized index stores `code`
-    // (SQ8 bytes) instead of `v`, scored by the fused byte-loop — the
-    // batch serving path must not force an 8x-bigger full-precision index
-    val score =
-      if (idx.columns.contains("code")) Sq8.cosine(col("code"), col("qv"))
-      else CosineSimilarity.of(col("qv"), col("v"))
-    // per-query top-k via the bounded heap aggregate (round 14): the
-    // row_number window planned as WindowGroupLimitExec, whose map-side
-    // pass sorts each task's whole probe×candidate stream (see
-    // knnJoinOver); the heap ships ≤ k rows per query per task instead.
-    // Ordering (sim DESC, vec_id ASC) is TopKRows' field convention; cid
-    // rides behind the unique vec_id tie-break, so it never participates.
-    qCells.join(idx, Seq("cid"))
-      .select(col("qid"), struct(
-        Round6.of(score).as("sim"), col("vec_id"), col("cid")).as("cand"))
-      .groupBy(col("qid"))
-      .agg(TopKRows.of(col("cand"), k).as("top"))
-      .select(col("qid"), explode(col("top")).as("t"))
-      .select(col("qid"), col("t.vec_id").as("vec_id"),
-        col("t.cid").as("cid"), col("t.sim").as("sim"))
   }
 
   /** Oracle-gated at-rest IVF query (v7): build the cell-partitioned index
@@ -1432,167 +1165,13 @@ object VectorOps {
     ivfProbe(s, path, probe, probes = 2, k = 10)
   }
 
-  /** Train PQ codebooks DISTRIBUTED: per-subspace Lloyd's run as one plan
-    * over (mi, subvector) rows — all M subspaces train simultaneously
-    * (subspace id rides in the grouping key, so M never multiplies the
-    * number of shuffles: each iteration is one broadcast assignment + one
-    * (mi, k, dim) partial-agg shuffle, same shape as [[kmeansCentroids]]).
-    * Returns the flat [(mi, k, d)] codebook — M·Kc·dsub doubles of driver
-    * metadata (1,024 values at M=8, Kc=16, dim=64). Codes whose cell
-    * empties during training keep their SEED value (harmless: nothing
-    * encodes to them). L2 objective per the PQ paper; deterministic
-    * first-Kc seed + lower-code tie-break, the repo's k-means policy. */
-  /** Training-set ceiling for PQ codebooks: assignment work per Lloyd pass
-    * is rows·M·Kc candidate distances, so training on the full corpus goes
-    * corpus-linear×Kc for no accuracy gain — k-means saturates long before
-    * 64k samples at Kc ≤ 256 (≥256 samples/centroid), and training on a
-    * bounded sample then encoding everything is standard PQ practice
-    * (FAISS trains on a subsample for exactly this reason). */
-  private val PqMaxTrain = 65536L
-
-  private[graft] def trainPqCodebooks(e: DataFrame, m: Int = 8, kc: Int = 16,
-      iters: Int = 3): Array[Double] = {
-    val dim = e.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by M=$m")
-    val dsub = dim / m
-    val n = e.count()
-    // deterministic 1-in-ceil(n/cap) thinning by id hash — reproducible,
-    // engine-portable, and unbiased for hash-distributed ids
-    val eTrain =
-      if (n <= PqMaxTrain) e
-      else e.filter(
-        pmod(xxhash64(col("vec_id")), lit((n / PqMaxTrain + 1))) === 0)
-    val subs = eTrain.select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), mi -> slice(v, mi * $dsub + 1, $dsub))"))
-        .as(Seq("mi", "sub")))
-      .localCheckpoint(eager = false)
-    // seeds from the FULL corpus (the deterministic first-Kc convention) —
-    // the training sample may have thinned any particular vec_id out
-    var cb = e.filter(col("vec_id") < kc)
-      .select(posexplode(expr(
-          s"transform(sequence(0, ${m - 1}), mi -> slice(v, mi * $dsub + 1, $dsub))"))
-          .as(Seq("mi", "sub")),
-        col("vec_id").cast("int").as("k"))
-      .select(col("mi"), col("k"), col("sub").as("c"))
-      .localCheckpoint(eager = false)
-    val flat = new Array[Double](m * kc * dsub)
-    def overlay(rows: Array[org.apache.spark.sql.Row]): Unit =
-      rows.foreach { r =>
-        val base = (r.getInt(0) * kc + r.getInt(1)) * dsub
-        val c = r.getSeq[Double](2)
-        var d = 0
-        while (d < dsub) { flat(base + d) = c(d); d += 1 }
-      }
-    overlay(cb.collect()) // seed fill (bounded: M·Kc rows)
-    for (_ <- 1 to iters) {
-      // argmin via min(struct(d2, k, sub)) — lexicographic struct min with
-      // the lower-code tie-break, and crucially a PARTIAL aggregate: the
-      // n·M·Kc candidate expansion combines map-side to n·M rows before
-      // the shuffle (a row_number window here would shuffle the whole
-      // expansion — the same reasoning that keeps W4's rank two-pass)
-      cb = subs.join(broadcast(cb), Seq("mi"))
-        .select(col("vec_id"), col("mi"), struct(
-          expr("aggregate(zip_with(sub, c, (a, b) -> (a - b) * (a - b)), " +
-            "0D, (acc, x) -> acc + x)").as("d2"),
-          col("k"), col("sub")).as("cand"))
-        .groupBy("vec_id", "mi").agg(min("cand").as("best"))
-        .select(col("mi"), col("best.k").as("k"),
-          posexplode(col("best.sub")).as(Seq("i", "x")))
-        .groupBy("mi", "k", "i").agg(avg("x").as("cx"))
-        .groupBy("mi", "k")
-        .agg(expr("transform(array_sort(collect_list(struct(i, cx))), t -> t.cx)")
-          .as("c"))
-        .localCheckpoint(eager = false)
-    }
-    overlay(cb.collect()) // trained fill (same bound)
-    flat
-  }
-
-  /** At-rest IVF-PQ index — the serving tier past [[writeIvfIndexQ8]]:
-    * coarse cells as pruned directories (identical layout to the other
-    * index writers), rows carrying the M-byte PQ code for the ADC
-    * shortlist pass PLUS the SQ8 code for the exact refine stage (FAISS's
-    * IVFPQ+refine shape). At M=8 the shortlist scan reads an 8 B column —
-    * 64x less than raw doubles — and the refine touches only
-    * k·overfetch rows. Codebook + geometry persist in `pq_codebook`. */
-  def writeIvfPqIndex(e0: DataFrame, K: Int, path: String, m: Int = 8,
-      kc: Int = 0): Unit =
-    MaintenanceLock.withLock(e0.sparkSession, path) {
-      val s = e0.sparkSession
-      import s.implicits._
-      val e = e0.localCheckpoint(eager = false)
-      // kc <= 0 → corpus-derived (the AUTO convention): codebook size is a
-      // scale knob like every other in this library, not a pinned constant
-      val kcUse =
-        if (kc > 0) kc else OperatingPoint.pqCodebookSize(e.count())
-      val cb = trainPqCodebooks(e, m, kcUse)
-      Seq((m, kcUse, cb.toSeq)).toDF("m", "kc", "codebook")
-        .write.mode("overwrite").parquet(s"$path/pq_codebook")
-      val cent = e.filter(col("vec_id") < K)
-        .select(col("vec_id").cast("int").as("cid"), col("v").as("c"))
-      cent.write.mode("overwrite").parquet(s"$path/centroids")
-      assignToCells(e, cent)
-        .select(col("vec_id"),
-          Pq.encode(col("v"), typedLit(cb), m, kcUse).as("code_pq"),
-          Sq8.encode(col("v")).as("code"),
-          col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$path/index")
-    }
-
-  /** Probe the IVF-PQ index: coarse cells prune the scan, the ADC pass
-    * ranks every surviving row with M byte-indexed adds against the
-    * query's LUTs (built driver-side from the stored codebook — M·Kc
-    * doubles, ‖q‖ folded in), the top k·overfetch shortlist is reranked
-    * EXACTLY on the SQ8 codes, and the final top-k is round-6 like every
-    * probe in this file. No full-precision float math touches the scan. */
-  def ivfProbePq(s: SparkSession, path: String, probe: Seq[Double],
-      probes: Int = 2, k: Int = 10, overfetch: Int = 5): DataFrame = {
-    val meta = s.read.parquet(s"$path/pq_codebook").head()
-    val m = meta.getInt(0); val kc = meta.getInt(1)
-    val cb = meta.getSeq[Double](2).toArray
-    val dim = probe.length; val dsub = dim / m
-    val qnorm = math.sqrt(probe.map(x => x * x).sum)
-    val dotLut = new Array[Double](m * kc)
-    val normLut = new Array[Double](m * kc)
-    var mi = 0
-    while (mi < m) {
-      var ki = 0
-      while (ki < kc) {
-        var dot = 0.0; var n2 = 0.0; var d = 0
-        while (d < dsub) {
-          val c = cb((mi * kc + ki) * dsub + d)
-          dot += probe(mi * dsub + d) * c
-          n2 += c * c
-          d += 1
-        }
-        dotLut(mi * kc + ki) = if (qnorm == 0) 0.0 else dot / qnorm
-        normLut(mi * kc + ki) = n2
-        ki += 1
-      }
-      mi += 1
-    }
-    val topCells = topCellsFor(s, path, probe, probes)
-    s.read.parquet(s"$path/index")
-      .filter(col("cid").isin(topCells: _*))
-      .select(col("vec_id"), col("cid"), col("code"),
-        Pq.adcSim(col("code_pq"), typedLit(dotLut), typedLit(normLut), kc)
-          .as("adc"))
-      .orderBy(desc("adc"), col("vec_id"))
-      .limit(k * overfetch)
-      .select(col("vec_id"), col("cid"),
-        Round6.of(Sq8.cosine(col("code"), typedLit(probe.toArray)))
-          .as("sim"))
-      .orderBy(desc("sim"), col("vec_id"))
-      .limit(k)
-  }
-
   /** O3/F10 over SQ8-QUANTIZED vectors: the [[cosineTopK]] shape scored
     * through [[graft.functions.Sq8Encode]] + [[graft.functions.CosineSimQ8]]
     * — encode and score fuse into one whole-stage-codegen pass reading the
-    * corpus once; at rest the codes are 1/8th the bytes (writeIvfIndexQ8).
-    * Hash-gated against a DuckDB reproduction of the exact quantization rule
-    * (code_i = floor(v_i/scale*127 + 0.5), the Java Math.round contract), so
-    * the quantizer itself — not just its recall — is oracle-checked. */
+    * corpus once. Hash-gated against a DuckDB reproduction of the exact
+    * quantization rule (code_i = floor(v_i/scale*127 + 0.5), the Java
+    * Math.round contract), so the quantizer itself — not just its recall —
+    * is oracle-checked. */
   def sq8TopK: Q = (s, d) => {
     val e = vecs(s, d)
     val probe = e.filter(col("vec_id") === 2).select(col("v").as("p"))

@@ -37,7 +37,6 @@ class CodegenCompileSpec extends SparkSpec {
     val out = withCodegenOnly {
       df.select(col("doc_id"),
           ShingleHashes.shingles(col("words")).as("sh"),
-          ShingleHashes.grams(col("words"), 2).as("gh"),
           ShingleHashes.gramStrings(col("words"), 2).as("gs"),
           Md5Prefix.of(col("text"), 12).as("mp"),
           Round6.of(expr("cast(size(words) as double) / 7.0")).as("r6"),

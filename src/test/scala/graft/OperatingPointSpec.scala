@@ -25,61 +25,12 @@ class OperatingPointSpec extends SparkSpec {
     assert(OperatingPoint.rpPlanesPerBand(2000000L, 384) == 14) // its 384 sibling
   }
 
-  test("surprisal keep ceiling: fixture median reproduces the 7.0 literal") {
-    assert(OperatingPoint.surprisalKeepMicro(3402214L) == 7000000L) // anchor
-    // proportional in the corpus base rate: +ln 1000 per word (the x1000
-    // disjoint-vocab shift) moves the ceiling past the shifted median
-    val shifted = 3402214L + 6907755L // + ln(1000) * 1e6
-    assert(OperatingPoint.surprisalKeepMicro(shifted) > shifted)
-    intercept[IllegalArgumentException](OperatingPoint.surprisalKeepMicro(0))
-  }
-
-  test("pq codebook size: doubles with corpus, >=64 points/centroid, cap 256") {
-    assert(OperatingPoint.pqCodebookSize(200) == 16)     // floor
-    assert(OperatingPoint.pqCodebookSize(2000) == 16)    // anchor
-    assert(OperatingPoint.pqCodebookSize(5000) == 32)
-    assert(OperatingPoint.pqCodebookSize(20000) == 128)
-    assert(OperatingPoint.pqCodebookSize(200000) == 256) // byte-code ceiling
-    // the training-density guard: growth can never outrun 64 points/code
-    assert(OperatingPoint.pqCodebookSize(8000) <= 8000 / 64)
-    // 100 TB regime: an uncapped 16<<extraBits wraps Int past n≈2.7e11
-    // and would collapse the derivation to the FLOOR at exactly the scale
-    // the ceiling exists for
-    assert(OperatingPoint.pqCodebookSize(300000000000L) == 256)
-    assert(OperatingPoint.pqCodebookSize(Long.MaxValue / 2) == 256)
-  }
-
-  test("cluster index parts: ~1k docs/bucket in pow2 steps, floor 64, cap 64k") {
-    assert(OperatingPoint.clusterIndexParts(530) == 64)     // fixture floor
-    assert(OperatingPoint.clusterIndexParts(65536) == 64)   // 64k docs = 64 buckets
-    assert(OperatingPoint.clusterIndexParts(100000) == 128) // pow2Ceil(97)
-    assert(OperatingPoint.clusterIndexParts(1000000) == 1024)
-    assert(OperatingPoint.clusterIndexParts(10000000000L) == 65536) // cap
-  }
-
-  test("shuffle shards: ~64k docs/shard in pow2 steps, floor 8, cap 64k") {
-    assert(OperatingPoint.shuffleShards(500) == 8)        // fixture floor
-    assert(OperatingPoint.shuffleShards(524288) == 8)     // 8 * 64k docs
-    assert(OperatingPoint.shuffleShards(1000000) == 16)   // pow2Ceil(15)
-    assert(OperatingPoint.shuffleShards(100000000) == 2048)
-    assert(OperatingPoint.shuffleShards(100000000000L) == 65536) // cap
-  }
-
-  test("band index buckets: same growth target, floor 16, cap 4096") {
-    assert(OperatingPoint.bandIndexBuckets(530) == 16)      // fixture floor
-    assert(OperatingPoint.bandIndexBuckets(100000) == 128)
-    assert(OperatingPoint.bandIndexBuckets(10000000000L) == 4096) // cap =
-    // the bound on the probe's driver-side distinct-bkb collect
-  }
-
   test("derivations are monotonic in corpus size") {
     val ns = Seq(1L, 10L, 100L, 1000L, 10000L, 100000L, 1000000L, 100000000L)
     def mono(f: Long => Int) =
       ns.zip(ns.tail).foreach { case (a, b) => assert(f(a) <= f(b)) }
     mono(OperatingPoint.rpPlanesPerBand(_))
     mono(OperatingPoint.rpPlanesPerBand(_, 384))
-    mono(OperatingPoint.clusterIndexParts)
-    mono(OperatingPoint.bandIndexBuckets)
   }
 
   test("auto rank-upsert pins sort-merge on the sim-join at scale estimates") {

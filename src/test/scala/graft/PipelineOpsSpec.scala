@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{CdcBoundaries, MinGramHash, RepetitionStats,
-  RollingGramHits, SpanGramHits}
+  SpanGramHits}
 import graft.multimodal.Multimodal
 import graft.operators.{DedupOps, Relational, TextOps, VectorOps}
 
@@ -244,77 +244,6 @@ class PipelineOpsSpec extends SparkSpec {
         .map("%02x".format(_)).mkString
       assert(cleanMd5 == hex, s"doc $doc clean text md5")
     }
-  }
-
-  test("rolling gram hits: rolling == direct polynomial recompute at every offset") {
-    import spark.implicits._
-    def fmix(h0: Long): Long = {
-      var h = h0
-      h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
-      h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
-      h ^ (h >>> 33)
-    }
-    def direct(s: String, g: Int, selBits: Int): Seq[(Int, Long)] =
-      (if (s.length < g) Seq(s) else s.sliding(g).toSeq).zipWithIndex.flatMap {
-        case (w, i) =>
-          val f = fmix(w.foldLeft(0L)((h, c) => h * 1000003L + c))
-          if ((f & ((1L << selBits) - 1)) == 0L) Some((i + 1, f)) else None
-      }
-    val rnd = new scala.util.Random(42)
-    val docs = (1L to 6L).map(id => (id,
-      (0 until 400).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString)) :+
-      (7L, "tiny") :+ (8L, "ünïcode çhars rolled over the char päth " * 12)
-    val got = docs.toDF("doc_id", "text")
-      .select(col("doc_id"),
-        explode(RollingGramHits.of(col("text"), 13, 2)).as("x"))
-      .select(col("doc_id"), col("x.off"), col("x.gh")).collect()
-      .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2))))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    docs.foreach { case (id, text) =>
-      val want = direct(text, 13, 2).toSet
-      assert(got.getOrElse(id, Set.empty) == want, s"doc $id")
-      // the fixture must actually exercise selection somewhere
-    }
-    assert(got.values.map(_.size).sum > 0)
-  }
-
-  test("dd9 rolling form: same inventory invariants, ~1/16 selection, ascii/unicode agree") {
-    // the planted boilerplate is detected by the rolling form too, with
-    // the same manifest invariants as the md5 form
-    val rows = DedupOps.spanGramsRolling(spark, sf).collect().map(r =>
-      (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getBoolean(5)))
-    assert(rows.nonEmpty, "rolling form missed the planted boilerplate")
-    rows.groupBy(_._3).values.foreach { g =>
-      val docs = g.map(_._1).distinct.sorted
-      assert(docs.length >= 2)
-      g.foreach { case (doc, _, _, n, fd, foreign) =>
-        assert(n == docs.length && fd == docs.head && foreign == (doc != fd))
-      }
-    }
-    assert(rows.groupBy(_._3).values.exists(g => g.map(_._2).distinct.length >= 2))
-    // selection rate: 1-in-16 content-defined, so the selected fraction
-    // over the corpus sits near 1/16 (loose 2x bounds)
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, explode}
-    val docs = Tables.load(spark, sf, "documents")
-    val rolling = RollingGramHits.of(col("text"), 50, 4)
-    val nSel = docs.select(explode(rolling))
-      .count().toDouble
-    val nTot = docs.selectExpr("greatest(length(text) - 49, 1) AS n")
-      .agg(org.apache.spark.sql.functions.sum("n")).collect()(0).getLong(0)
-      .toDouble
-    assert(nSel / nTot > 1.0 / 32 && nSel / nTot < 1.0 / 8,
-      s"selection rate ${nSel / nTot}")
-    // a span shared between an all-ASCII doc and a doc whose text ALSO
-    // holds multi-byte chars hashes identically from both code paths
-    val span = "this exact fifty-plus character span is shared verbatim ok"
-    val pair = Seq((1L, s"prefix one $span suffix"),
-      (2L, s"präfix zwölf ün $span another")).toDF("doc_id", "text")
-    val shared = pair
-      .select(col("doc_id"), explode(rolling).as("x"))
-      .groupBy("x.gh").count().filter(col("count") >= 2).count()
-    assert(shared >= 1, "ascii and unicode paths disagree on a shared span")
   }
 
   test("t12 split assign: deterministic, append-stable, 98/1/1 carve") {
@@ -565,124 +494,14 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
-  test("rolling/md5 gram hits: zero-length text emits no grams (no mutual empty carriers)") {
+  test("md5 gram hits: zero-length text emits no grams (no mutual empty carriers)") {
     import spark.implicits._
     val r = Seq(("a", ""), ("b", ""), ("c", "x"))
       .toDF("doc_id", "text")
-      .select(col("doc_id"), size(RollingGramHits.of(col("text"), 50, 4)).as("nr"),
-        size(SpanGramHits.of(col("text"), 50)).as("nm"))
-      .collect().map(x => x.getString(0) -> (x.getInt(1), x.getInt(2))).toMap
-    // two empty docs share NO gram on either path (pre-fix the rolling
-    // path emitted fmix(0), which always passes 1-in-2^k selection)
-    assert(r("a") == ((0, 0)) && r("b") == ((0, 0)))
-  }
-
-  test("t15 persisted manifest: pinned-S append is incremental; reshard steps geometry") {
-    import graft.operators.ShardManifest
-    def files(path: String): Map[String, (Long, Long)] = {
-      val root = new java.io.File(s"$path/manifest")
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(root).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getAbsolutePath.stripPrefix(root.getAbsolutePath) ->
-          (f.length(), f.lastModified())).toMap
-    }
-    def rows(path: String): Set[(Long, Int, Int)] =
-      ShardManifest.read(spark, path).select("doc_id", "shard", "pos")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    def queryForm(df: org.apache.spark.sql.DataFrame, s: Int): Set[(Long, Int, Int)] =
-      TextOps.shuffleShardOver(df, s)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-
-    val path = "target/shard_manifest"
-    new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
-    val full = Tables.load(spark, sf, "documents").select("doc_id")
-    val first = full.filter(col("doc_id") % 3 =!= 0)
-    val m0 = ShardManifest.write(first, path)
-    // the persisted manifest IS the oracle-gated query at the pinned S
-    assert(rows(path) == queryForm(first, m0.shards))
-
-    // append routes at the PINNED S; the result equals the query form
-    // over the grown corpus at that same S (the stability contract)
-    val grow = ShardManifest.append(full.filter(col("doc_id") % 3 === 0), path)
-    assert(grow.nonEmpty && ShardManifest.meta(spark, path).shards == m0.shards)
-    assert(rows(path) == queryForm(full, m0.shards))
-
-    // a one-doc append touches exactly its shard; every other shard
-    // partition's files are byte-untouched (a shard's ranks depend only
-    // on its own keys)
-    val before = files(path)
-    val one = spark.range(900001, 900002).select(col("id").as("doc_id"))
-    // the dynamic overwrite is scoped to the write: the shared session conf
-    // is never flipped, not even while the write's jobs run (a write on
-    // another thread would read it then), and the rows stay the contract's
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val modeBefore = spark.conf.getOption(modeKey)
-    val log = new JobLog(spark)
-    val touched = try log(ShardManifest.append(one, path)) finally log.close()
-    assert(log.count > 0)
-    assert(log.jobs.forall(p => p.getProperty(modeKey) != "dynamic"),
-      "the append's jobs ran under a session-wide dynamic overwrite mode")
-    assert(spark.conf.getOption(modeKey) == modeBefore)
-    assert(rows(path) == queryForm(full.union(one), m0.shards))
-    assert(touched.size == 1)
-    val after = files(path)
-    before.filter(!_._1.contains(s"shard=${touched.head}")).foreach {
-      case (rel, meta) => assert(after.get(rel).contains(meta),
-        s"untouched shard file changed: $rel")
-    }
-    // redelivery is absorbed idempotently
-    val content = rows(path)
-    ShardManifest.append(one, path)
-    assert(rows(path) == content)
-
-    // reshard: geometry pinned too large (as if written for a bigger
-    // corpus) steps DOWN to the count-derived S and equals a fresh build
-    val path2 = "target/shard_manifest_rs"
-    new scala.reflect.io.Directory(new java.io.File(path2)).deleteRecursively()
-    ShardManifest.write(first, path2, countEstimate = Some(65536L * 32))
-    assert(ShardManifest.meta(spark, path2).shards == 32)
-    val nm = ShardManifest.reshard(spark, path2)
-    assert(nm.shards == 8 && ShardManifest.meta(spark, path2).shards == 8)
-    assert(rows(path2) == queryForm(first, 8))
-    // matching geometry is a no-op: same meta, files untouched
-    val snap = files(path2)
-    assert(ShardManifest.reshard(spark, path2) == nm && files(path2) == snap)
-  }
-
-  test("t15 manifest reshard crash windows roll forward (GeometrySwap)") {
-    import graft.operators.{GeometrySwap, ShardManifest}
-    def rows(path: String): Set[(Long, Int, Int)] =
-      ShardManifest.read(spark, path).select("doc_id", "shard", "pos")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val ids = Tables.load(spark, sf, "documents").select("doc_id")
-    val want = TextOps.shuffleShardOver(ids, 8)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-
-    // crash with the commit marker durable, nothing swapped: the next
-    // entry's repair rolls FORWARD to the new geometry
-    val p1 = "target/shard_manifest_crash1"
-    new scala.reflect.io.Directory(new java.io.File(p1)).deleteRecursively()
-    ShardManifest.write(ids, p1, countEstimate = Some(65536L * 32))
-    GeometrySwap.failpoint.set("after-marker")
-    try intercept[IllegalStateException] {
-      ShardManifest.reshard(spark, p1)
-    } finally GeometrySwap.failpoint.set(null)
-    assert(rows(p1) == want) // read's entry repair rolls the swap forward
-    assert(ShardManifest.meta(spark, p1).shards == 8)
-
-    // crash with the dir swapped but the OLD _meta still live: repair
-    // promotes the staged meta before anything reads under the old S
-    val p2 = "target/shard_manifest_crash2"
-    new scala.reflect.io.Directory(new java.io.File(p2)).deleteRecursively()
-    ShardManifest.write(ids, p2, countEstimate = Some(65536L * 32))
-    GeometrySwap.failpoint.set("after-swap")
-    try intercept[IllegalStateException] {
-      ShardManifest.reshard(spark, p2)
-    } finally GeometrySwap.failpoint.set(null)
-    assert(ShardManifest.reshard(spark, p2).shards == 8) // converges
-    assert(ShardManifest.meta(spark, p2).shards == 8 && rows(p2) == want)
+      .select(col("doc_id"), size(SpanGramHits.of(col("text"), 50)).as("nm"))
+      .collect().map(x => x.getString(0) -> x.getInt(1)).toMap
+    // two empty docs share NO gram
+    assert(r("a") == 0 && r("b") == 0)
   }
 
   test("t16 bpe train: hand-checked merges on the classic corpus; " +

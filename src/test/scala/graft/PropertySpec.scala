@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.functions.{CosineSimilarity, Pq, ScalarExtras, Sq8}
+import graft.functions.{CosineSimilarity, ScalarExtras, Sq8}
 import graft.operators.Profile
 
 /** Property tests (SURVEY §5.3): invariants over generated inputs, run with
@@ -130,30 +130,34 @@ class PropertySpec extends SparkSpec {
       val mag = math.pow(10.0, rnd.nextInt(13) - 6)
       (i.toLong, Seq.fill(16)((rnd.nextDouble() * 2 - 1) * mag))
     } :+ ((200L, Seq.fill(16)(0.0)))).toDF("i", "v")
-    val bad = vecs.select(col("v"),
-        Sq8.decode(Sq8.encode(col("v"))).as("w"),
-        expr("array_max(transform(v, x -> abs(x)))").as("scale"))
-      .select(expr(
-        "aggregate(zip_with(v, w, (a, b) -> abs(a - b)), 0D, " +
-          "(acc, d) -> greatest(acc, d))").as("maxerr"), col("scale"))
-      .filter(col("maxerr") > col("scale") / 254.0 + lit(1e-18)).count()
+    // decode in plain Scala: [8-byte big-endian scale][n int8 codes],
+    // v_i ≈ code_i·scale/127
+    def decode(code: Array[Byte]): Seq[Double] = {
+      val scale = java.nio.ByteBuffer.wrap(code, 0, 8).getDouble
+      code.drop(8).map(_ * scale / 127.0).toSeq
+    }
+    val enc = vecs.select(col("i"), col("v"), Sq8.encode(col("v")).as("code"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getAs[Array[Byte]](2)))
+    val bad = enc.count { case (_, v, code) =>
+      val scale = v.map(math.abs).max
+      v.zip(decode(code)).map { case (a, b) => math.abs(a - b) }.max >
+        scale / 254.0 + 1e-18
+    }
     assert(bad == 0, s"$bad vectors exceed the half-step roundtrip bound")
     // re-encode stability: the CODES are an identity (the max-abs element
     // always lands on ±127, so integer codes re-round to themselves); the
     // 8-byte scale header may shift one ulp ((127·s)/127 double-rounds),
     // which changes no decoded value beyond that ulp — so compare codes
-    // exactly and scales relatively. (Nothing at rest depends on binary
-    // identity: retrainIvfIndex preserves stored payloads verbatim.)
-    val reenc = vecs.select(
-        substring(Sq8.encode(Sq8.decode(Sq8.encode(col("v")))), 9, Int.MaxValue)
-          .as("r2"),
-        substring(Sq8.encode(col("v")), 9, Int.MaxValue).as("r1"),
-        Sq8.decode(Sq8.encode(col("v"))).as("w"), col("v")).collect()
-    reenc.foreach { r =>
-      assert(r.getAs[Array[Byte]](0).toSeq == r.getAs[Array[Byte]](1).toSeq,
-        "codes changed on re-encode")
-      val s1 = r.getSeq[Double](3).map(math.abs).max
-      val s2 = r.getSeq[Double](2).map(math.abs).max
+    // exactly and scales relatively.
+    val reenc = enc.map { case (i, _, code) => (i, decode(code)) }.toSeq
+      .toDF("i", "w").select(col("i"), Sq8.encode(col("w")).as("code"))
+      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
+    enc.foreach { case (i, v, code) =>
+      assert(reenc(i).drop(8).toSeq == code.drop(8).toSeq,
+        s"codes changed on re-encode: $i")
+      val s1 = v.map(math.abs).max
+      val s2 = decode(code).map(math.abs).max
       assert(s1 == 0.0 && s2 == 0.0 ||
         math.abs(s2 - s1) <= math.ulp(s1), s"scale drifted: $s1 vs $s2")
     }
@@ -164,46 +168,5 @@ class PropertySpec extends SparkSpec {
         CosineSimilarity.of(col("v"), probe)).as("d"))
       .agg(max("d")).collect()(0).getDouble(0)
     assert(worst < 0.03, s"worst quantized-cosine error $worst")
-  }
-
-  test("pq: codes stay below kc and ADC matches the driver-side LUT sum") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val m = 4; val kc = 4; val dsub = 4
-    val rnd = new scala.util.Random(7)
-    val cb = Array.fill(m * kc * dsub)(rnd.nextDouble() * 2 - 1)
-    val vecs = Seq.tabulate(100) { i =>
-      val r = new scala.util.Random(i)
-      (i.toLong, Seq.fill(m * dsub)(r.nextDouble() * 2 - 1))
-    }.toDF("i", "v")
-    val q = Seq.fill(m * dsub)(0.3)
-    val qnorm = math.sqrt(q.map(x => x * x).sum)
-    val dotLut = new Array[Double](m * kc)
-    val normLut = new Array[Double](m * kc)
-    for (mi <- 0 until m; ki <- 0 until kc) {
-      var dot = 0.0; var n2 = 0.0
-      for (d <- 0 until dsub) {
-        val c = cb((mi * kc + ki) * dsub + d)
-        dot += q(mi * dsub + d) * c; n2 += c * c
-      }
-      dotLut(mi * kc + ki) = dot / qnorm; normLut(mi * kc + ki) = n2
-    }
-    val rows = vecs.select(col("i"),
-        Pq.encode(col("v"), typedLit(cb), m, kc).as("code"))
-      .select(col("i"), col("code"),
-        Pq.adcSim(col("code"), typedLit(dotLut), typedLit(normLut), kc)
-          .as("adc"))
-      .collect()
-    rows.foreach { r =>
-      val code = r.getAs[Array[Byte]](1)
-      assert(code.length == m && code.forall(b => (b & 0xff) < kc), r.toString)
-      // driver recomputation of the same ADC formula
-      var dot = 0.0; var n2 = 0.0
-      code.zipWithIndex.foreach { case (b, mi) =>
-        dot += dotLut(mi * kc + (b & 0xff)); n2 += normLut(mi * kc + (b & 0xff))
-      }
-      val want = if (n2 == 0) 0.0 else dot / math.sqrt(n2)
-      assert(math.abs(r.getDouble(2) - want) < 1e-12, s"adc mismatch: $r vs $want")
-    }
   }
 }

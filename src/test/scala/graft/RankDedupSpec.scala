@@ -71,6 +71,40 @@ class RankDedupSpec extends SparkSpec {
     assert(ins == Seq((200L, "inserted")))
   }
 
+  test("a measured dim sizes the join switch: a 2,000-row 64-dim store " +
+      "plans the banded join as with dim = 64 (merge) and returns the same rows") {
+    def unit64(seed: Int): Seq[Double] = {
+      val rnd = new scala.util.Random(seed)
+      val raw = Array.fill(64)(rnd.nextGaussian())
+      val n = math.sqrt(raw.map(x => x * x).sum)
+      raw.map(_ / n).toSeq
+    }
+    val store = df((0 until 2000).map(i => (i.toLong, unit64(i), (i % 11).toLong)): _*)
+    // every 100th store vector resubmitted, so replace, discard and drop
+    // all occur; random 64-dim pairs stay far below the 0.94 gate
+    val cand = df((0 until 2000 by 100).map(i =>
+      (10000L + i, unit64(i), ((i + 5) % 11).toLong)): _*)
+    // (sorted result rows, whether the banded join planned as sort-merge)
+    def run(dim: Int): (Seq[(Long, Long, String)], Boolean) = {
+      val (rows, actions) = new ActionLog(spark).during(
+        RankDedup.upsert(store, cand, dim = dim).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq.sorted)
+      // the keep-best checkpoint is the one action whose plan holds the join
+      val plans = actions.collect { case ("localCheckpoint", qe) =>
+        qe.executedPlan.toString }
+      assert(plans.size == 1, actions.map(_._1))
+      (rows, plans.head.contains("SortMergeJoin"))
+    }
+    val (pinned, pinnedMerge) = run(64)
+    // 2,000 · 8 bands · (8·64 + 40) bytes > 8 MiB: the switch must fire
+    assert(pinnedMerge, "dim = 64 at 2,000 store rows must pin sort-merge")
+    val (measured, measuredMerge) = run(0)
+    assert(measuredMerge == pinnedMerge,
+      "the measured dim must size the join switch like the explicit one")
+    assert(measured == pinned)
+    assert(measured.count(_._3 == "inserted") > 0)
+  }
+
   test("keep-best is the bounded heap aggregate: ObjectHashAggregate, " +
       "no WindowGroupLimit / window sort") {
     val matches = RankDedup.bandedMatches(df((1L, vA, 7L), (2L, vB, 8L)),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.{AsOfJoin, ScaleOps}
 
@@ -120,177 +121,56 @@ class ScaleOpsSpec extends SparkSpec {
     assert(cids.size <= 2)
   }
 
-  test("IVF batch probe: per-query parity with single probes, pruning intact") {
-    import graft.operators.VectorOps
-    val path = "target/ivf_index_batch"
-    val e = VectorOps.vecsCheckpointed(spark, sf)
-    VectorOps.writeIvfIndex(e, K = 8, path)
-    val qids = Seq(1L, 2L, 3L)
-    val queries = e.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("qid"), col("v"))
-    val batch = VectorOps.ivfProbeBatch(queries, path, probes = 2, k = 10)
-    val plan = batch.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cid#\\d+ IN \\(".r
-      .findFirstIn(plan).nonEmpty, plan)
-    val got = batch.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
-      .groupBy(_._1).map { case (q, rs) =>
-        q -> rs.map(r => (r._2, r._3)).sortBy(p => (-p._2, p._1)).toSeq
-      }
-    qids.foreach { q =>
-      val v = e.filter(col("vec_id") === q).collect()(0).getSeq[Double](2)
-      val single = VectorOps.ivfProbe(spark, path, v, probes = 2, k = 10)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      assert(got(q) == single, s"query $q diverges from the single probe")
-      assert(got(q).head == ((q, 1.0)), s"query $q should top-hit itself")
-    }
-  }
-
-  test("IVF append maintains the index in place: probes see new vectors, pruning intact") {
-    import graft.operators.VectorOps
-    val path = "target/ivf_index_append"
-    val e = VectorOps.vecsCheckpointed(spark, sf)
-    VectorOps.writeIvfIndex(e, K = 8, path)
-    val before = new java.io.File(s"$path/index").listFiles()
-      .filter(_.getName.startsWith("cid=")).map(_.getName).sorted.toSeq
-
-    // append near-duplicates of vector 1 (ids offset) — they must land in
-    // vector 1's cell and dominate a probe at vector 1
-    val batch = e.filter(col("vec_id") === 1)
-      .select((col("vec_id") + 50000).as("vec_id"), col("v"))
-    VectorOps.appendToIvfIndex(batch, path)
-
-    // no new cell directories: appends land INSIDE existing partitions
-    val after = new java.io.File(s"$path/index").listFiles()
-      .filter(_.getName.startsWith("cid=")).map(_.getName).sorted.toSeq
-    assert(after == before, s"$before -> $after")
-
-    val probeVec = e.filter(col("vec_id") === 1)
-      .collect()(0).getSeq[Double](2)
-    val probed = VectorOps.ivfProbe(spark, path, probeVec, probes = 2, k = 10)
-    val plan = probed.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cid#\\d+ IN \\(".r
-      .findFirstIn(plan).nonEmpty, plan)
-    val rows = probed.collect()
-    // both the original and the appended copy score 1.0 at the top
-    val top2 = rows.take(2).map(_.getLong(0)).toSet
-    assert(top2 == Set(1L, 50001L), rows.take(3).mkString(";"))
-    assert(rows.take(2).forall(_.getDouble(2) == 1.0))
-  }
-
-  test("IVF delete rewrites only victim cells; probes stop seeing victims") {
-    import graft.operators.VectorOps
-    import spark.implicits._
-    val path = "target/ivf_index_delete"
+  test("maintenance lock: held fails loudly, stale is broken, always released") {
+    import graft.operators.{MaintenanceLock, VectorOps}
+    val path = "target/ivf_index_lock"
     new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
+    assert(new java.io.File(path).mkdirs())
     val e = VectorOps.vecsCheckpointed(spark, sf)
-    VectorOps.writeIvfIndex(e, K = 8, path)
-    val beforeRows = spark.read.parquet(s"$path/index")
-      .select("vec_id", "cid").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    def fileMeta(): Map[String, (Long, Long)] =
-      new java.io.File(s"$path/index").listFiles()
-        .filter(_.getName.startsWith("cid="))
-        .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => s"${d.getName}/${f.getName}" -> (f.length(), f.lastModified())))
-        .toMap
-    val before = fileMeta()
-
-    // delete vector 1 and a spread of others (vec 1 has a known cell)
-    val victims = Seq(1L) ++ beforeRows.map(_._1).filter(_ % 29 == 3).take(5)
-    val affected = VectorOps.deleteFromIvfIndex(victims.toDF("vec_id"), path)
-    assert(affected.nonEmpty)
-
-    // content = original minus victims; untouched cells byte-identical
-    val afterRows = spark.read.parquet(s"$path/index")
-      .select("vec_id", "cid").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(afterRows == beforeRows.filterNot(r => victims.contains(r._1)))
-    fileMeta().foreach { case (rel, meta) =>
-      val cid = rel.split("/")(0).stripPrefix("cid=").toInt
-      if (!affected.contains(cid))
-        assert(before.get(rel).contains(meta), s"untouched cell changed: $rel")
+    val lockFile = new java.io.File(s"$path/_maintenance.lock")
+    // a live concurrent writer: the write must fail loudly and write nothing
+    java.nio.file.Files.write(lockFile.toPath, "12345 test-holder".getBytes)
+    val ex = intercept[IllegalStateException] {
+      VectorOps.writeIvfIndex(e, K = 8, path)
     }
-
-    // a probe at the deleted vector no longer returns it
-    val probeVec = e.filter(col("vec_id") === 1)
-      .collect()(0).getSeq[Double](2)
-    val got = VectorOps.ivfProbe(spark, path, probeVec, probes = 2, k = 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(!got.contains(1L))
-
-    // deleting already-absent ids is a no-op
-    assert(VectorOps.deleteFromIvfIndex(victims.toDF("vec_id"), path).isEmpty)
+    assert(ex.getMessage.contains("single-writer"))
+    assert(!new java.io.File(s"$path/index").exists())
+    // a crashed writer: backdate past the staleness horizon — broken, and
+    // the write proceeds, releasing the lock on exit
+    assert(lockFile.setLastModified(
+      System.currentTimeMillis() - MaintenanceLock.DefaultStaleMs - 60000))
+    VectorOps.writeIvfIndex(e, K = 8, path)
+    assert(!lockFile.exists(), "lock not released after the write")
+    assert(new java.io.File(s"$path/index").listFiles()
+      .count(_.getName.startsWith("cid=")) == 8)
+    // a write that fails inside the fence releases the lock too
+    intercept[Exception] {
+      VectorOps.writeIvfIndex(e.select(col("vec_id")), K = 8, path)
+    }
+    assert(!lockFile.exists(), "lock not released after a failed write")
   }
 
-  test("IVF compaction coalesces appended cells; probe rows unchanged") {
-    import graft.operators.VectorOps
-    val path = "target/ivf_index_compact"
-    new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
-    val e = VectorOps.vecsCheckpointed(spark, sf)
-    VectorOps.writeIvfIndex(e, K = 8, path)
-    // two appends into vector 1's cell fragment it (each lands new files)
-    Seq(50000L, 60000L).foreach { off =>
-      VectorOps.appendToIvfIndex(
-        e.filter(col("vec_id") === 1)
-          .select((col("vec_id") + off).as("vec_id"), col("v")), path)
-    }
-    def fileMeta(): Map[String, (Long, Long)] =
-      new java.io.File(s"$path/index").listFiles()
-        .filter(_.getName.startsWith("cid="))
-        .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => s"${d.getName}/${f.getName}" -> (f.length(), f.lastModified())))
-        .toMap
-    val beforeRows = spark.read.parquet(s"$path/index")
-      .select("vec_id", "cid").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    val before = fileMeta()
-    val fragmentedCells = before.keys.groupBy(_.split("/")(0))
-      .filter(_._2.size > 1).keySet
-      .map(_.stripPrefix("cid=").toInt)
-    assert(fragmentedCells.nonEmpty, "appends failed to fragment any cell")
-
-    val compacted = VectorOps.compactIvfIndex(spark, path, maxFiles = 1)
-    assert(compacted.toSet == fragmentedCells,
-      s"compacted $compacted != fragmented $fragmentedCells")
-
-    // compacted cells hold one file; untouched cells byte-identical;
-    // rows unchanged
-    val after = fileMeta()
-    compacted.foreach { cid =>
-      assert(after.keys.count(_.split("/")(0) == s"cid=$cid") == 1)
-    }
-    before.foreach { case (rel, meta) =>
-      if (!compacted.contains(rel.split("/")(0).stripPrefix("cid=").toInt))
-        assert(after.get(rel).contains(meta), s"untouched cell changed: $rel")
-    }
-    assert(spark.read.parquet(s"$path/index")
-      .select("vec_id", "cid").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet == beforeRows)
-
-    // a probe over the compacted index still sees both appended copies
-    val probeVec = e.filter(col("vec_id") === 1).collect()(0).getSeq[Double](2)
-    val got = VectorOps.ivfProbe(spark, path, probeVec, probes = 2, k = 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(Set(1L, 50001L, 60001L).subsetOf(got), got.toString)
-    // second pass: already compact, no-op
-    assert(VectorOps.compactIvfIndex(spark, path, maxFiles = 1).isEmpty)
-  }
-
-  test("SQ8 quantization: bounded error, 4x+ smaller index, recall holds") {
+  test("SQ8 quantization: bounded error, recall holds") {
     import graft.operators.VectorOps
     import graft.functions.{CosineSimilarity, Sq8}
     val e = VectorOps.vecsCheckpointed(spark, sf)
 
     // per-element roundtrip error is bounded by half a quantization step
-    // (scale/254); exercised through the CODEGEN encode and eval decode
-    val bad = e.select(col("v"),
-        Sq8.decode(Sq8.encode(col("v"))).as("w"),
-        expr("array_max(transform(v, x -> abs(x)))").as("scale"))
-      .select(expr(
-        "aggregate(zip_with(v, w, (a, b) -> abs(a - b)), 0D, " +
-          "(acc, d) -> greatest(acc, d))").as("maxerr"), col("scale"))
-      .filter(col("maxerr") > col("scale") / 254.0 + lit(1e-12)).count()
+    // (scale/254); the CODEGEN encode is decoded here in plain Scala:
+    // [8-byte big-endian scale][n int8 codes], v_i ≈ code_i·scale/127
+    def decode(code: Array[Byte]): Seq[Double] = {
+      val scale = java.nio.ByteBuffer.wrap(code, 0, 8).getDouble
+      code.drop(8).map(_ * scale / 127.0).toSeq
+    }
+    val rows = e.select(col("v"), Sq8.encode(col("v")).as("code")).collect()
+    assert(rows.nonEmpty)
+    val bad = rows.count { r =>
+      val v = r.getSeq[Double](0)
+      val w = decode(r.getAs[Array[Byte]](1))
+      val scale = v.map(math.abs).max
+      w.length != v.length ||
+        v.zip(w).map { case (a, b) => math.abs(a - b) }.max > scale / 254.0 + 1e-12
+    }
     assert(bad == 0, s"$bad vectors exceed the half-step roundtrip bound")
 
     // quantized cosine tracks the exact cosine tightly on real fixtures
@@ -302,175 +182,22 @@ class ScaleOpsSpec extends SparkSpec {
       .agg(max("d")).collect()(0).getDouble(0)
     assert(worst < 0.02, s"worst quantized-cosine error $worst")
 
-    // at-rest: Q8 index from the same corpus, same cell layout
-    val pathF = "target/ivf_index_full_cmp"
-    val pathQ = "target/ivf_index_q8"
-    Seq(pathF, pathQ).foreach(p =>
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())
-    VectorOps.writeIvfIndex(e, K = 8, pathF)
-    VectorOps.writeIvfIndexQ8(e, K = 8, pathQ)
-    def bytes(p: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) f.length() else 0L
-      walk(new java.io.File(s"$p/index"))
-    }
-    assert(bytes(pathQ) * 4 < bytes(pathF),
-      s"q8 ${bytes(pathQ)} vs full ${bytes(pathF)} — expected >4x reduction")
-
-    // probe parity: pruning intact, recall@10 >= 0.9 across queries
+    // recall@10 of the quantized top-10 against the exact top-10
+    def top10(score: Column): Set[Long] =
+      e.select(col("vec_id"), score.as("sim"))
+        .orderBy(desc("sim"), col("vec_id")).limit(10)
+        .collect().map(_.getLong(0)).toSet
     val qids = Seq(1L, 7L, 23L, 40L, 77L)
     val recalls = qids.map { q =>
-      val v = e.filter(col("vec_id") === q).collect()(0).getSeq[Double](2)
-      val full = VectorOps.ivfProbe(spark, pathF, v, probes = 2, k = 10)
-        .collect().map(_.getLong(0)).toSet
-      val quant = VectorOps.ivfProbeQ8(spark, pathQ, v, probes = 2, k = 10)
-      val plan = quant.queryExecution.executedPlan.toString
-      assert("PartitionFilters: \\[[^\\]]*cid#\\d+ IN \\(".r
-        .findFirstIn(plan).nonEmpty, plan)
-      val got = quant.collect().map(_.getLong(0)).toSet
-      assert(got.contains(q), s"query $q does not top-hit itself")
-      full.intersect(got).size.toDouble / full.size
+      val v = typedLit(
+        e.filter(col("vec_id") === q).collect()(0).getSeq[Double](2).toArray)
+      val full = top10(CosineSimilarity.of(col("v"), v))
+      val quant = top10(Sq8.cosine(Sq8.encode(col("v")), v))
+      assert(quant.contains(q), s"query $q does not top-hit itself")
+      full.intersect(quant).size.toDouble / full.size
     }
     val recall = recalls.sum / recalls.size
     assert(recall >= 0.9, s"mean recall@10 vs full precision = $recall")
-
-    // the maintenance lifecycle is format-aware: an append to the Q8 index
-    // stores encoded rows, delete keeps whatever columns the index has
-    val v1 = e.filter(col("vec_id") === 1).collect()(0).getSeq[Double](2)
-    VectorOps.appendToIvfIndex(
-      e.filter(col("vec_id") === 1)
-        .select((col("vec_id") + 70000).as("vec_id"), col("v")), pathQ)
-    val afterAppend = VectorOps.ivfProbeQ8(spark, pathQ, v1, 2, 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(afterAppend.contains(70001L), afterAppend.toString)
-    VectorOps.deleteFromIvfIndex(Seq(70001L).toDF("vec_id"), pathQ)
-    val afterDelete = VectorOps.ivfProbeQ8(spark, pathQ, v1, 2, 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(!afterDelete.contains(70001L) && afterDelete.contains(1L))
-
-    // batch serving path is format-aware too: over the quantized index it
-    // scores codes with the fused byte loop and returns the same
-    // neighbors as the single-probe form (same centroids, same round-6
-    // cell ranking policy on both paths)
-    val queries = e.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("qid"), col("v"))
-    val batch = VectorOps.ivfProbeBatch(queries, pathQ, probes = 2, k = 10)
-      .collect().groupBy(_.getLong(0))
-    qids.foreach { q =>
-      val v = e.filter(col("vec_id") === q).collect()(0).getSeq[Double](2)
-      val single = VectorOps.ivfProbeQ8(spark, pathQ, v, 2, 10)
-        .collect().map(_.getLong(0)).toSet
-      assert(batch(q).map(_.getLong(1)).toSet == single, s"qid $q")
-    }
-  }
-
-  test("IVF-PQ: byte-indexed ADC shortlist + SQ8 refine keeps recall") {
-    import graft.operators.VectorOps
-    val e = VectorOps.vecsCheckpointed(spark, sf)
-    val pathF = "target/ivf_pq_full_cmp"
-    val pathP = "target/ivf_pq"
-    Seq(pathF, pathP).foreach(p =>
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())
-    VectorOps.writeIvfIndex(e, K = 8, pathF)
-    VectorOps.writeIvfPqIndex(e, K = 8, pathP)
-
-    // the ADC column is 8 bytes/row; the whole PQ index (incl. the SQ8
-    // refine column) must still undercut the full-precision index
-    def bytes(p: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) f.length() else 0L
-      walk(new java.io.File(s"$p/index"))
-    }
-    assert(bytes(pathP) * 3 < bytes(pathF),
-      s"pq ${bytes(pathP)} vs full ${bytes(pathF)}")
-
-    // recall@10 vs the full-precision probe across queries, and the plan
-    // still prunes to the probed cells
-    val qids = Seq(1L, 7L, 23L, 40L, 77L)
-    val recalls = qids.map { q =>
-      val v = e.filter(col("vec_id") === q).collect()(0).getSeq[Double](2)
-      val full = VectorOps.ivfProbe(spark, pathF, v, probes = 2, k = 10)
-        .collect().map(_.getLong(0)).toSet
-      val pq = VectorOps.ivfProbePq(spark, pathP, v, probes = 2, k = 10)
-      assert("PartitionFilters: \\[[^\\]]*cid#\\d+ IN \\(".r
-        .findFirstIn(pq.queryExecution.executedPlan.toString).nonEmpty)
-      val got = pq.collect().map(_.getLong(0)).toSet
-      assert(got.contains(q), s"query $q does not top-hit itself")
-      full.intersect(got).size.toDouble / full.size
-    }
-    val recall = recalls.sum / recalls.size
-    assert(recall >= 0.8, s"mean recall@10 vs full precision = $recall")
-
-    // a float-typed vector column encodes identically to its double cast
-    // (ArrayData.getDouble on a float-backed array reads wrong bytes
-    // silently — the guard must pick getFloat)
-    val cb = expr("cast(array(9.0, 9.0, 1.0, 2.0) as array<double>)")
-    val fr = spark.range(1).select(
-      graft.functions.Pq.encode(expr("cast(array(1.0, 2.0) as array<float>)"),
-        cb, 1, 2).as("cf"),
-      graft.functions.Pq.encode(expr("cast(array(1.0, 2.0) as array<double>)"),
-        cb, 1, 2).as("cd")).head()
-    assert(fr.getAs[Array[Byte]](0).toSeq == fr.getAs[Array[Byte]](1).toSeq)
-    assert(fr.getAs[Array[Byte]](0)(0) == 1, "nearest code must be code 1")
-
-    // lifecycle over the PQ index: an append must carry BOTH code columns
-    // (a missing column would silently diverge the parquet schema and
-    // read back as nulls under the ADC scan); a retrain moves only cells
-    // and preserves the stored payload verbatim
-    val v1 = e.filter(col("vec_id") === 1).collect()(0).getSeq[Double](2)
-    VectorOps.appendToIvfIndex(
-      e.filter(col("vec_id") === 1)
-        .select((col("vec_id") + 80000).as("vec_id"), col("v")), pathP)
-    val afterAppend = VectorOps.ivfProbePq(spark, pathP, v1, 2, 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(afterAppend.contains(80001L), afterAppend.toString)
-    VectorOps.retrainIvfIndex(spark, pathP, iters = 1)
-    assert(spark.read.parquet(s"$pathP/index").columns.toSet ==
-      Set("vec_id", "code_pq", "code", "cid"))
-    val afterRetrain = VectorOps.ivfProbePq(spark, pathP, v1, 2, 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(afterRetrain.contains(1L) && afterRetrain.contains(80001L),
-      afterRetrain.toString)
-  }
-
-  test("IVF retrain re-centers drifted cells and grows K toward sqrt(n)") {
-    import graft.operators.VectorOps
-    val e = VectorOps.vecsCheckpointed(spark, sf)
-    val n = e.count()
-    val kTarget = math.max(8, math.sqrt(n.toDouble).toInt)
-    val path = "target/ivf_retrain"
-    val pathQ = "target/ivf_retrain_q8"
-    Seq(path, pathQ).foreach(p =>
-      new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively())
-
-    // deliberately under-provisioned index: 4 cells for a √n≈kTarget corpus
-    VectorOps.writeIvfIndex(e, K = 4, path)
-    val obj0 = VectorOps.ivfObjective(spark, path)
-    VectorOps.retrainIvfIndex(spark, path, iters = 2)
-    val obj1 = VectorOps.ivfObjective(spark, path)
-    assert(obj1 > obj0, s"objective did not improve: $obj0 -> $obj1")
-    val kAfter = spark.read.parquet(s"$path/centroids").count()
-    assert(kAfter > 4 && kAfter <= kTarget, s"k=$kAfter target=$kTarget")
-
-    // probe contract survives the rewrite: pruning + self-hit
-    val v1 = e.filter(col("vec_id") === 1).collect()(0).getSeq[Double](2)
-    val probe = VectorOps.ivfProbe(spark, path, v1, probes = 2, k = 10)
-    assert("PartitionFilters: \\[[^\\]]*cid#\\d+ IN \\(".r
-      .findFirstIn(probe.queryExecution.executedPlan.toString).nonEmpty)
-    assert(probe.collect().map(_.getLong(0)).contains(1L))
-
-    // quantized index retrains in place: format preserved, objective up
-    // (retrain never re-encodes — stored payload columns are carried
-    // verbatim; only the cell assignment is recomputed from the decode)
-    VectorOps.writeIvfIndexQ8(e, K = 4, pathQ)
-    val q0 = VectorOps.ivfObjective(spark, pathQ)
-    VectorOps.retrainIvfIndex(spark, pathQ, iters = 2)
-    assert(spark.read.parquet(s"$pathQ/index").columns.contains("code"))
-    assert(VectorOps.ivfObjective(spark, pathQ) > q0)
-    assert(VectorOps.ivfProbeQ8(spark, pathQ, v1, 2, 10)
-      .collect().map(_.getLong(0)).contains(1L))
   }
 
   test("GraftExtensions registers cosine_sim via injectFunction") {

@@ -71,7 +71,7 @@ class ShingleHashesSpec extends SparkSpec {
     assert(f == c)
   }
 
-  test("gram_strings/gram_hashes == the composed 8-gram HOF chain (order and duplicates kept)") {
+  test("gram_strings == the composed 8-gram HOF chain (order and duplicates kept)") {
     val rnd = new scala.util.Random(817)
     val texts = Seq("", "one", "a b c d e f g h i j k",
       "dup dup dup dup dup dup dup dup dup dup") ++
@@ -91,16 +91,6 @@ class ShingleHashesSpec extends SparkSpec {
         posexplode(ShingleHashes.gramStrings(col("words"), 8)).as(Seq("p", "g")))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
     assert(fusedStr == composedStr)
-    val composedHash = docs
-      .select(col("doc_id"), posexplode(expr(gram8)).as(Seq("p", "g")))
-      .select(col("doc_id"), col("p"), expr(
-        "cast(conv(substring(md5(g), 1, 12), 16, 10) as bigint)").as("g"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
-    val fusedHash = docs
-      .select(col("doc_id"),
-        posexplode(ShingleHashes.grams(col("words"), 8)).as(Seq("p", "g")))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
-    assert(fusedHash == composedHash)
   }
 
   test("md5_prefix == conv(substring(md5(x), 1, digits), 16, 10) for digits 1..15") {

@@ -13,6 +13,9 @@ class WordStatsSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** The stop set the fused byte table encodes. */
+  private val StopWords = Seq("the", "a", "of", "and", "to", "in", "is")
+
   /** (n_words, n_distinct, n_stop) via the composed chain — the oracle. */
   private def composed(df: org.apache.spark.sql.DataFrame) =
     df.select(col("doc_id"), split(col("text"), " ").as("words"))
@@ -20,7 +23,7 @@ class WordStatsSpec extends SparkSpec {
         size(col("words")).as("n_words"),
         size(array_distinct(col("words"))).as("n_distinct"),
         size(filter(col("words"),
-          w => w.isInCollection(TextOps.StopWords))).as("n_stop"))
+          w => w.isInCollection(StopWords))).as("n_stop"))
 
   private def fused(df: org.apache.spark.sql.DataFrame) =
     df.select(col("doc_id"), TextOps.wordStats(col("text")).as("ws"))
