@@ -25,6 +25,22 @@ class OperatingPointSpec extends SparkSpec {
     assert(OperatingPoint.rpPlanesPerBand(2000000L, 384) == 14) // its 384 sibling
   }
 
+  test("surprisal keep ceiling: fixture median reproduces the 7.0 literal") {
+    // t13/c5 pin the keep ceiling at average surprisal 7.0, calibrated as
+    // ~2.06x the sf0.1 fixture's median (3.402214): recompute that median
+    // with the shipped scoring so the pin cannot drift from its reason
+    val sf01 = new java.io.File(sf).getParent + "/sf0.1"
+    val scored = graft.operators.TextOps.perplexityFilter(spark, sf01)
+      .select("avg_surprisal", "keep").collect()
+      .map(r => (r.getDouble(0), r.getBoolean(1)))
+    val avg = scored.map(_._1).sorted
+    val median = avg((avg.length - 1) / 2)
+    assert(median == 3.402214, s"fixture median surprisal $median over ${avg.length} docs")
+    assert(math.abs(7.0 / median - 2.06) < 0.005, s"ceiling/median ${7.0 / median}")
+    // keep is exactly the pinned cut
+    assert(scored.forall { case (a, k) => k == (a <= 7.0) })
+  }
+
   test("derivations are monotonic in corpus size") {
     val ns = Seq(1L, 10L, 100L, 1000L, 10000L, 100000L, 1000000L, 100000000L)
     def mono(f: Long => Int) =

@@ -494,13 +494,14 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
-  test("md5 gram hits: zero-length text emits no grams (no mutual empty carriers)") {
+  test("rolling/md5 gram hits: zero-length text emits no grams (no mutual empty carriers)") {
     import spark.implicits._
     val r = Seq(("a", ""), ("b", ""), ("c", "x"))
       .toDF("doc_id", "text")
       .select(col("doc_id"), size(SpanGramHits.of(col("text"), 50)).as("nm"))
       .collect().map(x => x.getString(0) -> x.getInt(1)).toMap
-    // two empty docs share NO gram
+    // the md5 window rolls over every offset of a non-empty text, but an
+    // empty text has no offset: two empty docs share NO gram
     assert(r("a") == 0 && r("b") == 0)
   }
 
