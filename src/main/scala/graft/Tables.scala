@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Table layer: loads the driver corpus (TESTDATA.md) and registers temp
-  * views, mirroring the reference's df / aux-dataset injection
-  * (reference: bambooai/code_executor.py:128-140 binds `df` into the exec
-  * scope; web_app/code_executor_api.py:33-65 caches tables by df_id).
+/** Table layer: loads the driver corpus (TESTDATA.md), which the entry
+  * points bind as views by name, mirroring the reference's df /
+  * aux-dataset injection (reference: bambooai/code_executor.py:128-140
+  * binds `df` into the exec scope; web_app/code_executor_api.py:33-65
+  * caches tables by df_id).
   *
   * Spark-first: a "table" is an immutable DataFrame plan registered in the
   * session catalog under a stable name; re-binding a name is the engine's
@@ -44,8 +45,4 @@ object Tables {
       }
     } else spark.read.parquet(path(sfDir, name))
   }
-
-  /** Register every corpus table as a temp view for SQL access. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -1,37 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-/** Remaining scalar-function surface of SURVEY §2.8 not already exercised by
-  * the oracle queries: F7 unicode→ASCII normalize, F8 wrap/truncate, F14
-  * safe-eval calculator, F15 base64/zlib helpers.
+/** The F14 safe-eval calculator of SURVEY §2.8, the one scalar helper the
+  * oracle queries do not exercise: [[graft.lifecycle.ReAct]] runs it as
+  * its `calculate` action.
   */
 object ScalarExtras {
-
-  /** F7: NFKD + ASCII-ignore label normalization (utils.py:389), for
-    * label paths only (presentation, never the hot path). */
-  def asciiNormalize(s: String): String =
-    java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKD)
-      .replaceAll("[^\\p{ASCII}]", "")
-
-  /** F8: textwrap.wrap(width) (utils.py:392) — greedy word wrap. */
-  def wrap(text: String, width: Int): Seq[String] = {
-    val words = text.split("\\s+").filter(_.nonEmpty)
-    val lines = Seq.newBuilder[String]
-    var cur = new StringBuilder
-    words.foreach { w =>
-      if (cur.isEmpty) cur ++= w
-      else if (cur.length + 1 + w.length <= width) { cur += ' '; cur ++= w }
-      else { lines += cur.toString; cur = new StringBuilder(w) }
-    }
-    if (cur.nonEmpty) lines += cur.toString
-    lines.result()
-  }
-
-  /** F8: `[:37] + "..."` truncation (utils.py:422-427). */
-  def truncateLabel(s: String, n: Int = 37): String =
-    if (s.length <= n) s else s.take(n) + "..."
 
   /** F14: the ReAct `calculate:` action (google_search.py:370-377) — the
     * reference `eval()`s arithmetic; here the expression is validated by
@@ -53,7 +28,4 @@ object ScalarExtras {
         }
     }
   }
-
-  /** F15: base64 column helper (code_executor.py:150-151) — a built-in. */
-  def b64(c: Column): Column = base64(c.cast("binary"))
 }

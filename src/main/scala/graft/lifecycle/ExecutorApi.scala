@@ -313,7 +313,9 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     df
   }
 
-  private val MaxUploadBytes = 64L * 1024 * 1024 // the S8 remote-source cap
+  // one upload is read whole into a driver byte array before it is
+  // spooled, so its size is capped to keep the driver heap bounded
+  private val MaxUploadBytes = 64L * 1024 * 1024
 
   /** /upload — the reference's browser path (app.py:566-618): a
     * multipart/form-data `file` part is spooled under dataDir/uploads and
@@ -598,7 +600,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
   private val rolledTotals =
     scala.collection.mutable.Map.empty[String, (Long, Long, Long, Double)]
   // /query runs on pool threads: the counter is atomic so two concurrent
-  // chains never share an id (Telemetry.perChain would merge them)
+  // chains never share an id (their call logs would read as one chain)
   private val chainSeq = new java.util.concurrent.atomic.AtomicLong()
 
   private[graft] def callLogSize: Int = callLogs.synchronized(callLogs.length)
@@ -675,20 +677,28 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
     * a generated file through the driver, the cached TABLE streams out as
     * CSV through `toLocalIterator` — the driver holds one partition at a
     * time, never the result (the 100 TB-safe download shape). `max_rows`
-    * caps the export (default 1M). */
+    * caps the export (default 1M); a negative or non-numeric cap answers
+    * 400. Every check runs, and the limited plan is built, before the 200
+    * goes out: after the headers an error can only drop the connection. */
   private def download(ex: HttpExchange): Unit = {
-    val params = Option(ex.getRequestURI.getQuery).getOrElse("")
+    // the raw query, decoded once: getQuery has already decoded it, and a
+    // second decode misreads a value holding an escaped '%' or '+'
+    val params = Option(ex.getRequestURI.getRawQuery).getOrElse("")
       .split("&").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        k -> java.net.URLDecoder.decode(v, "UTF-8")
+        k -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8)
       }.toMap
-    params.get("df_id").filter(_.nonEmpty) match {
-      case None => respond(ex, 400, err("Missing 'df_id' query parameter."))
-      case Some(id) => cache.get(id) match {
+    val maxRows = params.get("max_rows")
+      .fold(Option(1000000L))(_.toLongOption.filter(_ >= 0))
+    (params.get("df_id").filter(_.nonEmpty), maxRows) match {
+      case (None, _) =>
+        respond(ex, 400, err("Missing 'df_id' query parameter."))
+      case (_, None) =>
+        respond(ex, 400, err("'max_rows' must be a non-negative integer."))
+      case (Some(id), Some(n)) => cache.get(id) match {
         case None => respond(ex, 404, err("DataFrame not found in cache"))
         case Some(df) =>
-          val maxRows = params.get("max_rows").flatMap(_.toLongOption)
-            .getOrElse(1000000L)
+          val limited = df.limit(math.min(n, Int.MaxValue.toLong).toInt)
           def csvField(v: Any): String = {
             val s = if (v == null) "" else v.toString
             if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
@@ -702,8 +712,7 @@ final class ExecutorApi(session: EngineSession, cacheSize: Int = 4,
           val out = ex.getResponseBody
           out.write((df.columns.map(csvField).mkString(",") + "\n")
             .getBytes(StandardCharsets.UTF_8))
-          val it = df.limit(
-            math.min(maxRows, Int.MaxValue.toLong).toInt).toLocalIterator()
+          val it = limited.toLocalIterator()
           while (it.hasNext) {
             val r = it.next()
             out.write((df.columns.indices.map(i => csvField(r.get(i)))

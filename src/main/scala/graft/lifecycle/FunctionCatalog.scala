@@ -59,11 +59,4 @@ object FunctionCatalog {
       "per-group session index: start/end/duration/count + measure means",
       Seq("activity", "events"),
       dataframeIndex("user_id", "ts", Seq("value"))))
-
-  /** Resolution by name — the plan references `fn:<name>`; unknown names are
-    * rejected exactly like non-allow-listed SQL functions. */
-  def resolveScalar(name: String): Either[String, Column => Column] =
-    scalars.get(name).map(_.impl).toRight(s"unknown helper function: $name")
-  def resolveTable(name: String): Either[String, DataFrame => DataFrame] =
-    tables.get(name).map(_.impl).toRight(s"unknown helper function: $name")
 }

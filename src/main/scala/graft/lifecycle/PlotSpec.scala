@@ -10,9 +10,6 @@ import org.apache.spark.sql.DataFrame
   */
 object PlotSpec {
 
-  final case class Spec(kind: String, x: String, ys: Seq[String],
-      title: String)
-
   /** The reference's plot_2d helper parameter surface
     * (default_prompts.yaml:1290-1313): a plotly-express call reduced to
     * its declarative inputs — plot type, x/y columns, title, axis-label
@@ -104,28 +101,5 @@ object PlotSpec {
       transform +
       s""""mark": {"type": "$mark"}, """ +
       s""""encoding": {$xEnc, $yEnc$colorEnc$tooltip}}"""
-  }
-
-  /** Serialize spec + inlined (small, post-aggregation) data rows — the
-    * shape the reference ships to its web UI as plotly JSON. Callers are
-    * expected to pass an already-aggregated frame (the engine's contract:
-    * plots render result tables, never raw scans). */
-  def toJson(spec: Spec, df: DataFrame, maxRows: Int = 1000): String = {
-    val cols = spec.x +: spec.ys
-    val data = df.select(cols.head, cols.tail: _*).limit(maxRows).collect()
-      .map { r =>
-        cols.indices.map { i =>
-          val v = r.get(i)
-          if (v == null) "null"
-          else v match {
-            case n: java.lang.Number => n.toString
-            case other => Json.str(other.toString)
-          }
-        }.mkString("[", ",", "]")
-      }.mkString("[", ",", "]")
-    s"""{"kind": ${Json.str(spec.kind)}, "title": ${Json.str(spec.title)},
-       | "x": ${Json.str(spec.x)}, "ys": [${spec.ys.map(Json.str).mkString(",")}],
-       | "columns": [${cols.map(Json.str).mkString(",")}],
-       | "data": $data}""".stripMargin
   }
 }

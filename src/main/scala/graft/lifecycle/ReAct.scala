@@ -13,7 +13,9 @@ import graft.functions.ScalarExtras
   *
   * The tools are the reference's two known actions re-expressed over this
   * engine: `search` runs the [[Retriever]] chunk→embed→rerank pipeline over
-  * a local corpus (google_search.py:290-299 Search.__call__), and
+  * a local corpus (google_search.py:290-299 Search.__call__) — the
+  * reference's live `google_search` action has no counterpart here, as
+  * no served route or config holds a search-provider key — and
   * `calculate` is the validator-gated [[ScalarExtras.calculate]] instead of
   * a bare eval (:370-377). Unknown actions raise, as in the reference
   * (:83-84). Everything model-shaped stays behind [[Agents.LlmClient]], so
@@ -83,15 +85,4 @@ object ReAct {
         case Left(err) => err
       }
     })
-
-  /** [[searchActions]] plus the LIVE web path: `google_search` runs the
-    * provider → fetch → chunk → rerank → summarize pipeline
-    * ([[WebSearchTool]]), exactly the reference's known_actions set
-    * (google_search.py:54-56: google_search + calculate). The local-corpus
-    * `search` stays available — it is the offline/bulk variant of the same
-    * rerank. */
-  def webActions(spark: SparkSession, web: WebSearchTool,
-      retriever: Retriever, llm: Agents.LlmClient): Map[String, String => String] =
-    searchActions(spark, retriever, llm) +
-      ("google_search" -> { raw: String => web.search(raw).answer })
 }

@@ -1,53 +1,19 @@
 package graft.lifecycle
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** A11 engine telemetry: per-chain / per-model cost accounting
-  * (bambooai/log_manager.py:45-53,82-122,145-188 — token counts, elapsed
-  * time, $ cost at per-1K rates, rolled up per chain and per model).
-  * The roll-up itself is just the engine's own group-agg surface.
+/** A11 engine telemetry: one record per LLM call
+  * (bambooai/log_manager.py:45-53,82-122 — token counts and elapsed time).
+  * The roll-up is the engine's own group-agg surface: `/metrics` groups
+  * these rows per stage ([[ExecutorApi]]).
   */
 object Telemetry {
 
   final case class CallLog(chainId: String, agent: String, model: String,
       promptTokens: Long, completionTokens: Long, elapsedS: Double)
 
-  /** Per-1K-token rates keyed by model (LLM_CONFIG_sample.json:18-44). */
-  final case class Rates(promptPer1k: Double, completionPer1k: Double)
-
   def toDF(spark: SparkSession, logs: Seq[CallLog]): DataFrame = {
     import spark.implicits._
     logs.toDF()
   }
-
-  /** log_manager.py:145-188 roll-up: totals + derived rates per chain. */
-  def perChain(calls: DataFrame, rates: Map[String, Rates]): DataFrame = {
-    val rateRows = rates.toSeq.map { case (m, r) =>
-      (m, r.promptPer1k, r.completionPer1k)
-    }
-    val spark = calls.sparkSession
-    import spark.implicits._
-    val rdf = rateRows.toDF("model", "p_rate", "c_rate")
-    calls.join(broadcast(rdf), Seq("model"), "left")
-      .withColumn("cost",
-        (col("promptTokens") * coalesce(col("p_rate"), lit(0.0)) +
-          col("completionTokens") * coalesce(col("c_rate"), lit(0.0))) / 1000.0)
-      .groupBy("chainId")
-      .agg(count(lit(1)).as("n_calls"),
-        sum("promptTokens").as("prompt_tokens"),
-        sum("completionTokens").as("completion_tokens"),
-        round(sum("elapsedS"), 3).as("elapsed_s"),
-        round(sum("cost"), 6).as("cost_usd"),
-        round(sum("completionTokens") / sum("elapsedS"), 2).as("tokens_per_s"))
-  }
-
-  /** Per-model roll-up (log_manager.py:125-143 shape). */
-  def perModel(calls: DataFrame): DataFrame =
-    calls.groupBy("model")
-      .agg(count(lit(1)).as("n_calls"),
-        sum("promptTokens").as("prompt_tokens"),
-        sum("completionTokens").as("completion_tokens"),
-        round(avg(col("completionTokens") / col("elapsedS")), 2)
-          .as("avg_tokens_per_s"))
 }

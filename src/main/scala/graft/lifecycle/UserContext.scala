@@ -1,8 +1,5 @@
 package graft.lifecycle
 
-import java.nio.file.{Files, Path}
-import java.nio.charset.StandardCharsets
-
 /** The `request_user_context` feedback tool (SURVEY §3.1): when a selector
   * agent finds the question ambiguous it can ask the user a clarifying
   * question and block — bounded — on the answer before routing.
@@ -11,10 +8,10 @@ import java.nio.charset.StandardCharsets
   *  - tool contract: messages/tools_definition.py:155-178
   *    (`query_clarification` + `context_needed` enum);
   *  - wait loop: context_retrieval.py:11-78 — a synchronous channel
-  *    (notebook/CLI) answers immediately; web mode polls
-  *    `temp/[user/]feedback_<chain>.json` every 2 s for up to 300 s with a
-  *    0.5 s initial delay, matches entries on `query_clarification`, deletes
-  *    the file after a hit, and falls back to a fixed timeout message;
+  *    (notebook/CLI) answers immediately, and a channel with no answer
+  *    falls back to a fixed timeout message. The reference's web mode,
+  *    which polls `temp/[user/]feedback_<chain>.json` for up to 300 s, has
+  *    no counterpart: no served route writes that file;
   *  - loop shape: models/anthropic_models.py:171-228 — the agent is re-called
   *    with the tool result appended until it stops requesting context.
   *
@@ -60,63 +57,6 @@ object UserContext {
       extends FeedbackChannel {
     def request(req: Request): Option[String] = f(req)
   }
-
-  /** Web mode: poll `dir/[userId/]feedback_<chainId>.json` — a JSON list of
-    * `{"query_clarification": …, "feedback": …}` entries — matching on the
-    * exact clarification question (context_retrieval.py:43-76). The sleeper
-    * is injectable so tests run the full loop without wall-clock waits. */
-  final class PolledFileChannel(dir: Path, chainId: String,
-      userId: Option[String] = None,
-      timeoutMs: Long = 300000L, pollMs: Long = 2000L,
-      initialDelayMs: Long = 500L,
-      sleeper: Long => Unit = Thread.sleep)
-      extends FeedbackChannel {
-
-    private def feedbackFile: Path =
-      userId.fold(dir)(dir.resolve(_)).resolve(s"feedback_$chainId.json")
-
-    def request(req: Request): Option[String] = {
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      var first = true
-      while (System.nanoTime() < deadline) {
-        if (first) { sleeper(initialDelayMs); first = false }
-        val f = feedbackFile
-        // read-or-skip: the file can vanish between exists() and the read
-        // (web UI rewrites it); the reference logs and keeps polling on any
-        // read error (context_retrieval.py:43-76), so swallow and retry
-        val content =
-          try {
-            if (Files.exists(f))
-              Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-            else None
-          } catch { case _: java.io.IOException => None }
-        content.foreach { text =>
-          val hit = readEntries(text)
-            .collectFirst { case (q, fb) if q == req.queryClarification => fb }
-          if (hit.isDefined) {
-            try Files.deleteIfExists(f)
-            catch { case _: java.io.IOException => () } // ref warns+continues
-            return hit
-          }
-        }
-        sleeper(pollMs)
-      }
-      None
-    }
-  }
-
-  /** (query_clarification, feedback) pairs from the feedback file's JSON
-    * list. Entries lacking either string are skipped, and a file that does
-    * not parse (the web UI may be mid-write) reads as no entries — the
-    * reference logs and keeps polling. */
-  private[lifecycle] def readEntries(json: String): Seq[(String, String)] =
-    scala.util.Try(Json.parse(json)).toOption.toSeq.flatMap(Json.elements)
-      .flatMap { e =>
-        for {
-          q <- Json.text(e, "query_clarification")
-          f <- Json.text(e, "feedback")
-        } yield (q, f)
-      }
 
   /** One resolved round: channel answer, or the reference's timeout text. */
   def resolve(channel: FeedbackChannel, req: Request): String =

@@ -414,19 +414,6 @@ object Multimodal {
     }
   }
 
-  /** Real keyframe extraction for MJPEG-style payloads: one row per
-    * delimited JPEG frame (actual decodable frame bytes), complementing
-    * [[sampleFrames]]' fixed-stride byte windows (the oracle-pinned mm2
-    * shape for payloads without frame structure). */
-  def sampleJpegFrames(media: Dataset[MediaRow]): Dataset[Frame] = {
-    import media.sparkSession.implicits._
-    media.flatMap { m =>
-      MjpegCodec.frames(m.payload).zipWithIndex.map { case (f, idx) =>
-        Frame(m.media_id, idx, f)
-      }
-    }
-  }
-
   /** The features as a DataFrame with an embedding column compatible with
     * VectorOps (array<float>), demonstrating the media → embedding → ANN
     * hand-off. */

@@ -158,22 +158,4 @@ object Profile {
 
   /** I4: computeDataframeSample — head(100) preview (utils.py:252-271). */
   def sample(df: DataFrame, n: Int = 100): DataFrame = df.limit(n)
-
-  /** F3: ordinal + readable date "Wed 3rd of Apr 2026" (utils.py:23-33). */
-  def ordinal(n: Int): String = {
-    val suffix =
-      if (11 <= n % 100 && n % 100 <= 13) "th"
-      else n % 10 match {
-        case 1 => "st"; case 2 => "nd"; case 3 => "rd"; case _ => "th"
-      }
-    s"$n$suffix"
-  }
-
-  def readableDate(d: java.time.LocalDate): String = {
-    val dow = d.getDayOfWeek.getDisplayName(
-      java.time.format.TextStyle.SHORT, java.util.Locale.ENGLISH)
-    val mon = d.getMonth.getDisplayName(
-      java.time.format.TextStyle.SHORT, java.util.Locale.ENGLISH)
-    s"$dow ${ordinal(d.getDayOfMonth)} of $mon ${d.getYear}"
-  }
 }

@@ -1,12 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The 100 TB operating modes (SURVEY §4 "physical execution notes"):
-  * approximate aggregates behind the same API, salting for skewed joins,
-  * and bucketing for shuffle-free co-located joins. These are the switches
-  * a deployment flips when the exact/small-data defaults stop scaling.
+/** The 100 TB operating mode of the profile aggregates (SURVEY §4
+  * "physical execution notes"): approximate aggregates behind the same
+  * API, the switch a deployment flips when the exact defaults stop
+  * scaling.
   */
 object ScaleOps {
 
@@ -20,27 +20,4 @@ object ScaleOps {
 
   def distinctCountAgg(c: Column, approx: Boolean): Column =
     if (approx) approx_count_distinct(c) else countDistinct(c)
-
-  /** Partition-pruned layout: write a fact table partitioned by a derived
-    * date key so selective time predicates skip whole directories — the
-    * physical layout that turns the 100 TB "year(o_orderdate)=1995" filter
-    * into a read of 1/7 of the data (SURVEY P7 note). */
-  def writePartitionedByYear(df: DataFrame, dateCol: String,
-      path: String): Unit =
-    df.withColumn("part_year", year(col(dateCol)))
-      .write.mode("overwrite").partitionBy("part_year").parquet(path)
-
-  /** Skew-safe equi-join: salt the (skewed) left side deterministically and
-    * replicate the small right side `factor` ways, so one hot key spreads
-    * over `factor` reducers. Result is identical to a plain inner join.
-    * (AQE's skew-join handles sort-merge cases adaptively; explicit salting
-    * is the declarative form that also covers deterministic replays.) */
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-      factor: Int): DataFrame = {
-    val salted = left.withColumn("__salt",
-      pmod(hash(left.columns.map(col): _*), lit(factor)))
-    val replicated = right.withColumn("__salt",
-      explode(sequence(lit(0), lit(factor - 1))))
-    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
-  }
 }

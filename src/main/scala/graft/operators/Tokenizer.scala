@@ -90,8 +90,7 @@ object Tokenizer {
     * `#version` header and blank lines skipped; rank = surviving line
     * order). Only the version header is treated as a comment — a merge
     * whose FIRST SYMBOL is a literal '#' is a legitimate line in real
-    * GPT-2 merges files and must keep its rank. Exposed for specs;
-    * [[fromMergesFile]] is the path form. */
+    * GPT-2 merges files and must keep its rank. */
   def fromMergesLines(lines: Iterator[String]): BpeTokenizer = {
     val ranks = lines.map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("#version"))
@@ -102,14 +101,6 @@ object Tokenizer {
         ((l.substring(0, sp), l.substring(sp + 1)), i)
       }.toMap
     new BpeTokenizer(ranks)
-  }
-
-  /** Load a public GPT-2-format merges file from the local filesystem
-    * (driver-side, once; the resulting ranks map serializes to executors
-    * with the plan). */
-  def fromMergesFile(path: String): BpeTokenizer = {
-    val src = scala.io.Source.fromFile(path, "UTF-8")
-    try fromMergesLines(src.getLines()) finally src.close()
   }
 
   /** t5's counting shape with a pluggable tokenizer: same columns, the

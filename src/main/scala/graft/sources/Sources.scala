@@ -1,12 +1,11 @@
 package graft.sources
 
-import java.util.Base64
-import java.util.zip.{Deflater, Inflater}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Scan/source/sink surface of SURVEY §2.1 (S1-S12).
+/** Scan/source surface of SURVEY §2.1 (S1-S6, S11, S12) plus the JSONL
+  * and WARC grains.
   *
   * Readers mirror the reference's three access grains — full read, limited
   * preview, schema-only — which exist to bound inspection cost
@@ -71,14 +70,6 @@ object Sources {
       .json(path)
   }
 
-  /** Full inference by default (a sub-1.0 default silently infers an
-    * EMPTY schema on small files — sampling skips every line); pass a
-    * small `samplingRatio` explicitly when inspecting a drop too large
-    * for a full inference scan. */
-  def jsonlInferred(spark: SparkSession, path: String,
-      samplingRatio: Double = 1.0): DataFrame =
-    spark.read.option("samplingRatio", samplingRatio).json(path)
-
   /** Bounded schema probe: infer from the first `lines` lines only. The
     * text read stops after `lines` rows, so registering or previewing a
     * multi-GB drop never pays the full-file inference scan the raw-path
@@ -128,11 +119,6 @@ object Sources {
   def jsonDoc(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", "true").json(path)
 
-  /** JSONL sink: one object per line, partition-parallel like every
-    * other distributed write here. */
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).json(path)
-
   /** WARC/WET source — the grain raw web crawls actually arrive in
     * (ISO 28500; Common Crawl's WARC responses and WET text conversions),
     * one step upstream of the h1 extraction stage. Records become rows:
@@ -158,8 +144,8 @@ object Sources {
     * This also flags non-UTF-8 payloads (Hadoop Text decodes with
     * replacement characters, changing the byte count): this reader
     * targets WARC's text members (response HTML, WET conversions,
-    * warcinfo); binary payloads belong to the multimodal binary-column
-    * path. Records with no Content-Length header (non-conformant but
+    * warcinfo); a binary member (an image or PDF response) is flagged,
+    * not decoded. Records with no Content-Length header (non-conformant but
     * seen in the wild) fall back to delimiter framing, valid when a
     * `WARC-Type` header parsed.
     *
@@ -358,300 +344,6 @@ object Sources {
       } else (None, payload)
     WarcRec(url, warcType, headers.getOrElse("content-type", ""),
       status, body, valid)
-  }
-
-  /** One byte-framed WARC record — [[warcBinary]]'s row type: the same
-    * columns as [[WarcRec]] with the payload kept as OCTETS. */
-  final case class WarcBinRec(url: String, warc_type: String,
-      content_type: String, http_status: Option[Int], body: Array[Byte],
-      framing_valid: Boolean)
-
-  /** Binary WARC reader — the bytes-capable arm of [[warc]]. The text
-    * reader deliberately targets WARC's text members: Hadoop Text decodes
-    * with replacement characters, so an image/PDF response member arrives
-    * mangled and is flagged `framing_valid = false` — loud, but a real
-    * crawl pass wants those members ROUTED, not dropped. This arm reads
-    * whole archives through the `binaryFile` source (one row per archive
-    * — exactly Common Crawl's thousands-of-~1GB-files layout, where the
-    * .gz members are whole-file streams and per-archive tasks are the
-    * parallelism unit anyway) and walks each archive SEQUENTIALLY at the
-    * byte level: header block to `\r\n\r\n`, then exactly Content-Length
-    * payload octets (ISO 28500 §5.1) — no text decode ever touches the
-    * payload, so a JPEG member lands with its bytes intact and feeds the
-    * multimodal binary column ([[graft.multimodal.Multimodal.MediaRow]]
-    * payload; ImageIoCodec decodes it — spec-pinned), while a text
-    * member's octets are byte-identical to what [[warc]] decodes
-    * (spec-pinned too). Records without Content-Length fall back to
-    * delimiter scanning; length mismatches and mid-record garbage are
-    * flagged `framing_valid = false`, never silent.
-    *
-    * Gzip (round 13): `binaryFile` delivers raw octets — unlike the text
-    * arm's TextInputFormat there is no codec layer — so a `.warc.gz`
-    * archive is sniffed by its 0x1f8b magic and inflated here before the
-    * walk. Common Crawl archives are CONCATENATED per-record gzip members
-    * (ISO 28500 annex); `GZIPInputStream` reads member sequences natively,
-    * so the whole archive inflates in one streaming pass. A corrupt
-    * stream keeps the octets inflated so far (the walk then flags the
-    * trailing truncation) rather than failing the task — at 100 TB one
-    * rotten archive must not kill the job, and an empty inflate surfaces
-    * as a single flagged row. */
-  def warcBinary(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("content").as[Array[Byte]]
-      .flatMap { raw =>
-        if (!startsWith(raw, GzipMagic, 0)) parseWarcBytes(raw)
-        else {
-          val inflated = gunzipAll(raw)
-          if (inflated.isEmpty)
-            Iterator(WarcBinRec("", "", "", None, raw, framing_valid = false))
-          else parseWarcBytes(inflated)
-        }
-      }
-      .toDF()
-  }
-
-  private val GzipMagic = Array(0x1f.toByte, 0x8b.toByte)
-
-  /** Inflation ceiling for one archive: past this the member is treated as
-    * corrupt (truncated octets → flagged rows), never inflated further. An
-    * unbounded inflate would buffer the whole expansion on the executor —
-    * an OutOfMemoryError the catch below can never see, so a gzip bomb
-    * would be a single-record task killer, breaking the one-rotten-archive
-    * contract. 1 GiB is ~4x Common Crawl's largest inflated archives and
-    * far under the task heap at 32 tasks/128 GiB. */
-  private[graft] val MaxInflatedBytes: Int = 1 << 30
-
-  /** Inflate a (possibly multi-member) gzip stream; on a mid-stream error
-    * OR on crossing [[MaxInflatedBytes]] returns the octets recovered so
-    * far instead of throwing (the cap is enforced in the read loop — an
-    * OutOfMemoryError cannot be caught usefully). */
-  private[graft] def gunzipAll(bytes: Array[Byte],
-      maxBytes: Int = MaxInflatedBytes): Array[Byte] = {
-    // size hint: bytes.length * 4L can exceed Int range on ~512 MB+ inputs
-    // (harmless before, but compute it in Long and clamp properly)
-    val hint = math.min(math.max(bytes.length.toLong * 4L, 1024L),
-      64L << 20).toInt
-    val out = new java.io.ByteArrayOutputStream(hint)
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes), 64 << 10)
-      val buf = new Array[Byte](64 << 10)
-      var n = in.read(buf)
-      while (n >= 0 && out.size() < maxBytes) {
-        out.write(buf, 0, math.min(n, maxBytes - out.size()))
-        n = if (out.size() >= maxBytes) -1 else in.read(buf)
-      }
-    } catch { case _: java.io.IOException => () }
-    out.toByteArray
-  }
-
-  private val WarcMagic = "WARC/".getBytes("US-ASCII")
-  private val CrlfCrlf = "\r\n\r\n".getBytes("US-ASCII")
-  private val Delim = "\r\n\r\nWARC/".getBytes("US-ASCII")
-
-  private def indexOf(hay: Array[Byte], needle: Array[Byte],
-      from: Int): Int = {
-    var i = math.max(from, 0)
-    val last = hay.length - needle.length
-    while (i <= last) {
-      var j = 0
-      while (j < needle.length && hay(i + j) == needle(j)) j += 1
-      if (j == needle.length) return i
-      i += 1
-    }
-    -1
-  }
-  private def startsWith(hay: Array[Byte], needle: Array[Byte],
-      at: Int): Boolean =
-    at >= 0 && at + needle.length <= hay.length && {
-      var j = 0
-      while (j < needle.length && hay(at + j) == needle(j)) j += 1
-      j == needle.length
-    }
-
-  /** Sequential byte-exact record walk over one archive's octets. */
-  private[graft] def parseWarcBytes(bytes: Array[Byte]): Iterator[WarcBinRec] = {
-    val out = Vector.newBuilder[WarcBinRec]
-    var pos = 0
-    // skip leading terminator bytes (mirrors the text iterator's
-    // blank-at-record-position rule)
-    def skipCrlf(): Unit =
-      while (pos + 1 < bytes.length && bytes(pos) == '\r' && bytes(pos + 1) == '\n')
-        pos += 2
-    skipCrlf()
-    while (pos < bytes.length) {
-      if (!startsWith(bytes, WarcMagic, pos)) {
-        // garbage at record position: surface it as one flagged row up to
-        // the next delimiter (or EOF) — detectable, never silent
-        val next = indexOf(bytes, Delim, pos)
-        val end = if (next < 0) bytes.length else next
-        out += WarcBinRec("", "", "", None,
-          java.util.Arrays.copyOfRange(bytes, pos, end), framing_valid = false)
-        pos = if (next < 0) bytes.length else next + 4
-      } else {
-        val hEnd = indexOf(bytes, CrlfCrlf, pos)
-        if (hEnd < 0) {
-          out += WarcBinRec("", "", "", None,
-            java.util.Arrays.copyOfRange(bytes, pos, bytes.length),
-            framing_valid = false)
-          pos = bytes.length
-        } else {
-          // header block is ASCII by spec; ISO-8859-1 keeps it byte-safe
-          val headText = new String(bytes, pos, hEnd - pos, "ISO-8859-1")
-          val headers = headText.linesIterator.drop(1).flatMap { l =>
-            val c = l.indexOf(':')
-            if (c < 0) None else Some(l.substring(0, c).trim.toLowerCase ->
-              l.substring(c + 1).trim)
-          }.toMap
-          val bodyAt = hEnd + 4
-          val declared = headers.get("content-length").flatMap(_.toLongOption)
-          val (payload, valid, nextPos) = declared match {
-            case Some(len) if bodyAt + len <= bytes.length =>
-              val end = bodyAt + len.toInt
-              // a well-formed record is ALWAYS followed by its two-CRLF
-              // terminator (ISO 28500 §5.2) — including the archive's
-              // last record, so a truncation that happens to cut exactly
-              // on the payload boundary is still detectable (round 13,
-              // closing the `end == bytes.length` escape)
-              val term = startsWith(bytes, CrlfCrlf, end)
-              (java.util.Arrays.copyOfRange(bytes, bodyAt, end), term,
-                if (term) end + 4 else end)
-            case Some(_) => // declared length overruns the archive
-              (java.util.Arrays.copyOfRange(bytes, bodyAt, bytes.length),
-                false, bytes.length)
-            case None => // non-conformant: delimiter framing
-              val next = indexOf(bytes, Delim, bodyAt)
-              val end = if (next < 0) bytes.length else next
-              (java.util.Arrays.copyOfRange(bytes, bodyAt, end),
-                headers.contains("warc-type"),
-                if (next < 0) bytes.length else next + 4)
-          }
-          pos = nextPos
-          skipCrlf()
-          val warcType = headers.getOrElse("warc-type", "")
-          // response payloads open with the HTTP message: keep the
-          // status, strip the HTTP headers — the byte twin of [[warc]]'s
-          // text-side strip
-          val (status, body) =
-            if (warcType == "response" &&
-                startsWith(payload, "HTTP/".getBytes("US-ASCII"), 0)) {
-              val he = indexOf(payload, CrlfCrlf, 0)
-              val lineEnd = indexOf(payload, "\r\n".getBytes("US-ASCII"), 0)
-              val statusLine = new String(payload, 0,
-                if (lineEnd < 0) payload.length else lineEnd, "ISO-8859-1")
-              val st = statusLine.split(" ").lift(1).flatMap(_.toIntOption)
-              if (he < 0) (st, Array.empty[Byte])
-              else (st, java.util.Arrays.copyOfRange(payload, he + 4, payload.length))
-            } else (None, payload)
-          out += WarcBinRec(headers.getOrElse("warc-target-uri", ""),
-            warcType, headers.getOrElse("content-type", ""), status, body,
-            valid)
-        }
-      }
-    }
-    out.result().iterator
-  }
-
-  /** S8: remote-API source — fetch a CSV payload over HTTP on the driver
-    * and land it as a DataFrame (the reference has generated code download
-    * data ad hoc: default_prompts.yaml:288-304, 2157). Driver-side fetch is
-    * the right shape for this source: the reference's remote payloads are
-    * pre-analysis API results, small by contract; bulk remote data belongs
-    * to a distributed connector (S4) instead. JDK-only HTTP, no added deps. */
-  def fromUrl(spark: SparkSession, url: String,
-      timeoutMs: Int = 15000, maxBytes: Long = 64L * 1024 * 1024): DataFrame = {
-    val conn = java.net.URI.create(url).toURL
-      .openConnection().asInstanceOf[java.net.HttpURLConnection]
-    conn.setConnectTimeout(timeoutMs)
-    conn.setReadTimeout(timeoutMs)
-    try {
-      val code = conn.getResponseCode
-      if (code >= 400) throw new RuntimeException(s"remote source HTTP $code: $url")
-      // The whole payload lands on the driver by design (small-by-contract
-      // API results); enforce that contract so an unexpectedly large URL
-      // fails loudly instead of OOMing the driver. Content-Length is
-      // advisory (absent on chunked responses), so the stream read is
-      // capped too.
-      val declared = conn.getContentLengthLong
-      if (declared > maxBytes) throw new IllegalArgumentException(
-        s"remote source payload $declared bytes exceeds maxBytes=$maxBytes: $url " +
-          "(driver-side source is for small API results; use a distributed scan for bulk data)")
-      val out = new java.io.ByteArrayOutputStream()
-      val in = conn.getInputStream
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) {
-        out.write(buf, 0, n)
-        if (out.size() > maxBytes) throw new IllegalArgumentException(
-          s"remote source payload exceeds maxBytes=$maxBytes: $url " +
-            "(driver-side source is for small API results; use a distributed scan for bulk data)")
-        n = in.read(buf)
-      }
-      val text = out.toString("UTF-8")
-      import spark.implicits._
-      spark.read.option("header", "true").option("inferSchema", "true")
-        .csv(spark.createDataset(text.linesIterator.toSeq))
-    } finally conn.disconnect()
-  }
-
-  /** S8 + S11 + S7: fetch once, register as a queryable view, keep the
-    * materialized table in the LRU cache so a re-request is a cache hit
-    * (mirrors DataFrameCache fronting the executor API,
-    * web_app/code_executor_api.py:33-65). */
-  def loadRemote(spark: SparkSession, name: String, url: String,
-      cache: TableCache): DataFrame = {
-    val df = cache.get(name).getOrElse {
-      val fetched = fromUrl(spark, url)
-      cache.put(name, fetched)
-      fetched
-    }
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** S9: CSV sink for generated result datasets
-    * (template_formatting.py:77; collection code_executor.py:188-199).
-    * coalesce(1) matches the reference's single-file contract — result sets
-    * are post-aggregation and small; large extracts should drop coalesce. */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
-
-  /** S10: table serialization across a process boundary — the reference
-    * ships parquet+zlib+base64 strings (code_executor.py:241-250). Collect
-    * the (small, post-agg) table as CSV text and wrap it the same way. */
-  def serializeTable(df: DataFrame): String = {
-    val header = df.columns.mkString(",")
-    val rows = df.collect().map(_.toSeq.map {
-      case null => ""
-      case v => v.toString
-    }.mkString(","))
-    val raw = (header +: rows).mkString("\n").getBytes("UTF-8")
-    val deflater = new Deflater()
-    deflater.setInput(raw); deflater.finish()
-    val buf = new Array[Byte](math.max(64, raw.length * 2))
-    val n = deflater.deflate(buf)
-    deflater.end()
-    Base64.getEncoder.encodeToString(buf.take(n))
-  }
-
-  /** Inverse of [[serializeTable]] (code_executor_api.py:604-613). */
-  def deserializeTable(spark: SparkSession, payload: String): DataFrame = {
-    val compressed = Base64.getDecoder.decode(payload)
-    val inflater = new Inflater()
-    inflater.setInput(compressed)
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](4096)
-    while (!inflater.finished()) {
-      val n = inflater.inflate(buf)
-      if (n == 0 && inflater.needsInput()) throw new IllegalArgumentException("truncated")
-      out.write(buf, 0, n)
-    }
-    inflater.end()
-    val lines = out.toString("UTF-8").split("\n").toSeq
-    import spark.implicits._
-    spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(lines.toDS())
   }
 
   /** S12: HTML preview sink (utils.py:314, code_executor_api.py:555).

@@ -316,46 +316,10 @@ class AgentsSpec extends SparkSpec {
     assert(plain.analyst.analyst == "Data Analyst DF") // parse default
   }
 
-  test("request_user_context: polled file channel matches, consumes, deletes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_feedback")
-    val chain = "c42"
-    val file = dir.resolve(s"feedback_$chain.json")
-    var sleeps = 0
-    // the user's answer "arrives" during the second poll sleep; the first
-    // file version answers a DIFFERENT question and must not match
-    val channel = new UserContext.PolledFileChannel(dir, chain,
-      timeoutMs = 60000, sleeper = _ => {
-        sleeps += 1
-        if (sleeps == 1)
-          java.nio.file.Files.write(file,
-            """[{"query_clarification": "Other q?", "feedback": "no"}]"""
-              .getBytes("UTF-8"))
-        if (sleeps == 2)
-          java.nio.file.Files.write(file,
-            ("""[{"query_clarification": "Other q?", "feedback": "no"},""" +
-              """ {"query_clarification": "Which year?", "feedback": "In 1995 \"only\"."}]""")
-              .getBytes("UTF-8"))
-      })
-    val got = channel.request(UserContext.Request("Which year?", "other"))
-    assert(got.contains("In 1995 \"only\"."))
-    assert(!java.nio.file.Files.exists(file), "file deleted after the hit")
-    // timeout path: nothing ever arrives -> None -> TimeoutMessage
-    val empty = new UserContext.PolledFileChannel(dir, "c43",
-      timeoutMs = 1, sleeper = _ => ())
-    assert(UserContext.resolve(empty,
-      UserContext.Request("q", "other")) == UserContext.TimeoutMessage)
-  }
-
   test("F14 calculator evaluates through Catalyst, no code path") {
     assert(ScalarExtras.calculate(spark, "2 * (3 + 4)") == Right(14.0))
     assert(ScalarExtras.calculate(spark, "pow(2, 10)") == Right(1024.0))
     assert(ScalarExtras.calculate(spark, "drop table x").isLeft)
-  }
-
-  test("F7/F8 normalize + wrap + truncate") {
-    assert(ScalarExtras.asciiNormalize("café déjà") == "cafe deja")
-    assert(ScalarExtras.wrap("a bb ccc dddd", 5) == Seq("a bb", "ccc", "dddd"))
-    assert(ScalarExtras.truncateLabel("x" * 50).length == 40)
   }
 
   test("e2e chain with MIXED provider wires: per-stage routing over real HTTP") {

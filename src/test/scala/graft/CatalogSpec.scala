@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.lifecycle.{FunctionCatalog, PlotSpec, Telemetry}
+import graft.lifecycle.{FunctionCatalog, Ontology, PlotSpec}
 
 class CatalogSpec extends SparkSpec {
   import spark.implicits._
@@ -17,8 +17,8 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("compute_dataframe_index view template over events") {
-    val idx = FunctionCatalog.resolveTable("compute_dataframe_index")
-      .toOption.get(Tables.load(spark, sf, "events"))
+    val idx = FunctionCatalog.tables("compute_dataframe_index")
+      .impl(Tables.load(spark, sf, "events"))
     assert(idx.columns.toSeq ==
       Seq("user_id", "start_time", "end_time", "duration_s", "n_rows", "avg_value"))
     assert(idx.count() == 15) // one row per user at sf0.001
@@ -27,41 +27,18 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("unknown helper names are rejected (no invented functions)") {
-    assert(FunctionCatalog.resolveScalar("exec_python").isLeft)
-    assert(FunctionCatalog.resolveTable("rm_rf").isLeft)
-  }
-
-  test("telemetry roll-up: per-chain cost and rates (log_manager shape)") {
-    val calls = Telemetry.toDF(spark, Seq(
-      Telemetry.CallLog("c1", "planner", "m-big", 1000, 500, 2.0),
-      Telemetry.CallLog("c1", "generator", "m-big", 2000, 1000, 3.0),
-      Telemetry.CallLog("c2", "planner", "m-small", 500, 100, 1.0)))
-    val rates = Map("m-big" -> Telemetry.Rates(0.002, 0.008),
-      "m-small" -> Telemetry.Rates(0.0005, 0.0015))
-    val rows = Telemetry.perChain(calls, rates).orderBy("chainId").collect()
-    assert(rows.length == 2)
-    val c1 = rows(0)
-    assert(c1.getLong(1) == 2 && c1.getLong(2) == 3000 && c1.getLong(3) == 1500)
-    // cost = (3000*0.002 + 1500*0.008)/1000 = 0.018
-    assert(math.abs(c1.getDouble(5) - 0.018) < 1e-9)
-    assert(math.abs(c1.getDouble(6) - 300.0) < 1e-6) // 1500 tokens / 5 s
-    val byModel = Telemetry.perModel(calls).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byModel == Map("m-big" -> 2L, "m-small" -> 1L))
-  }
-
-  test("plot spec json inlines the aggregated result table") {
-    val monthly = graft.operators.Relational.ordersPerMonth(spark, sf)
-      .withColumn("month", date_format(col("month"), "yyyy-MM"))
-    val json = PlotSpec.toJson(
-      PlotSpec.Spec("bar", "month", Seq("n"), "Orders per month, 1995"),
-      monthly)
-    assert(json.contains("\"kind\": \"bar\""))
-    assert(json.contains("\"1995-01\""))
-    // 12 data rows, each [month, n]
-    assert("\\[\"1995-".r.findAllIn(json).length == 12)
-    // sanity: parses as JSON via the oracle-side python? keep it structural
-    assert(json.count(_ == '[') == json.count(_ == ']'))
+    assert(!FunctionCatalog.scalars.contains("exec_python"))
+    assert(!FunctionCatalog.tables.contains("rm_rf"))
+    // the ontology front-end checks its helpers against the same maps
+    val yaml =
+      """containers:
+        |  - name: events
+        |    columns: [user_id, ts]
+        |functions:
+        |  - pace_min_per_km
+        |  - exec_python
+        |""".stripMargin
+    assert(Ontology.parseYaml(yaml) == Left("unknown helper functions: exec_python"))
   }
 
   test("plot spec maps non-finite doubles to null — the JSON stays valid") {

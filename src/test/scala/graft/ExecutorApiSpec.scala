@@ -326,6 +326,31 @@ class ExecutorApiSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("download validates its parameters before it answers 200") {
+    val api = new ExecutorApi(new EngineSession(spark))
+    val port = api.start()
+    try {
+      call(port, "/upload_dataset",
+        Some(s"""{"df_id":"orders","path":"$sf/orders.parquet"}"""))
+      // a negative cap fails when Spark builds the limit: that must be a
+      // 400 with an error body, not a 200 carrying only the header line
+      val (nc, neg) = call(port,
+        "/download_generated_dataset?df_id=orders&max_rows=-1", None)
+      assert(nc == 400 && neg.contains("max_rows"), neg)
+      val (tc, text) = call(port,
+        "/download_generated_dataset?df_id=orders&max_rows=ten", None)
+      assert(tc == 400 && text.contains("max_rows"), text)
+      // the query is decoded once: %25zz is the id "%zz", which is not
+      // cached; a second decode would throw before any answer
+      val (pc, pct) = call(port, "/download_generated_dataset?df_id=%25zz", None)
+      assert(pc == 404 && pct.contains("not found"), pct)
+      val (zc, zero) = call(port,
+        "/download_generated_dataset?df_id=orders&max_rows=0", None)
+      assert(zc == 200 && zero.split("\n").length == 1, zero)
+      assert(zero.startsWith("o_orderkey,"), zero)
+    } finally api.stop()
+  }
+
   test("dataset management + chain-preview routes mirror the reference contracts") {
     val dataDir = java.nio.file.Paths.get("target/api_data_mgmt")
     new scala.reflect.io.Directory(dataDir.toFile).deleteRecursively()

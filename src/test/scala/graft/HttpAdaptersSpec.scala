@@ -3,9 +3,8 @@ package graft
 import java.net.InetSocketAddress
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.lifecycle.{Agents, HttpLlm, HttpLlmClient, Json}
-import graft.sources.{Sources, TableCache}
 
-/** S8 remote source + live LLM adapter against a local wire-shape stub —
+/** Live LLM adapters against a local wire-shape stub —
   * the HTTP layer is exercised for real (JDK HttpServer on an ephemeral
   * port), no egress needed. */
 class HttpAdaptersSpec extends SparkSpec {
@@ -25,45 +24,6 @@ class HttpAdaptersSpec extends SparkSpec {
     server.start()
     try body(s"http://127.0.0.1:${server.getAddress.getPort}")
     finally server.stop(0)
-  }
-
-  test("S8: remote CSV lands as a typed DataFrame and registers a view") {
-    var hits = 0
-    val csv = "id,name,score\n1,ada,9.5\n2,bob,7.25\n3,eve,8.0"
-    withServer(Map("/data.csv" -> (_ => { hits += 1; (200, csv) }))) { base =>
-      val cache = new TableCache(maxSize = 2)
-      val df = Sources.loadRemote(spark, "remote_scores", s"$base/data.csv", cache)
-      assert(df.count() == 3)
-      assert(df.schema("id").dataType.typeName == "integer")
-      assert(df.schema("score").dataType.typeName == "double")
-      // registered as a queryable view (S7 injection surface)
-      assert(spark.sql("SELECT sum(score) FROM remote_scores")
-        .collect()(0).getDouble(0) == 24.75)
-      // second load is a cache hit: no new fetch
-      Sources.loadRemote(spark, "remote_scores", s"$base/data.csv", cache)
-      assert(hits == 1)
-    }
-  }
-
-  test("S8: HTTP errors surface as exceptions, not empty tables") {
-    withServer(Map("/gone" -> (_ => (404, "nope")))) { base =>
-      val e = intercept[RuntimeException] {
-        Sources.fromUrl(spark, s"$base/gone")
-      }
-      assert(e.getMessage.contains("404"))
-    }
-  }
-
-  test("S8: payloads over maxBytes fail loudly instead of OOMing the driver") {
-    val big = "id,v\n" + (1 to 2000).map(i => s"$i,x").mkString("\n")
-    withServer(Map("/big.csv" -> (_ => (200, big)))) { base =>
-      val e = intercept[IllegalArgumentException] {
-        Sources.fromUrl(spark, s"$base/big.csv", maxBytes = 1024)
-      }
-      assert(e.getMessage.contains("maxBytes"))
-      // under the cap the same payload loads fine
-      assert(Sources.fromUrl(spark, s"$base/big.csv").count() == 2000)
-    }
   }
 
   test("LLM adapter: request carries stage+prompt, response content extracted") {

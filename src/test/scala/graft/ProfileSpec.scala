@@ -77,19 +77,4 @@ class ProfileSpec extends SparkSpec {
     assert(Profile.summaryString(df, approx = true) ==
       Profile.summaryString(df))
   }
-
-  test("F3 ordinal suffixes incl. 11-13 special case (utils.py:23-24)") {
-    assert(Profile.ordinal(1) == "1st" && Profile.ordinal(2) == "2nd" &&
-      Profile.ordinal(3) == "3rd" && Profile.ordinal(4) == "4th" &&
-      Profile.ordinal(11) == "11th" && Profile.ordinal(12) == "12th" &&
-      Profile.ordinal(13) == "13th" && Profile.ordinal(21) == "21st" &&
-      Profile.ordinal(22) == "22nd" && Profile.ordinal(23) == "23rd")
-  }
-
-  test("F3 readable date format 'Wed 3rd of Apr 2026' (utils.py:27-33)") {
-    assert(Profile.readableDate(java.time.LocalDate.of(2026, 4, 3)) ==
-      "Fri 3rd of Apr 2026")
-    assert(Profile.readableDate(java.time.LocalDate.of(2026, 8, 12)) ==
-      "Wed 12th of Aug 2026")
-  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.functions.{CosineSimilarity, ScalarExtras, Sq8}
+import graft.functions.{CosineSimilarity, Sq8}
 import graft.operators.Profile
 
 /** Property tests (SURVEY §5.3): invariants over generated inputs, run with
@@ -12,33 +12,6 @@ class PropertySpec extends SparkSpec {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(n), p)
     assert(res.passed, res.status.toString)
-  }
-
-  test("wrap: no line exceeds width unless a single word does; words preserved") {
-    val word = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)
-    val text = Gen.listOf(word).map(_.mkString(" "))
-    holds(Prop.forAll(text, Gen.choose(3, 30)) { (t, w) =>
-      val lines = ScalarExtras.wrap(t, w)
-      lines.forall(l => l.length <= w || !l.contains(" ")) &&
-        lines.flatMap(_.split(" ")).filter(_.nonEmpty) ==
-          t.split("\\s+").filter(_.nonEmpty).toSeq
-    })
-  }
-
-  test("ordinal: valid suffix, preserves the number, 11-13 are th") {
-    holds(Prop.forAll(Gen.choose(1, 10000)) { n =>
-      val o = Profile.ordinal(n)
-      o.startsWith(n.toString) &&
-        Seq("st", "nd", "rd", "th").contains(o.drop(n.toString.length)) &&
-        (!(n % 100 >= 11 && n % 100 <= 13) || o.endsWith("th"))
-    })
-  }
-
-  test("truncateLabel: bounded length, identity under the bound") {
-    holds(Prop.forAll(Gen.alphaStr, Gen.choose(1, 60)) { (s, n) =>
-      val t = ScalarExtras.truncateLabel(s, n)
-      t.length <= n + 3 && (s.length > n || t == s)
-    })
   }
 
   test("yaml map parse: round-trips flat string pairs") {

@@ -105,8 +105,8 @@ class RetrievalOntologySpec extends SparkSpec {
     assert(model.nodes.head.columns == Seq("activity_id", "user_id", "ts", "value"))
     assert(model.edges == Seq(Agents.ModelEdge("events", "activity", "user_id")))
     // helpers resolve through the catalog (scalar + table tier)
-    assert(FunctionCatalog.resolveScalar(model.helpers.head).isRight)
-    assert(FunctionCatalog.resolveTable(model.helpers(1)).isRight)
+    assert(FunctionCatalog.scalars.contains(model.helpers.head))
+    assert(FunctionCatalog.tables.contains(model.helpers(1)))
     val mm = Ontology.toMermaid(model)
     assert(mm.startsWith("graph TD"))
     assert(mm.contains("activity") && mm.contains("events -->|user_id| activity"))
@@ -201,7 +201,7 @@ class RetrievalOntologySpec extends SparkSpec {
     assert(seenPrompt.contains("no invented functions"))
     // and the output lands in the catalog + mermaid surfaces
     assert(model.nodes.map(_.name) == Seq("activity", "events"))
-    assert(FunctionCatalog.resolveScalar(model.helpers.head).isRight)
+    assert(FunctionCatalog.scalars.contains(model.helpers.head))
     assert(Ontology.toMermaid(model).contains("events -->|user_id| activity"))
   }
 

@@ -8,8 +8,9 @@ import graft.operators.{BpeTokenizer, RegexTokenizer, TextOps, Tokenizer}
 class TokenizerSpec extends SparkSpec {
 
   private def fixture: BpeTokenizer = {
-    val url = getClass.getResource("/gpt2_merges_fixture.txt")
-    Tokenizer.fromMergesFile(new java.io.File(url.toURI).getPath)
+    val src = scala.io.Source.fromResource("gpt2_merges_fixture.txt",
+      getClass.getClassLoader)
+    try Tokenizer.fromMergesLines(src.getLines()) finally src.close()
   }
 
   test("merges file parses: header skipped, rank = line order") {
